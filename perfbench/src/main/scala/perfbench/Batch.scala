@@ -28,7 +28,6 @@ object Batch {
     * profile). The workload seed picks one of these corpus seeds, whose
     * expected checksums are stored. Queries run in a fixed order. */
   val CorpusSeeds: Seq[Long] = Seq(20260814L, 20260815L, 20260816L)
-  val MaxPasses = 3
 
   def corpusSeed(seed: Long): Long = CorpusSeeds(Math.floorMod(seed, CorpusSeeds.length.toLong).toInt)
 
@@ -56,50 +55,36 @@ object Batch {
       QueryRun(q, (System.nanoTime() - t0) / 1e6, (t1 - t0) / 1e6, sum)
     }
 
-  def run(spark: SparkSession, work: String, seed: Long, seconds: Double, trace: Boolean): WorkloadResult = {
+  def run(spark: SparkSession, work: String, seed: Long, trace: Boolean): WorkloadResult = {
     val cs = corpusSeed(seed)
-    // set-up is corpus generation, done once: a generation costs about
-    // as much as all other set-up of a docdb run together
+    // set-up is one corpus generation: a second would add about 10 s
+    // to a run whose timed pass already takes about 50 s
+    val dir = s"$work/corpus"
     val t0s = System.nanoTime()
-    generate(spark, s"$work/corpus_0", cs)
+    generate(spark, dir, cs)
     val setupS = (System.nanoTime() - t0s) / 1e9
-    val order = Queries.map(_._1)
     val tr = new Tracer(spark, trace)
+    // one pass, whatever --seconds says: the first call of each query in
+    // this JVM, on a corpus directory no earlier call has read, so no
+    // cache keyed by the input directory serves it
     val t0 = System.nanoTime()
-    // the pass is the first call of each query in this JVM, on a corpus
-    // directory no earlier call has read, so no cache keyed by the input
-    // directory serves it; each later pass (while time is left) reads a
-    // fresh copy of the corpus
-    var pass = 0
-    val runs = scala.collection.mutable.ArrayBuffer[QueryRun]()
-    while (pass == 0 || ((System.nanoTime() - t0) / 1e9 < seconds && pass < MaxPasses)) {
-      val dir = s"$work/corpus_$pass"
-      if (pass > 0) org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(s"$work/corpus_0"), new java.io.File(dir))
-      runs ++= order.map(q => runQuery(spark, tr, q, dir))
-      pass += 1
-    }
+    val runs = Queries.map { case (q, _) => runQuery(spark, tr, q, dir) }
     val windowS = (System.nanoTime() - t0) / 1e9
     tr.finish()
     tr.writeSpans(java.nio.file.Paths.get(work, "spans.jsonl"))
     val bad = runs.filterNot(r => expected.get((cs, r.name)).contains(r.checksum))
-    val byQuery = runs.groupBy(_.name)
-    val fullMs = Queries.map { case (q, _) => Stats.median(byQuery(q).map(_.fullMs).toSeq) }
+    val fullMs = runs.map(_.fullMs)
     val recoverMs = if (trace) Some(recoverKernelMs()) else None
-    val report = Seq(f"workload batch_suite: corpus seed $cs, $pass pass(es) in $windowS%.1f s, " +
+    val report = Seq(f"workload batch_suite: corpus seed $cs, one pass in $windowS%.1f s, " +
       f"setup $setupS%.2f s (one corpus generation)",
       f"batch_full_s: ${fullMs.sum / 1000}%.3f s", f"batch_geomean_s: ${Stats.geomean(fullMs) / 1000}%.4f s") ++
-      Queries.map { case (q, _) =>
-        val rs = byQuery(q)
-        f"  $q%-28s full ${Stats.median(rs.map(_.fullMs).toSeq) / 1000}%.3f s, " +
-          f"build ${Stats.median(rs.map(_.buildMs).toSeq) / 1000}%.3f s, ${rs.head.checksum}"
-      } ++
+      runs.map(r => f"  ${r.name}%-28s full ${r.fullMs / 1000}%.3f s, build ${r.buildMs / 1000}%.3f s, ${r.checksum}") ++
       Seq(f"error_rate: ${bad.size.toDouble / runs.size}%.4f (${bad.size} of ${runs.size})") ++
       bad.map(r => s"failure: ${r.name} checksum ${r.checksum}, expected " +
         expected.getOrElse((cs, r.name), "none stored"))
-    val e2e = WorkloadResult.generic(setupS, Queries.map(_._1 -> 1), Queries.map(_._1).zip(fullMs).toMap)
+    val e2e = WorkloadResult.endToEnd(setupS, windowS, runs.filterNot(bad.contains).map(_.fullMs))
     val layers = if (!trace) Nil
-      else Layers.batch(tr, runs.toSeq, recoverMs.get) ++ e2e.map(m => m.copy(name = "traced." + m.name))
+      else Layers.batch(tr, runs, recoverMs.get) ++ e2e.map(m => m.copy(name = "traced." + m.name))
     WorkloadResult(runs.size, bad.size, e2e, layers, report)
   }
 

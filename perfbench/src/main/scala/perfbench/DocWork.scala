@@ -321,9 +321,4 @@ object DocOps {
     else Option(d.listFiles).toSeq.flatten.map(walk).foldLeft((0L, 0L)) {
       case ((f, b), (f2, b2)) => (f + f2, b + b2)
     }
-
-  def deleteTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(deleteTree)
-    f.delete()
-  }
 }

@@ -4,40 +4,26 @@ import graft.api.GraftDB
 import org.apache.spark.sql.SparkSession
 import scala.util.Random
 
-/** The two docdb workloads. Each sets its collection up `Setups` times
-  * (setup_s is the median), then runs its operation mix in a closed
-  * loop with one client, operation by operation, until the time is up;
-  * docdb_serve first runs one untimed cycle to warm up. */
+/** The two docdb workloads. Each sets its collection up, then runs a
+  * fixed number of identical operation cycles in a closed loop with one
+  * client, so every seed does the same operations, commits, rollups and
+  * snapshots. The cycle count follows `--seconds` through the cycle's
+  * nominal length on a 4-core x86-64 VM. */
 object DocWorkloads {
-  val Setups = 3
   val ClientOps = Seq("point_read", "query", "indexed_query", "commit", "signed_commit")
 
-  private def timedSetups(n: Int)(one: Int => DocOps): (Double, DocOps) = {
-    var last: DocOps = null
-    val secs = (0 until n).map { i =>
-      val t0 = System.nanoTime()
-      last = one(i)
-      (System.nanoTime() - t0) / 1e9
-    }
-    (Stats.median(secs), last)
+  /** Cycles that fill about `seconds` at `cycleS` seconds a cycle. */
+  def cyclesFor(seconds: Double, cycleS: Double): Int = math.max(1, math.round(seconds / cycleS).toInt)
+
+  private def timed[T](body: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = body
+    ((System.nanoTime() - t0) / 1e9, r)
   }
 
-  /** Runs the steps of cycles 0, 1, ... one after another until
-    * `seconds` have passed, but always the whole first cycle. Returns
-    * the window length in seconds. */
-  private def loop(seconds: Double)(cycle: Int => Seq[() => Unit]): Double = {
-    val t0 = System.nanoTime()
-    def elapsed = (System.nanoTime() - t0) / 1e9
-    var i = 0
-    var more = true
-    while (more) {
-      val steps = cycle(i).iterator
-      while (steps.hasNext && (i == 0 || elapsed < seconds)) steps.next()()
-      more = elapsed < seconds
-      i += 1
-    }
-    elapsed
-  }
+  /** Runs every step of `n` cycles; returns the window length in seconds. */
+  private def loop(n: Int)(cycle: Int => Seq[() => Unit]): Double =
+    timed((0 until n).foreach(i => cycle(i).foreach(_())))._1
 
   // ---- docdb_serve ----------------------------------------------------
 
@@ -71,11 +57,13 @@ object DocWorkloads {
     ops
   }
 
+  /** Nominal length of one serve cycle (11 reads). */
+  val ServeCycleS = 8.0
+
   def serve(spark: SparkSession, work: String, seed: Long, seconds: Double, trace: Boolean): WorkloadResult = {
-    val (setupS, ops) = timedSetups(Setups)(i =>
-      serveSetup(spark, s"$work/serve_$i", seed))
+    // one set-up: a 20k-doc load is most of a run's set-up time
+    val (setupS, run) = timed(serveSetup(spark, s"$work/serve", seed))
     val rnd = new Random(seed * 31 + 7)
-    val run = ops
     val all = run.model.docs.keys.toIndexedSeq
     val gone = run.model.deleted.toIndexedSeq.sorted
     val absent = Seq.fill(8)(rnd.nextLong(1L << 40) + (1L << 40))
@@ -93,27 +81,59 @@ object DocWorkloads {
       () => run.pointRead(live()),
       () => run.query(DocQuery.queryStr(i + 2, rnd, ServeDocs)),
       () => run.pointRead(live()))
-    cycle(0).foreach(_()) // warm-up, not measured
+    cycle(0).foreach(_()) // warm-up, not timed; its results are still checked
+    val warmFailures = run.rec.notes.toSeq.map("warm-up " + _)
     run.rec = new Recorder
     run.tailAtRead.clear()
     run.tr = new Tracer(spark, trace)
-    val windowS = loop(seconds)(i => cycle(i + 1))
+    val windowS = loop(cyclesFor(seconds, ServeCycleS))(i => cycle(i + 1))
     run.tr.finish()
     run.tr.writeSpans(java.nio.file.Paths.get(work, "spans.jsonl"))
-    WorkloadResult.docdb("docdb_serve", setupS, windowS, run,
-      Seq("point_read" -> 7, "query" -> 3, "indexed_query" -> 1), Nil)
+    WorkloadResult.docdb("docdb_serve", setupS, "one set-up", windowS, run, warmFailures)
   }
 
   // ---- docdb_ingest ---------------------------------------------------
 
   val AdminKey = 1001L
   val WriterKey = 2002L
-  val MinRollupBytes = 48L * 1024
-  val SnapshotEvery = 12
-  val Presigned = 60
+  val Setups = 3
+  /** Nominal length of one ingest cycle, maintenance included. */
+  val IngestCycleS = 10.0
+  /** The set-up leaves about 11.4 KiB of log in the tail and each commit
+    * adds 1.7–2.9 KiB whatever its size (four small files): 2.9 KiB for
+    * a cycle's first commit, 11.2 KiB for the other five. So on every
+    * seed the tail reaches 13 KiB at each cycle's first commit, which
+    * rolls it up: one rollup per cycle. */
+  val MinRollupBytes = 13L * 1024
+  /** The read-only collection that the indexed queries read. */
+  val ArchiveDocs = 2000
 
-  private def ingestSetup(spark: SparkSession, root: String,
-      gen: DocGen): (DocOps, IndexedSeq[SignedRequest]) = {
+  /** The archive: 2,000 docs indexed on their final state, loaded once
+    * before the timed set-ups. Each read of the cycle then runs once on
+    * it, untimed but checked, so the JVM has run every read path before
+    * the window. */
+  private def archiveSetup(spark: SparkSession, root: String, seed: Long): DocOps = {
+    val gen = new DocGen(seed + 1)
+    val archive = new DocOps(spark, root, new Tracer(spark, false), new Recorder)
+    archive.create()
+    archive.bulkLoad(1, IndexedSeq.fill(ArchiveDocs)(gen.doc()), spark.sparkContext.defaultParallelism)
+    archive.db.addIndex(DocOps.Db, DocOps.Coll, "rate", "Int64Key")
+    val rnd = new Random(seed)
+    archive.pointRead(archive.model.docs.lastKey)
+    Seq(0, 2).foreach(t => archive.query(DocQuery.queryStr(t, rnd, 0)))
+    (0 until 2).foreach(i => archive.query(DocQuery.structured(i, rnd)))
+    archive.query(DocQuery.indexed(0, rnd))
+    archive
+  }
+
+  /** One set-up of the written collection, with the pre-signed requests
+    * and the generator that made them. */
+  private final case class IngestSetup(ops: DocOps, reqs: IndexedSeq[SignedRequest], gen: DocGen)
+
+  /** Signed `setup` with a small rollup threshold, 200 docs, `addIndex`,
+    * and the requests the client signs before the timed region. */
+  private def ingestSetup(spark: SparkSession, root: String, seed: Long, signedWrites: Int): IngestSetup = {
+    val gen = new DocGen(seed)
     val ops = new DocOps(spark, root, new Tracer(spark, false), new Recorder)
     val (td, sig) = GraftDB.signedMutationRequest(
       Seq(s"""{"minRollupSizeBytes":$MinRollupBytes}"""), 1L, AdminKey)
@@ -121,63 +141,58 @@ object DocWorkloads {
     ops.create()
     ops.add(Seq.fill(200)(gen.doc()))
     ops.db.addIndex(DocOps.Db, DocOps.Coll, "rate", "Int64Key")
-    // requests are signed by the client before the timed region
-    val reqs = (1 to Presigned).map { n =>
+    val reqs = (1 to signedWrites).map { n =>
       val docs = Seq.fill(3)(gen.doc())
       val (t, s) = GraftDB.signedMutationRequest(docs, n.toLong, WriterKey)
       SignedRequest(docs, n.toLong, t, s)
     }
-    (ops, reqs)
+    IngestSetup(ops, reqs, gen)
+  }
+
+  /** The closed-loop client. One cycle: 6 commits, each followed by the
+    * rollup tick, a snapshot after the 5th, and 4 reads: getDoc of the
+    * newest document, a query string, a structured query, and an
+    * indexed query on the archive. Batch sizes are fixed, so every seed
+    * rolls up and snapshots on the same schedule; the seed varies
+    * documents, patches, touched ids and query parameters. */
+  private final class IngestClient(st: IngestSetup, archive: DocOps, rnd: Random) {
+    import st.{gen, ops}
+    private var signedNext = 0
+    private def ids = ops.model.docs.keys.toIndexedSeq
+
+    private def commit(body: => Unit): Unit = { body; ops.rollupTick() }
+
+    def cycle(i: Int): Seq[() => Unit] = Seq(
+      () => commit(ops.add(Seq.fill(20)(gen.doc()))),
+      () => commit {
+        val pick = rnd.shuffle(ids).take(10)
+        ops.update(pick, pick.map(_ => gen.patch()))
+      },
+      () => ops.pointRead(ids.last),
+      () => commit { ops.signed(st.reqs(signedNext)); signedNext += 1 },
+      () => ops.query(DocQuery.queryStr(if (i % 2 == 0) 0 else 2, rnd, 0)),
+      () => commit(ops.add(Seq.fill(20)(gen.doc()))),
+      () => commit(ops.delete(rnd.shuffle(ids).take(5))),
+      () => ops.snapshot(),
+      () => ops.query(DocQuery.structured(i, rnd)),
+      () => commit { ops.signed(st.reqs(signedNext)); signedNext += 1 },
+      () => archive.query(DocQuery.indexed(i, rnd)))
   }
 
   def ingest(spark: SparkSession, work: String, seed: Long, seconds: Double, trace: Boolean): WorkloadResult = {
-    var gen: DocGen = null
-    var reqs: IndexedSeq[SignedRequest] = null
-    val (setupS, ops) = timedSetups(Setups) { i =>
-      gen = new DocGen(seed)
-      val (o, r) = ingestSetup(spark, s"$work/ingest_$i", gen)
-      reqs = r
-      o
-    }
-    val rnd = new Random(seed * 17 + 3)
-    var signedNext = 0
-    var commits = 0
-    def ids = ops.model.docs.keys.toIndexedSeq
-    def afterCommit(): Unit = {
-      commits += 1
-      ops.rollupTick()
-      if (commits % SnapshotEvery == 0) ops.snapshot()
-    }
-    def signedOrAdd(): Unit = {
-      if (signedNext < reqs.length) { ops.signed(reqs(signedNext)); signedNext += 1 }
-      else ops.add(Seq.fill(3)(gen.doc()))
-      afterCommit()
-    }
-    // one cycle: 6 commits (each followed by the rollup tick) and 4
-    // read-your-writes reads. Batch sizes are fixed, so every seed rolls
-    // up and snapshots on the same schedule; the seed varies the
-    // documents, the patches, which ids are touched and query parameters.
-    def cycle(i: Int): Seq[() => Unit] = {
-      var pick = Seq.empty[Long]
-      Seq(
-        () => { ops.add(Seq.fill(20)(gen.doc())); afterCommit() },
-        () => ops.pointRead(ids.last),
-        () => {
-          pick = rnd.shuffle(ids).take(10)
-          ops.update(pick, pick.map(_ => gen.patch())); afterCommit()
-        },
-        () => signedOrAdd(),
-        () => ops.query(DocQuery.queryStr(if (i % 2 == 0) 0 else 2, rnd, 0)),
-        () => { ops.add(Seq.fill(20)(gen.doc())); afterCommit() },
-        () => { ops.delete(rnd.shuffle(ids).take(5)); afterCommit() },
-        () => ops.pointRead(pick.head),
-        () => signedOrAdd(),
-        () => ops.query(DocQuery.structured(i, rnd)))
-    }
-    // the set-ups warmed the commit path; no separate warm-up cycle
+    val n = cyclesFor(seconds, IngestCycleS)
+    val archive = archiveSetup(spark, s"$work/archive", seed)
+    val setups = (0 until Setups).map(i => timed(ingestSetup(spark, s"$work/ingest_$i", seed, 2 * n)))
+    val setupS = Stats.median(setups.map(_._1))
+    val st = setups.last._2
+    val ops = st.ops
+    val client = new IngestClient(st, archive, new Random(seed * 17 + 3))
+    val warmFailures = archive.rec.notes.toSeq.map("warm-up " + _)
     ops.rec = new Recorder
     ops.tr = new Tracer(spark, trace)
-    val windowS = loop(seconds)(cycle)
+    archive.rec = ops.rec
+    archive.tr = ops.tr
+    val windowS = loop(n)(client.cycle)
     ops.tr.finish()
     ops.tr.writeSpans(java.nio.file.Paths.get(work, "spans.jsonl"))
     // Known defect: addIndex is never maintained on later writes, so an
@@ -193,8 +208,7 @@ object DocWorkloads {
     }.take(2).toSeq
     val stale = newest.zipWithIndex.count { case ((r, c), i) => !probe.query(DocQuery.indexedFor(i, r, c)) }
     val restart = ops.restartCheck()
-    WorkloadResult.docdb("docdb_ingest", setupS, windowS, ops,
-      Seq("commit" -> 4, "signed_commit" -> 2, "point_read" -> 2, "query" -> 2),
-      restart.map("restart check: " + _).toSeq, staleIndex = Some((stale, newest.size)))
+    WorkloadResult.docdb("docdb_ingest", setupS, s"median of $Setups set-ups", windowS, ops,
+      warmFailures ++ restart.map("restart check: " + _), staleIndex = Some((stale, newest.size)))
   }
 }

@@ -80,18 +80,11 @@ object Layers {
 
   def batch(tr: Tracer, runs: Seq[Batch.QueryRun], recoverMs: Double): Seq[Metric] = {
     final case class Q(full: Double, build: Double, task: Double, shuffle: Double)
-    val perRoot = tr.roots.map { r =>
-      val q = r.name.stripPrefix("op.batch.")
+    val q = tr.roots.map { r =>
+      val name = r.name.stripPrefix("op.batch.")
       val c = tr.countsUnder(r)
       val build = tr.descendants(r).filter(_.name == "batch.build").map(_.ms).sum
-      q -> Q(r.ms / 1000, build / 1000, c.taskMs / 1000, c.shuffleWriteBytes / MB)
-    }
-    // median over passes, per query
-    def med(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else Stats.median(xs)
-    val byQ = perRoot.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val q = Batch.Queries.map { case (name, module) =>
-      val rs = byQ.getOrElse(name, Nil)
-      (name, module, Q(med(rs.map(_.full)), med(rs.map(_.build)), med(rs.map(_.task)), med(rs.map(_.shuffle))))
+      (name, Batch.Queries.toMap.apply(name), Q(r.ms / 1000, build / 1000, c.taskMs / 1000, c.shuffleWriteBytes / MB))
     }
     val perQuery = q.flatMap { case (name, _, v) =>
       Seq(s"batch.$name.full_s" -> v.full, s"batch.$name.build_s" -> v.build, s"batch.$name.task_s" -> v.task)

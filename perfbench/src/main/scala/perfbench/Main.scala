@@ -44,7 +44,7 @@ object Main {
       val r = workload match {
         case "docdb_serve" => DocWorkloads.serve(spark, work, seed, seconds, trace)
         case "docdb_ingest" => DocWorkloads.ingest(spark, work, seed, seconds, trace)
-        case "batch_suite" => Batch.run(spark, work, seed, seconds, trace)
+        case "batch_suite" => Batch.run(spark, work, seed, trace)
       }
       r.report.foreach(l => System.err.println(s"[perfbench] $l"))
       val metrics = if (trace) r.layers else r.e2e

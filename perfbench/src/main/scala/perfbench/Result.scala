@@ -23,22 +23,18 @@ object WorkloadResult {
     else Seq(f"${name}_p50_ms: ${Stats.median(xs)}%.1f ms (n=${xs.size})") ++
       (if (p90) Seq(s"${name}_p90_ms: ${fmt(Stats.percentile(xs, 0.9))}") else Nil)
 
-  /** The end-to-end metrics every workload reports, from the workload's
-    * operation mix (kind -> operations of that kind per cycle) and each
-    * kind's median latency: `ops_per_s` is what one closed-loop client
-    * completes running the mix at those latencies, `op_geomean_ms` the
-    * mix's geometric-mean latency. Built from per-kind medians, neither
-    * depends on where the time limit cuts a cycle, and maintenance
-    * (rollup ticks, snapshots) is in neither. */
-  def generic(setupS: Double, mix: Seq[(String, Int)], medianMs: Map[String, Double]): Seq[Metric] = {
-    val n = mix.map(_._2).sum.toDouble
-    Seq(
-      Metric("setup_s", setupS, "s"),
-      Metric("ops_per_s", n / (mix.map { case (k, c) => c * medianMs(k) }.sum / 1000), "1/s"),
-      Metric("op_geomean_ms", math.exp(mix.map { case (k, c) => c * math.log(medianMs(k)) }.sum / n), "ms"))
-  }
+  /** The end-to-end metrics every workload reports, from the latencies
+    * of the client operations that succeeded in the measured window,
+    * which every run fills with the same operations. `ops_per_s` divides
+    * their number by the window's wall time, which holds everything the
+    * client thread ran, maintenance included; `op_geomean_ms` is their
+    * geometric mean. */
+  def endToEnd(setupS: Double, windowS: Double, okMs: Seq[Double]): Seq[Metric] = Seq(
+    Metric("setup_s", setupS, "s"),
+    Metric("ops_per_s", okMs.size / windowS, "1/s"),
+    Metric("op_geomean_ms", if (okMs.isEmpty) windowS * 1000 else Stats.geomean(okMs), "ms"))
 
-  def docdb(name: String, setupS: Double, windowS: Double, ops: DocOps, mix: Seq[(String, Int)],
+  def docdb(name: String, setupS: Double, setupNote: String, windowS: Double, ops: DocOps,
       notes: Seq[String], staleIndex: Option[(Int, Int)] = None): WorkloadResult = {
     val rec = ops.rec
     val client = rec.samples.filter(s => ClientOps.contains(s.kind))
@@ -47,10 +43,12 @@ object WorkloadResult {
     val (files, bytes) = DocOps.walk(ops.collDir)
     val storageAmp = bytes.toDouble / ops.payloadBytes
     val report = Seq(s"workload $name: ${client.size} client ops in ${f"$windowS%.1f"} s, " +
-      s"setup ${f"$setupS%.2f"} s (median of ${DocWorkloads.Setups})") ++
+      s"setup ${f"$setupS%.2f"} s ($setupNote)",
+      s"maintenance in the window: ${ops.rolledMs.size} rollups, ${rec.samples.count(_.kind == "maintenance") - ops.rolledMs.size} snapshots") ++
       pctLines("point_read", rec.ok("point_read"), p90 = name == "docdb_serve") ++
       (if (name == "docdb_serve") pctLines("query", rec.ok("query", "indexed_query"))
        else pctLines("query", rec.ok("query"), p90 = false) ++
+         pctLines("indexed_query", rec.ok("indexed_query"), p90 = false) ++
          pctLines("commit", rec.ok("commit")) ++
          pctLines("signed_commit", rec.ok("signed_commit"), p90 = false) ++
          pctLines("maintenance", rec.ok("maintenance"), p90 = false) ++
@@ -61,7 +59,7 @@ object WorkloadResult {
         s"known defect, not counted as a failed op: $bad of $n indexed queries after writes " +
           "disagreed with the model (addIndex is not maintained on later writes)"
       } ++ notes ++ rec.notes.map("failure: " + _)
-    val e2e = generic(setupS, mix, mix.map { case (k, _) => k -> Stats.median(rec.ok(k)) }.toMap)
+    val e2e = endToEnd(setupS, windowS, rec.ok(ClientOps: _*))
     val layers = if (!ops.tr.enabled) Nil else Layers.docdb(ops, files, staleIndex.fold(0)(_._1)) ++
       e2e.map(m => m.copy(name = "traced." + m.name))
     WorkloadResult(attempted, failed, e2e, layers, report)

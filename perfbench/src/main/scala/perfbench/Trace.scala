@@ -1,6 +1,6 @@
 package perfbench
 
-import org.apache.spark.BenchBridge
+import org.apache.spark.graftshim.ListenerBridge
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -127,7 +127,7 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
     * its stages and tasks) to a span: by its tag, else to the innermost
     * span running when the job started. */
   def finish(): Unit = if (enabled) {
-    BenchBridge.drainListenerBus(sc)
+    ListenerBridge.drain(sc)
     val acc = mutable.Map[Long, SparkCounts]()
     val jl = jobListener
     jl.synchronized {
