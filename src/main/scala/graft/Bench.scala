@@ -130,13 +130,9 @@ object Bench {
     calibrate() // warm the calibration path itself before timing it
     val calPerPass = new Array[Double](passes)
     val perPass = Array.tabulate(passes) { pass =>
-      // result-artifact caches must not leak across passes (each pass
-      // must time the operator, not a prior pass's persisted output);
-      // input-fixture caches (session doc collection) stay warm on purpose
-      graft.pipeline.Dedup.clearResultCaches()
-      graft.pipeline.Curation.clearResultCaches()
-      graft.operators.OperatorQueries.clearResultCaches()
-      graft.operators.SkewDispatch.clearStatsCache()
+      // memoized artifacts must not leak across passes (each pass must
+      // time the operator, not a prior pass's persisted output)
+      graft.sources.Memo.clear()
       var moves = Map.empty[String, (Long, Long, Long)]
       val res = names.map { case (name, fn) =>
         // snapshots sit OUTSIDE the timed window; the drains make the
@@ -224,12 +220,9 @@ object Bench {
     // ---- regression hygiene -------------------------------------------
     // normalized physical-plan hash per query (expr ids / plan ids / scan
     // listings stripped): lets the NEXT round tell a real plan change
-    // from box jitter. Result caches cleared so cache state can't leak
+    // from box jitter. The memo is cleared so cache state can't leak
     // InMemoryRelations into the hash.
-    graft.pipeline.Dedup.clearResultCaches()
-    graft.pipeline.Curation.clearResultCaches()
-    graft.operators.OperatorQueries.clearResultCaches()
-    graft.operators.SkewDispatch.clearStatsCache()
+    graft.sources.Memo.clear()
     val planHashes: Map[String, String] = names.map { case (name, fn) =>
       val h = try {
         val s = fn(spark, sfDir).queryExecution.executedPlan.toString

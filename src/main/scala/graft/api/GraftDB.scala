@@ -379,6 +379,7 @@ class GraftDB(spark: SparkSession, root: String,
       val block = st.lastBlock + 1
       val base = st.nextId
       val ids = docs.indices.map(base + _)
+      markIndexesStale(db, coll)
       append(db, coll, block, docs.zipWithIndex.map { case (d, i) =>
         Row(block, i, ActionAdd, base + i, d, null)
       })
@@ -398,6 +399,7 @@ class GraftDB(spark: SparkSession, root: String,
       val st = currentState(db, coll)
       sweepOrphanBatchDirs(db, coll, st.lastBlock)
       val block = st.lastBlock + 1
+      markIndexesStale(db, coll)
       append(db, coll, block, ids.indices.map { i =>
         Row(block, i, ActionUpdate, ids(i), docs(i),
           if (masks(i).isEmpty) null else masks(i).mkString(","))
@@ -413,6 +415,7 @@ class GraftDB(spark: SparkSession, root: String,
       val st = currentState(db, coll)
       sweepOrphanBatchDirs(db, coll, st.lastBlock)
       val block = st.lastBlock + 1
+      markIndexesStale(db, coll)
       append(db, coll, block, ids.zipWithIndex.map { case (id, i) =>
         Row(block, i, ActionDelete, id, null, null)
       })
@@ -456,6 +459,8 @@ class GraftDB(spark: SparkSession, root: String,
       // every blk_ dir above lastBlock is a dead attempt, or those
       // uncommitted rows would become visible under the new bound
       sweepOrphanBatchDirs(db, coll, st.lastBlock)
+      // the block's rows stay invisible until this bump commits them
+      markIndexesStale(db, coll)
       writeState(db, coll, CollState(math.max(st.lastBlock, block),
         math.max(st.nextId, (block + 1) * IdStride)))
     }
@@ -1123,6 +1128,7 @@ class GraftDB(spark: SparkSession, root: String,
       sweepOrphanBatchDirs(db, coll, st.lastBlock)
       val block = st.lastBlock + 1
       val base = st.nextId
+      markIndexesStale(db, coll)
       val rows = lines.rdd.zipWithIndex().map { case (doc, i) =>
         Row(block, i.toInt, ActionAdd, base + i, doc, null)
       }
@@ -1156,14 +1162,18 @@ class GraftDB(spark: SparkSession, root: String,
       payload: String = null): Long = {
     require(!DocActions.contains(action),
       s"action $action is a document mutation; use add/update/deleteDocuments")
-    withCollLock(db, coll) {
-      val st = currentState(db, coll)
-      sweepOrphanBatchDirs(db, coll, st.lastBlock)
-      val block = st.lastBlock + 1
-      append(db, coll, block, Seq(Row(block, 0, action, -1L, payload, null)))
-      writeState(db, coll, st.copy(lastBlock = block))
-      block
-    }
+    withCollLock(db, coll)(appendLifecycle(db, coll, action, payload))
+  }
+
+  /** `recordLifecycleMutation`'s body; the caller holds the lock. */
+  private def appendLifecycle(db: String, coll: String, action: Int,
+      payload: String): Long = {
+    val st = currentState(db, coll)
+    sweepOrphanBatchDirs(db, coll, st.lastBlock)
+    val block = st.lastBlock + 1
+    append(db, coll, block, Seq(Row(block, 0, action, -1L, payload, null)))
+    writeState(db, coll, st.copy(lastBlock = block))
+    block
   }
 
   /** CreateEventDB lifecycle record (db3_mutation_v2.proto:109): the
@@ -1181,32 +1191,54 @@ class GraftDB(spark: SparkSession, root: String,
     * mutation log (AddIndex = 8) and materialize the typed key
     * extraction as a sorted parquet index table — on a cluster this is
     * the bucketed/sorted projection that replaces the reference's EJDB2
-    * B-tree (row-group pruning on the sorted key). */
-  def addIndex(db: String, coll: String, path: String, indexType: String): Unit = {
-    recordLifecycleMutation(db, coll, ActionAddIndex,
-      s"""{"path":"$path","type":"$indexType"}""")
-    val idxDir = s"${collPath(db, coll)}/indexes/$path"
-    // try_cast: an index build over schemaless docs must skip mismatched
-    // values (they fall out via the isNotNull below), not abort the scan
-    // under ANSI mode
-    val keyCol = indexType match {
-      case "Int64Key" => get_json_object(col("doc"), "$." + path).try_cast("long")
-      case "DoubleKey" => get_json_object(col("doc"), "$." + path).try_cast("double")
-      case _ => get_json_object(col("doc"), "$." + path)
+    * B-tree (row-group pruning on the sorted key). The build runs under
+    * the collection lock, so no document write lands between the state
+    * it folds and its freshness marker, written last. */
+  def addIndex(db: String, coll: String, path: String, indexType: String): Unit =
+    withCollLock(db, coll) {
+      appendLifecycle(db, coll, ActionAddIndex,
+        s"""{"path":"$path","type":"$indexType"}""")
+      val idxDir = indexDir(db, coll, path)
+      // try_cast: an index build over schemaless docs must skip mismatched
+      // values (they fall out via the isNotNull below), not abort the scan
+      // under ANSI mode
+      val keyCol = indexType match {
+        case "Int64Key" => get_json_object(col("doc"), "$." + path).try_cast("long")
+        case "DoubleKey" => get_json_object(col("doc"), "$." + path).try_cast("double")
+        case _ => get_json_object(col("doc"), "$." + path)
+      }
+      collection(db, coll).df
+        .select(keyCol.as("idx_key"), col("_id"))
+        .filter(col("idx_key").isNotNull)
+        .sort("idx_key")
+        .write.mode(SaveMode.Overwrite).parquet(idxDir)
+      Files.createFile(Paths.get(idxDir, FreshMarker))
     }
-    collection(db, coll).df
-      .select(keyCol.as("idx_key"), col("_id"))
-      .filter(col("idx_key").isNotNull)
-      .sort("idx_key")
-      .write.mode(SaveMode.Overwrite).parquet(idxDir)
+
+  private def indexDir(db: String, coll: String, path: String) =
+    s"${collPath(db, coll)}/indexes/$path"
+
+  /** An index answers queries only while its dir holds this marker:
+    * `addIndex` writes it after the build, and every document write
+    * deletes it under the collection lock before committing its batch,
+    * so a crash can only leave an index marked stale. The index is not
+    * maintained incrementally; a stale one serves again after the next
+    * `addIndex`. Spark's reader skips `_`-prefixed files. */
+  private val FreshMarker = "_FRESH"
+
+  private def markIndexesStale(db: String, coll: String): Unit = {
+    val dirs = new java.io.File(s"${collPath(db, coll)}/indexes").listFiles()
+    if (dirs != null) dirs.foreach(d => Files.deleteIfExists(d.toPath.resolve(FreshMarker)))
   }
 
   /** Read a materialized index (idx_key, _id). */
   def index(db: String, coll: String, path: String): DataFrame =
-    spark.read.parquet(s"${collPath(db, coll)}/indexes/$path")
+    spark.read.parquet(indexDir(db, coll, path))
 
+  /** Whether a fresh index on `path` exists: built by `addIndex` with no
+    * document write since. */
   def hasIndex(db: String, coll: String, path: String): Boolean =
-    new java.io.File(s"${collPath(db, coll)}/indexes/$path").isDirectory
+    Files.exists(Paths.get(indexDir(db, coll, path), FreshMarker))
 
   /** Index-aware execution: when the query's leading field filter has a
     * materialized index, evaluate the predicate against the index scan

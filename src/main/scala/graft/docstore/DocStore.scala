@@ -486,35 +486,32 @@ object DocStore {
     df
   }
 
-  // The reference's index node MATERIALIZES documents from the mutation
-  // stream once and serves every query from the materialized state
-  // (node/src/indexer_impl.rs); re-deriving the collection per query is
-  // an artifact of the harness. Mirror the architecture: the events→docs
-  // mapping is computed once per (session, table) and persisted
-  // (memory-and-disk, spills at scale); real deployments read a stored
-  // GraftDB collection and never pay this mapping at query time.
-  private val collCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DocCollection]()
-
   /** The `events` table viewed as a document collection: each event row
     * becomes a JSON doc (the reference's event indexer writes decoded
     * EVM events as documents the same way — node/src/indexer_impl.rs). */
   def eventsCollection(spark: SparkSession, dir: String): DocCollection =
-    collCache.computeIfAbsent((spark, dir), _ => {
-      val ev = Tables.events(spark, dir)
-      val doc = to_json(struct(
+    eventDocs(spark, dir, "events") { ev =>
+      to_json(struct(
         ev("user_id"),
         ev("event_type"),
         ev("value"),
         unix_micros(ev("ts")).as("ts_us"),
         get_json_object(ev("props"), "$.k").cast("long").as("k")))
-      DocCollection("events",
-        ev.select(ev("event_id").as("_id"), doc.as("doc"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    }
 
-  private val unaryCollCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DocCollection]()
+  /** `events` as the collection `name`, one doc per event built by
+    * `doc`. The reference's index node MATERIALIZES documents from the
+    * mutation stream once and serves every query from that state
+    * (node/src/indexer_impl.rs); mirror it: the events→docs mapping is
+    * persisted once per corpus (memory-and-disk, spills at scale). Real
+    * deployments read a stored GraftDB collection and never pay this
+    * mapping at query time. */
+  private def eventDocs(spark: SparkSession, dir: String, name: String)(
+      doc: DataFrame => Column): DocCollection = {
+    val ev = Tables.events(spark, dir)
+    DocCollection(name, graft.sources.Memo.persisted("docstore." + name, ev)(
+      ev.select(ev("event_id").as("_id"), doc(ev).as("doc"))))
+  }
 
   /** Events re-shaped as the UNARY-FILTER fixture: docs that exercise all
     * three null-ish field states the schemaless model distinguishes —
@@ -527,10 +524,9 @@ object DocStore {
     * pmod guards sign, the coalesces pin every null a three-valued SQL
     * mirror would diverge on. Deterministic in the raw events columns so
     * DuckDB can recompute the same predicate relationally. Materialized
-    * once per (session, table) like `eventsCollection`. */
+    * once per corpus like `eventsCollection`. */
   def eventsUnaryCollection(spark: SparkSession, dir: String): DocCollection =
-    unaryCollCache.computeIfAbsent((spark, dir), _ => {
-      val ev = Tables.events(spark, dir)
+    eventDocs(spark, dir, "events_unary") { ev =>
       val k0 = get_json_object(ev("props"), "$.k").try_cast("long")
       val km = pmod(coalesce(k0, lit(13L)), lit(105L))
       val kn = when(km % 5 === 0, lit(null).cast("long")).otherwise(km)
@@ -540,28 +536,18 @@ object DocStore {
         struct(kn.as("k"), q.as("q"), ev("event_type").as("t")),
         Map("ignoreNullFields" -> "false"))
       val noK = to_json(struct(q.as("q"), ev("event_type").as("t")))
-      DocCollection("events_unary",
-        ev.select(ev("event_id").as("_id"),
-            when(km % 3 === 1, noK).otherwise(withK).as("doc"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
-
-  private val nestedCollCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DocCollection]()
+      when(km % 3 === 1, noK).otherwise(withK)
+    }
 
   /** Events re-shaped as NESTED docs `{"meta":{"k":…,"uid":…},"t":…}` —
-    * the dotted-path fixture, materialized once per (session, table)
+    * the dotted-path fixture, materialized once per corpus
     * exactly like `eventsCollection` above. */
   def eventsNestedCollection(spark: SparkSession, dir: String): DocCollection =
-    nestedCollCache.computeIfAbsent((spark, dir), _ => {
-      val ev = Tables.events(spark, dir)
-      val doc = to_json(struct(
+    eventDocs(spark, dir, "events_nested") { ev =>
+      to_json(struct(
         struct(
           get_json_object(ev("props"), "$.k").cast("long").as("k"),
           ev("user_id").as("uid")).as("meta"),
         ev("event_type").as("t")))
-      DocCollection("events_nested",
-        ev.select(ev("event_id").as("_id"), doc.as("doc"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    }
 }

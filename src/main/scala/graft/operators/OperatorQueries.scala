@@ -15,8 +15,8 @@ object OperatorQueries {
   /** The as-of right side: one order per (custkey, date). Primitive
     * max/max_by (not max_by over a struct) keeps the dedup a
     * HashAggregate. */
-  private def ordDedup(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
+  private def ordDedup(orders: DataFrame): DataFrame =
+    orders
       .groupBy(col("o_custkey"), col("o_orderdate"))
       .agg(max(col("o_orderkey")).as("o_orderkey"),
         max_by(col("o_totalprice"), col("o_orderkey")).as("o_totalprice"))
@@ -26,18 +26,10 @@ object OperatorQueries {
     * persist each use re-derives the whole dedup lineage. The direct
     * form reads it once and takes the plain aggregation (a persist there
     * is pure materialization overhead). Input-materialization, the
-    * e2eBase pattern (Curation.scala); Bench drops it between passes. */
-  private val ordCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def ordDedupShared(spark: SparkSession, dir: String): DataFrame =
-    ordCache.computeIfAbsent((spark, dir), _ =>
-      ordDedup(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private[graft] def clearResultCaches(): Unit = {
-    ordCache.forEach((_, df) => df.unpersist())
-    ordCache.clear()
+    * e2eBase pattern (Curation.scala). */
+  private def ordDedupShared(spark: SparkSession, dir: String): DataFrame = {
+    val orders = Tables.orders(spark, dir)
+    graft.sources.Memo.persisted("operators.ord_dedup", orders)(ordDedup(orders))
   }
 
   /** Each event joined to the user's latest order at or before the event
@@ -47,7 +39,7 @@ object OperatorQueries {
     // one order per (custkey, date) via max_by argmax (partial agg — a
     // hot customer collapses map-side) instead of a row_number window;
     // row_number desc rn=1 ⇔ max o_orderkey, and o_orderkey is unique
-    val ord = ordDedup(spark, dir)
+    val ord = ordDedup(Tables.orders(spark, dir))
     val ev = Tables.events(spark, dir)
       .select("event_id", "user_id", "ts", "value")
     AsOfJoin.asOf(ev, ord,

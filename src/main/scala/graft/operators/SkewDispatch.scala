@@ -36,52 +36,18 @@ import org.apache.spark.sql.functions._
   */
 object SkewDispatch {
 
-  /** ANALYZE-style stats memo: the probe's result keyed by the
-    * canonicalized probe plan — an immutable corpus pays the probe scan
-    * once per session, and every later dispatched query decides from
-    * the cached histogram (exactly how engines reuse table statistics).
-    * Timing harnesses (Bench, ScaleSmoke) clear it between passes so
-    * the committed artifacts keep pricing the probe. */
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Double, Long, Long)]()
-
-  private[graft] def clearStatsCache(): Unit = statsCache.clear()
-
-  /** Entry cap: each value is three numbers but the key retains a plan
-    * string; a runaway key space (many ad-hoc plans in one long-lived
-    * JVM) resets the memo instead of growing unbounded — the probe just
-    * re-runs, which is the uncached behavior anyway. */
-  private val MaxStatsEntries = 1024
-
-  /** `hottestKey` through the stats memo. The key must identify the
-    * DATA, not just the plan shape: a canonicalized plan's string form
-    * prints `Relation [cols] parquet` with no path, so two corpora with
-    * the same schema would collide and a skewed corpus could inherit a
-    * uniform corpus's histogram (or vice versa — exactly the dispatch
-    * error the probe exists to avoid). The key therefore appends every
-    * leaf's source paths, and uses the session UUID rather than the
-    * session object so a stopped session is never retained. */
+  /** `hottestKey` through the memo — ANALYZE-style stats: an immutable
+    * corpus pays the probe scan once per session, and every later
+    * dispatched query decides from the memoized histogram (exactly how
+    * engines reuse table statistics). The canonicalized probe plan is
+    * part of the key; it prints no source path, but the memo also keys
+    * on the input's scanned files, so two corpora with the same schema
+    * never share an entry. */
   def hottestKeyCached(df: DataFrame, key: Column,
-      capacity: Int = 256): (Double, Long, Long) = {
-    if (statsCache.size > MaxStatsEntries) statsCache.clear()
-    val probe = df.select(key).queryExecution.analyzed
-    val sources = probe.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.mkString(",")
-          case other => other.toString
-        }
-      case leaf: org.apache.spark.sql.catalyst.plans.logical.LeafNode =>
-        leaf.nodeName
-    }.mkString(";")
-    // identityHashCode scopes entries per session instance without
-    // RETAINING the session (a stopped session's entries just go stale
-    // until the cap reset; keying the object itself would pin its heap)
-    statsCache.computeIfAbsent(
-      s"${System.identityHashCode(df.sparkSession)}|$capacity|$sources|${probe.canonicalized}",
-      _ => hottestKey(df, key, capacity))
-  }
+      capacity: Int = 256): (Double, Long, Long) =
+    graft.sources.Memo("skew.hottest_key", df, capacity,
+        df.select(key).queryExecution.analyzed.canonicalized.toString)(
+      hottestKey(df, key, capacity))
 
   /** Hottest-key estimate over `key` (must cast to BIGINT):
     * (share, hotCount, total); zeros on empty input. One HeavyHitters +

@@ -155,33 +155,13 @@ object Ann {
     }
   }
 
-  // An IVF coarse quantizer is an INDEX artifact: built once, reused by
-  // every search/blocking pass over the same corpus (FAISS persists it;
-  // the reference persists its EJDB indexes the same way). Memoize the
-  // driver-side centroid rows per (corpus files, C) so one session's
-  // queries share one build instead of re-training per query. Keyed by
-  // the scan's file set — any rewrite of the corpus changes the key.
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[Row]]()
-
-  /** Introspection for AnnIndexSpec's zero-training-on-read proof: a
-    * search over a persisted index must leave both training caches
-    * untouched (any retraining would repopulate them). */
-  private[pipeline] def trainedCacheSizes: (Int, Int) =
-    (centroidCache.size, pqCache.size)
-  private[pipeline] def clearTrainedCaches(): Unit = {
-    centroidCache.clear(); pqCache.clear()
-  }
-
   /** IVF coarse quantizer: sample-trained centroids (buildCentroids) as
-    * a C-row LocalRelation, cached per (corpus files, C). */
+    * a C-row LocalRelation. The quantizer is an INDEX artifact, built
+    * once per (corpus, C) and reused by every search/blocking pass over
+    * the same corpus (FAISS persists it; the reference persists its EJDB
+    * indexes the same way). */
   private[pipeline] def ivfCentroids(e: DataFrame, c: Int): DataFrame = {
-    val files = e.inputFiles
-    val rows =
-      if (files.nonEmpty)
-        centroidCache.computeIfAbsent((files.sorted.mkString(","), c),
-          _ => buildCentroids(e, c))
-      else buildCentroids(e, c) // in-memory corpora (tests): no stable key
+    val rows = graft.sources.Memo("ann.centroids", e, c)(buildCentroids(e, c))
     e.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), centroidSchema)
   }
@@ -283,16 +263,8 @@ object Ann {
   // PQ codebooks are an index artifact like the IVF quantizer: trained
   // once per (corpus, m, ksub) on a driver-side sample, reused by every
   // encode/search over the same files.
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Array[Float]]()
-
-  private[pipeline] def pqCodebooks(e: DataFrame, m: Int, ksub: Int): Array[Float] = {
-    val files = e.inputFiles
-    if (files.nonEmpty)
-      pqCache.computeIfAbsent((files.sorted.mkString(","), m, ksub),
-        _ => pqTrain(e, m, ksub))
-    else pqTrain(e, m, ksub)
-  }
+  private[pipeline] def pqCodebooks(e: DataFrame, m: Int, ksub: Int): Array[Float] =
+    graft.sources.Memo("ann.pq", e, m, ksub)(pqTrain(e, m, ksub))
 
   /** Sub-quantizer training: per subspace, ksub seeds (the sample's
     * lowest vec_ids — deterministic) + 3 Lloyd rounds of squared-L2

@@ -64,16 +64,12 @@ object Bpe {
     merges.result()
   }
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[String]]()
-
-  /** Corpus-trained merge list, cached per (corpus files, nMerges).
+  /** Corpus-trained merge list, memoized per (corpus, nMerges).
     * The distributed half is ONE word-count groupBy capped to the top
     * 65 536 words by (count desc, word asc) — a bounded driver problem
     * at any corpus size, like the IVF/PQ quantizers. */
-  private[pipeline] def corpusMerges(docs: DataFrame, nMerges: Int): Seq[String] = {
-    val files = docs.inputFiles
-    def train(): Seq[String] = {
+  private[pipeline] def corpusMerges(docs: DataFrame, nMerges: Int): Seq[String] =
+    graft.sources.Memo("bpe.merges", docs, nMerges) {
       val counts = docs
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
@@ -85,10 +81,6 @@ object Bpe {
         .toSeq
       trainMerges(counts, nMerges)
     }
-    if (files.nonEmpty)
-      cache.computeIfAbsent((files.sorted.mkString(","), nMerges), _ => train())
-    else train()
-  }
 
   /** Per-document BPE token counts under a 64-merge corpus-trained
     * model, next to the whitespace count — the compression the learned

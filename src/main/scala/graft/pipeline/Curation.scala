@@ -467,6 +467,14 @@ object Curation {
       |      FROM d)
       |SELECT source, doc_id, lang, h, rn FROM r WHERE rn <= 25""".stripMargin
 
+  /** The chain's single-scan input: the narrow (doc_id, text, source)
+    * projection, persisted once per corpus. */
+  private def e2eBase(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    graft.sources.Memo.persisted("curation.e2e_base", docs)(
+      docs.select(col("doc_id"), col("text"), col("source")))
+  }
+
   /** The END-TO-END curation chain, one declarative plan: exact dedup
     * (min doc_id per content hash) → Gopher-style quality gate →
     * benchmark decontamination (n-gram containment vs the doc_id < 20
@@ -480,28 +488,7 @@ object Curation {
     * and feeds every branch from it: the executed plan reads the corpus
     * exactly once (pinned in CurationE2eSpec) and the three re-reads are
     * in-memory columnar scans of the 3-column projection — the
-    * production single-pass shape at 100 TB. The cache is an INPUT
-    * projection, not a result artifact, but Bench still drops it between
-    * passes (clearResultCaches) so every timed pass pays the real scan. */
-  /** The chain's single-scan input: the narrow (doc_id, text, source)
-    * projection, persisted once per (session, corpus). Holds INPUT, not
-    * results — the production "read the corpus once, feed every curation
-    * stage" pattern; Bench drops it between passes. */
-  private val e2eBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def e2eBase(spark: SparkSession, dir: String): DataFrame =
-    e2eBaseCache.computeIfAbsent((spark, dir), _ =>
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"), col("source"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Drop the persisted e2e input projection (Bench, between passes). */
-  private[graft] def clearResultCaches(): Unit = {
-    e2eBaseCache.forEach((_, df) => df.unpersist())
-    e2eBaseCache.clear()
-  }
-
+    * production single-pass shape at 100 TB. */
   def pipelineE2e(spark: SparkSession, dir: String): DataFrame = {
     val d = e2eBase(spark, dir)
     val exactKeep = d

@@ -48,58 +48,17 @@ object Dedup {
   // IMPORTANT: the driver-visible `dedup_ngram_jaccard` query runs the
   // UNCACHED plan (below) so the benchmark times the join itself — a
   // result cache must never masquerade as query speed; only downstream
-  // consumers (Curation.keepList) read the cached artifact.
-  // Keyed by identityHashCode, NOT the session object, so the map's keys
-  // never pin a stopped SparkSession (the SkewDispatch.statsCache
-  // pattern). The DataFrame VALUE still references its session, so stale
-  // entries are actively evicted: every lookup first sweeps entries
-  // whose context has stopped, and an entry cap bounds same-context
-  // growth (unpersist-on-evict both ways). identityHashCode collisions
-  // between a stopped and a live session can't alias because the sweep
-  // runs before the lookup.
-  private[pipeline] val jaccardCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-  private[pipeline] val MaxJaccardEntries = 64
-
-  /** Drop entries whose owning session is gone. The predicate is
-    * injectable so the eviction path is testable without stopping the
-    * suite-shared context. */
-  private[pipeline] def evictStale(
-      stopped: SparkSession => Boolean = _.sparkContext.isStopped): Unit = {
-    val it = jaccardCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (stopped(e.getValue.sparkSession)) {
-        // a genuinely stopped context already dropped its blocks — the
-        // unpersist is for injected predicates (live-session eviction)
-        scala.util.Try(e.getValue.unpersist())
-        it.remove()
-      }
-    }
-  }
-
+  // consumers (Curation.keepList) read the memoized artifact.
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    evictStale()
-    if (jaccardCache.size >= MaxJaccardEntries) clearResultCaches()
-    jaccardCache.computeIfAbsent((System.identityHashCode(spark), dir), _ =>
-      dedupNgramJaccardPlan(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** Drop the memoized jaccard artifacts (and their persisted blocks).
-    * Bench calls this between passes: CacheManager rewrites ANY query
-    * whose plan contains a cached plan's subtree, so even the uncached
-    * `dedupNgramJaccardPlan` is served from the artifact once `keepList`
-    * has populated it — without this, passes 2+ of both
-    * dedup_ngram_jaccard and pipeline_keep_list time a cache read. */
-  private[graft] def clearResultCaches(): Unit = {
-    jaccardCache.forEach((_, df) => scala.util.Try(df.unpersist()))
-    jaccardCache.clear()
+    val docs = Tables.documents(spark, dir)
+    graft.sources.Memo.persisted("dedup.jaccard", docs)(jaccardPairsOfDocs(docs))
   }
 
   private[pipeline] def dedupNgramJaccardPlan(spark: SparkSession, dir: String): DataFrame =
-    jaccardPairsOf(Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), trim(col("text")).as("t")))
+    jaccardPairsOfDocs(Tables.documents(spark, dir))
+
+  private def jaccardPairsOfDocs(docs: DataFrame): DataFrame =
+    jaccardPairsOf(docs.select(col("doc_id"), col("lang"), trim(col("text")).as("t")))
 
   /** The jaccard pair join over an arbitrary doc set `docs`
     * (doc_id, lang, t) — extracted so the incremental clustering path

@@ -25,15 +25,8 @@ object Pca {
   /** (eigenvalues desc, row-major basis: k rows of [v_r | -v_r·μ]) */
   private[pipeline] case class Model(evals: Array[Double], affine: Array[Float], dim: Int)
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Model]()
-
-  private[pipeline] def model(e: DataFrame, k: Int): Model = {
-    val files = e.inputFiles
-    if (files.nonEmpty)
-      cache.computeIfAbsent((files.sorted.mkString(","), k), _ => fit(e, k))
-    else fit(e, k)
-  }
+  private[pipeline] def model(e: DataFrame, k: Int): Model =
+    graft.sources.Memo("pca.model", e, k)(fit(e, k))
 
   private def fit(e: DataFrame, k: Int): Model = {
     val dim = Ann.Dim

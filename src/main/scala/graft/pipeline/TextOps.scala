@@ -476,27 +476,18 @@ object TextOps {
   // .eventsCollection materializes the events→docs mapping once. Without
   // it every BM25 evaluation tokenizes the full text column twice —
   // the term-frequency HOFs over multi-KB text dominate the scan at
-  // 100 TB. Keyed by identityHashCode with a stale-session sweep (the
-  // jaccardCache discipline) so stopped sessions never pin blocks.
-  private val tfCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-
+  // 100 TB.
   private def bm25TfProjection(spark: SparkSession, dir: String): DataFrame = {
-    val it = tfCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.sparkSession.sparkContext.isStopped) it.remove()
-    }
-    tfCache.computeIfAbsent((System.identityHashCode(spark), dir), _ => {
-      val base = Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
+    graft.sources.Memo.persisted("text.bm25_tf", docs) {
+      val base = docs
         .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
         .withColumn("dl", size(col("toks")).cast("double"))
       bm25Terms.foldLeft(base) { (df, t) =>
         df.withColumn(s"tf_$t",
           size(filter(col("toks"), x => x === lit(t))).cast("double"))
       }.drop("toks")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 
   def textSearchBm25(spark: SparkSession, dir: String): DataFrame = {

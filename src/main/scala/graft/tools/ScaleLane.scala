@@ -51,20 +51,18 @@ object ScaleLane {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     ScaleSmoke.buildCorpus(spark, base, scaled, copies)
-    // JIT/codegen warmup on the SMALL sf (per-corpus caches key on the
-    // dir, so nothing timed below is warmed); cold-per-shape on the
-    // scaled corpus is the measurement — it includes index/sample
+    // JIT/codegen warmup on the base corpus (the memo is cleared before
+    // every timed query, so no warm-up artifact is reused); cold-per-shape
+    // on the scaled corpus is the measurement — it includes index/sample
     // builds, which must themselves scale
     spark.range(1000).selectExpr("sum(id)").collect()
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.01").count()
-      catch { case NonFatal(_) => }
+      try graft.SparkEntry.queries(n)(spark, base).count()
+      catch { case NonFatal(e) =>
+        System.err.println(s"[scale-lane] warm-up $n failed: ${e.getMessage}") }
     }
     val times = names.map { n =>
-      graft.pipeline.Dedup.clearResultCaches()
-      graft.pipeline.Curation.clearResultCaches()
-      graft.operators.OperatorQueries.clearResultCaches()
-      graft.operators.SkewDispatch.clearStatsCache()
+      graft.sources.Memo.clear()
       val t0 = System.nanoTime()
       val ok = try { graft.SparkEntry.queries(n)(spark, scaled).count(); true }
         catch { case NonFatal(e) =>
@@ -75,7 +73,8 @@ object ScaleLane {
     }
     println("{\"lane\":\"scale\",\"copies\":" + copies + ",\"cpus\":" + cpus +
       ",\"queries\":{" +
-      times.map { case (n, t) => s""""$n":${"%.3f".format(t)}""" }.mkString(",") +
+      times.map { case (n, t) =>
+        s""""$n":${"%.3f".formatLocal(java.util.Locale.ROOT, t)}""" }.mkString(",") +
       "}}")
     spark.stop()
   }

@@ -250,10 +250,7 @@ object ScaleSmoke {
     shapes.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       def cold(dir: String): Double = {
-        graft.pipeline.Dedup.clearResultCaches()
-        graft.pipeline.Curation.clearResultCaches()
-        graft.operators.OperatorQueries.clearResultCaches()
-        graft.operators.SkewDispatch.clearStatsCache()
+        graft.sources.Memo.clear()
         val t0 = System.nanoTime()
         fn(spark, dir).count()
         (System.nanoTime() - t0) / 1e9
@@ -519,7 +516,7 @@ object ScaleSmoke {
     // auto verdict must budget it explicitly (a fixed cost that
     // amortizes at real scale but dominates sub-second lane queries)
     def probeCost(dir: String): Double = {
-      graft.operators.SkewDispatch.clearStatsCache()
+      graft.sources.Memo.clear()
       val ev = graft.sources.Tables.events(spark, dir)
       val t0 = System.nanoTime()
       graft.operators.SkewDispatch.hottestKey(ev,
@@ -556,10 +553,7 @@ object ScaleSmoke {
     shapes.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       def cold(dir: String): Double = {
-        graft.pipeline.Dedup.clearResultCaches()
-        graft.pipeline.Curation.clearResultCaches()
-        graft.operators.OperatorQueries.clearResultCaches()
-        graft.operators.SkewDispatch.clearStatsCache()
+        graft.sources.Memo.clear()
         val t0 = System.nanoTime()
         fn(spark, dir).count()
         (System.nanoTime() - t0) / 1e9
@@ -686,7 +680,7 @@ object ScaleSmoke {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      graft.pipeline.Dedup.clearResultCaches()
+      graft.sources.Memo.clear()
       val df = graft.SparkEntry.queries("dedup_ngram_jaccard")(spark, skewDir)
       df.queryExecution.toRdd.count() // execute THIS plan (no derived agg)
       def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {

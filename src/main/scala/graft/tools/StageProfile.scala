@@ -41,13 +41,9 @@ object StageProfile {
     spark.range(1000).selectExpr("sum(id)").collect()
     names.foreach { n =>
       // warm pass: JIT + parquet footers out of the measurement
-      graft.pipeline.Dedup.clearResultCaches()
-      graft.pipeline.Curation.clearResultCaches()
-      graft.operators.OperatorQueries.clearResultCaches()
+      graft.sources.Memo.clear()
       graft.SparkEntry.queries(n)(spark, sfDir).count()
-      graft.pipeline.Dedup.clearResultCaches()
-      graft.pipeline.Curation.clearResultCaches()
-      graft.operators.OperatorQueries.clearResultCaches()
+      graft.sources.Memo.clear()
       val l = new L
       spark.sparkContext.addSparkListener(l)
       val t0 = System.nanoTime()

@@ -25,9 +25,7 @@ object TimeQueries {
     spark.range(1000).selectExpr("sum(id)").collect()
     val times = collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     for (p <- 1 to passes; n <- names) {
-      graft.pipeline.Dedup.clearResultCaches()
-      graft.pipeline.Curation.clearResultCaches()
-      graft.operators.OperatorQueries.clearResultCaches()
+      graft.sources.Memo.clear()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(n)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9

@@ -305,6 +305,13 @@ class PlanPinsSpec extends SparkSpec {
         fail("merge.touched cut not observed"))
       assert(joins(touched) === 1, touched)
       assert(touched.contains("Scan ExistingRDD"), touched) // reads cand's cut
+      // the rep collapse (r16): ONE delta scan into ONE rep aggregate,
+      // with the E1 member ids folded into it — no join
+      val reps = pre.getOrElse("merge.reps", fail("merge.reps cut not observed"))
+      assert(reps.linesIterator.count(_.contains("Scan ")) === 1, reps)
+      assert(reps.linesIterator.count(l => l.contains("Aggregate") &&
+        !l.contains("partial_")) === 1, reps)
+      assert(joins(reps) === 0, reps)
     } finally graft.pipeline.Cut.probe = null
   }
 

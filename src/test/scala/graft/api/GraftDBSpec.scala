@@ -136,6 +136,32 @@ class GraftDBSpec extends SparkSpec {
     assert(db.queryWithIndex("d1", "c", q2).count() === db.query("d1", "c", q2).count())
   }
 
+  test("a document write after addIndex stops queryWithIndex reading the stale index") {
+    import graft.docstore.FieldValue._
+    val db = freshDb()
+    db.createCollection("d1", "c")
+    val ids = db.addDocuments("d1", "c", (0 until 20).map(i => s"""{"rate":${i % 10}}"""))
+    db.addIndex("d1", "c", "rate", "Int64Key")
+    // lifecycle mutations, another index included, leave it fresh
+    db.createEventDb("d1", "c")
+    db.addIndex("d1", "c", "tag", "StringKey")
+    assert(db.hasIndex("d1", "c", "rate"))
+    // one doc moves into the range, one out of it, one new doc lands in it
+    db.updateDocuments("d1", "c", Seq(ids(1), ids(8)),
+      Seq("""{"rate":9}""", """{"rate":0}"""), Seq(Nil, Nil))
+    db.addDocuments("d1", "c", Seq("""{"rate":8}"""))
+    val q = StructuredQuery(where = Some(FieldFilter("rate", Op.Ge, I64(7))))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("_id", "doc").collect().map(_.toString).sorted.toSeq
+    val want = rows(db.query("d1", "c", q))
+    assert(rows(db.queryWithIndex("d1", "c", q)) === want)
+    assert(!db.hasIndex("d1", "c", "rate") && !db.hasIndex("d1", "c", "tag"))
+    // the next addIndex makes it serve again, with the new state
+    db.addIndex("d1", "c", "rate", "Int64Key")
+    assert(db.hasIndex("d1", "c", "rate"))
+    assert(rows(db.queryWithIndex("d1", "c", q)) === want)
+  }
+
   test("indexed Eq lookup prunes the log scan via a pushed id filter") {
     import graft.docstore._
     import graft.docstore.FieldValue._

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.Tables
+import graft.sources.{Memo, Tables}
 
 /** The skew-aware twin dispatcher: the probe's (share, count)
   * estimate, the two-condition decision rule (parallelism-relative
@@ -69,7 +69,7 @@ class SkewDispatchSpec extends SparkSpec {
   }
 
   test("stats memo: probe runs once per (plan, capacity), cleared on demand") {
-    SkewDispatch.clearStatsCache()
+    Memo.clear()
     val ev = Tables.events(spark, sf)
     val first = SkewDispatch.hottestKeyCached(ev, col("user_id"))
     assert(first === SkewDispatch.hottestKey(ev, col("user_id")))
@@ -115,14 +115,14 @@ class SkewDispatchSpec extends SparkSpec {
       drainWithSentinel()
       assert(jobs.get() > 0, "distinct capacity must re-probe")
     } finally sc.removeSparkListener(listener)
-    SkewDispatch.clearStatsCache()
+    Memo.clear()
     }
 
   test("stats memo: two corpora with the same schema get distinct entries") {
     // the canonicalized plan string carries NO source path (Relation
     // [cols] parquet), so the key must add the leaves' root paths — a
     // collision would hand a skewed corpus the uniform histogram
-    SkewDispatch.clearStatsCache()
+    Memo.clear()
     val a = SkewDispatch.hottestKeyCached(
       Tables.events(spark, "/root/testdata/sf0.001"), col("user_id"))
     val b = SkewDispatch.hottestKeyCached(
@@ -131,7 +131,7 @@ class SkewDispatchSpec extends SparkSpec {
       "different corpora must not share a memo entry (totals differ)")
     assert(b === SkewDispatch.hottestKey(
       Tables.events(spark, "/root/testdata/sf0.01"), col("user_id")))
-    SkewDispatch.clearStatsCache()
+    Memo.clear()
   }
 
   test("asOfAuto picks direct on uniform, bucketed past both cuts, equal results") {

@@ -20,13 +20,13 @@ class AnnIndexSpec extends SparkSpec {
     val lsh = rows(Ann.annLsh(spark, sf))
     AnnIndex.build(spark, sf, idx)
 
-    // the read path must not retrain: clear the training memos and
-    // assert they STAY empty through all three searches
-    Ann.clearTrainedCaches()
+    // the read path must not retrain: clear the memo and assert it
+    // STAYS empty through all three searches
+    graft.sources.Memo.clear()
     assert(rows(AnnIndex.searchIvf(spark, sf, idx)) === ivf)
     assert(rows(AnnIndex.searchPq(spark, sf, idx)) === pq)
     assert(rows(AnnIndex.searchLsh(spark, sf, idx)) === lsh)
-    assert(Ann.trainedCacheSizes === ((0, 0)),
+    assert(graft.sources.Memo.size === 0,
       "a persisted-index search retrained a quantizer")
 
     // the inverted file is the serving layout: cid is a PARTITION dir

@@ -46,7 +46,7 @@ class CurationE2eSpec extends SparkSpec {
   }
 
   test("pipeline_e2e executed plan reads the corpus ONCE: every stage branch feeds from the persisted projection") {
-    Curation.clearResultCaches()
+    graft.sources.Memo.clear()
     val df = Curation.pipelineE2e(spark, sf)
     df.count() // materialize the chain (and the persisted projection)
     // logical traversal: InMemoryRelation is a LEAF (collect does not
@@ -63,7 +63,7 @@ class CurationE2eSpec extends SparkSpec {
     assert(directScans.isEmpty,
       s"chain still plans ${directScans.size} direct documents scans:\n$lp")
     assert(memRels.nonEmpty, s"chain does not read the persisted projection:\n$lp")
-    Curation.clearResultCaches()
+    graft.sources.Memo.clear()
   }
 
   test("reservoir two-phase prefilter is semantics-preserving and never undershoots") {

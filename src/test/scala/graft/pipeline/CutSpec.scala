@@ -14,8 +14,8 @@ class CutSpec extends SparkSpec {
   private val cutters = Seq("pipeline_dsir", "dedup_clusters_incremental")
 
   private def rows(name: String): Set[String] = {
-    // result caches would serve mode A's artifact to mode B's run
-    Dedup.clearResultCaches()
+    // memoized artifacts would serve mode A's result to mode B's run
+    graft.sources.Memo.clear()
     SparkEntry.queries(name)(spark, sf)
       .collect().map(_.toString).toSet
   }
