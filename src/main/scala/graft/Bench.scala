@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+
+import graft.tools.Harness
 
 /** Benchmark entrypoint: times every `SparkEntry.queries` entry on
   * `SPARK_GRAFT_SF_DIR` and prints ONE compact JSON line on stdout
@@ -37,73 +38,25 @@ import scala.util.control.NonFatal
   * "shuffle_mb" / "shuffle_read_mb" / "spill_mb".
   */
 object Bench {
-  /** Data-movement counters for the bench's shuffle/spill lane:
-    * stage-level task metrics (already aggregated across the stage's
-    * tasks by the scheduler) summed into atomics. Deltas between
-    * drained snapshots attribute bytes to the query that ran between
-    * them — shuffle WRITE bytes are the headline (each exchange counts
-    * its data once; read ≈ write at local[32]), spill is max'd per
-    * query across passes because ANY spill at bench scale is a sizing
-    * bug worth flagging, not noise to median away. */
-  private final class MovementListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong(0L)
-    val write = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spill = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      // attempt 0 only: a retried/speculative stage attempt re-reports the
-      // same bytes, which would break the "bytes are plan-deterministic"
-      // premise of the tight 1.3×/16 MB gate (and land a query in
-      // "spilled" off a flaky pass)
-      if (m != null && e.stageInfo.attemptNumber == 0) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-      }
-    }
-    def snap(): (Long, Long, Long) = (read.get, write.get, spill.get)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val mover = new MovementListener
-    spark.sparkContext.addSparkListener(mover)
-    def drain(): Unit =
-      org.apache.spark.graftshim.ListenerBridge.drain(spark.sparkContext)
+    val spark = Harness.session()
+    // data-movement lane: stage-level shuffle/spill byte totals,
+    // snapshotted around each timed run
+    val stages = Harness.Stages.attach(spark)
     // Warm up what is shared across queries and NOT the thing being
-    // measured: JVM/codegen paths, parquet footers + schema inference for
-    // every base table at this SF. Without this the first timed query
-    // absorbs session + IO setup (doc_filter_in showed 12.8s in r02 purely
-    // from hash-map iteration order putting it first).
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // events.parquet carries TIMESTAMP(NANOS); Tables sets this for real
-    // reads, the warmup needs it too
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings")) {
-      try spark.read.parquet(s"$sfDir/$t.parquet").foreach(_ => ())
-      catch { case NonFatal(_) => }
-    }
+    // measured (r02: doc_filter_in read 12.8 s purely from running first)
+    Harness.warm(spark, sfDir)
     try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     // input-fixture caches are SHARED session state that stays warm
     // across passes by design (see the pass loop note below) — build
     // them here so pass 1 of whichever query happens to run first isn't
     // charged the one-time materialization (r14: ann_hybrid_rrf's 1.4 s
     // pass-1 spread was the BM25 tf projection + doc collection builds)
-    for (warm <- Seq("doc_filter_eq", "doc_filter_unary", "text_search_bm25"))
-      try SparkEntry.queries(warm)(spark, sfDir).count()
-      catch { case NonFatal(_) => }
+    Harness.warmQueries(spark, sfDir,
+      Seq("doc_filter_eq", "doc_filter_unary", "text_search_bm25"))
     // pass-major order: query q's pass 2 runs a full suite-length after
     // its pass 1, so a transient box-load spike cannot poison every pass
     // of the same query
@@ -111,23 +64,12 @@ object Bench {
     // per-pass per-query (shuffleWrite, shuffleRead, spill) byte deltas
     val movePerPass =
       Array.fill(passes)(Map.empty[String, (Long, Long, Long)])
-    // Fixed calibration workload timed once per pass: data-INDEPENDENT
-    // (spark.range), pinned size/partitioning, a codegen'd hash + a 1M-key
-    // shuffle — the same resources the suite stresses. Its round-over-
+    // The calibration workload is timed once per pass: its round-over-
     // round ratio measures BOX drift (r9→r10 drifted a uniform 1.2× with
     // zero code change, under the >2× per-query gate's radar), so the
     // regression flags below run on calibration-NORMALIZED ratios and a
     // uniform library regression can no longer hide inside box jitter.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 48L * 1000 * 1000, 1L, 32)
-        // pmod keeps the 48M-row double sum far from long overflow (ANSI)
-        .selectExpr("id % 1000000 AS k", "pmod(xxhash64(id), 1000003) AS h")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("h").as("s"))
-        .selectExpr("sum(s)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate() // warm the calibration path itself before timing it
+    Harness.calibrate(spark) // warm the calibration path before timing it
     val calPerPass = new Array[Double](passes)
     val perPass = Array.tabulate(passes) { pass =>
       // memoized artifacts must not leak across passes (each pass must
@@ -135,24 +77,12 @@ object Bench {
       graft.sources.Memo.clear()
       var moves = Map.empty[String, (Long, Long, Long)]
       val res = names.map { case (name, fn) =>
-        // snapshots sit OUTSIDE the timed window; the drains make the
-        // async listener bus consistent with the snapshot (a stage event
-        // from query N must not land after N+1's pre-snapshot)
-        drain()
-        val (r0, w0, s0) = mover.snap()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch {
-            case NonFatal(e) =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        drain()
-        val (r1, w1, s1) = mover.snap()
+        // byte snapshots sit OUTSIDE the timed window
+        val (w0, r0, s0) = stages.bytes()
+        val dt = Harness.timeOrFail("bench", name)(fn(spark, sfDir).count())
+        val (w1, r1, s1) = stages.bytes()
         moves += name -> (w1 - w0, r1 - r0, s1 - s0)
-        name -> (if (ok) dt else -1.0)
+        name -> dt
       }.toMap
       movePerPass(pass) = moves
       // calibration AFTER the pass's suite, not before: a fresh-JVM
@@ -162,14 +92,13 @@ object Bench {
       // adjusted times; post-suite, the JVM is in the same regime the
       // queries just experienced (r12 run: pre-pass cals [1.48, 2.69,
       // 2.68, 3.07, 2.69] — the outlier is structure, not the box)
-      calPerPass(pass) = calibrate()
+      calPerPass(pass) = Harness.calibrate(spark)
       res
     }
+    // median over the passes that ran; -1.0 when every pass failed
     def median(xs: Seq[Double]): Double = {
-      val good = xs.filter(_ >= 0.0).sorted
-      if (good.isEmpty) -1.0
-      else if (good.length % 2 == 1) good(good.length / 2)
-      else (good(good.length / 2 - 1) + good(good.length / 2)) / 2.0
+      val good = xs.filter(_ >= 0.0)
+      if (good.isEmpty) -1.0 else Harness.median(good)
     }
     // Per-pass calibration normalization (r11 post-mortem): a contended
     // pass inflates BOTH the query time and that pass's calibration, so
@@ -202,54 +131,26 @@ object Bench {
     // plan → same bytes modulo compression jitter), so unlike wall time
     // they need no calibration: the median across passes is the record.
     // Spill is MAX'd — any pass spilling at bench scale is a sizing bug.
-    def medLong(xs: Seq[Long]): Long = {
-      val s = xs.sorted
-      if (s.isEmpty) 0L else s(s.length / 2)
-    }
     def mb(b: Long): Double = b / (1024.0 * 1024.0)
+    def moved(name: String, pick: ((Long, Long, Long)) => Long): Seq[Long] =
+      movePerPass.toSeq.map(_.get(name).map(pick).getOrElse(0L))
     val shuffleMb: Map[String, Double] = names.map { case (name, _) =>
-      name -> mb(medLong(movePerPass.toSeq.map(_.get(name).map(_._1).getOrElse(0L))))
+      name -> mb(Harness.medianLong(moved(name, _._1)))
     }.toMap
     val readMb: Map[String, Double] = names.map { case (name, _) =>
-      name -> mb(medLong(movePerPass.toSeq.map(_.get(name).map(_._2).getOrElse(0L))))
+      name -> mb(Harness.medianLong(moved(name, _._2)))
     }.toMap
     val spillMbQ: Map[String, Double] = names.map { case (name, _) =>
-      name -> mb(movePerPass.toSeq.map(_.get(name).map(_._3).getOrElse(0L)).max)
+      name -> mb(moved(name, _._3).max)
     }.toMap
 
     // ---- regression hygiene -------------------------------------------
-    // normalized physical-plan hash per query (expr ids / plan ids / scan
-    // listings stripped): lets the NEXT round tell a real plan change
-    // from box jitter. The memo is cleared so cache state can't leak
-    // InMemoryRelations into the hash.
+    // normalized physical-plan hash per query: lets the NEXT round tell a
+    // real plan change from box jitter. The memo is cleared so cache
+    // state can't leak InMemoryRelations into the hash.
     graft.sources.Memo.clear()
     val planHashes: Map[String, String] = names.map { case (name, fn) =>
-      val h = try {
-        val s = fn(spark, sfDir).queryExecution.executedPlan.toString
-          .replaceAll("#\\d+", "#")
-          .replaceAll("plan_id=\\d+", "plan_id=")
-          .replaceAll("Location: [^,\\]]+", "Location:")
-          // session-global counters / object identities that vary with
-          // RUN ORDER, not plan shape: lambda variable ids and literal
-          // array identity hashes (UnsafeArrayData@...)
-          .replaceAll("lambda [A-Za-z]+_\\d+", "lambda x_")
-          .replaceAll("@[0-9a-f]{6,}", "@")
-          // JVM lambda identities (Lambda$2635/0x00007eff...) vary per
-          // PROCESS — they made every mm_* hash unstable run-over-run
-          .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda\\$/0x")
-          // partition COUNTS are config (cpus/shuffle.partitions), not
-          // plan shape: r11's prev record was refreshed at 8 cpus and
-          // compared at 32, turning every flag's "plan" into noise.
-          // Greedy to the LAST ", <digits>)" on the line — partitioning
-          // exprs nest parens (cast(...)), so a lazy char class can't
-          // span them; nothing after the count matches ", <digits>)"
-          // once plan_id digits are already stripped.
-          .replaceAll("(partitioning\\([^\\n]*), \\d+\\)", "$1, N)")
-          .replaceAll("(coalesced from )\\d+", "$1N")
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      } catch { case NonFatal(_) => "error" }
-      name -> h
+      name -> (try Harness.planHash(fn(spark, sfDir)) catch { case NonFatal(_) => "error" })
     }.toMap
     // previous committed record (the prior round's bench_out.json)
     val outPath = java.nio.file.Paths.get(
@@ -258,16 +159,10 @@ object Bench {
     // (medians, hashes, cpus, calibration, format) reads this JValue —
     // three separate re-parses drifted apart once already (the
     // legacy-comparison bug found in the r12 self-review)
-    val prevJson: Option[org.json4s.JValue] =
-      try Some(org.json4s.jackson.JsonMethods.parse(
-        java.nio.file.Files.readString(outPath)))
-      catch { case NonFatal(_) => None }
+    val prevJson: Option[org.json4s.JValue] = Harness.readRecord(outPath)
     import org.json4s._
-    val prevCpus: Int = prevJson.map(_ \ "cpus" match {
-      case JInt(v) => v.toInt
-      case JDouble(v) => v.toInt
-      case _ => -1
-    }).getOrElse(-1)
+    val prevCpus: Int =
+      prevJson.flatMap(j => Harness.asDouble(j \ "cpus")).map(_.toInt).getOrElse(-1)
     // only comparable against a record from the SAME corpus dir AND the
     // same cpu count (8-cpu medians vs a 32-cpu run are not a regression
     // signal; legacy records without "cpus" stay comparable so the first
@@ -276,19 +171,11 @@ object Bench {
       (j \ "sf" match {
         case JString(s) => s == sfDir
         case _ => false
-      }) && (prevCpus == -1 || prevCpus == scala.util.Try(cpus.toInt).getOrElse(-2))
-    }
-    def numMap(j: JValue): Map[String, Double] = j match {
-      case JObject(fs) => fs.collect {
-        case (k, JDouble(v)) => k -> v
-        case (k, JInt(v)) => k -> v.toDouble
-        case (k, JDecimal(v)) => k -> v.toDouble
-      }.toMap
-      case _ => Map.empty
+      }) && (prevCpus == -1 || prevCpus == cpus)
     }
     val prevMed: Map[String, Double] =
       if (!comparable) Map.empty
-      else prevJson.map(j => numMap(j \ "queries")).getOrElse(Map.empty)
+      else prevJson.map(j => Harness.numFields(j \ "queries")).getOrElse(Map.empty)
     val prevHash: Map[String, String] =
       if (!comparable) Map.empty
       else prevJson.map(_ \ "plan_hashes" match {
@@ -296,12 +183,8 @@ object Bench {
         case _ => Map.empty[String, String]
       }).getOrElse(Map.empty)
     val calMed = median(calPerPass.toIndexedSeq)
-    val prevCal: Double = prevJson.map(_ \ "calibration" match {
-      case JDouble(v) => v
-      case JDecimal(v) => v.toDouble
-      case JInt(v) => v.toDouble
-      case _ => -1.0
-    }).getOrElse(-1.0)
+    val prevCal: Double =
+      prevJson.flatMap(j => Harness.asDouble(j \ "calibration")).getOrElse(-1.0)
     // A prev record without queries_raw is LEGACY: its "queries" are
     // plain raw medians (which absorb contention spikes) while its cal
     // median does not, so its calibration disagrees with its own query
@@ -383,7 +266,7 @@ object Bench {
     // compression-shape change in the data).
     val prevShuffle: Map[String, Double] =
       if (!comparable) Map.empty
-      else prevJson.map(j => numMap(j \ "shuffle_mb")).getOrElse(Map.empty)
+      else prevJson.map(j => Harness.numFields(j \ "shuffle_mb")).getOrElse(Map.empty)
     val dataFlags = names.flatMap { case (name, _) =>
       (prevShuffle.get(name), shuffleMb.get(name)) match {
         case (Some(p), Some(n)) if n > p * 1.3 && n - p > 16.0 =>
@@ -400,19 +283,17 @@ object Bench {
       case (n, _) if spillMbQ.getOrElse(n, 0.0) > 0.0 => n
     }
 
-    def r3(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
+    def r3(v: Double): String = Harness.num(v)
+    val qs = Harness.obj(results.map { case (k, v) => k -> r3(v) })
     // a query that failed every pass keeps its -1.0 sentinel in "queries"
     // but must not SUBTRACT from the headline total; it is reported
     // explicitly in "failed" so an all-pass-failure is loud in the JSON,
     // not a silently-smaller total
     val failed = results.collect { case (k, v) if v < 0.0 => k }
     val total = results.collect { case (_, v) if v >= 0.0 => v }.sum
-    val shufParts = spark.conf.get("spark.sql.shuffle.partitions", cpus)
+    val shufParts = spark.conf.get("spark.sql.shuffle.partitions", cpus.toString)
     spark.stop()
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = Harness.strs(failed)
     // changes ride the STDOUT line too (at the end, inside the
     // driver's 2000-char tail): a >2× round-over-round move is loud in
     // BENCH_r{N}.json itself, already explained and direction-tagged
@@ -420,34 +301,32 @@ object Bench {
       val mn = minAdj.getOrElse(n, -1.0)
       s"""{"q":"$n","dir":"$dir","prev":${r3(p)},"now":${r3(now)},"norm_now":${r3(now / drift)},"min_norm":${r3(if (mn > 0) mn / drift else mn)},"plan":"$plan"}"""
     }.mkString("[", ",", "]")
-    val cpusInt = scala.util.Try(cpus.toInt).getOrElse(-1)
     // calibration + drift ride the END of the line (the driver tails
     // stdout to 2000 chars — trailing fields always survive)
     // data-movement lane summary on the stdout line: total shuffled MB,
     // the spillers by name (empty = zero spill anywhere — the headline),
     // and the same-config shuffle-growth flags
     val shufTotal = shuffleMb.values.sum
-    val spillJson = spilled.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val spillJson = Harness.strs(spilled)
     val dataFlagJson = dataFlags.map { case (n, p, now, plan) =>
       s"""{"q":"$n","prev_mb":${r3(p)},"now_mb":${r3(now)},"plan":"$plan"}"""
     }.mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","passes":$passes,"cpus":$cpusInt,"shuffle_partitions":"$shufParts","calibration":${r3(calMed)},"cal_drift":${r3(drift)},"total_norm":${r3(total / drift)},"bench_vs_prev":${r3(vsPrev)},"prev_total_common":${r3(prevCommonTotal)},"now_total_common_adj":${r3(nowCommonAdj)},"common_n":${commonQ.size},"changes":$regJson,"shuffle_total_mb":${r3(shufTotal)},"spilled":$spillJson,"data_flags":$dataFlagJson}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"sf":${Harness.str(sfDir)},"passes":$passes,"cpus":$cpus,"shuffle_partitions":"$shufParts","calibration":${r3(calMed)},"cal_drift":${r3(drift)},"total_norm":${r3(total / drift)},"bench_vs_prev":${r3(vsPrev)},"prev_total_common":${r3(prevCommonTotal)},"now_total_common_adj":${r3(nowCommonAdj)},"common_n":${commonQ.size},"changes":$regJson,"shuffle_total_mb":${r3(shufTotal)},"spilled":$spillJson,"data_flags":$dataFlagJson}"""
     // the driver keeps only a 2000-char tail of stdout — persist the full
     // per-pass record so timings survive for every round. Path resolved
     // against the repo (user.dir), not whatever cwd the forked JVM got.
-    val passesJson = names.map { case (name, _) =>
-      s"\"" + name + "\":" + perPass.map(p => r3(p(name))).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    val passesJson = Harness.obj(names.map { case (name, _) =>
+      name -> perPass.map(p => r3(p(name))).mkString("[", ",", "]")
+    })
     // per-query min–max spread across passes (variance at a glance)
-    val spreadJson = names.map { case (name, _) =>
+    val spreadJson = Harness.obj(names.map { case (name, _) =>
       val good = perPass.toSeq.map(_(name)).filter(_ >= 0.0)
-      val sp = if (good.isEmpty) -1.0 else good.max - good.min
-      s"\"" + name + "\":" + r3(sp)
-    }.mkString("{", ",", "}")
-    val hashJson = names.map { case (name, _) =>
-      s"\"" + name + "\":\"" + planHashes.getOrElse(name, "error") + "\""
-    }.mkString("{", ",", "}")
+      name -> r3(if (good.isEmpty) -1.0 else good.max - good.min)
+    })
+    val hashJson = Harness.obj(names.map { case (name, _) =>
+      name -> Harness.str(planHashes.getOrElse(name, "error"))
+    })
     // three series in the committed record: "queries" = per-pass-
     // calibration-ADJUSTED medians (the headline and the series next
     // round's gate compares against), "queries_raw" = plain medians of
@@ -455,15 +334,13 @@ object Bench {
     // medians in drift-corrected units (informational; do NOT compare
     // one round's queries_norm against another's — each is normalized
     // to a different round's box).
-    val qsRaw = resultsRaw.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val qsNorm = results.map { case (k, v) =>
-      s"\"" + k + "\":" + r3(if (v >= 0.0) v / drift else v)
-    }.mkString("{", ",", "}")
+    val qsRaw = Harness.obj(resultsRaw.map { case (k, v) => k -> r3(v) })
+    val qsNorm = Harness.obj(results.map { case (k, v) =>
+      k -> r3(if (v >= 0.0) v / drift else v)
+    })
     val calPassesJson = calPerPass.map(r3).mkString("[", ",", "]")
     def mbMap(m: Map[String, Double]): String =
-      names.map { case (k, _) => s"\"" + k + "\":" + r3(m.getOrElse(k, 0.0)) }
-        .mkString("{", ",", "}")
+      Harness.obj(names.map { case (k, _) => k -> r3(m.getOrElse(k, 0.0)) })
     val fileLine = line.dropRight(1) +
       s""","queries_raw":$qsRaw,"queries_norm":$qsNorm,"cal_per_pass":$calPassesJson,"per_pass":$passesJson,"spread":$spreadJson,"plan_hashes":$hashJson,"shuffle_mb":${mbMap(shuffleMb)},"shuffle_read_mb":${mbMap(readMb)},"spill_mb":${mbMap(spillMbQ)}}"""
     try java.nio.file.Files.write(outPath, (fileLine + "\n").getBytes("UTF-8"))

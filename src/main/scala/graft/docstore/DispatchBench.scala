@@ -1,6 +1,9 @@
 package graft.docstore
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+import graft.tools.Harness
 
 /** One-JVM A/B for the fused-dispatch boundary: times the SAME
   * StructuredQuery through the per-field compiler ([[DocStore.query]])
@@ -9,26 +12,43 @@ import org.apache.spark.sql.SparkSession
   * rule was calibrated from cross-run medians, which is how the
   * single-Eq/In regression slipped in).
   *
+  * Two corpora: the events collection of `sfDir` (the declared-query
+  * shapes on the knife edge), and a synthetic WIDE collection — the
+  * testdata's ~100-byte docs hide the parse cost that dominates real
+  * multi-KB document scans, so the wide corpus carries the fused
+  * compiler's case.
+  *
   * Run: sbt "runMain graft.docstore.DispatchBench <sfDir> [passes]"
   */
 object DispatchBench {
+  /** Wide corpus shape: docs × string fields of ~40 bytes each. */
+  private val WideDocs = 200000L
+  private val WideFields = 24
+
+  /** `WideDocs` docs of `WideFields` string fields, persisted, so the
+    * A/B measures query cost, not doc synthesis. */
+  private def wideCollection(spark: SparkSession): DocCollection = {
+    val fields = (0 until WideFields).map(i =>
+      concat(lit(s"v${i}_"), (col("id") * (i + 1) % 99991).cast("string"))
+        .as(s"f$i"))
+    val docs = spark.range(WideDocs)
+      .select(col("id").as("_id"), to_json(struct(fields: _*)).as("doc"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    docs.count()
+    DocCollection("wide", docs)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val passes = args.drop(1).headOption.map(_.toInt).getOrElse(7)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val c = DocStore.eventsCollection(spark, sfDir)
-    c.df.count() // warm the collection fixture
+    val spark = Harness.session()
+    val events = DocStore.eventsCollection(spark, sfDir)
+    events.df.count() // warm the collection fixture
+    val wide = wideCollection(spark)
 
     import FieldValue._
     // the declared-query shapes on the knife edge (DocQueries.scala)
-    val shapes: Seq[(String, StructuredQuery)] = Seq(
+    val shapes: Seq[(String, DocCollection, StructuredQuery)] = Seq(
       "eq(sel=same)" -> StructuredQuery(
         where = Some(FieldFilter("event_type", Op.Eq, Str("purchase"))),
         select = Seq("event_type")),
@@ -56,35 +76,32 @@ object DispatchBench {
         orderBy = Seq(Order("k", keyType = I64(0))),
         startAt = Some(Cursor(Seq(Some(I64(40))), id = Some(1000L), inclusive = false)),
         endAt = Some(Cursor(Seq(Some(I64(80))))),
-        limit = Some(60)))
+        limit = Some(60))).map { case (n, q) => (n, events, q) } :+ (
+      // four filters + three projected fields on the wide docs: seven
+      // per-field extractions against one fused parse
+      ("wide(4f+3sel)", wide, StructuredQuery(
+        where = Some(AndFilter(Seq(
+          FieldFilter("f0", Op.Neq, Str("x")),
+          FieldFilter("f1", Op.Neq, Str("y")),
+          FieldFilter("f2", Op.Neq, Str("z")),
+          FieldFilter("f3", Op.Neq, Str("w"))))),
+        select = Seq("f4", "f5", "f6"))))
 
-    def time(f: => Long): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // warm both compilers once per shape
-    shapes.foreach { case (_, q) =>
+    shapes.foreach { case (_, c, q) =>
       DocStore.query(c, q).count(); DocStore.queryFusedAlways(c, q).count()
     }
     val per = collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     val fus = collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-    for (p <- 1 to passes; (name, q) <- shapes) {
+    for (p <- 1 to passes; (name, c, q) <- shapes) {
+      def perField() = per(name) = per(name) :+ Harness.seconds(DocStore.query(c, q).count())
+      def fused() = fus(name) = fus(name) :+ Harness.seconds(DocStore.queryFusedAlways(c, q).count())
       // alternate arm order per pass so neither arm always runs cold/hot
-      if (p % 2 == 1) {
-        per(name) = per(name) :+ time(DocStore.query(c, q).count())
-        fus(name) = fus(name) :+ time(DocStore.queryFusedAlways(c, q).count())
-      } else {
-        fus(name) = fus(name) :+ time(DocStore.queryFusedAlways(c, q).count())
-        per(name) = per(name) :+ time(DocStore.query(c, q).count())
-      }
-    }
-    def med(xs: List[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
+      if (p % 2 == 1) { perField(); fused() } else { fused(); perField() }
     }
     println(f"${"shape"}%-20s ${"per-field"}%10s ${"fused"}%10s   winner")
-    shapes.foreach { case (name, _) =>
-      val pm = med(per(name)); val fm = med(fus(name))
+    shapes.foreach { case (name, _, _) =>
+      val pm = Harness.median(per(name)); val fm = Harness.median(fus(name))
       val w = if (pm <= fm) "per-field" else "fused"
       println(f"$name%-20s $pm%10.3f $fm%10.3f   $w (${fm / pm}%.2fx)")
     }

@@ -323,8 +323,8 @@ object DocStore {
     * narrow struct schema of every referenced field and run ONE
     * `from_json` per row behind the fence — the winning shape when
     * filters touch several fields of multi-KB docs (the 100 TB hot
-    * path — JSON parsing dominates such scans; ParseBench: 3.4× on
-    * 24-field docs). Both paths have identical semantics (asserted
+    * path — JSON parsing dominates such scans; DispatchBench's wide
+    * corpus: 3.4× on 24-field docs). Both paths have identical semantics (asserted
     * row-for-row by the QueryFuzzSpec property tests). */
   def queryFused(coll: DocCollection, q: StructuredQuery): DataFrame =
     if (perFieldExtractions(q) <= 3 && !repeatedFieldAcrossStages(q))

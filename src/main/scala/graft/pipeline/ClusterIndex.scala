@@ -109,16 +109,6 @@ object ClusterIndex {
     * writer), the contract a single stream's foreachBatch gives for
     * free. */
   def appendDocs(spark: SparkSession, docs: DataFrame, indexDir: String): Unit = {
-    // opt-in phase timing for the maint lane's fixed-overhead work
-    // (set GRAFT_MAINT_PROFILE=1): stderr-only, no behavior change
-    val prof = sys.env.contains("GRAFT_MAINT_PROFILE")
-    val t0 = System.nanoTime()
-    var tPrev = t0
-    def mark(phase: String): Unit = if (prof) {
-      val now = System.nanoTime()
-      System.err.println(f"[ci-append] $phase%-12s ${(now - tPrev) / 1e9}%6.2f s  (total ${(now - t0) / 1e9}%6.2f)")
-      tPrev = now
-    }
     val n = readManifest(spark, indexDir)("gens").toInt
     val covered = readGens(spark, indexDir, n, "covered")
     val prepped =
@@ -140,7 +130,6 @@ object ClusterIndex {
       // an empty delta returns before anything is staged).
       val deltaRows = delta.count()
       if (deltaRows == 0L) return // nothing new: no-op
-      mark("delta-count")
       // the covered-ledger write only needs the (now cached) delta —
       // run it CONCURRENTLY with the merge's candidate join + CC jobs
       // below instead of as its own barrier in front of them (r15
@@ -177,7 +166,6 @@ object ClusterIndex {
       val (relabel, fresh, bounded) = Dedup.mergeDeltaParts(old,
         readGens(spark, indexDir, n, "shingles"), delta,
         deltaBounded = deltaRows <= (1L << 16))
-      mark("merge-cc")
       // relabel is bounded by the contracted graph — broadcast it so the
       // membership is SCANNED, never shuffled (at 100 TB a sort-merge
       // here would move the whole membership for a handful of labels).
@@ -202,7 +190,6 @@ object ClusterIndex {
       ArtifactIo.awaitAll(Seq(coveredF,
         Future(moved.unionByName(fresh).write.parquet(s"$genTmp/members")),
         Future(Dedup.repIndexOf(delta).write.parquet(s"$genTmp/shingles"))))
-      mark("gen-writes")
       }
       if (!fs.rename(genTmp, genP))
         throw new java.io.IOException(s"clusterindex: cannot stage $genP")

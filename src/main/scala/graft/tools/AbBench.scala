@@ -64,23 +64,14 @@ object AbBench {
     out.collect { case Line(n, s) => n -> s.toDouble }.toMap
   }
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.isEmpty) Double.NaN
-    else if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-  }
-
-  private def geomean(xs: Seq[Double]): Double =
-    if (xs.isEmpty) Double.NaN
-    else math.exp(xs.map(math.log).sum / xs.length)
+  import Harness.{geomean, median}
 
   def main(args: Array[String]): Unit = {
     val prevCp = args(0)
     val nowCp = args(1)
     val sfDir = args(2)
     val pairs = args(3).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus.toString
     val csv = args.drop(4).headOption.filter(_ != "all")
       .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted.mkString(","))
     // pairRatios(q) = one now/prev ratio per pair, both arms timed
@@ -126,14 +117,13 @@ object AbBench {
     println(f"[ab] HEADLINE geomean(now/prev) = $headline%.4f over ${med.size} queries, " +
       f"$pairs pairs; split-half agreement odd=$odd%.4f even=$even%.4f " +
       f"(|log diff| ${math.abs(math.log(odd / even))}%.3f)")
+    def r4(d: Double): String = Harness.num(d, 4)
     val json = "{" +
-      s""""geomean":${"%.4f".format(headline)},"pairs":$pairs,""" +
-      s""""n_queries":${med.size},"odd":${"%.4f".format(odd)},""" +
-      s""""even":${"%.4f".format(even)},"cpus":$cpus,"sf":"$sfDir",""" +
-      s""""per_query":{""" +
-      med.toSeq.sortBy(_._1).map { case (q, r) =>
-        s""""$q":${"%.4f".format(r)}"""
-      }.mkString(",") + "}}"
+      s""""geomean":${r4(headline)},"pairs":$pairs,""" +
+      s""""n_queries":${med.size},"odd":${r4(odd)},""" +
+      s""""even":${r4(even)},"cpus":$cpus,"sf":${Harness.str(sfDir)},""" +
+      s""""per_query":""" +
+      Harness.obj(med.toSeq.sortBy(_._1).map { case (q, r) => q -> r4(r) }) + "}"
     java.nio.file.Files.write(java.nio.file.Paths.get("ab_bench.json"),
       json.getBytes("UTF-8"))
     println("[ab] wrote ab_bench.json")

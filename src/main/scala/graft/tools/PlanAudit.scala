@@ -1,33 +1,48 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Prints executed-plan summaries (exchange/broadcast/codegen counts) for
-  * every SparkEntry query — the iteration loop for keeping plans honest.
-  * Run: sbt "runMain graft.tools.PlanAudit /root/testdata/sf0.001 [query]" */
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Executed-plan summaries (exchange/broadcast/sort/codegen counts and
+  * scan pushdown) per SparkEntry query — the iteration loop for keeping
+  * plans honest. Plans come from the measurement session, so they are
+  * the plans Bench runs.
+  *
+  * Run: sbt "runMain graft.tools.PlanAudit <sfDir> [query]"
+  *   one line per query; with a query, also its full query execution.
+  * Run: sbt "runMain graft.tools.PlanAudit <sfDir> --out <dir> <suffix> <q1,q2,...>"
+  *   writes `<dir>/<query>_<suffix>.txt` (`explain("formatted")`) per query.
+  */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val only = args.drop(1).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_ == n) }
-      .foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, dir).queryExecution.executedPlan.toString
-          def n(s: String) = plan.sliding(s.length).count(_ == s)
-          println(f"$name%-22s exchanges=${n("Exchange")}%2d " +
-            f"broadcasts=${n("BroadcastExchange")}%2d sorts=${n("Sort ")}%2d " +
-            f"wscg=${n("*(")}%2d pushed=${if (plan.contains("PushedFilters: [")) "y" else "-"}")
-          if (only.isDefined) println(fn(spark, dir).queryExecution.toString)
-        } catch { case e: Throwable => println(s"$name FAILED: ${e.getMessage}") }
+    val spark = Harness.session()
+    val queries = graft.SparkEntry.queries
+    if (args.lift(1).contains("--out")) {
+      val out = Paths.get(args(2))
+      Files.createDirectories(out)
+      args(4).split(",").foreach { q =>
+        val plan = queries(q)(spark, dir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+        Files.write(out.resolve(s"${q}_${args(3)}.txt"), plan.getBytes("UTF-8"))
+        println(s"[plan-audit] wrote ${q}_${args(3)}.txt")
       }
+    } else {
+      val only = args.lift(1)
+      queries.toSeq.sortBy(_._1)
+        .filter { case (n, _) => only.forall(_ == n) }
+        .foreach { case (name, fn) =>
+          try {
+            val plan = fn(spark, dir).queryExecution.executedPlan.toString
+            def n(s: String) = Harness.occurrences(plan, s)
+            println(f"$name%-22s exchanges=${n("Exchange")}%2d " +
+              f"broadcasts=${n("BroadcastExchange")}%2d sorts=${n("Sort ")}%2d " +
+              f"wscg=${n("*(")}%2d pushed=${if (plan.contains("PushedFilters: [")) "y" else "-"}")
+            if (only.isDefined) println(fn(spark, dir).queryExecution.toString)
+          } catch { case e: Throwable => println(s"$name FAILED: ${e.getMessage}") }
+        }
+    }
     spark.stop()
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Accuracy lane — the recall/error counterpart of bench_skew.json.
@@ -27,14 +27,7 @@ import org.apache.spark.sql.functions._
 object RecallLane {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     // metric -> (value, floor): flag when value < floor, and always
@@ -118,25 +111,20 @@ object RecallLane {
       if (floor >= 0.0) v < floor else v > -floor
 
     val out = Paths.get("bench_recall.json")
-    val prevRe = "\"([a-z0-9_]+)\":\\{\"value\":([0-9.eE+-]+)".r
-    val prev: Map[String, Double] =
-      if (Files.exists(out)) {
-        val txt = new String(Files.readAllBytes(out), "UTF-8")
-        prevRe.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    def r4(d: Double): String = f"$d%.4f"
+    val prev: Map[String, Double] = Harness.readRecord(out)
+      .map(Harness.numFieldOf(_, "metrics", "value")).getOrElse(Map.empty)
+    def r4(d: Double): String = Harness.num(d, 4)
     val flags = metrics.collect {
       case (n, (v, fl)) if flagged(n, v, fl) => n
     }.toSeq ++ errors.map(_.takeWhile(_ != ':'))
-    val metricsJson = metrics.map { case (n, (v, fl)) =>
+    val metricsJson = Harness.obj(metrics.map { case (n, (v, fl)) =>
       val prevStr = prev.get(n).map(p =>
         s""","prev":${r4(p)},"delta":${r4(v - p)}""").getOrElse("")
-      s""""$n":{"value":${r4(v)},"floor":${r4(fl)}$prevStr}"""
-    }.mkString(",")
-    def strArr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString(",")
-    val json = s"""{"lane":"recall","sf":"$sfDir",""" +
-      s""""flags":[${strArr(flags)}],"errors":[${strArr(errors.toSeq)}],""" +
-      s""""metrics":{$metricsJson}}"""
+      n -> s"""{"value":${r4(v)},"floor":${r4(fl)}$prevStr}"""
+    })
+    val json = s"""{"lane":"recall","sf":${Harness.str(sfDir)},""" +
+      s""""flags":${Harness.strs(flags)},"errors":${Harness.strs(errors)},""" +
+      s""""metrics":$metricsJson}"""
     Files.write(out, (json + "\n").getBytes("UTF-8"))
     println(json)
     println(s"[recall-lane] wrote ${out.toAbsolutePath}")

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import scala.util.control.NonFatal
-
 /** Core-count scaling lane at a SF where WORK, not scheduling, dominates
   * (r16, VERDICT #6): at sf0.1 every query is fixed-overhead-bound and
   * the 8c/32c ratio reads ≈1 for the whole suite — parallelism claims
@@ -32,13 +29,8 @@ object ScaleLane {
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val names = args.drop(2).headOption.map(_.split(",").toSeq)
       .getOrElse(DefaultLane)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scaled = s"/tmp/graft_scale_${copies}x"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Harness.session(
       // the scaled corpus is written as `copies` part files (~10 MB
       // each); at the default 128 MB maxPartitionBytes a 10x corpus
       // scans as <=10 splits and 32 cores can never engage — the lane
@@ -46,36 +38,24 @@ object ScaleLane {
       // have files >> cores; splitting finer here restores that shape
       // for both arms (same config at 32c and 8c, so ratios compare
       // compute, not scan granularity).
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.files.maxPartitionBytes" -> "4m",
+      "spark.sql.files.openCostInBytes" -> "512k")
     ScaleSmoke.buildCorpus(spark, base, scaled, copies)
     // JIT/codegen warmup on the base corpus (the memo is cleared before
     // every timed query, so no warm-up artifact is reused); cold-per-shape
     // on the scaled corpus is the measurement — it includes index/sample
     // builds, which must themselves scale
-    spark.range(1000).selectExpr("sum(id)").collect()
-    names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, base).count()
-      catch { case NonFatal(e) =>
-        System.err.println(s"[scale-lane] warm-up $n failed: ${e.getMessage}") }
-    }
+    Harness.warm(spark)
+    Harness.warmQueries(spark, base, names)
     val times = names.map { n =>
       graft.sources.Memo.clear()
-      val t0 = System.nanoTime()
-      val ok = try { graft.SparkEntry.queries(n)(spark, scaled).count(); true }
-        catch { case NonFatal(e) =>
-          System.err.println(s"[scale-lane] $n failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[scale-lane] $n%-28s ${if (ok) f"$dt%8.3f s" else "FAILED"}")
-      n -> (if (ok) dt else -1.0)
+      val dt = Harness.timeOrFail("scale-lane", n)(
+        graft.SparkEntry.queries(n)(spark, scaled).count())
+      println(f"[scale-lane] $n%-28s ${if (dt >= 0) f"$dt%8.3f s" else "FAILED"}")
+      n -> dt
     }
-    println("{\"lane\":\"scale\",\"copies\":" + copies + ",\"cpus\":" + cpus +
-      ",\"queries\":{" +
-      times.map { case (n, t) =>
-        s""""$n":${"%.3f".formatLocal(java.util.Locale.ROOT, t)}""" }.mkString(",") +
-      "}}")
+    println("{\"lane\":\"scale\",\"copies\":" + copies + ",\"cpus\":" + Harness.cpus +
+      ",\"queries\":" + Harness.obj(times.map { case (n, t) => n -> Harness.num(t) }) + "}")
     spark.stop()
   }
 }

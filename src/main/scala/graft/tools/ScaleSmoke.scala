@@ -77,6 +77,18 @@ object ScaleSmoke {
 
   private val IdShift = 10_000_000L
 
+  private def r3(d: Double): String = Harness.num(d)
+
+  /** Exchange operators in `df`'s executed plan. */
+  private def exchanges(df: DataFrame): Int =
+    Harness.occurrences(df.queryExecution.executedPlan.toString, "Exchange")
+
+  /** One COLD run of a query: memo cleared first, wall seconds. */
+  private def cold(spark: SparkSession, name: String, dir: String): Double = {
+    graft.sources.Memo.clear()
+    Harness.seconds(graft.SparkEntry.queries(name)(spark, dir).count())
+  }
+
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
@@ -89,14 +101,7 @@ object ScaleSmoke {
     }
     val passes = sys.env.getOrElse("SPARK_GRAFT_SMOKE_PASSES", "3").toInt.max(1)
     val scaled = s"/tmp/graft_scale_${copies}x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     buildCorpus(spark, base, scaled, copies)
 
@@ -105,12 +110,7 @@ object ScaleSmoke {
     // pipeline caches (jaccard result, IVF centroids, PQ codebooks) key
     // per corpus dir, so this warms the JVM without warming anything that
     // is timed below.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    Seq(base, scaled).foreach { d =>
-      graft.sources.Tables.eventsRaw(spark, d).foreach(_ => ())
-      Seq("documents", "embeddings").foreach(t =>
-        graft.sources.Tables.load(spark, d, t).foreach(_ => ()))
-    }
+    Harness.warm(spark, base, scaled)
     // optional subset (comma-separated shape names) for quick re-runs of
     // newly added shapes without re-timing the whole lane
     val shapeList = sys.env.get("SPARK_GRAFT_SMOKE_SHAPES")
@@ -120,21 +120,7 @@ object ScaleSmoke {
     require(unknown.isEmpty,
       s"SPARK_GRAFT_SMOKE_SHAPES names unknown queries: ${unknown.mkString(", ")}")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_SMOKE_WARMDIR", "/root/testdata/sf0.01")
-    shapeList.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, warmDir).count()
-      catch { case NonFatal(_) => }
-    }
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) Double.NaN
-      else if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    def exchanges(df: DataFrame): Int = {
-      val p = df.queryExecution.executedPlan.toString
-      p.sliding("Exchange".length).count(_ == "Exchange")
-    }
+    Harness.warmQueries(spark, warmDir, shapeList)
 
     // The verdict ratio uses the COLD first pass per (shape, dir): several
     // shapes memoize per corpus (jaccard result for keep_list, IVF
@@ -147,12 +133,8 @@ object ScaleSmoke {
     shapeList.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       def time(dir: String): (Double, Double) = {
-        val ts = (1 to passes).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        (ts.head, median(ts.tail))
+        val ts = (1 to passes).map(_ => Harness.seconds(fn(spark, dir).count()))
+        (ts.head, Harness.median(ts.tail))
       }
       try {
         val (cBase, wBase) = time(base)
@@ -226,38 +208,19 @@ object ScaleSmoke {
   def runProbe(base: String, copies: Int, shapes: Seq[String]): Unit = {
     val scaled = s"/tmp/graft_scale_${copies}x"
     val passes = sys.env.getOrElse("SPARK_GRAFT_SMOKE_PASSES", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     buildCorpus(spark, base, scaled, copies)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    shapes.foreach { n => // JIT/codegen warmup off the timed corpora
-      try graft.SparkEntry.queries(n)(spark,
-        sys.env.getOrElse("SPARK_GRAFT_SMOKE_WARMDIR", "/root/testdata/sf0.001")).count()
-      catch { case NonFatal(_) => }
-    }
-    def exchanges(df: DataFrame): Int = {
-      val p = df.queryExecution.executedPlan.toString
-      p.sliding("Exchange".length).count(_ == "Exchange")
-    }
+    // JIT/codegen warmup off the timed corpora
+    Harness.warm(spark)
+    Harness.warmQueries(spark,
+      sys.env.getOrElse("SPARK_GRAFT_SMOKE_WARMDIR", "/root/testdata/sf0.001"), shapes)
     println(f"%nshape                     cold base->${copies}x      ratio (/${copies})   exch  verdict")
     var failures = 0
     shapes.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      def cold(dir: String): Double = {
-        graft.sources.Memo.clear()
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
       try {
-        val b = (1 to passes).map(_ => cold(base)).min
-        val big = (1 to passes).map(_ => cold(scaled)).min
+        val b = (1 to passes).map(_ => cold(spark, name, base)).min
+        val big = (1 to passes).map(_ => cold(spark, name, scaled)).min
         val exB = exchanges(fn(spark, base))
         val exS = exchanges(fn(spark, scaled))
         // At a 100× jump the exchange COUNT legitimately grows: size
@@ -321,29 +284,11 @@ object ScaleSmoke {
   def runMaint(base: String, copies: Int): Unit = {
     val scaled = s"/tmp/graft_scale_${copies}x"
     val root = s"/tmp/graft_maint_${copies}x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // stage-level profiling under GRAFT_MAINT_PROFILE: prints every
-    // completed stage's duration + task count + callsite, so the
+    val spark = Harness.session()
+    // every completed stage goes to stderr after each timed call, so the
     // append-vs-build fixed-cost question is answered from stage truth
     // instead of wall-clock guesswork
-    if (sys.env.contains("GRAFT_MAINT_PROFILE"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = e.stageInfo
-            val ms = (for {s <- si.submissionTime; c <- si.completionTime}
-              yield c - s).getOrElse(-1L)
-            System.err.println(f"[stage] ${ms / 1000.0}%7.2f s ${si.numTasks}%4d tasks  ${si.name.takeWhile(_ != '\n').take(90)}")
-          }
-        })
+    val stages = Harness.Stages.attach(spark)
     buildCorpus(spark, base, scaled, copies)
 
     // grown twins: corpus ∪ the SAME delta (fresh ids; docs keep their
@@ -370,9 +315,6 @@ object ScaleSmoke {
     grow(base, s"$root/grown1")
     grow(scaled, s"$root/grownN")
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def rm(p: String): Unit = {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
@@ -392,7 +334,12 @@ object ScaleSmoke {
     // shared box — a single sample bounces ±0.8 s run-over-run, which is
     // the whole append-vs-build margin under test
     def timedMin(prep: => Unit)(f: => Unit): Double =
-      (0 until 2).map { _ => prep; timed(f) }.min
+      (0 until 2).map { _ =>
+        prep
+        val secs = Harness.seconds(f)
+        stages.takeRows().foreach(System.err.println)
+        secs
+      }.min
     import graft.pipeline.{AnnIndex, ClusterIndex}
     // warmup: one tiny build per family off the timed corpora
     ClusterIndex.build(spark, "/root/testdata/sf0.001", s"$root/warm_ci")
@@ -460,13 +407,12 @@ object ScaleSmoke {
     if (aa1 > ab1 * 1.25 && aa1 - ab1 > 1.0)
       flags += "ann_append_fixed_overhead_exceeds_build"
 
-    def r3(d: Double): String = f"$d%.3f"
     val json = s"""{"lane":"maint","copies":$copies,""" +
       s""""cluster":{"build_1x_s":${r3(cb1)},"build_${copies}x_s":${r3(cbN)},""" +
       s""""append_1x_s":${r3(ca1)},"append_${copies}x_s":${r3(caN)}},""" +
       s""""ann":{"build_1x_s":${r3(ab1)},"build_${copies}x_s":${r3(abN)},""" +
       s""""append_1x_s":${r3(aa1)},"append_${copies}x_s":${r3(aaN)}},""" +
-      s""""flags":[${flags.map("\"" + _ + "\"").mkString(",")}]}"""
+      s""""flags":${Harness.strs(flags)}}"""
     Files.write(Paths.get("bench_maint.json"), json.getBytes("UTF-8"))
     println(s"[maint-probe] wrote bench_maint.json")
     spark.stop()
@@ -491,25 +437,15 @@ object ScaleSmoke {
     val uniform = s"/tmp/graft_scale_${copies}x"
     val skewed = s"/tmp/graft_skew_${copies}x"
     val passes = sys.env.getOrElse("SPARK_GRAFT_SMOKE_PASSES", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     buildCorpus(spark, base, uniform, copies)
     buildSkewCorpus(spark, uniform, skewed, copies)
 
     // JVM/codegen warmup off the timed corpora
-    spark.range(1000).selectExpr("sum(id)").collect()
+    Harness.warm(spark)
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_SMOKE_WARMDIR", "/root/testdata/sf0.01")
-    SkewShapes.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, warmDir).count()
-      catch { case NonFatal(_) => }
-    }
+    Harness.warmQueries(spark, warmDir, SkewShapes)
 
     // cold probe cost per corpus: the dispatched shapes pay ONE
     // Misra-Gries key scan before running their chosen twin, so the
@@ -518,10 +454,7 @@ object ScaleSmoke {
     def probeCost(dir: String): Double = {
       graft.sources.Memo.clear()
       val ev = graft.sources.Tables.events(spark, dir)
-      val t0 = System.nanoTime()
-      graft.operators.SkewDispatch.hottestKey(ev,
-        org.apache.spark.sql.functions.col("user_id"))
-      (System.nanoTime() - t0) / 1e9
+      Harness.seconds(graft.operators.SkewDispatch.hottestKey(ev, col("user_id")))
     }
     val (probeU, probeS) = (probeCost(uniform), probeCost(skewed))
     println(f"[skew-smoke] dispatch probe cost: uniform $probeU%.2f s, skew $probeS%.2f s")
@@ -551,19 +484,11 @@ object ScaleSmoke {
           s"$auto needs both twins ($direct, $bucketed) earlier in the shape list")
     }
     shapes.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      def cold(dir: String): Double = {
-        graft.sources.Memo.clear()
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
       try {
-        // alternate dirs so box-load spikes cannot poison one side; keep
-        // the per-dir MINIMUM cold time (closest to true cost on a noisy
-        // shared box)
-        val us = (1 to passes).map(_ => cold(uniform))
-        val ss = (1 to passes).map(_ => cold(skewed))
+        // keep the per-dir MINIMUM cold time (closest to true cost on a
+        // noisy shared box)
+        val us = (1 to passes).map(_ => cold(spark, name, uniform))
+        val ss = (1 to passes).map(_ => cold(spark, name, skewed))
         val (u, s) = (us.min, ss.min)
         val ratio = s / u
         results(name) = (u, s)
@@ -628,29 +553,23 @@ object ScaleSmoke {
       skewSplit: Boolean, failedNames: Seq[String] = Nil,
       probeU: Double = 0.0, probeS: Double = 0.0): Unit = {
     val out = Paths.get("bench_skew.json")
-    val ratioRe = ("\"([a-z0-9_]+)\":\\{[^}]*\"ratio\":([0-9.]+)").r
-    val prev: Map[String, Double] =
-      if (Files.exists(out)) {
-        val txt = new String(Files.readAllBytes(out), "UTF-8")
-        ratioRe.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    def r3(d: Double): String = f"$d%.3f"
+    val prev: Map[String, Double] = Harness.readRecord(out)
+      .map(Harness.numFieldOf(_, "shapes", "ratio")).getOrElse(Map.empty)
     // flags mirror the lane VERDICT (not a raw ratio cut): dispatched
     // shapes fail on the twin-margin criterion, direct members of a
     // dispatched pair are informational stragglers by design
     val flags = (failedNames ++ errors).distinct
     val directTwins = DispatchedShapes.values.map(_._1).toSet
-    val shapesJson = results.map { case (n, (u, s)) =>
+    val shapesJson = Harness.obj(results.map { case (n, (u, s)) =>
       val prevStr = prev.get(n).map(p => s""","ratio_prev":${r3(p)}""").getOrElse("")
       val infoStr = if (directTwins.contains(n)) ""","informational":true""" else ""
-      s""""$n":{"uniform_s":${r3(u)},"skew_s":${r3(s)},"ratio":${r3(s / u)}$prevStr$infoStr}"""
-    }.mkString(",")
-    def strArr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString(",")
+      n -> s"""{"uniform_s":${r3(u)},"skew_s":${r3(s)},"ratio":${r3(s / u)}$prevStr$infoStr}"""
+    })
     val json = s"""{"lane":"skew","copies":$copies,""" +
       s""""skew_join_split":$skewSplit,""" +
       s""""probe_uniform_s":${r3(probeU)},"probe_skew_s":${r3(probeS)},""" +
-      s""""flags":[${strArr(flags)}],"errors":[${strArr(errors)}],""" +
-      s""""shapes":{$shapesJson}}"""
+      s""""flags":${Harness.strs(flags)},"errors":${Harness.strs(errors)},""" +
+      s""""shapes":$shapesJson}"""
     Files.write(out, json.getBytes("UTF-8"))
     println(s"[skew-smoke] wrote ${out.toAbsolutePath}")
   }

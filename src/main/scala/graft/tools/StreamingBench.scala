@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput lane — the committed artifact for the streaming
@@ -55,31 +54,15 @@ object StreamingBench {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.01")
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
-    // Fixed calibration workload (the batch Bench's): data-independent,
-    // pinned size/partitioning — its round-over-round ratio measures BOX
-    // drift, so the throughput gates below compare DRIFT-NORMALIZED
+    // Bench's calibration workload: its round-over-round ratio measures
+    // BOX drift, so the throughput gates below compare DRIFT-NORMALIZED
     // events/sec instead of letting a slow box day read as a streaming
     // regression (r13's ~20% uniform dip was exactly this shape). Median
     // of 3 runs, timed after a warm-up run.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 48L * 1000 * 1000, 1L, 32)
-        .selectExpr("id % 1000000 AS k", "pmod(xxhash64(id), 1000003) AS h")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("h").as("s"))
-        .selectExpr("sum(s)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate() // warm the path before timing it
-    val calMed = Seq.fill(3)(calibrate()).sorted.apply(1)
+    Harness.calibrate(spark)
+    val calMed = Harness.median(Seq.fill(3)(Harness.calibrate(spark)))
 
     val root = Files.createTempDirectory("graft_streambench").toString
     val ev = graft.sources.Tables.eventsRaw(spark, base)
@@ -210,13 +193,9 @@ object StreamingBench {
     spark.stop()
 
     val out = Paths.get("bench_streaming.json")
-    val prevRe = "\"([a-z0-9_]+)\":(-?[0-9.eE+-]+)".r
     val prev: Map[String, Double] =
-      if (Files.exists(out)) {
-        val txt = new String(Files.readAllBytes(out), "UTF-8")
-        prevRe.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    def r1(d: Double): String = f"$d%.1f"
+      Harness.readRecord(out).map(Harness.numFields).getOrElse(Map.empty)
+    def r1(d: Double): String = Harness.num(d, 1)
     // Drift normalization: cal_drift = this box / prev box (in cal
     // seconds; >1 = slower box). A slower box lowers every eps uniformly,
     // so the gate compares prev against eps×drift — quiet-box units. A
@@ -257,11 +236,10 @@ object StreamingBench {
     val flags = throughputFlags ++ scaleFlags ++ errors.map(_.takeWhile(_ != ':'))
     def prevStr(n: String): String =
       prev.get(n).map(p => s""","${n}_prev":${r1(p)}""").getOrElse("")
-    def strArr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString(",")
-    val json = s"""{"lane":"streaming","base":"$base","copies":$copies,""" +
-      s""""events":$total,"flags":[${strArr(flags)}],""" +
-      s""""calibration":${r1(calMed)},"cal_drift":${f"$drift%.3f"},""" +
-      s""""errors":[${strArr(errors.toSeq)}],""" +
+    val json = s"""{"lane":"streaming","base":${Harness.str(base)},"copies":$copies,""" +
+      s""""events":$total,"flags":${Harness.strs(flags)},""" +
+      s""""calibration":${r1(calMed)},"cal_drift":${Harness.num(drift)},""" +
+      s""""errors":${Harness.strs(errors)},""" +
       s""""ingest_events_per_sec":${r1(ingestEps)}${prevStr("ingest_events_per_sec")},""" +
       s""""ingest_rollups":$rollups,""" +
       s""""sessionize_events_per_sec":${r1(baseStats.sessEps)}${prevStr("sessionize_events_per_sec")},""" +
