@@ -1,11 +1,19 @@
 package graft.api
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.{JsonMethods, Serialization}
 import graft.docstore.{DocCollection, DocStore, StructuredQuery}
-import java.nio.file.{Files, Paths}
+import graft.functions.crypto.{Eip712, Keccak256}
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
 
 /** Parquet-backed document database with the reference's mutation
   * semantics (reference: src/storage/src/db_store_v2.rs apply_mutation;
@@ -14,8 +22,15 @@ import java.nio.file.{Files, Paths}
   *
   * Layout under `root`:
   * {{{
-  *   <db>/<collection>/mutations/   append-only mutation log (parquet)
-  *   <db>/<collection>/rollups/     compacted gzip batches + manifest
+  *   state/                            node cells: nonces.json, config.json, nonces.lock
+  *   <db>/<collection>/mutations/      live mutation tail, one blk_<block>_<token>/
+  *                                     (or block_<block>/) parquet dir per block
+  *   <db>/<collection>/rollups/        gzip batches: run_<lo>_<hi>/batch=N, compact_*
+  *   <db>/<collection>/state/          block/id cell state.json + state.lock
+  *   <db>/<collection>/manifest/       append-only parquet records: rollup/, gc/,
+  *                                     compact/, snapshot/
+  *   <db>/<collection>/snapshots/      folded state per block_<block>
+  *   <db>/<collection>/indexes/        sorted key tables, _FRESH while current
   * }}}
   *
   * A mutation row = (block, order, action, id, doc, mask) — the exact
@@ -28,12 +43,18 @@ import java.nio.file.{Files, Paths}
   * reference's Arweave batch write re-expressed as gzip parquet + manifest,
   * and `recover()` proves state is reconstructible from rollups alone.
   *
-  * Concurrency: like the reference's storage node, writes assume a single
-  * sequencer — the (block, order) stamps come from one writer. Readers
-  * are safe concurrently; concurrent writers would need an external
-  * sequencer for block assignment.
-  */
-/** @param pinnedAdmin fix the node admin at construction (the reference
+  * Write protocol: data lands first, invisible; one atomic commit then
+  * publishes it — the state cell for appends, a manifest record for
+  * rollups, compactions and snapshots, the config cell for setup. Every
+  * writer of a collection holds its lock (a JVM monitor plus a
+  * FileChannel lock on `state/state.lock`), so any number of GraftDB
+  * instances, in one JVM or in several processes on one filesystem,
+  * can write one collection: block assignment is serialized like the
+  * reference's storage node (mutation_store.rs:444
+  * increase_block_return_last_state). Collection readers take no lock
+  * and never write.
+  *
+  * @param pinnedAdmin fix the node admin at construction (the reference
   *   pins `admin_addr` at node boot — system_impl.rs:50): when set, ONLY
   *   this address can ever `setup`, including the first time. When None,
   *   the first successful signed setup pins the admin
@@ -56,66 +77,92 @@ class GraftDB(spark: SparkSession, root: String,
   private def manifestPath(db: String, coll: String) = s"${collPath(db, coll)}/manifest"
   private def snapPath(db: String, coll: String, block: Long) =
     s"${collPath(db, coll)}/snapshots/block_$block"
+  private def noncesPath = s"$root/state/nonces.json"
+  private def configPath = s"$root/state/config.json"
 
   def createCollection(db: String, coll: String): Unit = {
     Files.createDirectories(Paths.get(mutPath(db, coll)))
     Files.createDirectories(Paths.get(rollPath(db, coll)))
   }
 
-  // ---- block/id state cell -------------------------------------------
+  // ---- cells and locks -------------------------------------------------
   // The reference keeps (block, order) in a single tiny KV cell and bumps
   // it per mutation batch (mutation_store.rs:444
   // increase_block_return_last_state) — O(1) per append. The analog: a
-  // one-line JSON state file per collection, written atomically
-  // (temp + move). Reading the whole mutation log to find max(block) on
-  // every write — the round-1 shape — is O(log) per append and a scale
-  // wall on a 100 TB log.
+  // one-line JSON cell per collection. The node keeps two more cells the
+  // same way, per-sender nonces and the Setup config. Only a holder of
+  // the cell's lock writes it, atomically (temp + move), so a reader sees
+  // the old or the new value whole.
 
-  private def readState(db: String, coll: String): Option[CollState] = {
-    val p = Paths.get(statePath(db, coll))
+  private def readCell[T: Manifest](path: String): Option[T] = {
+    val p = Paths.get(path)
     if (!Files.exists(p)) None
     else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
       implicit val fmts: Formats = DefaultFormats
-      Some(JsonMethods.parse(Files.readString(p)).extract[CollState])
+      Some(JsonMethods.parse(Files.readString(p)).extract[T])
     }
   }
 
-  private def writeState(db: String, coll: String, s: CollState): Unit = {
-    import org.json4s.jackson.Serialization
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val p = Paths.get(statePath(db, coll))
+  private def writeCell(path: String, value: AnyRef): Unit = {
+    implicit val fmts: Formats = DefaultFormats
+    val p = Paths.get(path)
     Files.createDirectories(p.getParent)
-    // unique tmp: the legacy-fallback persist in currentState can run
-    // OUTSIDE the collection lock (read paths), so two concurrent
-    // writers must not race one shared tmp name
-    val tmp = p.resolveSibling(
-      s"state.json.tmp.${java.util.UUID.randomUUID.toString.take(8)}")
-    Files.writeString(tmp, Serialization.write(s))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
+    Files.writeString(tmp, Serialization.write(value))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Current (lastBlock, nextId). Reads the state cell; falls back to one
-    * full-log scan ONLY for legacy collections written before the cell
-    * existed (and persists the result, so the scan never repeats). */
-  private def currentState(db: String, coll: String): CollState =
-    readState(db, coll).getOrElse {
-      val log = mutationLog(db, coll)
-      val s =
-        if (log.isEmpty) CollState(-1L, 0L)
-        else {
-          val r = log.agg(max(col("block")), max(col("id"))).head()
-          CollState(r.getLong(0), r.getLong(1) + 1L)
-        }
-      writeState(db, coll, s)
-      s
+  /** Serialize a critical section against BOTH same-JVM instances (a
+    * monitor keyed by the lock file's canonical path) and other processes
+    * on the same filesystem (an exclusive FileChannel lock on that file).
+    * OS file locks are held on behalf of the whole JVM, so a second
+    * same-JVM `lock()` would throw OverlappingFileLockException instead
+    * of blocking: the monitor comes first, and a holder never takes the
+    * same lock again. */
+  private def withLock[T](lockFile: String)(body: => T): T = {
+    val path = Paths.get(lockFile).toAbsolutePath.normalize
+    monitors.computeIfAbsent(path.toString, _ => new Object).synchronized {
+      Files.createDirectories(path.getParent)
+      val ch = FileChannel.open(path, StandardOpenOption.CREATE,
+        StandardOpenOption.WRITE)
+      try {
+        val lk = ch.lock()
+        try body finally lk.release()
+      } finally ch.close()
     }
+  }
+
+  /** The collection lock: block assignment (read cell → append → commit
+    * cell), rollup drain, compaction, snapshot and index build. Without
+    * it two writers read the same lastBlock and stamp the SAME block. */
+  private def collLock(db: String, coll: String) =
+    s"${collPath(db, coll)}/state/state.lock"
+
+  /** The node lock: the nonce and config cells. Two writers could
+    * otherwise both accept the same nonce — exactly the replay the nonce
+    * cell exists to reject. */
+  private def nodeLock = s"$root/state/nonces.lock"
+
+  /** Current (lastBlock, nextId): the state cell, else one full-log scan
+    * (a collection written before the cell existed, or whose cell was
+    * lost). Never writes: a reader persisting a scan it took before a
+    * concurrent commit would roll the cell back, and the next writer's
+    * orphan sweep would then delete the committed block. */
+  private def currentState(db: String, coll: String): CollState =
+    readCell[CollState](statePath(db, coll)).getOrElse(scanState(db, coll))
+
+  private def scanState(db: String, coll: String): CollState = {
+    val log = mutationLog(db, coll)
+    if (log.isEmpty) CollState(-1L, 0L)
+    else {
+      val r = log.agg(max(col("block")), max(col("id"))).head()
+      CollState(r.getLong(0), r.getLong(1) + 1L)
+    }
+  }
 
   /** The next block a writer would stamp — state-cell read, no log scan.
-    * (The single-sequencer assumption above applies: concurrent callers
-    * would race the reservation.) */
+    * A read, not a reservation: a concurrent writer may stamp it first. */
   def nextBlockId(db: String, coll: String): Long =
     currentState(db, coll).lastBlock + 1L
 
@@ -125,101 +172,33 @@ class GraftDB(spark: SparkSession, root: String,
   // one u64 "used nonce" per sender address, GetNonce answers used+1, and
   // a write is accepted ONLY if its nonce is exactly used+1 — stale or
   // out-of-order nonces are rejected before anything is applied. The
-  // analog: a node-level JSON cell (address → used nonce), written
-  // atomically like the block-state cell. O(1) per write, no log scan.
+  // analog: a node-level JSON cell (address → used nonce). O(1) per
+  // write, no log scan.
 
-  private def noncesPath = s"$root/state/nonces.json"
-
-  /** Serialize a nonce-cell read-modify-write against BOTH same-JVM
-    * instances (shared monitor keyed by the cell path) and other
-    * processes on the same filesystem (an exclusive FileChannel lock on
-    * a sibling lock file) — two writers on the same root can otherwise
-    * interleave read→write and both accept the same nonce, which is
-    * exactly the replay the cell exists to reject. */
-  private def withNonceLock[T](body: => T): T = {
-    val monitor = GraftDB.nonceMonitors.computeIfAbsent(
-      Paths.get(noncesPath).toAbsolutePath.normalize.toString, _ => new Object)
-    monitor.synchronized {
-      val lockPath = Paths.get(s"$root/state/nonces.lock")
-      Files.createDirectories(lockPath.getParent)
-      val ch = java.nio.channels.FileChannel.open(lockPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lk = ch.lock()
-        try body finally lk.release()
-      } finally ch.close()
-    }
-  }
-
-  /** Serialize the collection's write protocol — block assignment
-    * (read-state → data append → state commit), rollup drain, snapshot —
-    * against BOTH same-JVM instances and other processes on the same
-    * filesystem. Without it two writers read the same lastBlock and
-    * stamp the SAME block twice (the reference serializes block
-    * assignment through its store — mutation_store.rs:444
-    * increase_block_return_last_state). Same two-level scheme as the
-    * nonce cell: a JVM monitor keyed by the canonical state-cell path
-    * plus an exclusive FileChannel lock on a sibling lock file (the
-    * monitor also keeps same-JVM threads from tripping
-    * OverlappingFileLockException). Never nested — rollup/snapshot call
-    * no locked method inside their critical sections. */
-  private def withCollLock[T](db: String, coll: String)(body: => T): T = {
-    val monitor = GraftDB.collMonitors.computeIfAbsent(
-      Paths.get(statePath(db, coll)).toAbsolutePath.normalize.toString,
-      _ => new Object)
-    monitor.synchronized {
-      val lockPath = Paths.get(s"${collPath(db, coll)}/state/state.lock")
-      Files.createDirectories(lockPath.getParent)
-      val ch = java.nio.channels.FileChannel.open(lockPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lk = ch.lock()
-        try body finally lk.release()
-      } finally ch.close()
-    }
-  }
-
-  private def readNonces(): Map[String, Long] = {
-    val p = Paths.get(noncesPath)
-    if (!Files.exists(p)) Map.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      implicit val fmts: Formats = DefaultFormats
-      JsonMethods.parse(Files.readString(p)).extract[Map[String, Long]]
-    }
-  }
-
-  private def writeNonces(m: Map[String, Long]): Unit = {
-    import org.json4s.jackson.Serialization
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val p = Paths.get(noncesPath)
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling("nonces.json.tmp")
-    Files.writeString(tmp, Serialization.write(m))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def nonces: Map[String, Long] =
+    readCell[Map[String, Long]](noncesPath).getOrElse(Map.empty)
 
   /** GetNonce RPC semantics: the next nonce `sender` must sign with
     * (used + 1; 1 for a never-seen sender). */
   def getNonce(sender: String): Long =
-    withNonceLock { readNonces().getOrElse(normAddr(sender), 0L) + 1L }
+    withLock(nodeLock) { nonces.getOrElse(normAddr(sender), 0L) + 1L }
 
-  /** incr_nonce semantics: accept exactly used+1, else reject — called
-    * BEFORE the write is applied, like the reference's send_mutation. */
+  /** incr_nonce semantics, for a holder of the node lock: accept exactly
+    * used+1, else reject (`what` names the nonce in the message). */
+  private def consumeNonce(sender: String, nonce: Long, what: String): Unit = {
+    val key = normAddr(sender)
+    val m = nonces
+    val expected = m.getOrElse(key, 0L) + 1L
+    if (nonce != expected)
+      throw new IllegalArgumentException(
+        s"bad $what for $key: got $nonce, expected $expected")
+    writeCell(noncesPath, m.updated(key, nonce))
+  }
+
+  /** Called BEFORE the write is applied, like the reference's
+    * send_mutation. */
   private def checkAndIncrNonce(sender: String, nonce: Long): Unit =
-    withNonceLock {
-      val key = normAddr(sender)
-      val m = readNonces()
-      val expected = m.getOrElse(key, 0L) + 1L
-      if (nonce != expected)
-        throw new IllegalArgumentException(
-          s"bad nonce for $key: got $nonce, expected $expected")
-      writeNonces(m.updated(key, nonce))
-    }
+    withLock(nodeLock)(consumeNonce(sender, nonce, "nonce"))
 
   private def normAddr(a: String): String = a.trim.toLowerCase
 
@@ -238,42 +217,47 @@ class GraftDB(spark: SparkSession, root: String,
     appendDocumentsAt(db, coll, block, docs, docCol)
   }
 
-  /** The reference's full signed write path (node/src/
-    * storage_node_light_impl.rs send_mutation → mutation_utils.rs:93
-    * unwrap_and_light_verify): the request is an EIP-712 TypedData JSON
-    * whose `message.payload` is hex-encoded mutation bytes (here: UTF-8
-    * NDJSON, one document per line) and `message.nonce` the sender's next
-    * nonce; the sender is RECOVERED from the signature — never trusted
-    * from a field — then the nonce is checked-and-consumed and the docs
-    * applied. Returns (recovered sender, assigned doc ids). */
-  def sendMutation(db: String, coll: String,
-      typedDataJson: String, sigHex: String): (String, Seq[Long]) = {
-    import graft.functions.crypto.{Eip712, Keccak256}
+  /** A signed request, verified (mutation_utils.rs:93
+    * unwrap_and_light_verify): an EIP-712 TypedData JSON whose
+    * `message.payload` is hex-encoded bytes and `message.nonce` the
+    * sender's next nonce. The sender is RECOVERED from the signature —
+    * never trusted from a field. Returns (sender, nonce, payload). */
+  private def decodeSigned(typedDataJson: String,
+      sigHex: String): (String, Long, Array[Byte]) = {
     val recovered = Eip712.recoverAddressOrNull(typedDataJson, sigHex)
     if (recovered == null)
       throw new IllegalArgumentException("invalid signature or typed data")
-    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(typedDataJson)
-    val msg = tree.get("message")
+    val msg = new ObjectMapper().readTree(typedDataJson).get("message")
     if (msg == null || msg.get("payload") == null || msg.get("nonce") == null)
       throw new IllegalArgumentException("bad typed data: missing payload/nonce")
     val nonce = msg.get("nonce").asText.toLongOption.getOrElse(
       throw new IllegalArgumentException("bad typed data: non-numeric nonce"))
     val payload = Keccak256.fromHex(msg.get("payload").asText).getOrElse(
       throw new IllegalArgumentException("bad typed data: non-hex payload"))
-    val docs = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
+    (recovered.toString, nonce, payload)
+  }
+
+  /** The reference's full signed write path (node/src/
+    * storage_node_light_impl.rs send_mutation): the payload is UTF-8
+    * NDJSON, one document per line; the nonce is checked-and-consumed,
+    * then the docs applied. Returns (recovered sender, assigned doc
+    * ids). */
+  def sendMutation(db: String, coll: String,
+      typedDataJson: String, sigHex: String): (String, Seq[Long]) = {
+    val (sender, nonce, payload) = decodeSigned(typedDataJson, sigHex)
+    val docs = new String(payload, StandardCharsets.UTF_8)
       .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-    val sender = recovered.toString
-    val ids = addDocuments(db, coll, docs, sender, nonce)
-    (sender, ids)
+    (sender, addDocuments(db, coll, docs, sender, nonce))
   }
 
   /** The full mutation log: rolled-up batches + live tail, one schema.
-    * Rolled-up batches are located through the persisted RollupRecord
-    * manifest (the reference recovers from its rollup records the same
-    * way, recover.rs over scan_rollup_records) — on an object store that
-    * is one small manifest read instead of a huge eventually-consistent
-    * prefix listing. Collections written before the manifest existed
-    * fall back to listing rollups/ recursively.
+    * Rolled-up batches are located through the persisted manifests (the
+    * reference recovers from its rollup records the same way, recover.rs
+    * over scan_rollup_records) — on an object store that is one small
+    * manifest read instead of a huge eventually-consistent prefix
+    * listing. Only committed data is read: a batch dir no record lists
+    * is a crashed rollup's, and a tail block above the state cell is a
+    * crashed or in-flight append's.
     *
     * Reader-vs-GC contract: a reader that listed tail files BEFORE a
     * rollup's GC deleted them fails its job (FileNotFoundException) and
@@ -290,103 +274,114 @@ class GraftDB(spark: SparkSession, root: String,
     // deleted fail the job CLOSED (FileNotFoundException, re-plan). The
     // reverse order silently loses the freshly-rolled blocks: absent
     // from the stale manifest snapshot AND from the post-GC listing.
-    val tailBase =
-      if (hasParquet(mutPath(db, coll)))
-        Some(spark.read.schema(mutationSchema)
-          .option("recursiveFileLookup", "true").parquet(mutPath(db, coll)))
+    // The state cell is read before both: tail blocks above it are an
+    // in-flight or crashed append, invisible until their commit (every
+    // block it admits had all its files in place before the cell moved).
+    // No cell (a legacy collection): everything on disk counts.
+    val lastBlock = readCell[CollState](statePath(db, coll)).map(_.lastBlock)
+    val tail =
+      if (hasParquet(mutPath(db, coll))) Some(readLog(mutPath(db, coll)))
       else None
-    // compaction view: a compact record RETIRES the batch dirs it
-    // replaced — the record append is the commit point, so a retired
-    // path is dropped from reads even while its dir still exists (the
-    // crash window between the append and the delete must not read rows
-    // twice), and a compacted dir serves in its place
-    val compactRecs = scanCompactRecords(db, coll)
-      .select(col("path"), col("end_block"), col("replaced")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2)))
-    val retired = compactRecs.flatMap(_._3).toSet
-    val baseRecs = scanRollupRecords(db, coll)
-      .select(col("path"), col("end_block")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val recs = (baseRecs.filterNot(r => retired(r._1)) ++
-        compactRecs.filterNot(c => retired(c._1)).map(c => (c._1, c._2)))
-      .filter { case (p, _) => hasParquet(p) }
-    val manifested = recs.map(_._1)
+    val store = batches(db, coll)
+    val live = store.live
     // blocks at or below this bound are owned by the rollup batches; a
     // rollup that crashed between its manifest append and the tail GC
     // leaves the same blocks in BOTH places — the bound keeps the
-    // redundant tail copy invisible until the GC finishes. RETIRED
-    // records keep counting: their blocks are owned by the manifested
-    // compact dir that replaced them.
-    val committedHi = {
-      val ends = recs.map(_._2) ++
-        (baseRecs ++ compactRecs.map(c => (c._1, c._2)))
-          .filter(r => retired(r._1)).map(_._2)
-      if (ends.isEmpty) -1L else ends.max
+    // redundant tail copy invisible until the GC finishes
+    val committedHi = store.committedHi
+    val tailReads = tail.map { t =>
+      val unrolled = if (committedHi >= 0) t.filter(col("block") > committedHi) else t
+      lastBlock.fold(unrolled)(b => unrolled.filter(col("block") <= b))
     }
-    val rollReads: Seq[DataFrame] =
-      if (manifested.nonEmpty)
-        // recursiveFileLookup also disables partition-column inference on
-        // the batch=N dir names — the file schema is the whole schema
-        Seq(spark.read.schema(mutationSchema)
-          .option("recursiveFileLookup", "true").parquet(manifested.toSeq: _*))
-      else if (hasParquet(rollPath(db, coll)))
-        Seq(spark.read.schema(mutationSchema)
-          .option("recursiveFileLookup", "true").parquet(rollPath(db, coll)))
-      else Seq.empty
-    val tailReads = tailBase.map(t =>
-      if (committedHi >= 0) t.filter(col("block") > committedHi) else t).toSeq
-    val reads = rollReads ++ tailReads
-    if (reads.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], mutationSchema)
+    val reads = (if (live.isEmpty) None else Some(readLog(live.map(_.path): _*))) ++
+      tailReads
+    if (reads.isEmpty) emptyFrame(mutationSchema)
     else reads.reduce(_ unionByName _)
   }
 
-  /** One locked batch = one UNIQUE `blk_<block>_<token>` dir in the tail.
-    * The token makes a crashed attempt's data distinguishable garbage: a
-    * writer that dies between the data write and the state bump releases
-    * the collection lock with uncommitted rows at block N on disk, and
-    * the NEXT writer to stamp N (same or different process) must not let
-    * those rows ride its commit — same (block, order) stamps, different
-    * content, the fold would pick arbitrarily. `sweepOrphanBatchDirs`
-    * (called under the lock before every block assignment) deletes the
-    * orphan dirs by NAME — any blk_ dir whose block exceeds the
-    * committed lastBlock is a crashed locked-writer attempt, because a
-    * live one would be holding the lock we hold. A dir listing + name
-    * parse per write, no data read. */
-  private def append(db: String, coll: String, block: Long, rows: Seq[Row]): Unit =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), mutationSchema)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${mutPath(db, coll)}/blk_${block}_${java.util.UUID.randomUUID.toString.take(8)}")
+  /** Mutation parquet under `paths`, nested dirs included
+    * (recursiveFileLookup also disables partition-column inference on
+    * the batch=N dir names — the file schema is the whole schema). */
+  private def readLog(paths: String*): DataFrame =
+    spark.read.schema(mutationSchema)
+      .option("recursiveFileLookup", "true").parquet(paths: _*)
 
-  private def sweepOrphanBatchDirs(db: String, coll: String, lastCommitted: Long): Unit = {
-    val d = new java.io.File(mutPath(db, coll))
-    val kids = d.listFiles()
-    if (kids != null) kids.foreach { f =>
+  /** The rollup store as its manifests publish it (base records minus
+    * the ones compaction retired, plus the live compacted dirs). Two
+    * small manifest reads. */
+  private def batches(db: String, coll: String): Batches = {
+    val cols = Seq("start_block", "end_block", "mutation_count", "path", "replaced")
+    val compact = scanCompactRecords(db, coll).select(cols.map(col): _*).collect()
+    val base = scanRollupRecords(db, coll).select(cols.init.map(col): _*).collect()
+    Batches((base ++ compact).toSeq.map(r =>
+        Batch(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))),
+      compact.flatMap(_.getSeq[String](4)).toSet)
+  }
+
+  /** The one locked block commit, for a holder of the collection lock
+    * (`addIndex` records its declaration and builds the index in one
+    * hold, and the lock does not nest): read the cell, sweep orphan
+    * batch dirs, stamp block = lastBlock + 1, mark indexes stale (document
+    * writes only), write `rows(block, nextId)` into a UNIQUE
+    * `blk_<block>_<token>` dir, then commit the cell with nextId advanced
+    * by `newIds`. Returns the state the commit started from.
+    *
+    * The token makes a crashed attempt's data distinguishable garbage: a
+    * writer that dies between the data write and the cell commit releases
+    * the lock with uncommitted rows at block N on disk, and the NEXT
+    * writer to stamp N (same or different process) must not let those
+    * rows ride its commit — same (block, order) stamps, different
+    * content, the fold would pick arbitrarily. `sweepOrphanBatchDirs`
+    * deletes them by NAME. A collection's first commit persists the
+    * scanned cell before its data lands, so the cell already excludes a
+    * crashed first attempt. */
+  private def commitBlock(db: String, coll: String, op: String,
+      newIds: Long = 0L, docWrite: Boolean = true)(
+      rows: (Long, Long) => RDD[Row]): CollState = {
+    val cell = statePath(db, coll)
+    val st = readCell[CollState](cell).getOrElse {
+      val s = scanState(db, coll)
+      writeCell(cell, s)
+      s
+    }
+    sweepOrphanBatchDirs(db, coll, st.lastBlock)
+    val block = st.lastBlock + 1
+    if (docWrite) markIndexesStale(db, coll)
+    spark.createDataFrame(rows(block, st.nextId), mutationSchema)
+      .write.mode(SaveMode.Overwrite)
+      .parquet(s"${mutPath(db, coll)}/blk_${block}_${UUID.randomUUID.toString.take(8)}")
+    failpoint(s"$op:afterAppend")
+    writeCell(cell, CollState(block, st.nextId + newIds))
+    st
+  }
+
+  /** Any blk_ dir whose block exceeds the committed lastBlock is a
+    * crashed locked-writer attempt — a live one would be holding the lock
+    * the caller holds. A dir listing + name parse, no data read. */
+  private def sweepOrphanBatchDirs(db: String, coll: String, lastCommitted: Long): Unit =
+    listDir(mutPath(db, coll)).foreach { f =>
       if (f.isDirectory && f.getName.startsWith("blk_")) {
         val b = f.getName.drop(4).takeWhile(_ != '_')
         if (b.nonEmpty && b.forall(_.isDigit) && b.toLong > lastCommitted)
           deleteRecursively(f.toPath)
       }
     }
-  }
+
+  /** One-partition RDD of driver-built rows. */
+  private def local(rows: Seq[Row]): RDD[Row] = spark.sparkContext.parallelize(rows, 1)
 
   /** AddDocument: assigns monotonically increasing ids (doc_order analog).
     * Block/id come from the state cell — no log scan per batch. */
-  def addDocuments(db: String, coll: String, docs: Seq[String]): Seq[Long] =
-    withCollLock(db, coll) {
-      val st = currentState(db, coll)
-      sweepOrphanBatchDirs(db, coll, st.lastBlock)
-      val block = st.lastBlock + 1
-      val base = st.nextId
-      val ids = docs.indices.map(base + _)
-      markIndexesStale(db, coll)
-      append(db, coll, block, docs.zipWithIndex.map { case (d, i) =>
-        Row(block, i, ActionAdd, base + i, d, null)
-      })
-      failpoint("addDocuments:afterAppend")
-      writeState(db, coll, CollState(block, base + docs.length))
-      ids
+  def addDocuments(db: String, coll: String, docs: Seq[String]): Seq[Long] = {
+    val base = withLock(collLock(db, coll)) {
+      commitBlock(db, coll, "addDocuments", newIds = docs.length) { (block, first) =>
+        local(docs.zipWithIndex.map { case (d, i) =>
+          Row(block, i, ActionAdd, first + i, d, null)
+        })
+      }.nextId
     }
+    docs.indices.map(base + _)
+  }
 
   /** UpdateDocument with DocumentMask: only `mask` fields are replaced;
     * fields in the mask but absent from `doc` are deleted (the proto's
@@ -395,32 +390,24 @@ class GraftDB(spark: SparkSession, root: String,
       docs: Seq[String], masks: Seq[Seq[String]]): Unit = {
     require(ids.length == docs.length && ids.length == masks.length,
       s"ids/docs/masks length mismatch: ${ids.length}/${docs.length}/${masks.length}")
-    withCollLock(db, coll) {
-      val st = currentState(db, coll)
-      sweepOrphanBatchDirs(db, coll, st.lastBlock)
-      val block = st.lastBlock + 1
-      markIndexesStale(db, coll)
-      append(db, coll, block, ids.indices.map { i =>
-        Row(block, i, ActionUpdate, ids(i), docs(i),
-          if (masks(i).isEmpty) null else masks(i).mkString(","))
-      })
-      failpoint("updateDocuments:afterAppend")
-      writeState(db, coll, st.copy(lastBlock = block))
+    withLock(collLock(db, coll)) {
+      commitBlock(db, coll, "updateDocuments") { (block, _) =>
+        local(ids.indices.map { i =>
+          Row(block, i, ActionUpdate, ids(i), docs(i),
+            if (masks(i).isEmpty) null else masks(i).mkString(","))
+        })
+      }
     }
   }
 
   /** DeleteDocument tombstones. */
   def deleteDocuments(db: String, coll: String, ids: Seq[Long]): Unit =
-    withCollLock(db, coll) {
-      val st = currentState(db, coll)
-      sweepOrphanBatchDirs(db, coll, st.lastBlock)
-      val block = st.lastBlock + 1
-      markIndexesStale(db, coll)
-      append(db, coll, block, ids.zipWithIndex.map { case (id, i) =>
-        Row(block, i, ActionDelete, id, null, null)
-      })
-      failpoint("deleteDocuments:afterAppend")
-      writeState(db, coll, st.copy(lastBlock = block))
+    withLock(collLock(db, coll)) {
+      commitBlock(db, coll, "deleteDocuments") { (block, _) =>
+        local(ids.zipWithIndex.map { case (id, i) =>
+          Row(block, i, ActionDelete, id, null, null)
+        })
+      }
     }
 
   /** Partition-parallel bulk append of one block: every input partition
@@ -451,7 +438,7 @@ class GraftDB(spark: SparkSession, root: String,
     // data lands outside the lock (the block dir is caller-exclusive and
     // Overwrite-idempotent); only the max-merge state bump needs
     // serializing, or a concurrent bump's write could be lost
-    withCollLock(db, coll) {
+    withLock(collLock(db, coll)) {
       val st = currentState(db, coll)
       // a max-merge commit can advance lastBlock PAST blocks a crashed
       // locked writer left orphan dirs at (the caller's block may gap
@@ -461,7 +448,7 @@ class GraftDB(spark: SparkSession, root: String,
       sweepOrphanBatchDirs(db, coll, st.lastBlock)
       // the block's rows stay invisible until this bump commits them
       markIndexesStale(db, coll)
-      writeState(db, coll, CollState(math.max(st.lastBlock, block),
+      writeCell(statePath(db, coll), CollState(math.max(st.lastBlock, block),
         math.max(st.nextId, (block + 1) * IdStride)))
     }
   }
@@ -486,23 +473,20 @@ class GraftDB(spark: SparkSession, root: String,
     * stamped block) under snapshots/ and record it in the manifest.
     * Returns (block, docCount). */
   def snapshot(db: String, coll: String, block: Long = Long.MinValue): (Long, Long) =
-    withCollLock(db, coll) {
+    withLock(collLock(db, coll)) {
       val at = if (block == Long.MinValue) currentState(db, coll).lastBlock else block
       val dir = snapPath(db, coll, at)
       foldLog(db, coll, at).write.mode(SaveMode.Overwrite).parquet(dir)
       failpoint("snapshot:afterData")
       val n = spark.read.parquet(dir).count()
-      appendManifest(s"${manifestPath(db, coll)}/snapshot",
-        Seq(Row(at, n, dir)), snapshotManifestSchema)
+      appendManifest(db, coll, "snapshot", Seq(Row(at, n, dir)),
+        snapshotManifestSchema)
       (at, n)
     }
 
   /** Persisted snapshot history (block, n_docs, path). */
-  def scanSnapshots(db: String, coll: String): DataFrame = {
-    val dir = s"${manifestPath(db, coll)}/snapshot"
-    if (hasParquet(dir)) spark.read.schema(snapshotManifestSchema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snapshotManifestSchema)
-  }
+  def scanSnapshots(db: String, coll: String): DataFrame =
+    readManifest(db, coll, "snapshot", snapshotManifestSchema)
 
   /** Newest usable snapshot at or below `block`, if any. */
   private def latestSnapshotAt(db: String, coll: String, block: Long): Option[(Long, String)] =
@@ -634,14 +618,13 @@ class GraftDB(spark: SparkSession, root: String,
     // fences the tail FILE LISTING against writer appends: everything
     // this run rolls and GCs is pinned to the listing below, so a writer
     // queued on the lock can never lose its new block to the GC
-    withCollLock(db, coll) { rollupLocked(db, coll, maxBatchBytes) }
+    withLock(collLock(db, coll)) { rollupLocked(db, coll, maxBatchBytes) }
 
   private def rollupLocked(db: String, coll: String,
       maxBatchBytes: Long): Seq[RollupRecord] = {
     val tailDir = mutPath(db, coll)
     if (!hasParquet(tailDir)) return Seq.empty
-    val rawTail = spark.read.schema(mutationSchema)
-      .option("recursiveFileLookup", "true").parquet(tailDir)
+    val rawTail = readLog(tailDir)
     // Only blocks <= the state cell's lastBlock are fully committed: the
     // state bump happens under this lock strictly AFTER the data commit,
     // while appendDocumentsAt's data write (and Spark's non-atomic
@@ -730,7 +713,7 @@ class GraftDB(spark: SparkSession, root: String,
         RollupRecord(r.getAs[Long]("lo"), r.getAs[Long]("hi"),
           r.getAs[Long]("n"), dirSize(path), r.getAs[Long]("raw"), path)
       }.toSeq
-    appendManifest(s"${manifestPath(db, coll)}/rollup", records.map(rec =>
+    appendManifest(db, coll, "rollup", records.map(rec =>
       Row(rec.startBlock, rec.endBlock, rec.mutationCount,
         rec.compressedBytes, rec.rawBytes, rec.path)), rollupManifestSchema)
     failpoint("rollup:afterManifest")
@@ -757,8 +740,7 @@ class GraftDB(spark: SparkSession, root: String,
       .filter(col("start_block") === lo && col("end_block") === hi)
       .limit(1).count() > 0
     if (!recorded)
-      appendManifest(s"${manifestPath(db, coll)}/gc",
-        Seq(Row(lo, hi, n)), gcManifestSchema)
+      appendManifest(db, coll, "gc", Seq(Row(lo, hi, n)), gcManifestSchema)
     failpoint("rollup:afterGc")
     val parents = scala.collection.mutable.LinkedHashSet[java.nio.file.Path]()
     tailFiles.foreach { f =>
@@ -792,35 +774,40 @@ class GraftDB(spark: SparkSession, root: String,
     }
   }
 
-  private def appendManifest(dir: String, rows: Seq[Row], schema: StructType): Unit =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.mode(SaveMode.Append).parquet(dir)
+  /** Append records to one manifest (`kind` = rollup, gc, compact or
+    * snapshot) — the commit point of the operation that wrote them. */
+  private def appendManifest(db: String, coll: String, kind: String,
+      rows: Seq[Row], schema: StructType): Unit =
+    spark.createDataFrame(local(rows), schema)
+      .write.mode(SaveMode.Append).parquet(s"${manifestPath(db, coll)}/$kind")
+
+  /** One manifest's records; empty before its first append. */
+  private def readManifest(db: String, coll: String, kind: String,
+      schema: StructType): DataFrame = {
+    val dir = s"${manifestPath(db, coll)}/$kind"
+    if (hasParquet(dir)) spark.read.schema(schema).parquet(dir)
+    else emptyFrame(schema)
+  }
+
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Persisted rollup history (mutation_store.rs:430 scan_rollup_records). */
-  def scanRollupRecords(db: String, coll: String): DataFrame = {
-    val dir = s"${manifestPath(db, coll)}/rollup"
-    if (hasParquet(dir)) spark.read.schema(rollupManifestSchema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], rollupManifestSchema)
-  }
+  def scanRollupRecords(db: String, coll: String): DataFrame =
+    readManifest(db, coll, "rollup", rollupManifestSchema)
 
   /** On-disk size of the live (un-rolled-up) mutation tail — the rollup
     * executor's trigger metric (rollup_executor.rs periodic size check). */
   def tailBytes(db: String, coll: String): Long = dirSize(mutPath(db, coll))
 
   /** Persisted GC history (mutation_store.rs scan_gc_records). */
-  def scanGcRecords(db: String, coll: String): DataFrame = {
-    val dir = s"${manifestPath(db, coll)}/gc"
-    if (hasParquet(dir)) spark.read.schema(gcManifestSchema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], gcManifestSchema)
-  }
+  def scanGcRecords(db: String, coll: String): DataFrame =
+    readManifest(db, coll, "gc", gcManifestSchema)
 
   /** Persisted rollup-compaction history: each record publishes one
     * compacted batch dir and retires the dirs it replaced. */
-  def scanCompactRecords(db: String, coll: String): DataFrame = {
-    val dir = s"${manifestPath(db, coll)}/compact"
-    if (hasParquet(dir)) spark.read.schema(compactManifestSchema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], compactManifestSchema)
-  }
+  def scanCompactRecords(db: String, coll: String): DataFrame =
+    readManifest(db, coll, "compact", compactManifestSchema)
 
   /** OPTIMIZE tick for the rollup store — `Layout.compactSmallFiles`'
     * discipline applied to GraftDB-owned batch dirs, under the
@@ -846,42 +833,23 @@ class GraftDB(spark: SparkSession, root: String,
     * both kinds of litter are swept by the next call. Returns the
     * number of bins compacted. */
   def compactRollups(db: String, coll: String,
-      targetBytes: Long = 64L * 1024 * 1024): Int = withCollLock(db, coll) {
+      targetBytes: Long = 64L * 1024 * 1024): Int = withLock(collLock(db, coll)) {
     val rollBase = rollPath(db, coll)
-    val compactRows = scanCompactRecords(db, coll).collect()
-    val known = compactRows.map(_.getAs[String]("path")).toSet
-    val retired = compactRows.flatMap(_.getSeq[String](5)).toSet
+    val store = batches(db, coll)
+    val known = store.all.map(_.path).toSet
     // self-heal: orphan compact dirs (crash before their record) and
     // lingering retired dirs (crash after their replacement's record)
-    val rollDirFile = new java.io.File(rollBase)
-    if (rollDirFile.isDirectory)
-      rollDirFile.listFiles().foreach { d =>
-        val p = s"$rollBase/${d.getName}"
-        if (d.getName.startsWith("compact_") && !known.contains(p))
-          deleteRecursively(d.toPath)
-      }
-    retired.foreach { p =>
-      val fp = Paths.get(p)
-      if (Files.exists(fp)) deleteRecursively(fp)
+    listDir(rollBase).foreach { d =>
+      if (d.getName.startsWith("compact_") && !known(s"$rollBase/${d.getName}"))
+        deleteRecursively(d.toPath)
     }
-    // live batch dirs in block order (base records minus retired, plus
-    // un-retired compact dirs)
-    val baseRecs = scanRollupRecords(db, coll).collect().map(r =>
-      (r.getAs[Long]("start_block"), r.getAs[Long]("end_block"),
-        r.getAs[Long]("mutation_count"), r.getAs[String]("path")))
-    val liveCompact = compactRows
-      .filterNot(r => retired(r.getAs[String]("path")))
-      .map(r => (r.getAs[Long]("start_block"), r.getAs[Long]("end_block"),
-        r.getAs[Long]("mutation_count"), r.getAs[String]("path")))
-    val live = (baseRecs.filterNot(r => retired(r._4)) ++ liveCompact)
-      .filter(r => hasParquet(r._4))
-      .sortBy(_._1)
+    store.retired.foreach(p => deleteRecursively(Paths.get(p)))
     // greedy adjacent bins below the target; only multi-member bins work
-    val bins = scala.collection.mutable.ArrayBuffer[Vector[(Long, Long, Long, String)]]()
-    var cur = Vector.empty[(Long, Long, Long, String)]
+    val bins = scala.collection.mutable.ArrayBuffer[Vector[Batch]]()
+    var cur = Vector.empty[Batch]
     var curBytes = 0L
-    for (rec <- live) {
-      val sz = dirSize(rec._4)
+    for (rec <- store.live) {
+      val sz = dirSize(rec.path)
       if (cur.nonEmpty && curBytes + sz > targetBytes) {
         if (cur.length >= 2) bins += cur
         cur = Vector.empty; curBytes = 0L
@@ -891,18 +859,15 @@ class GraftDB(spark: SparkSession, root: String,
     }
     if (cur.length >= 2) bins += cur
     bins.foreach { bin =>
-      val (lo, hi) = (bin.map(_._1).min, bin.map(_._2).max)
-      val n = bin.map(_._3).sum
-      val outDir = s"$rollBase/compact_${lo}_${hi}_${java.util.UUID.randomUUID().toString.take(8)}"
-      spark.read.schema(mutationSchema)
-        .option("recursiveFileLookup", "true").parquet(bin.map(_._4): _*)
+      val (lo, hi) = (bin.map(_.start).min, bin.map(_.end).max)
+      val outDir = s"$rollBase/compact_${lo}_${hi}_${UUID.randomUUID().toString.take(8)}"
+      readLog(bin.map(_.path): _*)
         .repartition(1)
         .sortWithinPartitions("block", "order")
         .write.option("compression", "gzip").parquet(outDir)
       failpoint("compact:afterData")
-      appendManifest(s"${manifestPath(db, coll)}/compact",
-        Seq(Row(lo, hi, n, dirSize(outDir), outDir, bin.map(_._4))),
-        compactManifestSchema)
+      appendManifest(db, coll, "compact", Seq(Row(lo, hi, bin.map(_.count).sum,
+        dirSize(outDir), outDir, bin.map(_.path))), compactManifestSchema)
       failpoint("compact:afterRecord")
       // retired dirs stay on disk until the next call's self-heal pass
       // (grace period for in-flight reader plans — see scaladoc)
@@ -921,8 +886,6 @@ class GraftDB(spark: SparkSession, root: String,
   // Arweave / EVM account fields have no Spark analog and are omitted;
   // the signed-write requirement and the admin pinning are kept.
 
-  private def configPath = s"$root/state/config.json"
-
   /** Setup analog: `typedDataJson.message.payload` hex-encodes a JSON
     * object with any of minRollupSizeBytes / rollupIntervalMs /
     * minGcOffset / networkId, and `message.nonce` the sender's next
@@ -934,40 +897,20 @@ class GraftDB(spark: SparkSession, root: String,
     * accepted setup — a captured admin-signed Setup cannot be replayed
     * later to revert the policy. Returns the admin address. */
   def setup(typedDataJson: String, sigHex: String): String = {
-    import graft.functions.crypto.{Eip712, Keccak256}
-    val recovered = Eip712.recoverAddressOrNull(typedDataJson, sigHex)
-    if (recovered == null)
-      throw new IllegalArgumentException("invalid signature or typed data")
-    val sender = recovered.toString
-    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(typedDataJson)
-    val msg = tree.get("message")
-    if (msg == null || msg.get("payload") == null || msg.get("nonce") == null)
-      throw new IllegalArgumentException("bad typed data: missing payload/nonce")
-    val nonce = msg.get("nonce").asText.toLongOption.getOrElse(
-      throw new IllegalArgumentException("bad typed data: non-numeric nonce"))
-    val payload = Keccak256.fromHex(msg.get("payload").asText).getOrElse(
-      throw new IllegalArgumentException("bad typed data: non-hex payload"))
-    val req = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(payload, java.nio.charset.StandardCharsets.UTF_8))
+    val (sender, nonce, payload) = decodeSigned(typedDataJson, sigHex)
+    val req = new ObjectMapper().readTree(new String(payload, StandardCharsets.UTF_8))
     def knob(name: String, dflt: Long): Long =
       Option(req.get(name)).map(_.asLong(dflt)).getOrElse(dflt)
-    withNonceLock { // same cell-serialization discipline as the nonce cell
+    withLock(nodeLock) { // the nonce and config cells share one lock
       systemStatus().adminAddr.foreach { admin =>
         if (normAddr(admin) != normAddr(sender))
           throw new IllegalArgumentException(s"setup rejected: $sender is not the admin")
       }
       // nonce check-and-consume AFTER the admin gate (a rejected
-      // non-admin attempt burns nothing) and inside the SAME lock hold —
-      // inlined because withNonceLock does not nest (the OS file lock is
-      // JVM-scoped). Rejecting a stale nonce here is what makes a
-      // replayed Setup dead on arrival.
-      val key = normAddr(sender)
-      val nonces = readNonces()
-      val expected = nonces.getOrElse(key, 0L) + 1L
-      if (nonce != expected)
-        throw new IllegalArgumentException(
-          s"bad setup nonce for $key: got $nonce, expected $expected")
-      writeNonces(nonces.updated(key, nonce))
+      // non-admin attempt burns nothing) and inside the SAME lock hold.
+      // Rejecting a stale nonce here is what makes a replayed Setup dead
+      // on arrival.
+      consumeNonce(sender, nonce, "setup nonce")
       // a crash here burns the nonce without applying the config — the
       // chain-standard failure mode: the config stays atomically at its
       // previous value, a REPLAY of the same signed request is dead on
@@ -979,14 +922,7 @@ class GraftDB(spark: SparkSession, root: String,
         rollupIntervalMs = knob("rollupIntervalMs", prev.rollupIntervalMs),
         minGcOffset = knob("minGcOffset", prev.minGcOffset),
         networkId = knob("networkId", prev.networkId))
-      val p = Paths.get(configPath)
-      Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling("config.json.tmp")
-      import org.json4s.jackson.Serialization
-      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-      Files.writeString(tmp, Serialization.write(StoredConfig(sender, cfg)))
-      Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      writeCell(configPath, StoredConfig(sender, cfg))
     }
     sender
   }
@@ -1003,9 +939,9 @@ class GraftDB(spark: SparkSession, root: String,
     // OPTIMIZE rides the same tick: a drain that cut new batches may
     // have left sub-target dirs (every run's LAST batch is size-
     // truncated); compaction is a no-op when no adjacent pair fits a
-    // bin, so the tick stays idempotent. Separate lock acquisitions —
-    // withCollLock does not nest — which is safe: compaction only ever
-    // touches manifest-listed dirs, never the tail a writer that
+    // bin, so the tick stays idempotent. Separate lock acquisitions (the
+    // collection lock does not nest), which is safe: compaction only
+    // ever touches manifest-listed dirs, never the tail a writer that
     // squeezed between the locks might be appending.
     if (recs.nonEmpty)
       compactRollups(db, coll, systemStatus().config.minRollupSizeBytes)
@@ -1015,19 +951,14 @@ class GraftDB(spark: SparkSession, root: String,
   /** GetSystemStatus analog: admin, init flag and the config cell
     * (defaults before any setup). A constructor-pinned admin is reported
     * even before the first setup — it is fixed at boot, not learned. */
-  def systemStatus(): SystemStatus = {
-    val p = Paths.get(configPath)
-    if (!Files.exists(p)) SystemStatus(hasInited = false, pinnedAdmin, NodeConfig())
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      implicit val fmts: Formats = DefaultFormats
-      val st = JsonMethods.parse(Files.readString(p)).extract[StoredConfig]
+  def systemStatus(): SystemStatus =
+    readCell[StoredConfig](configPath) match {
+      case None => SystemStatus(hasInited = false, pinnedAdmin, NodeConfig())
       // a boot-time pin outranks the stored admin (the stored value only
       // matters on TOFU nodes)
-      SystemStatus(hasInited = true, pinnedAdmin.orElse(Some(st.admin)), st.config)
+      case Some(st) =>
+        SystemStatus(hasInited = true, pinnedAdmin.orElse(Some(st.admin)), st.config)
     }
-  }
 
   // ---- mutation-log inspection (the storage node's log RPCs) ----------
   // db3_storage.proto:191-202: GetMutationHeader / GetMutationBody are
@@ -1123,19 +1054,12 @@ class GraftDB(spark: SparkSession, root: String,
     // the distributed write serialize under the collection lock, so a
     // concurrent sequential writer can neither reuse the block nor
     // observe the batch before its state bump publishes it
-    withCollLock(db, coll) {
-      val st = currentState(db, coll)
-      sweepOrphanBatchDirs(db, coll, st.lastBlock)
-      val block = st.lastBlock + 1
-      val base = st.nextId
-      markIndexesStale(db, coll)
-      val rows = lines.rdd.zipWithIndex().map { case (doc, i) =>
-        Row(block, i.toInt, ActionAdd, base + i, doc, null)
+    withLock(collLock(db, coll)) {
+      commitBlock(db, coll, "addDocumentsFromJson", newIds = n) { (block, first) =>
+        lines.rdd.zipWithIndex().map { case (doc, i) =>
+          Row(block, i.toInt, ActionAdd, first + i, doc, null)
+        }
       }
-      spark.createDataFrame(rows, mutationSchema)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"${mutPath(db, coll)}/blk_${block}_${java.util.UUID.randomUUID.toString.take(8)}")
-      writeState(db, coll, CollState(block, base + n))
     }
     n
   }
@@ -1162,19 +1086,16 @@ class GraftDB(spark: SparkSession, root: String,
       payload: String = null): Long = {
     require(!DocActions.contains(action),
       s"action $action is a document mutation; use add/update/deleteDocuments")
-    withCollLock(db, coll)(appendLifecycle(db, coll, action, payload))
+    withLock(collLock(db, coll))(appendLifecycle(db, coll, action, payload))
   }
 
-  /** `recordLifecycleMutation`'s body; the caller holds the lock. */
+  /** `recordLifecycleMutation`'s body; the caller holds the lock.
+    * Lifecycle rows leave indexes fresh: the fold ignores them. */
   private def appendLifecycle(db: String, coll: String, action: Int,
-      payload: String): Long = {
-    val st = currentState(db, coll)
-    sweepOrphanBatchDirs(db, coll, st.lastBlock)
-    val block = st.lastBlock + 1
-    append(db, coll, block, Seq(Row(block, 0, action, -1L, payload, null)))
-    writeState(db, coll, st.copy(lastBlock = block))
-    block
-  }
+      payload: String): Long =
+    commitBlock(db, coll, "recordLifecycleMutation", docWrite = false) { (block, _) =>
+      local(Seq(Row(block, 0, action, -1L, payload, null)))
+    }.lastBlock + 1
 
   /** CreateEventDB lifecycle record (db3_mutation_v2.proto:109): the
     * event-DB CAPABILITY (ABI decode, typed tables, TTL) lives in
@@ -1195,7 +1116,7 @@ class GraftDB(spark: SparkSession, root: String,
     * the collection lock, so no document write lands between the state
     * it folds and its freshness marker, written last. */
   def addIndex(db: String, coll: String, path: String, indexType: String): Unit =
-    withCollLock(db, coll) {
+    withLock(collLock(db, coll)) {
       appendLifecycle(db, coll, ActionAddIndex,
         s"""{"path":"$path","type":"$indexType"}""")
       val idxDir = indexDir(db, coll, path)
@@ -1226,10 +1147,9 @@ class GraftDB(spark: SparkSession, root: String,
     * `addIndex`. Spark's reader skips `_`-prefixed files. */
   private val FreshMarker = "_FRESH"
 
-  private def markIndexesStale(db: String, coll: String): Unit = {
-    val dirs = new java.io.File(s"${collPath(db, coll)}/indexes").listFiles()
-    if (dirs != null) dirs.foreach(d => Files.deleteIfExists(d.toPath.resolve(FreshMarker)))
-  }
+  private def markIndexesStale(db: String, coll: String): Unit =
+    listDir(s"${collPath(db, coll)}/indexes").foreach(d =>
+      Files.deleteIfExists(d.toPath.resolve(FreshMarker)))
 
   /** Read a materialized index (idx_key, _id). */
   def index(db: String, coll: String, path: String): DataFrame =
@@ -1389,25 +1309,13 @@ class GraftDB(spark: SparkSession, root: String,
   def collectionState(db: String, coll: String): Long =
     collection(db, coll).df.count()
 
-  private def listDirs(p: String): Seq[String] = {
-    val d = new java.io.File(p)
-    if (!d.isDirectory || d.listFiles() == null) Seq.empty
-    else d.listFiles().filter(_.isDirectory).map(_.getName).toSeq.sorted
-  }
+  private def listDirs(p: String): Seq[String] =
+    listDir(p).filter(_.isDirectory).map(_.getName).sorted
 }
 
 object GraftDB {
-  /** JVM-wide monitor per nonce cell path: OS file locks are held on
-    * behalf of the whole JVM, so same-JVM GraftDB instances must
-    * serialize BEFORE taking the cross-process FileChannel lock (a
-    * second same-JVM lock() would throw OverlappingFileLockException,
-    * not block). */
-  private[api] val nonceMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** JVM-wide monitor per collection state cell (see nonceMonitors). */
-  private[api] val collMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  /** JVM-wide monitor per lock file (see `withLock`). */
+  private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   // the FULL MutationAction enum (db3_mutation_v2.proto:103-114)
   val ActionCreateDocumentDB = 0
@@ -1477,9 +1385,8 @@ object GraftDB {
     * private scalar `key`. Returns (typedDataJson, signatureHex) — the
     * exact arguments `sendMutation` verifies. */
   def signedMutationRequest(docs: Seq[String], nonce: Long, key: Long): (String, String) = {
-    import graft.functions.crypto.{Eip712, Keccak256}
     val payloadHex = Keccak256.hexLower(
-      docs.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      docs.mkString("\n").getBytes(StandardCharsets.UTF_8))
     val typedData =
       s"""{"types":{"EIP712Domain":[],"Message":[{"name":"payload","type":"bytes"},{"name":"nonce","type":"string"}]},"domain":{},"primaryType":"Message","message":{"payload":"0x$payloadHex","nonce":"$nonce"}}"""
     val sig = Eip712.signOrNull(typedData, key)
@@ -1532,7 +1439,6 @@ object GraftDB {
       case None => patch
       case Some(m) =>
         import org.json4s._
-        import org.json4s.jackson.JsonMethods
         val baseObj = JsonMethods.parse(base).asInstanceOf[JObject]
         val patchObj = JsonMethods.parse(patch) match {
           case o: JObject => o
@@ -1549,19 +1455,38 @@ object GraftDB {
     }
   }
 
-  private def hasParquet(dir: String): Boolean = {
-    val d = new java.io.File(dir)
-    if (!d.isDirectory || d.listFiles() == null) false
-    else d.listFiles().exists(f =>
-      f.getName.endsWith(".parquet") || (f.isDirectory && hasParquet(f.getPath)))
-  }
+  /** A dir's entries, listed once; empty when the dir is absent or
+    * vanishes (a rollup's GC prunes emptied block dirs while unlocked
+    * readers size the tail). */
+  private def listDir(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).fold(Seq.empty[java.io.File])(_.toSeq)
 
-  // recursive: mutation tails nest per-block subdirs (appendDocumentsAt)
-  private def dirSize(dir: String): Long = {
-    val d = new java.io.File(dir)
-    if (!d.isDirectory) 0L
-    else d.listFiles().map(f =>
-      if (f.isFile) f.length() else dirSize(f.getPath)).sum
+  private def hasParquet(dir: String): Boolean =
+    listDir(dir).exists(f => f.getName.endsWith(".parquet") || hasParquet(f.getPath))
+
+  // recursive: mutation tails nest per-block subdirs
+  private def dirSize(dir: String): Long =
+    listDir(dir).map(f => if (f.isFile) f.length() else dirSize(f.getPath)).sum
+
+  /** One rollup-store batch dir and the block range it holds. */
+  private case class Batch(start: Long, end: Long, count: Long, path: String)
+
+  /** Every rollup and compact record, and the paths compact records
+    * retired. A compact record RETIRES the batch dirs it replaced — the
+    * record append is the commit point, so a retired dir is never read
+    * even while it still exists (the crash window between the append and
+    * the delete must not read rows twice), and the compacted dir serves
+    * in its place. */
+  private case class Batches(all: Seq[Batch], retired: Set[String]) {
+    /** Readable batch dirs in block order. */
+    lazy val live: Seq[Batch] =
+      all.filter(b => !retired(b.path) && hasParquet(b.path)).sortBy(_.start)
+
+    /** Highest block the rollup store owns. Retired records keep
+      * counting: their blocks are owned by the compact dir that replaced
+      * them. */
+    def committedHi: Long =
+      (live ++ all.filter(b => retired(b.path))).map(_.end).maxOption.getOrElse(-1L)
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {

@@ -251,6 +251,41 @@ class GraftDBConcurrencySpec extends SparkSpec {
     assert(db.collection("d", "c").df.count() === total.toLong)
   }
 
+  test("tail sizing and log reads race a rollup's GC without an exception") {
+    val root = freshRoot()
+    val writer = new GraftDB(spark, root)
+    val reader = new GraftDB(spark, root)
+    writer.createCollection("d", "c")
+    @volatile var done = false
+    val polls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val readerFail = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val poller = new Thread(() => {
+      try {
+        while (!done) {
+          reader.tailBytes("d", "c")
+          reader.mutationLog("d", "c")
+          polls.incrementAndGet()
+        }
+      } catch { case t: Throwable => readerFail.set(t) }
+    })
+    poller.start()
+    try {
+      // every rollup's GC deletes the tail files and prunes the emptied
+      // block dirs while the reader lists them, unlocked
+      for (i <- 0 until 30) {
+        writer.addDocuments("d", "c", Seq(s"""{"i":$i}"""))
+        writer.rollup("d", "c")
+      }
+    } finally {
+      done = true
+      poller.join(60000)
+    }
+    if (readerFail.get() != null) throw readerFail.get()
+    assert(polls.get() > 0)
+    assert(reader.tailBytes("d", "c") === 0L)
+    assert(reader.mutationLog("d", "c").count() === 30L)
+  }
+
   test("mid-race readers: counts only grow, ids never duplicate") {
     val root = freshRoot()
     val dbA = new GraftDB(spark, root)

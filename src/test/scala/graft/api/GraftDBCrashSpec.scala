@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -37,22 +38,62 @@ class GraftDBCrashSpec extends SparkSpec {
     db.collection("d", "c").df.orderBy("_id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
 
-  test("addDocuments: crash between data append and state commit — orphan invisible, retry exactly-once") {
-    val db = freshDb(); db.createCollection("d", "c")
-    db.addDocuments("d", "c", Seq("""{"v":1}"""))
-    arm(db, "addDocuments:afterAppend")
-    intercept[Boom] {
-      db.addDocuments("d", "c", Seq("""{"v":2}""", """{"v":3}"""))
+  private def logRows(db: GraftDB): Seq[Row] =
+    db.mutationLog("d", "c").orderBy("block", "order").collect().toSeq
+
+  /** Every locked writer commits through one body, so each has the same
+    * crash window under its own `<op>:afterAppend` label. Each case runs
+    * the op on a collection that already holds one commit, and names
+    * the op's result there (ids, nothing, the stamped block, a count). */
+  private def lockedWriters: Seq[(String, GraftDB => Any, Any)] = {
+    val json = Files.createTempDirectory("graftcrash-json")
+    Files.writeString(json.resolve("a.ndjson"), "{\"j\":1}\n{\"j\":2}\n")
+    Seq(
+      ("addDocuments",
+        (db: GraftDB) => db.addDocuments("d", "c", Seq("""{"v":2}""", """{"v":3}""")),
+        Seq(1L, 2L)),
+      ("deleteDocuments", (db: GraftDB) => db.deleteDocuments("d", "c", Seq(0L)), ()),
+      ("recordLifecycleMutation",
+        (db: GraftDB) => db.createEventDb("d", "c", """{"ttl":60}"""), 1L),
+      ("addDocumentsFromJson",
+        (db: GraftDB) => db.addDocumentsFromJson("d", "c", json.toString), 2L))
+  }
+
+  for ((op, run, result) <- lockedWriters)
+    test(s"$op: crash between data append and state commit — orphan invisible, retry exactly-once") {
+      def seeded(): GraftDB = {
+        val db = freshDb(); db.createCollection("d", "c")
+        db.addDocuments("d", "c", Seq("""{"v":1}"""))
+        db
+      }
+      val db = seeded()
+      val (docs0, log0) = (liveDocs(db), logRows(db))
+      arm(db, s"$op:afterAppend")
+      intercept[Boom](run(db))
+      disarm(db)
+      // pre-crash state: the in-flight block is invisible (commit = cell)
+      assert(liveDocs(db) === docs0)
+      assert(logRows(db) === log0)
+      assert(db.nextBlockId("d", "c") === 1L)
+      // at-least-once retry: the result, the fold and the log equal one
+      // clean run of the op — the orphan's stamps are reused exactly once
+      val clean = seeded()
+      assert(run(db) === result)
+      assert(run(clean) === result)
+      assert(liveDocs(db) === liveDocs(clean))
+      assert(logRows(db) === logRows(clean))
     }
+
+  test("first commit: a crash before a collection's first commit leaves it empty") {
+    val db = freshDb(); db.createCollection("d", "c")
+    arm(db, "addDocuments:afterAppend")
+    intercept[Boom](db.addDocuments("d", "c", Seq("""{"v":1}""")))
     disarm(db)
-    // pre-crash state: the in-flight block is invisible (commit = cell)
-    assert(liveDocs(db) === Seq((0L, """{"v":1}""")))
-    // at-least-once retry: same ids come back, and the duplicate
-    // (block, order) stamps in the log replay exactly once
-    val ids = db.addDocuments("d", "c", Seq("""{"v":2}""", """{"v":3}"""))
-    assert(ids === Seq(1L, 2L))
-    assert(liveDocs(db) ===
-      Seq((0L, """{"v":1}"""), (1L, """{"v":2}"""), (2L, """{"v":3}""")))
+    assert(liveDocs(db).isEmpty)
+    assert(db.mutationLog("d", "c").isEmpty)
+    assert(db.nextBlockId("d", "c") === 0L)
+    assert(db.addDocuments("d", "c", Seq("""{"v":2}""")) === Seq(0L))
+    assert(liveDocs(db) === Seq((0L, """{"v":2}""")))
   }
 
   test("updateDocuments: crash before state commit leaves the doc at its previous value") {
@@ -106,12 +147,18 @@ class GraftDBCrashSpec extends SparkSpec {
     db.addDocuments("d", "c", Seq("""{"v":1}"""))
     db.addDocuments("d", "c", Seq("""{"v":2}"""))
     val before = liveDocs(db)
+    val committedLog = db.mutationLog("d", "c").count()
+    val committedState = db.mutationState("d", "c")
     arm(db, "rollup:afterData")
     intercept[Boom] { db.rollup("d", "c") }
     disarm(db)
     assert(db.scanRollupRecords("d", "c").isEmpty) // nothing committed
     assert(db.tailBytes("d", "c") > 0)             // tail untouched
     assert(liveDocs(db) === before)
+    // the unlisted batch dir stays out of the log RPCs too
+    assert(db.mutationLog("d", "c").count() === committedLog)
+    assert(db.mutationState("d", "c") === committedState)
+    assert(db.getBlock("d", "c", 0L).count() === 1L)
     val recs = db.rollup("d", "c")                 // retry
     assert(recs.nonEmpty)
     assert(db.scanRollupRecords("d", "c").count() === recs.length.toLong)

@@ -611,6 +611,20 @@ class GraftDBSpec extends SparkSpec {
     assert(stateDir.toFile.isDirectory) // and the cell was re-persisted
   }
 
+  test("reads never write the state cell: a never-written collection keeps state/ empty") {
+    val root = Files.createTempDirectory("graftdb")
+    val db = new GraftDB(spark, root.toString)
+    db.createCollection("d1", "c")
+    assert(db.collection("d1", "c").df.count() === 0L)
+    assert(db.getDoc("d1", "c", 0L).isEmpty)
+    assert(db.nextBlockId("d1", "c") === 0L)
+    assert(db.syncStatus() === Seq(GraftDB.SyncStatusView("d1", "c", -1L, 0L)))
+    // a reader that persisted its scan could roll back a concurrent
+    // commit; only lock holders write the cell
+    val written = Option(root.resolve("d1/c/state").toFile.list()).toSeq.flatten
+    assert(written.isEmpty, s"reads wrote ${written.mkString(", ")}")
+  }
+
   test("distributed json ingestion assigns dense deterministic ids without collect") {
     val db = freshDb()
     db.createCollection("d1", "c")
