@@ -2,9 +2,12 @@ package graft.api
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.{JsonMethods, Serialization}
@@ -14,6 +17,7 @@ import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
+import scala.jdk.CollectionConverters._
 
 /** Parquet-backed document database with the reference's mutation
   * semantics (reference: src/storage/src/db_store_v2.rs apply_mutation;
@@ -28,7 +32,8 @@ import java.util.UUID
   *   <db>/<collection>/rollups/        gzip batches: run_<lo>_<hi>/batch=N, compact_*
   *   <db>/<collection>/state/          block/id cell state.json + state.lock
   *   <db>/<collection>/manifest/       append-only parquet records: rollup/, gc/,
-  *                                     compact/, snapshot/
+  *                                     compact/, snapshot/; read on the driver
+  *                                     (no Spark job), one part file per append
   *   <db>/<collection>/snapshots/      folded state per block_<block>
   *   <db>/<collection>/indexes/        sorted key tables, _FRESH while current
   * }}}
@@ -308,14 +313,14 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** The rollup store as its manifests publish it (base records minus
     * the ones compaction retired, plus the live compacted dirs). Two
-    * small manifest reads. */
+    * small driver-side manifest reads. */
   private def batches(db: String, coll: String): Batches = {
-    val cols = Seq("start_block", "end_block", "mutation_count", "path", "replaced")
-    val compact = scanCompactRecords(db, coll).select(cols.map(col): _*).collect()
-    val base = scanRollupRecords(db, coll).select(cols.init.map(col): _*).collect()
-    Batches((base ++ compact).toSeq.map(r =>
-        Batch(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))),
-      compact.flatMap(_.getSeq[String](4)).toSet)
+    val compact = readManifest(db, coll, "compact", compactManifestSchema)
+    val base = readManifest(db, coll, "rollup", rollupManifestSchema)
+    Batches((base ++ compact).map(r =>
+        Batch(r.getAs[Long]("start_block"), r.getAs[Long]("end_block"),
+          r.getAs[Long]("mutation_count"), r.getAs[String]("path"))),
+      compact.flatMap(_.getAs[Seq[String]]("replaced")).toSet)
   }
 
   /** The one locked block commit, for a holder of the collection lock
@@ -470,15 +475,19 @@ class GraftDB(spark: SparkSession, root: String,
   // materialized state, versioned and manifest-tracked.
 
   /** Materialize the folded state as of `block` (defaults to the last
-    * stamped block) under snapshots/ and record it in the manifest.
-    * Returns (block, docCount). */
+    * stamped block; a later block is clamped to it) under snapshots/ and
+    * record it in the manifest. Returns (block, docCount). */
   def snapshot(db: String, coll: String, block: Long = Long.MinValue): (Long, Long) =
     withLock(collLock(db, coll)) {
-      val at = if (block == Long.MinValue) currentState(db, coll).lastBlock else block
+      // the fold stops at the committed block, so the snapshot holds the
+      // state of min(block, lastBlock): recording a later block would let
+      // reads seeded from it skip the blocks committed in between
+      val last = currentState(db, coll).lastBlock
+      val at = if (block == Long.MinValue) last else math.min(block, last)
       val dir = snapPath(db, coll, at)
       foldLog(db, coll, at).write.mode(SaveMode.Overwrite).parquet(dir)
       failpoint("snapshot:afterData")
-      val n = spark.read.parquet(dir).count()
+      val n = spark.read.schema(snapshotSchema).parquet(dir).count()
       appendManifest(db, coll, "snapshot", Seq(Row(at, n, dir)),
         snapshotManifestSchema)
       (at, n)
@@ -486,15 +495,14 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** Persisted snapshot history (block, n_docs, path). */
   def scanSnapshots(db: String, coll: String): DataFrame =
-    readManifest(db, coll, "snapshot", snapshotManifestSchema)
+    manifestFrame(db, coll, "snapshot", snapshotManifestSchema)
 
   /** Newest usable snapshot at or below `block`, if any. */
   private def latestSnapshotAt(db: String, coll: String, block: Long): Option[(Long, String)] =
-    scanSnapshots(db, coll)
-      .filter(col("block") <= block)
-      .orderBy(col("block").desc).limit(1)
-      .collect().headOption
-      .map(r => (r.getLong(0), r.getString(2)))
+    readManifest(db, coll, "snapshot", snapshotManifestSchema)
+      .map(r => (r.getAs[Long]("block"), r.getAs[String]("path")))
+      .filter(_._1 <= block)
+      .maxByOption(_._1)
       .filter { case (_, p) => hasParquet(p) }
 
   /** Time-travel read: live state as of `block` (inclusive) — the
@@ -538,7 +546,7 @@ class GraftDB(spark: SparkSession, root: String,
     val committed = math.min(block, currentState(db, coll).lastBlock)
     val source = latestSnapshotAt(db, coll, committed) match {
       case Some((snapBlock, path)) =>
-        val seed = spark.read.parquet(path)
+        val seed = spark.read.schema(snapshotSchema).parquet(path)
           .select(col("_id").as("id"), col("doc"))
           .withColumn("block", lit(snapBlock))
           .withColumn("order", lit(Int.MinValue))
@@ -606,11 +614,15 @@ class GraftDB(spark: SparkSession, root: String,
     * (mutation_store.rs:291 add_rollup_record); the GC'd tail writes a
     * GcRecord (mutation_store.rs:248 add_gc_record).
     *
-    * Scale shape: batch assignment windows over the PER-BLOCK size frame
-    * (#blocks rows, not #mutations), the assignment broadcast-joins back,
-    * and the write is one distributed partitionBy(batch) pass sorted by
-    * (block, order) — compaction parallelism = #batches, no
-    * repartition(1) single-core gzip. */
+    * Scale shape: one stats pass, (tail file, block) → (rows, bytes),
+    * is collected to the driver — #files rows, the same bound as the
+    * drain's file list. The driver derives everything else from it: the
+    * drained files, the GcRecord, the batch assignment (a fold over the
+    * #blocks per-block sizes, `assignBatches`) and every RollupRecord.
+    * The assignment broadcast-joins back as a local relation, and the
+    * only other job over the tail is the write: one distributed
+    * partitionBy(batch) pass sorted by (block, order) — compaction
+    * parallelism = #batches, no repartition(1) single-core gzip. */
   def rollup(db: String, coll: String,
       maxBatchBytes: Long = 64L * 1024 * 1024): Seq[RollupRecord] =
     // the collection lock serializes racing rollups (two drains would
@@ -636,83 +648,59 @@ class GraftDB(spark: SparkSession, root: String,
     // blocks closes the window: the mid-commit block stays untouched
     // until its writer's state bump (under this same lock) commits it.
     val lastCommitted = currentState(db, coll).lastBlock
-    val fileStats = rawTail
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("block")).as("lo"), max(col("block")).as("hi"),
-        count(lit(1)).as("n"))
-      .filter(col("hi") <= lastCommitted)
-      .collect() // rows = tail files being drained, bounded by the drain
-    if (fileStats.isEmpty) return Seq.empty
-    val tailFiles = fileStats.map(_.getString(0))
-    val (rawLo, rawHi, rawN) = (fileStats.map(_.getLong(1)).min,
-      fileStats.map(_.getLong(2)).max, fileStats.map(_.getLong(3)).sum)
-    val committedTail = rawTail.filter(col("block") <= lastCommitted)
+    val rowBytes = coalesce(length(col("doc")).cast("long"), lit(0L)) +
+      coalesce(length(col("mask")).cast("long"), lit(0L)) + lit(24L)
+    // the one stats pass; rows = tail files (one block per file)
+    val stats = rawTail
+      .groupBy(input_file_name().as("f"), col("block"))
+      .agg(count(lit(1)), sum(rowBytes))
+      .collect()
+      .map(r => r.getString(0) -> BlockStat(r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    // drain only files whose every block is committed
+    val drained = stats.groupBy(_._1).values
+      .filter(_.forall(_._2.block <= lastCommitted)).flatten.toSeq
+    if (drained.isEmpty) return Seq.empty
+    val tailFiles = drained.map(_._1).distinct
+    val (rawLo, rawHi, rawN) = (drained.map(_._2.block).min,
+      drained.map(_._2.block).max, drained.map(_._2.rows).sum)
     // idempotent re-entry: blocks already manifest-committed by a prior
     // (possibly crashed) run never roll twice — the manifest is the
     // commit point, the tail copy is redundant data awaiting GC
-    val committedHi = {
-      val r = scanRollupRecords(db, coll).agg(max(col("end_block"))).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0)
-    }
-    val tail = committedTail.filter(col("block") > committedHi)
-    if (tail.isEmpty) {
+    val committedHi = readManifest(db, coll, "rollup", rollupManifestSchema)
+      .map(_.getAs[Long]("end_block")).maxOption.getOrElse(-1L)
+    val blocks = stats.map(_._2)
+      .filter(s => s.block > committedHi && s.block <= lastCommitted)
+      .groupBy(_.block).toSeq.sortBy(_._1)
+      .map { case (b, ss) => BlockStat(b, ss.map(_.rows).sum, ss.map(_.bytes).sum) }
+    if (blocks.isEmpty) {
       // every tail row is already rolled (crash landed between the
       // manifest append and the tail GC, or a replayed micro-batch
       // re-appended rolled blocks): finish the GC and stop
       finishGc(db, coll, tailFiles, rawLo, rawHi, rawN)
       return Seq.empty
     }
-    val rowBytes = coalesce(length(col("doc")).cast("long"), lit(0L)) +
-      coalesce(length(col("mask")).cast("long"), lit(0L)) + lit(24L)
-    // The running-size fold is keyed by a 4096-block epoch (the
-    // rollup_batches query's "batches never span days" pattern,
-    // EventQueries.rollupAssigned): batches never span epochs, so the
-    // fold parallelizes across epochs and an unbounded outage tail can
-    // never serialize into one window task. Batch id = epoch * 4096 +
-    // dense_rank of the within-epoch size cut: the dense rank is
-    // provably <= #blocks in the epoch (<= 4096), so epoch id spaces
-    // never collide — a raw floor(running/maxBatchBytes) cut would
-    // overflow its epoch whenever the epoch's tail bytes exceed
-    // 4096*maxBatchBytes (one oversized block suffices) and merge rows
-    // of different epochs into one partition dir. The rank inherits the
-    // cut's monotonicity in block order, so batch ids stay monotone.
-    val epochBlocks = 4096L
-    val byEpoch = Window.partitionBy(col("epoch")).orderBy(col("block"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val byCut = Window.partitionBy(col("epoch")).orderBy(col("cut"))
-    val assign = tail.groupBy(col("block"))
-      .agg(sum(rowBytes).as("bytes"))
-      .withColumn("epoch", floor(col("block") / epochBlocks))
-      .withColumn("running", sum(col("bytes")).over(byEpoch))
-      .withColumn("cut",
-        ((col("running") - col("bytes")) / maxBatchBytes).cast("long"))
-      .withColumn("batch", col("epoch") * epochBlocks +
-        dense_rank().over(byCut) - 1)
-      .select(col("block"), col("batch"))
-    val (lo, hi) = {
-      val r = tail.agg(min(col("block")), max(col("block"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val runDir = s"${rollPath(db, coll)}/run_${lo}_$hi"
-    tail.join(broadcast(assign), Seq("block"))
+    val assigned = blocks.zip(assignBatches(blocks.map(b => (b.block, b.bytes)), maxBatchBytes))
+    val runDir = s"${rollPath(db, coll)}/run_${blocks.head.block}_${blocks.last.block}"
+    val assign = spark.createDataFrame(
+      assigned.map { case (b, batch) => Row(b.block, batch) }.asJava,
+      StructType(Seq(StructField("block", LongType), StructField("batch", LongType))))
+    rawTail.filter(col("block") > committedHi && col("block") <= lastCommitted)
+      .join(broadcast(assign), Seq("block"))
       .repartition(col("batch"))
       .sortWithinPartitions("batch", "block", "order")
       .write.partitionBy("batch").mode(SaveMode.Overwrite)
       .option("compression", "gzip").parquet(runDir)
     failpoint("rollup:afterData")
-    // per-batch stats: #batches rows of metadata on the driver (the
-    // reference's record list lives in RocksDB the same way)
-    val records = tail.join(broadcast(assign), Seq("block"))
-      .groupBy(col("batch"))
-      .agg(min(col("block")).as("lo"), max(col("block")).as("hi"),
-        count(lit(1)).as("n"), sum(rowBytes).as("raw"))
-      .orderBy(col("batch"))
-      .collect()
-      .map { r =>
-        val path = s"$runDir/batch=${r.getAs[Long]("batch")}"
-        RollupRecord(r.getAs[Long]("lo"), r.getAs[Long]("hi"),
-          r.getAs[Long]("n"), dirSize(path), r.getAs[Long]("raw"), path)
-      }.toSeq
+    // per-batch records from the stats rows: #batches rows of metadata
+    // on the driver (the reference's record list lives in RocksDB the
+    // same way)
+    val records = assigned.groupBy(_._2).toSeq.sortBy(_._1).map { case (batch, members) =>
+      val bs = members.map(_._1)
+      val path = s"$runDir/batch=$batch"
+      RollupRecord(bs.map(_.block).min, bs.map(_.block).max, bs.map(_.rows).sum,
+        dirSize(path), bs.map(_.bytes).sum, path)
+    }
     appendManifest(db, coll, "rollup", records.map(rec =>
       Row(rec.startBlock, rec.endBlock, rec.mutationCount,
         rec.compressedBytes, rec.rawBytes, rec.path)), rollupManifestSchema)
@@ -734,11 +722,10 @@ class GraftDB(spark: SparkSession, root: String,
     * (start, end) is already recorded); block subdirs emptied by the
     * sweep are pruned, non-empty ones (including a concurrent writer's
     * _temporary) are left alone. */
-  private def finishGc(db: String, coll: String, tailFiles: Array[String],
+  private def finishGc(db: String, coll: String, tailFiles: Seq[String],
       lo: Long, hi: Long, n: Long): Unit = {
-    val recorded = scanGcRecords(db, coll)
-      .filter(col("start_block") === lo && col("end_block") === hi)
-      .limit(1).count() > 0
+    val recorded = readManifest(db, coll, "gc", gcManifestSchema).exists(r =>
+      r.getAs[Long]("start_block") == lo && r.getAs[Long]("end_block") == hi)
     if (!recorded)
       appendManifest(db, coll, "gc", Seq(Row(lo, hi, n)), gcManifestSchema)
     failpoint("rollup:afterGc")
@@ -781,20 +768,30 @@ class GraftDB(spark: SparkSession, root: String,
     spark.createDataFrame(local(rows), schema)
       .write.mode(SaveMode.Append).parquet(s"${manifestPath(db, coll)}/$kind")
 
-  /** One manifest's records; empty before its first append. */
+  /** One manifest's records, decoded on the driver — no Spark job. Reads
+    * exactly the part files Spark's reader reads: names starting with `_`
+    * or `.` (`_SUCCESS`, `.crc` siblings, a crashed append's
+    * `_temporary/`) are skipped. Empty before the first append. */
   private def readManifest(db: String, coll: String, kind: String,
-      schema: StructType): DataFrame = {
-    val dir = s"${manifestPath(db, coll)}/$kind"
-    if (hasParquet(dir)) spark.read.schema(schema).parquet(dir)
-    else emptyFrame(schema)
-  }
+      schema: StructType): Seq[Row] =
+    listDir(s"${manifestPath(db, coll)}/$kind")
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.getName)
+      .flatMap(f => readParquetRows(f, schema, spark.sparkContext.hadoopConfiguration))
+
+  /** A manifest as a local DataFrame over `readManifest`'s rows, with
+    * the nullable schema `spark.read.schema(schema)` returns. */
+  private def manifestFrame(db: String, coll: String, kind: String,
+      schema: StructType): DataFrame =
+    spark.createDataFrame(readManifest(db, coll, kind, schema).asJava,
+      StructType(schema.map(_.copy(nullable = true))))
 
   private def emptyFrame(schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Persisted rollup history (mutation_store.rs:430 scan_rollup_records). */
   def scanRollupRecords(db: String, coll: String): DataFrame =
-    readManifest(db, coll, "rollup", rollupManifestSchema)
+    manifestFrame(db, coll, "rollup", rollupManifestSchema)
 
   /** On-disk size of the live (un-rolled-up) mutation tail — the rollup
     * executor's trigger metric (rollup_executor.rs periodic size check). */
@@ -802,12 +799,12 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** Persisted GC history (mutation_store.rs scan_gc_records). */
   def scanGcRecords(db: String, coll: String): DataFrame =
-    readManifest(db, coll, "gc", gcManifestSchema)
+    manifestFrame(db, coll, "gc", gcManifestSchema)
 
   /** Persisted rollup-compaction history: each record publishes one
     * compacted batch dir and retires the dirs it replaced. */
   def scanCompactRecords(db: String, coll: String): DataFrame =
-    readManifest(db, coll, "compact", compactManifestSchema)
+    manifestFrame(db, coll, "compact", compactManifestSchema)
 
   /** OPTIMIZE tick for the rollup store — `Layout.compactSmallFiles`'
     * discipline applied to GraftDB-owned batch dirs, under the
@@ -972,11 +969,8 @@ class GraftDB(spark: SparkSession, root: String,
     * status (the proto's MutationRollupStatus: rolled-up vs live tail). */
   def getMutationHeader(db: String, coll: String, block: Long, order: Int)
       : Option[MutationHeaderView] = {
-    val rolledTo = scanRollupRecords(db, coll)
-      .agg(max(col("end_block"))).head() match {
-        case r if r.isNullAt(0) => Long.MinValue
-        case r => r.getLong(0)
-      }
+    val rolledTo = readManifest(db, coll, "rollup", rollupManifestSchema)
+      .map(_.getAs[Long]("end_block")).maxOption.getOrElse(Long.MinValue)
     mutationLog(db, coll)
       .filter(col("block") === block && col("order") === order)
       .select("block", "order", "action", "id").head(1).headOption
@@ -1016,24 +1010,19 @@ class GraftDB(spark: SparkSession, root: String,
       coalesce(sum(coalesce(length(col("doc")).cast("long"), lit(0L)) +
         coalesce(length(col("mask")).cast("long"), lit(0L))), lit(0L)).as("bytes"),
       coalesce(max(col("block")), lit(-1L)).as("last_block")).head()
-    val roll = scanRollupRecords(db, coll).agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(col("compressed_bytes")), lit(0L)),
-      coalesce(sum(col("raw_bytes")), lit(0L)),
-      coalesce(sum(col("mutation_count")), lit(0L))).head()
-    val gc = scanGcRecords(db, coll).agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(col("mutation_count")), lit(0L))).head()
+    val roll = readManifest(db, coll, "rollup", rollupManifestSchema)
+    val gc = readManifest(db, coll, "gc", gcManifestSchema)
+    def total(rows: Seq[Row], field: String) = rows.map(_.getAs[Long](field)).sum
     MutationStateView(
       mutationCount = logAgg.getLong(0),
       totalMutationBytes = logAgg.getLong(1),
       lastBlock = logAgg.getLong(2),
-      rollupCount = roll.getLong(0),
-      totalRollupBytes = roll.getLong(1),
-      totalRollupRawBytes = roll.getLong(2),
-      totalRollupMutationCount = roll.getLong(3),
-      gcCount = gc.getLong(0),
-      totalGcMutationCount = gc.getLong(1))
+      rollupCount = roll.length,
+      totalRollupBytes = total(roll, "compressed_bytes"),
+      totalRollupRawBytes = total(roll, "raw_bytes"),
+      totalRollupMutationCount = total(roll, "mutation_count"),
+      gcCount = gc.length,
+      totalGcMutationCount = total(gc, "mutation_count"))
   }
 
   /** Bulk-ingest documents from newline-delimited JSON files (the
@@ -1423,6 +1412,11 @@ object GraftDB {
     StructField("path", StringType, nullable = false),
     StructField("replaced", ArrayType(StringType), nullable = false)))
 
+  /** A snapshot dir's data: the folded (_id, doc) state. Reading with
+    * it skips the schema-inference job of an untyped parquet read. */
+  private val snapshotSchema: StructType = StructType(Seq(
+    StructField("_id", LongType), StructField("doc", StringType)))
+
   val mutationSchema: StructType = StructType(Seq(
     StructField("block", LongType, nullable = false),
     StructField("order", IntegerType, nullable = false),
@@ -1467,6 +1461,74 @@ object GraftDB {
   // recursive: mutation tails nest per-block subdirs
   private def dirSize(dir: String): Long =
     listDir(dir).map(f => if (f.isFile) f.length() else dirSize(f.getPath)).sum
+
+  /** A parquet file's records as rows of `schema`, decoded on the driver
+    * with parquet-hadoop's example Group reader. A schema column the file
+    * lacks reads as null. Covers the column types the manifest schemas
+    * use: bigint, string and array<string>. */
+  private def readParquetRows(file: java.io.File, schema: StructType,
+      conf: org.apache.hadoop.conf.Configuration): Seq[Row] = {
+    val reader = ParquetReader.builder(new GroupReadSupport(),
+      new org.apache.hadoop.fs.Path(file.toURI)).withConf(conf).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+      new GenericRowWithSchema(
+        schema.fields.map(f => groupValue(g, f.name, f.dataType)), schema): Row
+    }.toVector
+    finally reader.close()
+  }
+
+  private def groupValue(g: Group, name: String, t: DataType): Any =
+    if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) null
+    else t match {
+      case LongType => g.getLong(name, 0)
+      case StringType => g.getString(name, 0)
+      case ArrayType(StringType, _) =>
+        // a LIST group: one repeated field, each repetition either the
+        // element itself (2-level) or a group holding it (3-level)
+        val list = g.getGroup(name, 0)
+        (0 until list.getFieldRepetitionCount(0)).map { i =>
+          if (list.getType.getType(0).isPrimitive) list.getString(0, i)
+          else {
+            val e = list.getGroup(0, i)
+            if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)
+          }
+        }
+      case other =>
+        throw new IllegalArgumentException(s"no driver decoder for $name: $other")
+    }
+
+  /** One block's share of the mutation tail: rows and payload bytes. */
+  private case class BlockStat(block: Long, rows: Long, bytes: Long)
+
+  /** Blocks per rollup epoch: batches never span epochs. */
+  private val EpochBlocks = 4096L
+
+  /** The rollup's batch id for each block of `blockBytes` ((block,
+    * payload bytes), blocks ascending). The running-size cut is keyed by
+    * a 4096-block epoch (the rollup_batches query's "batches never span
+    * days" pattern, EventQueries.rollupAssigned): a block's cut is the
+    * epoch's bytes BEFORE it divided by `maxBatchBytes`, so a batch closes
+    * once its size reaches the bound and an oversized block still opens
+    * a batch of its own. Batch id = epoch * 4096 + dense rank of the cut
+    * within the epoch: the rank is at most the epoch's block count
+    * (<= 4096), so epoch id spaces never collide — a raw cut would
+    * overflow its epoch whenever the epoch's bytes exceed
+    * 4096 * maxBatchBytes (one oversized block suffices) and merge rows
+    * of different epochs into one partition dir. Cuts rise with the
+    * block, so batch ids do too. A fold over #blocks rows. */
+  private[api] def assignBatches(blockBytes: Seq[(Long, Long)],
+      maxBatchBytes: Long): Seq[Long] = {
+    var epoch = Long.MinValue
+    var running, cut, rank = 0L
+    blockBytes.map { case (block, bytes) =>
+      val e = Math.floorDiv(block, EpochBlocks)
+      if (e != epoch) { epoch = e; running = 0L; cut = -1L; rank = -1L }
+      val c = running / maxBatchBytes
+      running += bytes
+      if (c != cut) { cut = c; rank += 1 }
+      e * EpochBlocks + rank
+    }
+  }
 
   /** One rollup-store batch dir and the block range it holds. */
   private case class Batch(start: Long, end: Long, count: Long, path: String)

@@ -95,15 +95,11 @@ class PlanAuditSpec extends SparkSpec {
           "count <= DriverCcFloor (2^20 distinct edges, ~16 MB) and a " +
           ".limit(2*floor+2) on the collect itself; above the floor the " +
           "distributed star-contraction loop runs instead"),
-      "api/GraftDB.scala" -> (8,
-        "rollup-manifest listing (rows = rollup batches, the Delta-log " +
-          "analog), newest-snapshot probe (.headOption), per-batch rollup " +
-          "stats (rows = batches), rollup drain file stats (rows = tail " +
-          "files being compacted), index-probe capped at MaxPushedIds+1, " +
-          "plus the r12 OPTIMIZE tick's manifest views: compact-record + " +
-          "rollup-record listings in compactRollups and the compact-record " +
-          "listing in mutationLog (rows = manifest records — bounded by " +
-          "batch count, the same Delta-log-scale metadata as the rest)")
+      "api/GraftDB.scala" -> (2,
+        "the rollup's one stats pass, (tail file, block) → (rows, bytes) " +
+          "(rows = tail files being drained), and the index probe capped " +
+          "at MaxPushedIds+1; manifests are decoded on the driver without " +
+          "a DataFrame collect")
     )
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")

@@ -1,0 +1,110 @@
+package graft.api
+
+import graft.SparkSpec
+import graft.docstore.{FieldFilter, FieldValue, Op, StructuredQuery}
+import org.apache.spark.graftshim.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+/** Spark jobs per GraftDB operation. Job counts are plan-deterministic,
+  * so they pin the fixed per-operation cost that wall time on a shared
+  * box cannot: building a read launches no job (manifests are read on
+  * the driver, snapshots with their known schema), and a rollup tick
+  * runs a bounded number. */
+class GraftDBJobsSpec extends SparkSpec {
+
+  private val Group = "graftdb-jobs-spec"
+
+  /** `body`'s result and the Spark jobs it launched. Only jobs in this
+    * spec's job group count (SQL carries the group to its broadcast and
+    * listing threads), and the listener bus is drained on both sides. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).map(_.getProperty("spark.jobGroup.id")).contains(Group))
+          jobs.incrementAndGet()
+    }
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(Group, "counted")
+    try {
+      val r = body
+      ListenerBridge.drain(sc)
+      (r, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def setupReq(cfgJson: String, nonce: Long): (String, String) = {
+    val hex = graft.functions.crypto.Keccak256.hexLower(cfgJson.getBytes("UTF-8"))
+    val td = s"""{"types":{"EIP712Domain":[],"Message":[{"name":"payload","type":"bytes"},{"name":"nonce","type":"string"}]},"domain":{},"primaryType":"Message","message":{"payload":"0x$hex","nonce":"$nonce"}}"""
+    (td, graft.functions.crypto.Eip712.signOrNull(td, 1L).toString)
+  }
+
+  private def addBlock(db: GraftDB, tag: Int): Seq[Long] =
+    db.addDocuments("d", "c", (1 to 5).map(i => s"""{"t":$tag,"i":$i,"pad":"${"x" * 40}"}"""))
+
+  /** A collection with rollup, gc, compact and snapshot records and a
+    * live tail of updates, deletes and adds. */
+  private def populated(): GraftDB = {
+    val db = new GraftDB(spark, Files.createTempDirectory("graftjobs").toString)
+    db.createCollection("d", "c")
+    (1 to 4).foreach(addBlock(db, _))
+    db.rollup("d", "c", maxBatchBytes = 400)
+    assert(db.compactRollups("d", "c", targetBytes = 1L << 20) >= 1)
+    db.snapshot("d", "c")
+    val ids = addBlock(db, 5)
+    db.updateDocuments("d", "c", Seq(ids.head), Seq("""{"i":99}"""), Seq(Seq("i")))
+    db.deleteDocuments("d", "c", Seq(ids(1)))
+    db
+  }
+
+  test("building collection, point-lookup and query DataFrames launches no job") {
+    val db = populated()
+    val q = StructuredQuery(where = Some(FieldFilter("t", Op.Eq, FieldValue.I64(5))))
+    val (coll, nColl) = jobsOf(db.collection("d", "c").df)
+    val (point, nPoint) = jobsOf(db.collectionForIds("d", "c", Seq(2L)).df)
+    val (query, nQuery) = jobsOf(db.query("d", "c", q))
+    assert((nColl, nPoint, nQuery) === ((0, 0, 0)))
+    // the DataFrames built without a job are the right ones
+    assert(coll.count() === 25 - 1)
+    assert(point.count() === 1)
+    assert(query.count() === 4)
+  }
+
+  test("each scan of a manifest launches no job") {
+    val db = populated()
+    val scans = Seq(db.scanRollupRecords _, db.scanGcRecords _,
+      db.scanCompactRecords _, db.scanSnapshots _)
+    scans.foreach { scan =>
+      val (df, n) = jobsOf(scan("d", "c").collect())
+      assert(n === 0)
+      assert(df.nonEmpty)
+    }
+  }
+
+  test("a rollup tick that rolls a 6-block tail and compacts stays in its job budget") {
+    val db = populated()
+    (6 to 8).foreach(addBlock(db, _)) // tail: blocks of adds, update, delete, adds
+    assert(db.nextBlockId("d", "c") - 1 - db.scanRollupRecords("d", "c").collect()
+      .map(_.getAs[Long]("end_block")).max === 6)
+    // due at the current tail size; the same floor is the compaction
+    // target, which bins the compacted dir with the tick's new batch
+    val (td, sig) = setupReq(s"""{"minRollupSizeBytes":${db.tailBytes("d", "c")}}""", 1L)
+    db.setup(td, sig)
+    val compactsBefore = db.scanCompactRecords("d", "c").count()
+    val before = db.collection("d", "c").df.collect().toSet
+    val (recs, n) = jobsOf(db.rollupIfDue("d", "c"))
+    info(s"rollup tick: $n Spark jobs")
+    assert(recs.nonEmpty)
+    assert(db.scanCompactRecords("d", "c").count() > compactsBefore, "the tick must compact")
+    assert(db.collection("d", "c").df.collect().toSet === before)
+    // 28 jobs before the stats-pass rollup and driver-side manifests
+    assert(n <= 10, s"rollup tick ran $n Spark jobs")
+  }
+}

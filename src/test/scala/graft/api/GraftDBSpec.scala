@@ -721,6 +721,18 @@ class GraftDBSpec extends SparkSpec {
       .inputFiles.exists(_.contains("snapshots/block_4")))
   }
 
+  test("a snapshot asked for past the committed block records the committed block") {
+    val db = freshDb()
+    db.createCollection("d1", "c")
+    db.addDocuments("d1", "c", Seq("""{"v":0}"""))                  // block 0
+    // the fold stops at block 0, so that is the state the snapshot holds
+    assert(db.snapshot("d1", "c", 5L) === ((0L, 1L)))
+    (1 to 6).foreach(i => db.addDocuments("d1", "c", Seq(s"""{"v":$i}"""))) // blocks 1-6
+    // reads seed from the snapshot and replay every later block
+    assert(db.collection("d1", "c").df.count() === 7)
+    assert(db.getDoc("d1", "c", 3L) === Some("""{"v":3}"""))
+  }
+
   test("snapshot survives rollup GC of the replayed tail") {
     val db = freshDb()
     db.createCollection("d1", "c")
