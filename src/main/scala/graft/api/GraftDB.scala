@@ -594,7 +594,7 @@ class GraftDB(spark: SparkSession, root: String,
   }
 
   def query(db: String, coll: String, q: StructuredQuery): DataFrame =
-    DocStore.query(collection(db, coll), q)
+    DocStore.queryFused(collection(db, coll), q)
 
   /** The reference SDK's queryDoc surface: an EJDB-style query string with
     * optional bound parameters (`/[age = :age]`). */
@@ -1122,6 +1122,7 @@ class GraftDB(spark: SparkSession, root: String,
         .filter(col("idx_key").isNotNull)
         .sort("idx_key")
         .write.mode(SaveMode.Overwrite).parquet(idxDir)
+      Files.write(Paths.get(idxDir, KeyTypeFile), indexType.getBytes("UTF-8"))
       Files.createFile(Paths.get(idxDir, FreshMarker))
     }
 
@@ -1140,14 +1141,31 @@ class GraftDB(spark: SparkSession, root: String,
     listDir(s"${collPath(db, coll)}/indexes").foreach(d =>
       Files.deleteIfExists(d.toPath.resolve(FreshMarker)))
 
+  /** The index type `addIndex` was given, recorded in the index dir so a
+    * read knows the key's type without inferring the parquet schema (a
+    * Spark job). Document writes leave it in place. */
+  private val KeyTypeFile = "_KEY_TYPE"
+
+  private def keyType(db: String, coll: String, path: String): DataType =
+    new String(Files.readAllBytes(Paths.get(indexDir(db, coll, path), KeyTypeFile)),
+        "UTF-8") match {
+      case "Int64Key" => LongType
+      case "DoubleKey" => DoubleType
+      case _ => StringType
+    }
+
   /** Read a materialized index (idx_key, _id). */
   def index(db: String, coll: String, path: String): DataFrame =
-    spark.read.parquet(indexDir(db, coll, path))
+    spark.read.schema(StructType(Seq(
+        StructField("idx_key", keyType(db, coll, path)),
+        StructField("_id", LongType))))
+      .parquet(indexDir(db, coll, path))
 
   /** Whether a fresh index on `path` exists: built by `addIndex` with no
     * document write since. */
   def hasIndex(db: String, coll: String, path: String): Boolean =
-    Files.exists(Paths.get(indexDir(db, coll, path), FreshMarker))
+    Seq(FreshMarker, KeyTypeFile).forall(f =>
+      Files.exists(Paths.get(indexDir(db, coll, path), f)))
 
   /** Index-aware execution: when the query's leading field filter has a
     * materialized index, evaluate the predicate against the index scan
@@ -1224,8 +1242,7 @@ class GraftDB(spark: SparkSession, root: String,
           case Some(v) if !v.isInstanceOf[FieldValue.Arr] &&
               v.getClass == o.keyType.getClass &&
               hasIndex(db, coll, o.field) &&
-              index(db, coll, o.field).schema.find(_.name == "idx_key")
-                .exists(_.dataType == sparkTypeOf(v)) =>
+              keyType(db, coll, o.field) == sparkTypeOf(v) =>
             Some((o.field, v))
           case _ => None
         }

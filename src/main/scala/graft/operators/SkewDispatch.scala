@@ -66,10 +66,6 @@ object SkewDispatch {
     }
   }
 
-  /** Estimated share of the hottest key (see hottestKey). */
-  def maxKeyShare(df: DataFrame, key: Column, capacity: Int = 256): Double =
-    hottestKey(df, key, capacity)._1
-
   /** A single-task sort below this many rows still beats the bucketed
     * machinery's premium; only a hot key PAST the floor is a straggler
     * worth mitigating. The floor is PER-OPERATOR because it prices the

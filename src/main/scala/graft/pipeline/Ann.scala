@@ -59,17 +59,36 @@ object Ann {
     * differ across engines); ranks are exact. */
   def annCosineTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val q = e.filter(col("vec_id") < 20)
+    val q = queries(e)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))
     val cand = e.select(col("vec_id").as("cand_id"), col("embedding").as("c_v"))
+    topK(broadcast(q).join(cand, col("query_id") =!= col("cand_id")), K)
+  }
+
+  /** The query set every search answers: vec_id < 20. */
+  private[pipeline] def queries(e: DataFrame): DataFrame = e.filter(col("vec_id") < 20)
+
+  /** Exact cosine top-`k` per query over (query_id, q_v, cand_id, c_v)
+    * rows: one window per query, cosine desc with cand_id tiebreak. */
+  private[pipeline] def topK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("cand_id").asc)
-    broadcast(q).join(cand, col("query_id") =!= col("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
+    pairs.withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
+      .filter(col("rank") <= k)
       .select(col("query_id"), col("cand_id"), col("rank"))
   }
+
+  /** Puts the vectors back onto (query_id, cand_id) candidates, the query
+    * side broadcast, and ranks them with [[topK]]. Candidate generation
+    * carries ids only, so the wide vectors never ride its shuffles. */
+  private[pipeline] def rescore(cand: DataFrame, e: DataFrame, k: Int): DataFrame =
+    topK(cand
+      .join(broadcast(queries(e)
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))),
+        Seq("query_id"))
+      .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("c_v")),
+        Seq("cand_id")), k)
 
   val annCosineTopkSql: String =
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_v FROM embeddings WHERE vec_id < 20),
@@ -101,30 +120,29 @@ object Ann {
   def annLshTables(spark: SparkSession, dir: String,
       bits: Int, tables: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val banded = e
-      .select(col("vec_id"),
+    val banded = lshBands(e, bits, tables)
+    lshSearch(queries(banded), banded, e, K)
+  }
+
+  /** The (vec_id, tbl, bucket) rows of `tables` independent `bits`-bit
+    * hyperplane buckets per vector. */
+  private[pipeline] def lshBands(e: DataFrame, bits: Int, tables: Int): DataFrame =
+    e.select(col("vec_id"),
         posexplode(hyperplane_buckets(col("embedding"), bits, tables)))
       .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bucket"))
-    val qb = banded.filter(col("vec_id") < 20)
+
+  /** LSH search: query bands × corpus bands (both (vec_id, tbl, bucket))
+    * on (tbl, bucket), the distinct colliding pairs rescored exactly. */
+  private[pipeline] def lshSearch(queryBands: DataFrame, corpusBands: DataFrame,
+      e: DataFrame, k: Int): DataFrame = {
+    val qb = queryBands
       .select(col("tbl"), col("bucket"), col("vec_id").as("query_id"))
-    val cb = banded
+    val cb = corpusBands
       .select(col("tbl"), col("bucket"), col("vec_id").as("cand_id"))
-    val cand = qb.join(cb, Seq("tbl", "bucket"))
+    rescore(qb.join(cb, Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    cand
-      .join(broadcast(e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))),
-        Seq("query_id"))
-      .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("c_v")),
-        Seq("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("cand_id"), col("rank"))
+      .distinct(), e, k)
   }
 
   /** Rank-`rank` nearest centroids per vector (broadcast the tiny
@@ -242,21 +260,21 @@ object Ann {
     val nprobe = 12
     val e = Tables.embeddings(spark, dir)
     val refined = ivfCentroids(e, c)
-    val cells = nearestCell(e, refined, 1)
+    ivfSearch(e, refined, nearestCell(e, refined, 1), nprobe, K)
+  }
+
+  /** IVF search: each query probes its `nprobe` nearest `cents` cells;
+    * exact top-k over the corpus `cells` rows (cid, vec_id, embedding)
+    * inside the probed cells. */
+  private[pipeline] def ivfSearch(e: DataFrame, cents: DataFrame, cells: DataFrame,
+      nprobe: Int, k: Int): DataFrame = {
+    val cand = cells
       .select(col("cid").as("cell"), col("vec_id").as("cand_id"), col("embedding").as("c_v"))
     val probes = nearestCell(
-        e.filter(col("vec_id") < 20).select(col("vec_id"), col("embedding")),
-        refined, nprobe)
+        queries(e).select(col("vec_id"), col("embedding")), cents, nprobe)
       .select(col("cid").as("cell"), col("vec_id").as("query_id"), col("embedding").as("q_v"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    probes.join(cells, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("cand_id"), col("rank"))
+    topK(probes.join(cand, Seq("cell"))
+      .filter(col("query_id") =!= col("cand_id")), k)
       .distinct()
   }
 
@@ -348,31 +366,32 @@ object Ann {
   def annPqTuned(spark: SparkSession, dir: String,
       m: Int, ksub: Int, rescoreDepth: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val cb = float_array_lit(pqCodebooks(e, m, ksub))
-    val codes = e.select(col("vec_id").as("cand_id"),
-      pq_encode(col("embedding"), cb, m, ksub).as("codes"))
-    val queries = e.filter(col("vec_id") < 20)
+    val flat = pqCodebooks(e, m, ksub)
+    pqSearch(e, flat, pqCodes(e, flat, m, ksub), m, ksub, rescoreDepth, K)
+  }
+
+  /** The (vec_id, codes) rows: each vector's m sub-quantizer codes under
+    * the codebooks `flat`. */
+  private[pipeline] def pqCodes(e: DataFrame, flat: Array[Float], m: Int, ksub: Int): DataFrame =
+    e.select(col("vec_id"), pq_encode(col("embedding"), float_array_lit(flat), m, ksub).as("codes"))
+
+  /** PQ search: per query, the `rescoreDepth` nearest corpus `codes`
+    * rows (vec_id, codes) by ADC distance under the codebooks `flat`,
+    * rescored exactly. */
+  private[pipeline] def pqSearch(e: DataFrame, flat: Array[Float], codes: DataFrame,
+      m: Int, ksub: Int, rescoreDepth: Int, k: Int): DataFrame = {
+    val luts = queries(e)
       .select(col("vec_id").as("query_id"),
-        pq_lut(col("embedding"), cb, m, ksub).as("lut"))
+        pq_lut(col("embedding"), float_array_lit(flat), m, ksub).as("lut"))
     val wA = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc, col("cand_id").asc)
-    val cand = broadcast(queries).join(codes, col("query_id") =!= col("cand_id"))
+    rescore(broadcast(luts)
+      .join(codes.select(col("vec_id").as("cand_id"), col("codes")),
+        col("query_id") =!= col("cand_id"))
       .withColumn("adc", pq_adc_dist(col("codes"), col("lut")))
       .withColumn("arank", row_number().over(wA))
       .filter(col("arank") <= rescoreDepth)
-      .select(col("query_id"), col("cand_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    cand
-      .join(broadcast(e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))),
-        Seq("query_id"))
-      .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("c_v")),
-        Seq("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("cand_id"), col("rank"))
+      .select(col("query_id"), col("cand_id")), e, k)
   }
 
   /** Radius (range) similarity search: ALL candidates within cosine ≥ τ
@@ -388,7 +407,7 @@ object Ann {
   def annRangeSearch(spark: SparkSession, dir: String): DataFrame = {
     val Tau = 0.3
     val e = Tables.embeddings(spark, dir)
-    val q = e.filter(col("vec_id") < 20)
+    val q = queries(e)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))
     val cand = e.select(col("vec_id").as("cand_id"), col("embedding").as("c_v"))
     broadcast(q).join(cand, col("query_id") =!= col("cand_id"))
@@ -417,17 +436,11 @@ object Ann {
     * blocking changes, the filter semantics don't.) */
   def annFilteredTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val q = e.filter(col("vec_id") < 20)
+    val q = queries(e)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))
     val cand = e.filter(col("label") % 4 === 1)
       .select(col("vec_id").as("cand_id"), col("embedding").as("c_v"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    broadcast(q).join(cand, col("query_id") =!= col("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("cand_id"), col("rank"))
+    topK(broadcast(q).join(cand, col("query_id") =!= col("cand_id")), K)
   }
 
   val annFilteredTopkSql: String =

@@ -2,10 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import graft.sources.Tables
-import graft.functions.GraftFunctions._
 
 /** Persisted ANN index artifacts — the serving layout the reference's
   * index-node role implies (it persists its EJDB indexes beside the doc
@@ -14,7 +12,9 @@ import graft.functions.GraftFunctions._
   * output is TABLES, and the search path reads those tables with ZERO
   * training work. In-session, Ann memoizes the trained quantizers per
   * (corpus, params); this module makes that artifact durable across
-  * sessions and shareable across a cluster.
+  * sessions and shareable across a cluster. Each search runs `Ann`'s
+  * search body for its family (`ivfSearch`, `pqSearch`, `lshSearch`)
+  * over the artifacts it reads, after `validate`.
   *
   * Layout under `indexDir` (all parquet):
   *   ivf_centroids/   (cid, centroid)                — coarse quantizer
@@ -24,7 +24,7 @@ import graft.functions.GraftFunctions._
   *                    reads only those partitions (partition pruning is
   *                    the whole point of IVF at scale)
   *   gen<N>/pq_codes/  (vec_id, codes)               — m small ints/vec
-  *   gen<N>/lsh_tables/ (tbl, bucket, vec_id)        — L banded tables
+  *   gen<N>/lsh_tables/ (vec_id, tbl, bucket)        — L banded tables
   *   _INDEX_MANIFEST.json                            — commit point
   *
   * GENERATIONS are the incremental-ingestion story (the FAISS
@@ -36,14 +36,11 @@ import graft.functions.GraftFunctions._
   * gen directory the manifest doesn't cover is invisible (a crashed
   * append's orphan, deleted and rebuilt by the next append).
   *
-  * Publish discipline (the GraftDB/Layout pattern): `build` stages
-  * everything under `<indexDir>.build.tmp` with the manifest written
-  * LAST inside it, then publishes by renames (retire live to `.old`,
-  * rename tmp in, drop `.old`) — and FIRST self-heals a `.old` a prior
-  * crashed build left retired, so no crash window ever leaves zero
-  * committed indexes. `append` stages its gen under `gen<N>.tmp`,
-  * renames it in place (still invisible), then swaps the manifest via
-  * `.new` + rename (self-healed by every loader). Loaders REQUIRE the
+  * Publish discipline = ArtifactIo's: `build` and `compact` stage under
+  * `<indexDir>.build.tmp` with the manifest last and publish by two
+  * renames (`ArtifactIo.commitBuild`); `append` stages `gen<N>.tmp`,
+  * renames it in (still invisible) and commits by the manifest swap
+  * (`ArtifactIo.commitGen`). Loaders REQUIRE the
   * manifest and validate both the index params and the corpus
   * fingerprint — file paths PLUS length and mtime, so a corpus
   * rewritten in place under the same names invalidates the index
@@ -75,9 +72,6 @@ object AnnIndex {
     s""""c":${params.c},"m":${params.m},"ksub":${params.ksub},""" +
     s""""bits":${params.bits},"tables":${params.tables},"gens":$gens}"""
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    ArtifactIo.fsOf(spark, p)
-
   /** Stage one generation's encodings under `genTmp`: assignment to the
     * FIXED centroids, PQ codes from the FIXED codebooks, LSH bands (the
     * hyperplanes are deterministic functions of (bits, tables)). Shared
@@ -89,20 +83,15 @@ object AnnIndex {
     // jobs (the ClusterIndex gen-write pattern): at small deltas each
     // write is fixed-overhead-dominated, so serializing them tripled the
     // append's constant
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     ArtifactIo.awaitAll(Seq(
       Future(Ann.nearestCell(vectors, cents, 1)
         .select(col("cid"), col("vec_id"), col("embedding"))
         .write.partitionBy("cid").parquet(s"$genTmp/ivf_cells")),
-      Future(vectors.select(col("vec_id"),
-          pq_encode(col("embedding"), float_array_lit(flat),
-            params.m, params.ksub).as("codes"))
+      Future(Ann.pqCodes(vectors, flat, params.m, params.ksub)
         .write.parquet(s"$genTmp/pq_codes")),
-      Future(vectors.select(col("vec_id"),
-          posexplode(hyperplane_buckets(col("embedding"), params.bits, params.tables)))
-        .select(col("pos").as("tbl"), col("col").as("bucket"), col("vec_id"))
+      Future(Ann.lshBands(vectors, params.bits, params.tables)
         .write.parquet(s"$genTmp/lsh_tables"))))
   }
 
@@ -114,47 +103,33 @@ object AnnIndex {
   def build(spark: SparkSession, corpusDir: String, indexDir: String,
       params: Params = Params(), pretrainedFrom: Option[String] = None): Unit = {
     val e = Tables.embeddings(spark, corpusDir)
-    val p = new Path(indexDir)
-    val fs = fsOf(spark, p)
-    // a prior build may have crashed between its publish renames leaving
-    // the only committed index at `.old` — restore it BEFORE this
-    // build's own retire step deletes `.old` (else a crash in the
-    // window below leaves ZERO committed indexes)
-    selfHeal(spark, indexDir)
-    val tmp = new Path(p.getParent, p.getName + ".build.tmp")
-    fs.delete(tmp, true)
-
-    val (cents, flat) = pretrainedFrom match {
-      case Some(src) =>
-        val m = readManifest(spark, src)
-        val got = Params(m("c").toInt, m("m").toInt, m("ksub").toInt,
-          m("bits").toInt, m("tables").toInt)
-        require(got == params,
-          s"pretrained index $src has params $got, build expects $params")
-        (spark.read.parquet(s"$src/ivf_centroids"), readCodebooks(spark, src))
-      case None =>
-        (Ann.ivfCentroids(e, params.c),
-          Ann.pqCodebooks(e, params.m, params.ksub))
+    ArtifactIo.commitBuild(spark, indexDir, ManifestName,
+        manifestJson(fingerprint(spark, e), params, gens = 1)) { tmp =>
+      val (cents, flat) = pretrainedFrom match {
+        case Some(src) =>
+          val m = readManifest(spark, src)
+          val got = Params(m("c").toInt, m("m").toInt, m("ksub").toInt,
+            m("bits").toInt, m("tables").toInt)
+          require(got == params,
+            s"pretrained index $src has params $got, build expects $params")
+          (spark.read.parquet(s"$src/ivf_centroids"), readCodebooks(spark, src))
+        case None =>
+          (Ann.ivfCentroids(e, params.c),
+            Ann.pqCodebooks(e, params.m, params.ksub))
+      }
+      cents.write.parquet(s"$tmp/ivf_centroids")
+      val dim = flat.length / (params.m * params.ksub) * params.m
+      spark.createDataFrame(java.util.Arrays.asList(
+          org.apache.spark.sql.Row(params.m, params.ksub, dim, flat.toSeq)),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("m", org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("ksub", org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("flat",
+            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
+        .write.parquet(s"$tmp/pq_codebooks")
+      writeGen(e, cents, flat, params, s"$tmp/gen0")
     }
-    cents.write.parquet(s"$tmp/ivf_centroids")
-    val dim = flat.length / (params.m * params.ksub) * params.m
-    spark.createDataFrame(java.util.Arrays.asList(
-        org.apache.spark.sql.Row(params.m, params.ksub, dim, flat.toSeq)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("m", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("ksub", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("flat",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
-      .write.parquet(s"$tmp/pq_codebooks")
-    writeGen(e, cents, flat, params, s"$tmp/gen0")
-
-    // manifest LAST inside tmp — the commit point travels with the data
-    ArtifactIo.writeText(fs, new Path(tmp, ManifestName),
-      manifestJson(fingerprint(spark, e), params, gens = 1))
-    // two-rename publish (the Layout.compactSmallFiles pattern) — see
-    // ArtifactIo.publish for the crash-window argument
-    ArtifactIo.publish(spark, indexDir, tmp)
   }
 
   /** Incremental ingestion: index the corpus's vectors that no committed
@@ -188,18 +163,11 @@ object AnnIndex {
       // full count: no-op probe + cache materialization in ONE job (the
       // three encode jobs below all consume the persisted delta)
       if (fresh.count() == 0L) return // nothing new: no-op
-      val p = new Path(indexDir)
-      val fs = fsOf(spark, p)
-      val genP = new Path(s"$indexDir/gen$n")
-      val genTmp = new Path(s"$indexDir/gen$n.tmp")
-      fs.delete(genTmp, true)
-      fs.delete(genP, true) // a crashed append's orphan — uncommitted garbage
-      val cents = spark.read.parquet(s"$indexDir/ivf_centroids")
-      writeGen(fresh, cents, readCodebooks(spark, indexDir), params, genTmp.toString)
-      if (!fs.rename(genTmp, genP))
-        throw new java.io.IOException(s"annindex: cannot stage $genP")
-      ArtifactIo.swapManifest(fs, p, ManifestName,
-        manifestJson(fingerprint(spark, e), params, gens = n + 1))
+      ArtifactIo.commitGen(spark, indexDir, n, ManifestName,
+          manifestJson(fingerprint(spark, e), params, gens = n + 1)) { genTmp =>
+        writeGen(fresh, spark.read.parquet(s"$indexDir/ivf_centroids"),
+          readCodebooks(spark, indexDir), params, genTmp)
+      }
     } finally fresh.unpersist()
   }
 
@@ -227,23 +195,19 @@ object AnnIndex {
     if (n <= 1) return
     val params = Params(man("c").toInt, man("m").toInt, man("ksub").toInt,
       man("bits").toInt, man("tables").toInt)
-    val p = new Path(indexDir)
-    val fs = fsOf(spark, p)
-    val tmp = new Path(p.getParent, p.getName + ".build.tmp")
-    fs.delete(tmp, true)
-    spark.read.parquet(s"$indexDir/ivf_centroids")
-      .write.parquet(s"$tmp/ivf_centroids")
-    spark.read.parquet(s"$indexDir/pq_codebooks")
-      .write.parquet(s"$tmp/pq_codebooks")
-    readAcrossGens(spark, indexDir, n, "ivf_cells")
-      .write.partitionBy("cid").parquet(s"$tmp/gen0/ivf_cells")
-    readAcrossGens(spark, indexDir, n, "pq_codes")
-      .write.parquet(s"$tmp/gen0/pq_codes")
-    readAcrossGens(spark, indexDir, n, "lsh_tables")
-      .write.parquet(s"$tmp/gen0/lsh_tables")
-    ArtifactIo.writeText(fs, new Path(tmp, ManifestName),
-      manifestJson(man("corpus_fingerprint"), params, gens = 1))
-    ArtifactIo.publish(spark, indexDir, tmp)
+    ArtifactIo.commitBuild(spark, indexDir, ManifestName,
+        manifestJson(man("corpus_fingerprint"), params, gens = 1)) { tmp =>
+      spark.read.parquet(s"$indexDir/ivf_centroids")
+        .write.parquet(s"$tmp/ivf_centroids")
+      spark.read.parquet(s"$indexDir/pq_codebooks")
+        .write.parquet(s"$tmp/pq_codebooks")
+      readAcrossGens(spark, indexDir, n, "ivf_cells")
+        .write.partitionBy("cid").parquet(s"$tmp/gen0/ivf_cells")
+      readAcrossGens(spark, indexDir, n, "pq_codes")
+        .write.parquet(s"$tmp/gen0/pq_codes")
+      readAcrossGens(spark, indexDir, n, "lsh_tables")
+        .write.parquet(s"$tmp/gen0/lsh_tables")
+    }
   }
 
   private def readCodebooks(spark: SparkSession, indexDir: String): Array[Float] = {
@@ -265,12 +229,6 @@ object AnnIndex {
         .reduce(_ unionByName _)
     else
       spark.read.parquet((0 until gens).map(i => s"$indexDir/gen$i/$sub"): _*)
-
-  /** Restore an index a crashed build left retired at `.old` — see
-    * [[ArtifactIo.healRetired]]. Called by every loader AND by build
-    * itself before it touches `.old`. */
-  private def selfHeal(spark: SparkSession, indexDir: String): Unit =
-    ArtifactIo.healRetired(spark, indexDir)
 
   private def readManifest(spark: SparkSession, indexDir: String): Map[String, String] =
     ArtifactIo.readManifest(spark, indexDir, ManifestName, "index")
@@ -297,33 +255,16 @@ object AnnIndex {
   /** IVF search from the persisted index: centroids and the inverted
     * file are READ, never retrained — the only per-query work is the
     * probe assignment (queries × C broadcast centroids) and exact
-    * cosine inside the probed cells. Output-identical to `Ann.annIvf`
-    * over the same corpus/params (AnnIndexSpec pins it). */
+    * cosine inside the probed cells. */
   def searchIvf(spark: SparkSession, corpusDir: String, indexDir: String,
       nprobe: Int = 12, k: Int = Ann.K, c: Int = 16): DataFrame = {
-    val e = Tables.embeddings(spark, corpusDir)
     // expected params come from the CALLER (defaults = Ann.annIvf's),
     // never from the manifest itself — reading c out of the manifest
     // and comparing it against the manifest would always pass
     val man = validate(spark, corpusDir, indexDir, Map("c" -> c))
-    val cents = spark.read.parquet(s"$indexDir/ivf_centroids")
-    val cells = readAcrossGens(spark, indexDir, man("gens").toInt, "ivf_cells")
-      .select(col("cid").cast("long").as("cell"),
-        col("vec_id").as("cand_id"), col("embedding").as("c_v"))
-    val probes = Ann.nearestCell(
-        e.filter(col("vec_id") < 20).select(col("vec_id"), col("embedding")),
-        cents, nprobe)
-      .select(col("cid").as("cell"), col("vec_id").as("query_id"),
-        col("embedding").as("q_v"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    probes.join(cells, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("cand_id"), col("rank"))
-      .distinct()
+    Ann.ivfSearch(Tables.embeddings(spark, corpusDir),
+      spark.read.parquet(s"$indexDir/ivf_centroids"),
+      readAcrossGens(spark, indexDir, man("gens").toInt, "ivf_cells"), nprobe, k)
   }
 
   /** PQ search from the persisted codes + codebooks: the ADC scan reads
@@ -333,33 +274,10 @@ object AnnIndex {
   def searchPq(spark: SparkSession, corpusDir: String, indexDir: String,
       rescoreDepth: Int = 128, k: Int = Ann.K,
       m: Int = 16, ksub: Int = 16): DataFrame = {
-    val e = Tables.embeddings(spark, corpusDir)
     val man = validate(spark, corpusDir, indexDir, Map("m" -> m, "ksub" -> ksub))
-    val cb = float_array_lit(readCodebooks(spark, indexDir))
-    val codes = readAcrossGens(spark, indexDir, man("gens").toInt, "pq_codes")
-      .select(col("vec_id").as("cand_id"), col("codes"))
-    val queries = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"),
-        pq_lut(col("embedding"), cb, m, ksub).as("lut"))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("cand_id").asc)
-    val cand = broadcast(queries).join(codes, col("query_id") =!= col("cand_id"))
-      .withColumn("adc", pq_adc_dist(col("codes"), col("lut")))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= rescoreDepth)
-      .select(col("query_id"), col("cand_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    cand
-      .join(broadcast(e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))),
-        Seq("query_id"))
-      .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("c_v")),
-        Seq("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("cand_id"), col("rank"))
+    Ann.pqSearch(Tables.embeddings(spark, corpusDir), readCodebooks(spark, indexDir),
+      readAcrossGens(spark, indexDir, man("gens").toInt, "pq_codes"),
+      m, ksub, rescoreDepth, k)
   }
 
   /** LSH search from the persisted tables: the corpus side's banding is
@@ -372,28 +290,7 @@ object AnnIndex {
     val e = Tables.embeddings(spark, corpusDir)
     val man = validate(spark, corpusDir, indexDir,
       Map("bits" -> bits, "tables" -> tables))
-    val cb = readAcrossGens(spark, indexDir, man("gens").toInt, "lsh_tables")
-      .select(col("tbl"), col("bucket"), col("vec_id").as("cand_id"))
-    val qb = e.filter(col("vec_id") < 20)
-      .select(col("vec_id"),
-        posexplode(hyperplane_buckets(col("embedding"), bits, tables)))
-      .select(col("pos").as("tbl"), col("col").as("bucket"),
-        col("vec_id").as("query_id"))
-    val cand = broadcast(qb).join(cb, Seq("tbl", "bucket"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    cand
-      .join(broadcast(e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_v"))),
-        Seq("query_id"))
-      .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("c_v")),
-        Seq("cand_id"))
-      .withColumn("cos", cosine_sim(col("q_v"), col("c_v")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("cand_id"), col("rank"))
+    Ann.lshSearch(broadcast(Ann.lshBands(Ann.queries(e), bits, tables)),
+      readAcrossGens(spark, indexDir, man("gens").toInt, "lsh_tables"), e, k)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * artifact pin the same helpers. */
 private[pipeline] object ArtifactIo {
 
-  def fsOf(spark: SparkSession, p: Path): FileSystem =
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Await a group of concurrent staging jobs, DRAINING every future
@@ -28,7 +28,7 @@ private[pipeline] object ArtifactIo {
     outcomes.collectFirst { case scala.util.Failure(e) => throw e }
   }
 
-  def writeText(fs: FileSystem, p: Path, txt: String): Unit = {
+  private def writeText(fs: FileSystem, p: Path, txt: String): Unit = {
     val out = fs.create(p, true)
     try out.write(txt.getBytes("UTF-8")) finally out.close()
   }
@@ -36,7 +36,7 @@ private[pipeline] object ArtifactIo {
   /** Restore an artifact a crashed build left retired at `.old` (crash
     * between the publish renames). Called by every loader AND by build
     * itself before it touches `.old`. */
-  def healRetired(spark: SparkSession, dir: String): Unit = {
+  private def healRetired(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = fsOf(spark, p)
     val oldP = new Path(p.getParent, p.getName + ".old")
@@ -52,7 +52,7 @@ private[pipeline] object ArtifactIo {
     * lives at `.old` (restored by [[healRetired]]); delete-then-rename
     * would have a window where the only complete artifact is the
     * unpublished tmp the next build's first act deletes. */
-  def publish(spark: SparkSession, dir: String, tmp: Path): Unit = {
+  private def publish(spark: SparkSession, dir: String, tmp: Path): Unit = {
     val p = new Path(dir)
     val fs = fsOf(spark, p)
     val oldP = new Path(p.getParent, p.getName + ".old")
@@ -66,11 +66,45 @@ private[pipeline] object ArtifactIo {
     fs.delete(oldP, true)
   }
 
+  /** The build protocol: restore a retired copy first (so this build's
+    * publish never deletes the only committed artifact), clear a stale
+    * `<dir>.build.tmp`, run `stage` into it, write `manifest` (file
+    * `name`) LAST inside it, and [[publish]]. */
+  def commitBuild(spark: SparkSession, dir: String, name: String, manifest: String)
+      (stage: String => Unit): Unit = {
+    healRetired(spark, dir)
+    val p = new Path(dir)
+    val fs = fsOf(spark, p)
+    val tmp = new Path(p.getParent, p.getName + ".build.tmp")
+    fs.delete(tmp, true)
+    stage(tmp.toString)
+    writeText(fs, new Path(tmp, name), manifest)
+    publish(spark, dir, tmp)
+  }
+
+  /** The append protocol for generation `gen`: clear a stale
+    * `gen<N>.tmp` and any orphan `gen<N>` a crashed append left, run
+    * `stage` into the tmp dir, rename it to `gen<N>` (still invisible:
+    * the manifest does not cover it) and commit by [[swapManifest]]. */
+  def commitGen(spark: SparkSession, dir: String, gen: Int, name: String, manifest: String)
+      (stage: String => Unit): Unit = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, p)
+    val genP = new Path(p, s"gen$gen")
+    val genTmp = new Path(p, s"gen$gen.tmp")
+    fs.delete(genTmp, true)
+    fs.delete(genP, true)
+    stage(genTmp.toString)
+    if (!fs.rename(genTmp, genP))
+      throw new java.io.IOException(s"artifact: cannot stage $genP")
+    swapManifest(fs, p, name, manifest)
+  }
+
   /** Commit point of an append: write `.new`, drop the old manifest,
     * rename in. Both crash windows are safe — old+`.new` heals to the
     * OLD manifest (the staged gen is redone by the next append); `.new`
     * alone heals forward to the new one (its gen dir landed first). */
-  def swapManifest(fs: FileSystem, dir: Path, name: String, txt: String): Unit = {
+  private def swapManifest(fs: FileSystem, dir: Path, name: String, txt: String): Unit = {
     val mp = new Path(dir, name)
     val np = new Path(dir, name + ".new")
     writeText(fs, np, txt)
@@ -79,7 +113,7 @@ private[pipeline] object ArtifactIo {
       throw new java.io.IOException(s"artifact: cannot commit manifest at $mp")
   }
 
-  def healManifest(spark: SparkSession, dir: String, name: String): Unit = {
+  private def healManifest(spark: SparkSession, dir: String, name: String): Unit = {
     val mp = new Path(dir, name)
     val np = new Path(dir, name + ".new")
     val fs = fsOf(spark, mp)

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 import graft.sources.Tables
 
 /** Persisted NEAR-DUP CLUSTER artifact — the cluster-maintenance twin of
@@ -27,10 +26,10 @@ import graft.sources.Tables
   *                     per-gen rep collapse loses nothing)
   *   _CLUSTER_MANIFEST.json — commit point ({version, threshold, gens})
   *
-  * Publish discipline = ArtifactIo's: build stages under `.build.tmp`
-  * with the manifest last and publishes by two renames; append stages
-  * `gen<N>.tmp`, renames it in (still invisible), and commits by the
-  * manifest swap. Crashed appends leave an orphan gen the next append
+  * Publish discipline = ArtifactIo's: build and compact stage under
+  * `.build.tmp` with the manifest last and publish by two renames
+  * (`commitBuild`); append stages `gen<N>.tmp`, renames it in (still
+  * invisible), and commits by the manifest swap (`commitGen`). Crashed appends leave an orphan gen the next append
   * deletes and rebuilds; every loader self-heals both windows.
   *
   * Contract: doc_ids are immutable content ids — the corpus GROWS, it is
@@ -71,26 +70,19 @@ object ClusterIndex {
     spark.read.parquet((0 until gens).map(i => s"$indexDir/gen$i/$sub"): _*)
 
   /** Full clustering of the corpus, persisted as gen0. */
-  def build(spark: SparkSession, corpusDir: String, indexDir: String): Unit = {
-    ArtifactIo.healRetired(spark, indexDir)
-    val p = new Path(indexDir)
-    val fs = ArtifactIo.fsOf(spark, p)
-    val tmp = new Path(p.getParent, p.getName + ".build.tmp")
-    fs.delete(tmp, true)
-    val docs = docsOf(spark, corpusDir)
-    val members = Dedup.connectedComponents(
-      Dedup.jaccardPairsOf(docs).select(col("a_id"), col("b_id")))
-    // independent writes → concurrent jobs (the append pattern below)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    ArtifactIo.awaitAll(Seq(
-      Future(members.write.parquet(s"$tmp/gen0/members")),
-      Future(docs.select(col("doc_id")).write.parquet(s"$tmp/gen0/covered")),
-      Future(Dedup.repIndexOf(docs).write.parquet(s"$tmp/gen0/shingles"))))
-    ArtifactIo.writeText(fs, new Path(tmp, ManifestName), manifestJson(1))
-    ArtifactIo.publish(spark, indexDir, tmp)
-  }
+  def build(spark: SparkSession, corpusDir: String, indexDir: String): Unit =
+    ArtifactIo.commitBuild(spark, indexDir, ManifestName, manifestJson(1)) { tmp =>
+      val docs = docsOf(spark, corpusDir)
+      val members = Dedup.connectedComponents(
+        Dedup.jaccardPairsOf(docs).select(col("a_id"), col("b_id")))
+      // independent writes → concurrent jobs (the append pattern below)
+      import scala.concurrent.Future
+      import scala.concurrent.ExecutionContext.Implicits.global
+      ArtifactIo.awaitAll(Seq(
+        Future(members.write.parquet(s"$tmp/gen0/members")),
+        Future(docs.select(col("doc_id")).write.parquet(s"$tmp/gen0/covered")),
+        Future(Dedup.repIndexOf(docs).write.parquet(s"$tmp/gen0/shingles"))))
+    }
 
   /** Merge the corpus's docs no committed generation covers — one
     * `Dedup.mergeDelta` against the persisted artifacts, committed as
@@ -118,82 +110,75 @@ object ClusterIndex {
       .join(covered, Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val p = new Path(indexDir)
-      val fs = ArtifactIo.fsOf(spark, p)
-      val genP = new Path(s"$indexDir/gen$n")
-      val genTmp = new Path(s"$indexDir/gen$n.tmp")
-      fs.delete(genTmp, true)
-      fs.delete(genP, true) // a crashed append's orphan — uncommitted garbage
       // FIRST real job: the no-op probe. Materializing any slice of a
       // persisted frame builds the full cached batches, so the probe IS
       // the one corpus-scan cache warm every job below reads from (and
       // an empty delta returns before anything is staged).
       val deltaRows = delta.count()
       if (deltaRows == 0L) return // nothing new: no-op
-      // the covered-ledger write only needs the (now cached) delta —
-      // run it CONCURRENTLY with the merge's candidate join + CC jobs
-      // below instead of as its own barrier in front of them (r15
-      // barrier fusion: count → [covered ∥ merge] → [members ∥
-      // shingles], 4 sequential job waves vs the previous 6)
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val coveredF = Future(
-        delta.select(col("doc_id")).write.parquet(s"$genTmp/covered"))
-      // drain coveredF even when the MERGE below throws — a merge
-      // failure must not propagate past an in-flight staging write (the
-      // ArtifactIo.awaitAll hazard: a same-JVM retry deletes genTmp
-      // while the orphaned writer is still renaming parts into it)
-      def drained[T](body: => T): T =
-        try body catch {
-          case t: Throwable =>
-            scala.util.Try(scala.concurrent.Await.result(
-              coveredF, scala.concurrent.duration.Duration.Inf))
-            throw t
+      ArtifactIo.commitGen(spark, indexDir, n, ManifestName, manifestJson(n + 1)) { genTmp =>
+        // the covered-ledger write only needs the (now cached) delta —
+        // run it CONCURRENTLY with the merge's candidate join + CC jobs
+        // below instead of as its own barrier in front of them (r15
+        // barrier fusion: count → [covered ∥ merge] → [members ∥
+        // shingles], 4 sequential job waves vs the previous 6)
+        import scala.concurrent.Future
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val coveredF = Future(
+          delta.select(col("doc_id")).write.parquet(s"$genTmp/covered"))
+        // drain coveredF even when the MERGE below throws — a merge
+        // failure must not propagate past an in-flight staging write (the
+        // ArtifactIo.awaitAll hazard: a same-JVM retry deletes genTmp
+        // while the orphaned writer is still renaming parts into it)
+        def drained[T](body: => T): T =
+          try body catch {
+            case t: Throwable =>
+              scala.util.Try(scala.concurrent.Await.result(
+                coveredF, scala.concurrent.duration.Duration.Inf))
+              throw t
+          }
+        drained {
+          val old = members(spark, indexDir)
+          // latest-gen-wins read model: persist only the rows this merge
+          // MOVED (label changed) or CREATED (doc entered membership). The
+          // merge's outputs (relabel map + fresh rows) are bounded by the
+          // contracted graph, so moved rows come from ONE broadcastable
+          // inner join against the membership — the corpus is scanned, never
+          // shuffled, and never joined against a second full membership.
+          // deltaBounded: the probe's count is in hand — a ≤2^16-doc delta
+          // (every streaming micro-batch; any sane append batch) broadcasts
+          // its derived shingle index, so the corpus-side artifacts
+          // (inverted index, membership) are SCANNED, never shuffled, inside
+          // the merge. A bulk backfill above the bound keeps planner choice.
+          val (relabel, fresh, bounded) = Dedup.mergeDeltaParts(old,
+            readGens(spark, indexDir, n, "shingles"), delta,
+            deltaBounded = deltaRows <= (1L << 16))
+          // relabel is bounded by the contracted graph — broadcast it so the
+          // membership is SCANNED, never shuffled (at 100 TB a sort-merge
+          // here would move the whole membership for a handful of labels).
+          // Forced only when the merge CC resolved on the driver fast path
+          // (relabel is then a ≤2^20-row LocalRelation); a bulk backfill
+          // whose contracted graph ran the distributed loop lets the
+          // planner pick, instead of failing the append on the 8 GB
+          // broadcast cap (ADVICE r14).
+          val relabelMoved = relabel.filter(col("old_lab") =!= col("new_lab"))
+          val moved = old.join(
+              if (bounded) broadcast(relabelMoved) else relabelMoved,
+              old("cluster") === col("old_lab"))
+            .select(old("doc_id"), col("new_lab").as("cluster"))
+          // the remaining gen writes are independent (delta is persisted, the
+          // merge outputs sit on checkpointed CC blocks / driver arrays) —
+          // run them as concurrent jobs: at append scale each write is
+          // fixed-overhead-dominated, and serializing them was most of the
+          // append-vs-build fixed-cost gap the maint lane flags. The
+          // covered-ledger future joins the same drain point, so a merge
+          // failure above still propagates only after awaitAll has drained
+          // it (no orphaned writer racing a same-JVM retry).
+          ArtifactIo.awaitAll(Seq(coveredF,
+            Future(moved.unionByName(fresh).write.parquet(s"$genTmp/members")),
+            Future(Dedup.repIndexOf(delta).write.parquet(s"$genTmp/shingles"))))
         }
-      drained {
-      val old = members(spark, indexDir)
-      // latest-gen-wins read model: persist only the rows this merge
-      // MOVED (label changed) or CREATED (doc entered membership). The
-      // merge's outputs (relabel map + fresh rows) are bounded by the
-      // contracted graph, so moved rows come from ONE broadcastable
-      // inner join against the membership — the corpus is scanned, never
-      // shuffled, and never joined against a second full membership.
-      // deltaBounded: the probe's count is in hand — a ≤2^16-doc delta
-      // (every streaming micro-batch; any sane append batch) broadcasts
-      // its derived shingle index, so the corpus-side artifacts
-      // (inverted index, membership) are SCANNED, never shuffled, inside
-      // the merge. A bulk backfill above the bound keeps planner choice.
-      val (relabel, fresh, bounded) = Dedup.mergeDeltaParts(old,
-        readGens(spark, indexDir, n, "shingles"), delta,
-        deltaBounded = deltaRows <= (1L << 16))
-      // relabel is bounded by the contracted graph — broadcast it so the
-      // membership is SCANNED, never shuffled (at 100 TB a sort-merge
-      // here would move the whole membership for a handful of labels).
-      // Forced only when the merge CC resolved on the driver fast path
-      // (relabel is then a ≤2^20-row LocalRelation); a bulk backfill
-      // whose contracted graph ran the distributed loop lets the
-      // planner pick, instead of failing the append on the 8 GB
-      // broadcast cap (ADVICE r14).
-      val relabelMoved = relabel.filter(col("old_lab") =!= col("new_lab"))
-      val moved = old.join(
-          if (bounded) broadcast(relabelMoved) else relabelMoved,
-          old("cluster") === col("old_lab"))
-        .select(old("doc_id"), col("new_lab").as("cluster"))
-      // the remaining gen writes are independent (delta is persisted, the
-      // merge outputs sit on checkpointed CC blocks / driver arrays) —
-      // run them as concurrent jobs: at append scale each write is
-      // fixed-overhead-dominated, and serializing them was most of the
-      // append-vs-build fixed-cost gap the maint lane flags. The
-      // covered-ledger future joins the same drain point, so a merge
-      // failure above still propagates only after awaitAll has drained
-      // it (no orphaned writer racing a same-JVM retry).
-      ArtifactIo.awaitAll(Seq(coveredF,
-        Future(moved.unionByName(fresh).write.parquet(s"$genTmp/members")),
-        Future(Dedup.repIndexOf(delta).write.parquet(s"$genTmp/shingles"))))
       }
-      if (!fs.rename(genTmp, genP))
-        throw new java.io.IOException(s"clusterindex: cannot stage $genP")
-      ArtifactIo.swapManifest(fs, p, ManifestName, manifestJson(n + 1))
     } finally delta.unpersist()
   }
 
@@ -244,14 +229,10 @@ object ClusterIndex {
   def compact(spark: SparkSession, indexDir: String): Unit = {
     val n = readManifest(spark, indexDir)("gens").toInt
     if (n <= 1) return
-    val p = new Path(indexDir)
-    val fs = ArtifactIo.fsOf(spark, p)
-    val tmp = new Path(p.getParent, p.getName + ".build.tmp")
-    fs.delete(tmp, true)
-    members(spark, indexDir).write.parquet(s"$tmp/gen0/members")
-    readGens(spark, indexDir, n, "covered").write.parquet(s"$tmp/gen0/covered")
-    readGens(spark, indexDir, n, "shingles").write.parquet(s"$tmp/gen0/shingles")
-    ArtifactIo.writeText(fs, new Path(tmp, ManifestName), manifestJson(1))
-    ArtifactIo.publish(spark, indexDir, tmp)
+    ArtifactIo.commitBuild(spark, indexDir, ManifestName, manifestJson(1)) { tmp =>
+      members(spark, indexDir).write.parquet(s"$tmp/gen0/members")
+      readGens(spark, indexDir, n, "covered").write.parquet(s"$tmp/gen0/covered")
+      readGens(spark, indexDir, n, "shingles").write.parquet(s"$tmp/gen0/shingles")
+    }
   }
 }

@@ -257,23 +257,29 @@ object Dedup {
     // of the SORTED distinct hash set. A first cut built sorted-distinct
     // shingle STRING arrays per doc — string array_distinct/array_sort
     // are quadratic-ish per doc and cost ~8 s at sf0.1; this form is one
-    // codegen pass. Equal-set pairs come from ONE grouped pass (clusters
-    // are tiny — pair expansion is the within-cluster triangle); the
-    // LEFT SEMI join against the full candidate machinery is the pin: a
-    // pair the banding failed to surface is dropped here and the oracle
-    // (which has it) flags the loss.
+    // codegen pass.
     val sets = Tables.documents(spark, dir)
       .select(col("doc_id"),
         xxhash64(array_sort(shingle_hashes(split(trim(col("text")), "\\s+"), 3)))
           .as("sfp"))
-    val eqPairs = sets.groupBy(col("sfp"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+    equalPairsFound(sets, dedupMinhash(spark, dir))
+  }
+
+  /** The body of the three `_exact` pins: the (a_id < b_id) pairs of ids
+    * with equal fingerprints in `sets` (id, fingerprint) — one grouped
+    * pass, clusters are tiny — kept where the `candidates` machinery
+    * (a_id, b_id) surfaced them. A pair the machinery failed to surface
+    * is dropped here, and the oracle (which has it) flags the loss. */
+  private def equalPairsFound(sets: DataFrame, candidates: DataFrame): DataFrame = {
+    val Array(id, fp) = sets.columns
+    sets.groupBy(col(fp))
+      .agg(sort_array(collect_list(col(id))).as("ids"))
       .filter(size(col("ids")) >= 2)
       .select(explode(col("ids")).as("a_id"), col("ids"))
       .select(col("a_id"), explode(col("ids")).as("b_id"))
       .filter(col("a_id") < col("b_id"))
-    eqPairs.join(dedupMinhash(spark, dir).select(col("a_id"), col("b_id")),
-      Seq("a_id", "b_id"), "left_semi")
+      .join(candidates.select(col("a_id"), col("b_id")),
+        Seq("a_id", "b_id"), "left_semi")
   }
 
 
@@ -373,15 +379,8 @@ object Dedup {
     val e = Tables.embeddings(spark, dir)
     val nz = e.filter(
       aggregate(col("embedding"), lit(0.0d), (a, x) => a + abs(x)) > 0.0)
-    val fp = nz.select(col("vec_id"), xxhash64(col("embedding")).as("efp"))
-    val eqPairs = fp.groupBy(col("efp"))
-      .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(col("ids")).as("a_id"), col("ids"))
-      .select(col("a_id"), explode(col("ids")).as("b_id"))
-      .filter(col("a_id") < col("b_id"))
-    eqPairs.join(dedupEmbedding(spark, dir).select(col("a_id"), col("b_id")),
-      Seq("a_id", "b_id"), "left_semi")
+    equalPairsFound(nz.select(col("vec_id"), xxhash64(col("embedding")).as("efp")),
+      dedupEmbedding(spark, dir))
   }
 
   val dedupEmbeddingExactSql: String =
@@ -403,14 +402,7 @@ object Dedup {
     val sets = Tables.documents(spark, dir)
       .select(col("doc_id"),
         xxhash64(split(trim(col("text")), "\\s+")).as("tfp"))
-    val eqPairs = sets.groupBy(col("tfp"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(col("ids")).as("a_id"), col("ids"))
-      .select(col("a_id"), explode(col("ids")).as("b_id"))
-      .filter(col("a_id") < col("b_id"))
-    eqPairs.join(dedupSimhash(spark, dir).select(col("a_id"), col("b_id")),
-      Seq("a_id", "b_id"), "left_semi")
+    equalPairsFound(sets, dedupSimhash(spark, dir))
   }
 
   val dedupSimhashBandExactSql: String =
@@ -1043,15 +1035,35 @@ object Dedup {
     * `dedup_ngram_jaccard`; nothing rescans or re-pairs corpus×corpus. */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val isBatch = pmod(col("doc_id") * 2246822519L, lit(100L)) >= 80
-    val d = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"),
+    val d = incrementalPrep(Tables.documents(spark, dir))
+    val (hashes, shingles) = incrementalCorpusSide(d.filter(!isBatch))
+    incrementalFlags(d.filter(isBatch), hashes, shingles, seen = None)
+  }
+
+  /** Incremental dedup's doc prep: (doc_id, lang, h = content md5,
+    * ng = hashed 3-gram shingle set, sz = |ng|). */
+  private[graft] def incrementalPrep(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("lang"),
         md5(to_binary(col("text"), lit("utf-8"))).as("h"),
         shingle_hashes(split(trim(col("text")), "\\s+"), 3).as("ng"))
       .withColumn("sz", size(col("ng")).cast("long"))
-    val corpus = d.filter(!isBatch)
-    val batch = d.filter(isBatch)
+
+  /** The corpus side of incremental dedup over prepped corpus docs: its
+    * distinct content hashes (h) and its (lang, c_id, c_sz, sh) shingle
+    * inverted index. */
+  private[graft] def incrementalCorpusSide(corpus: DataFrame): (DataFrame, DataFrame) =
+    (corpus.select(col("h")).distinct(),
+      corpus.select(col("lang"), col("doc_id").as("c_id"),
+        col("sz").as("c_sz"), explode(col("ng")).as("sh")))
+
+  /** The audit flags of prepped `batch` docs against a corpus side
+    * (`hashes`, `shingles`). A batch doc is `exact_batch` when a
+    * smaller-id twin is in the batch, or when its hash is in `seen`
+    * (hashes of batches ingested before this one). */
+  private[graft] def incrementalFlags(batch: DataFrame, hashes: DataFrame,
+      shingles: DataFrame, seen: Option[DataFrame]): DataFrame = {
     val exactCorpus = batch
-      .join(corpus.select(col("h")).distinct(), Seq("h"), "left_semi")
+      .join(hashes, Seq("h"), "left_semi")
       .select(col("doc_id")).withColumn("exact_corpus", lit(1L))
     // batch-internal losers: everyone above the min doc_id of their
     // content group. An aggregation + self-join instead of a row_number
@@ -1060,15 +1072,17 @@ object Dedup {
     // the jaccard rep-collapse; rn > 1 ⇔ doc_id > min(doc_id), ids
     // unique)
     val minIds = batch.groupBy(col("h")).agg(min(col("doc_id")).as("min_id"))
-    val exactBatch = batch.select(col("h"), col("doc_id"))
+    val withinBatch = batch.select(col("h"), col("doc_id"))
       .join(minIds, Seq("h"))
       .filter(col("doc_id") > col("min_id"))
-      .select(col("doc_id")).withColumn("exact_batch", lit(1L))
-    val cx = corpus.select(col("lang"), col("doc_id").as("c_id"),
-      col("sz").as("c_sz"), explode(col("ng")).as("sh"))
+      .select(col("doc_id"))
+    val exactBatch = seen.fold(withinBatch) { s =>
+      withinBatch.unionByName(
+        batch.join(s, Seq("h"), "left_semi").select(col("doc_id"))).distinct()
+    }.withColumn("exact_batch", lit(1L))
     val bx = batch.select(col("lang"), col("doc_id").as("b_id"),
       col("sz").as("b_sz"), explode(col("ng")).as("sh"))
-    val nearDup = cx.join(bx, Seq("lang", "sh"))
+    val nearDup = shingles.join(bx, Seq("lang", "sh"))
       .groupBy(col("b_id"), col("c_id"), col("c_sz"), col("b_sz"))
       .agg(count(lit(1)).as("inter"))
       .filter(col("inter").cast("double") /

@@ -484,23 +484,14 @@ object Streaming {
     * orders and writes its own parquet directly
     * (GraftDB.appendDocumentsAt). No row ever visits the driver, and the
     * per-block Overwrite write makes a retried micro-batch idempotent.
-    * Returns the started query; callers own its lifecycle. */
+    * It is [[ingestWithRollup]] with no rollup bound. Returns the
+    * started query; callers own its lifecycle. */
   def ingestToDb(spark: SparkSession, dir: String, db: graft.api.GraftDB,
       dbName: String, coll: String, ttlNanos: Long = 0L,
       nowNanos: () => Long = WallClockNanos)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    db.createCollection(dbName, coll)
-    val blockBase = db.nextBlockId(dbName, coll)
-    withTtl(readEventStream(spark, dir), ttlNanos, nowNanos).toDF()
-      .select(to_json(struct(col("event_id"), col("user_id"),
-        col("event_type"), col("value"))).as("doc"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) db.appendDocumentsAt(dbName, coll, blockBase + batchId, batch)
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestWithRollup(spark, dir, db, dbName, coll, maxTailBytes = Long.MaxValue,
+      ttlNanos = ttlNanos, nowNanos = nowNanos)
 
   /** Streaming rollup executor: the intake above plus the reference's
     * periodic rollup loop (rollup_executor.rs:256 `process`) folded into

@@ -2,12 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.shingle_hashes
+import graft.pipeline.Dedup
 
 /** STREAMING INCREMENTAL DEDUP — `Dedup.dedupIncremental`'s audit flags
-  * computed per micro-batch against a PERSISTED corpus artifact, the
-  * continuous-ingestion twin of the batch query: documents arrive on a
-  * file stream, each micro-batch is flagged
+  * computed per micro-batch against a PERSISTED corpus artifact: it runs
+  * Dedup's bodies (`incrementalPrep`, `incrementalCorpusSide`,
+  * `incrementalFlags`) over each increment. Documents arrive on a file
+  * stream, and each micro-batch is flagged
   *   exact_corpus   content hash already present in the corpus artifact
   *   exact_batch    a smaller-id twin exists among batch docs INGESTED
   *                  SO FAR (earlier micro-batches via the persisted seen
@@ -33,35 +34,24 @@ import graft.functions.GraftFunctions.shingle_hashes
 object StreamingDedup {
 
   /** Build the corpus-side artifact: `hashes/` (distinct content md5)
-    * and `shingles/` (lang, sh, c_id, c_sz) — the two tables the batch
+    * and `shingles/` (lang, c_id, c_sz, sh) — the two tables the batch
     * query derives from the corpus slice on every run, persisted once
     * here (a real deployment refreshes them when the corpus version
     * bumps, not per arriving batch). */
   def writeCorpusIndex(spark: SparkSession, corpus: DataFrame,
       artifactDir: String): Unit = {
-    val d = prep(corpus)
-    d.select(col("h")).distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$artifactDir/hashes")
-    d.select(col("lang"), col("doc_id").as("c_id"), col("sz").as("c_sz"),
-        explode(col("ng")).as("sh"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$artifactDir/shingles")
+    val (hashes, shingles) = Dedup.incrementalCorpusSide(Dedup.incrementalPrep(corpus))
+    hashes.write.mode(SaveMode.Overwrite).parquet(s"$artifactDir/hashes")
+    shingles.write.mode(SaveMode.Overwrite).parquet(s"$artifactDir/shingles")
   }
 
-  /** The shared doc prep (identical to `Dedup.dedupIncremental`):
-    * content hash + hashed 3-gram shingle set. */
-  private def prep(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("lang"),
-        md5(to_binary(col("text"), lit("utf-8"))).as("h"),
-        shingle_hashes(split(trim(col("text")), "\\s+"), 3).as("ng"))
-      .withColumn("sz", size(col("ng")).cast("long"))
-
-  /** Seen-hash state from every micro-batch before `batchId` (empty
-    * frame when none). Each batch's dir is self-contained, so a
-    * replayed batch reads exactly the state its first run read. Listed
-    * through the Hadoop FS API — the state dir lives wherever the
-    * checkpoint does (HDFS/S3 on a cluster), not only on local disk. */
+  /** Seen-hash state from every micro-batch before `batchId` (None when
+    * none). Each batch's dir is self-contained, so a replayed batch reads
+    * exactly the state its first run read. Listed through the Hadoop FS
+    * API — the state dir lives wherever the checkpoint does (HDFS/S3 on a
+    * cluster), not only on local disk. */
   private def readSeen(spark: SparkSession, stateDir: String,
-      batchId: Long): DataFrame = {
+      batchId: Long): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(stateDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs =
@@ -69,53 +59,17 @@ object StreamingDedup {
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
         .filter(_.getPath.getName.drop(6).toLong < batchId)
         .map(_.getPath.toString)
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.StringType))))
-    else spark.read.parquet(dirs: _*)
+    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
   /** One micro-batch's audit flags (package-private for the spec). */
   private[streaming] def microBatchFlags(spark: SparkSession,
       artifactDir: String, stateDir: String, mb: DataFrame,
-      batchId: Long): DataFrame = {
-    val d = prep(mb)
-    val hashes = spark.read.parquet(s"$artifactDir/hashes")
-    val shingles = spark.read.parquet(s"$artifactDir/shingles")
-    val exactCorpus = d.join(hashes, Seq("h"), "left_semi")
-      .select(col("doc_id")).withColumn("exact_corpus", lit(1L))
-    // within-mb twin rule (same aggregation+join shape as the batch
-    // query) ∪ hashes from earlier micro-batches: under doc_id-ordered
-    // arrival this is exactly "a smaller-id twin exists in the slice"
-    val minIds = d.groupBy(col("h")).agg(min(col("doc_id")).as("min_id"))
-    val withinMb = d.select(col("h"), col("doc_id"))
-      .join(minIds, Seq("h"))
-      .filter(col("doc_id") > col("min_id"))
-      .select(col("doc_id"))
-    val fromSeen = d.join(readSeen(spark, stateDir, batchId), Seq("h"), "left_semi")
-      .select(col("doc_id"))
-    val exactBatch = withinMb.unionByName(fromSeen).distinct()
-      .withColumn("exact_batch", lit(1L))
-    val bx = d.select(col("lang"), col("doc_id").as("b_id"),
-      col("sz").as("b_sz"), explode(col("ng")).as("sh"))
-    val nearDup = shingles.join(bx, Seq("lang", "sh"))
-      .groupBy(col("b_id"), col("c_id"), col("c_sz"), col("b_sz"))
-      .agg(count(lit(1)).as("inter"))
-      .filter(col("inter").cast("double") /
-        (col("c_sz") + col("b_sz") - col("inter")) >= 0.5)
-      .select(col("b_id").as("doc_id")).distinct()
-      .withColumn("neardup_corpus", lit(1L))
-    d.select(col("doc_id"))
-      .join(exactCorpus, Seq("doc_id"), "left")
-      .join(exactBatch, Seq("doc_id"), "left")
-      .join(nearDup, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("exact_corpus", "exact_batch", "neardup_corpus"))
-      .withColumn("kept",
-        when(col("exact_corpus") + col("exact_batch") + col("neardup_corpus") === 0, 1L)
-          .otherwise(0L))
-  }
+      batchId: Long): DataFrame =
+    Dedup.incrementalFlags(Dedup.incrementalPrep(mb),
+      spark.read.parquet(s"$artifactDir/hashes"),
+      spark.read.parquet(s"$artifactDir/shingles"),
+      seen = readSeen(spark, stateDir, batchId))
 
   /** The streaming lane: documents matching `glob` under `srcDir` stream
     * in (doc_id-ordered files; `filesPerTrigger` bounds batch size),
@@ -142,7 +96,7 @@ object StreamingDedup {
               .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
             // seen-state AFTER the flags (a replayed batch must not see
             // its own hashes); Overwrite keeps the replay idempotent
-            prep(cached).select(col("h")).distinct()
+            Dedup.incrementalPrep(cached).select(col("h")).distinct()
               .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/batch=$batchId")
           } finally cached.unpersist()
         }

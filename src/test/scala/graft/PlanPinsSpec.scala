@@ -86,6 +86,46 @@ class PlanPinsSpec extends SparkSpec {
     assert(shuffles(p) === 1) // the per-query top-k window, nothing else
   }
 
+  private def count(plan: String, node: String): Int =
+    plan.linesIterator.count(_.contains(node))
+
+  // The in-session ANN searches and dedup_incremental share their bodies
+  // with AnnIndex's persisted searches and StreamingDedup. Each pin is
+  // the plan's shuffle count, whether it broadcasts, and its nested-loop
+  // joins: only the designed broadcast ones (queries × corpus on `!=`,
+  // vectors × the C-row centroid table), never a CartesianProduct.
+  test("ann_lsh: two shuffles, broadcast rescore, no nested-loop join") {
+    val p = planOf("ann_lsh")
+    assert(shuffles(p) === 2, p)
+    assert(p.contains("BroadcastExchange"), p)
+    assert(count(p, "BroadcastNestedLoopJoin") === 0, p)
+    assert(count(p, "CartesianProduct") === 0, p)
+  }
+
+  test("ann_ivf: five shuffles, both centroid assignments broadcast nested-loop") {
+    val p = planOf("ann_ivf")
+    assert(shuffles(p) === 5, p)
+    assert(p.contains("BroadcastExchange"), p)
+    assert(count(p, "BroadcastNestedLoopJoin") === 2, p)
+    assert(count(p, "CartesianProduct") === 0, p)
+  }
+
+  test("ann_pq: one shuffle, the ADC scan is the one broadcast nested-loop") {
+    val p = planOf("ann_pq")
+    assert(shuffles(p) === 1, p)
+    assert(p.contains("BroadcastExchange"), p)
+    assert(count(p, "BroadcastNestedLoopJoin") === 1, p)
+    assert(count(p, "CartesianProduct") === 0, p)
+  }
+
+  test("dedup_incremental: five shuffles, broadcasts, no nested-loop join") {
+    val p = planOf("dedup_incremental")
+    assert(shuffles(p) === 5, p)
+    assert(p.contains("BroadcastExchange"), p)
+    assert(count(p, "BroadcastNestedLoopJoin") === 0, p)
+    assert(count(p, "CartesianProduct") === 0, p)
+  }
+
   test("ann_range_search: broadcast queries, zero shuffles, one corpus scan") {
     val p = planOf("ann_range_search")
     assert(shuffles(p) === 0)

@@ -77,6 +77,21 @@ class GraftDBJobsSpec extends SparkSpec {
     assert(query.count() === 4)
   }
 
+  test("building a selective indexed query runs one job: the id probe") {
+    val db = populated()
+    db.addIndex("d", "c", "t", "Int64Key")
+    val q = StructuredQuery(where = Some(FieldFilter("t", Op.Eq, FieldValue.I64(5))))
+    // a cursor on the indexed field also checks the index's key type
+    val paged = q.copy(orderBy = Seq(graft.docstore.Order("t", keyType = FieldValue.I64(0))),
+      startAt = Some(graft.docstore.Cursor(Seq(Some(FieldValue.I64(5))))))
+    val (df, n) = jobsOf(db.queryWithIndex("d", "c", q))
+    val (pagedDf, nPaged) = jobsOf(db.queryWithIndex("d", "c", paged))
+    // 2 before the index read took its key type from the index dir
+    assert((n, nPaged) === ((1, 1)))
+    assert(df.count() === 4)
+    assert(pagedDf.count() === 4)
+  }
+
   test("each scan of a manifest launches no job") {
     val db = populated()
     val scans = Seq(db.scanRollupRecords _, db.scanGcRecords _,
