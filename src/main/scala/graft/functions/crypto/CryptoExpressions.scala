@@ -11,8 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * sender recovery (/root/reference/src/node/src/mutation_utils.rs:
   * 75-127). Codegen is a static call into the crypto kernel, so the
   * expression stays inside whole-stage codegen; the work is per-row
-  * independent (two scalar multiplications + keccak) and scales
-  * linearly with executors.
+  * independent (one joint u1·G + u2·R pass + keccak), so it scales
+  * across input partitions. It does not spread a single partition: a
+  * single-file input (sf0.1, the skew corpus) runs it on one task.
   */
 case class RecoverSigner(payload: Expression, sig: Expression)
     extends BinaryExpression with ExpectsInputTypes {

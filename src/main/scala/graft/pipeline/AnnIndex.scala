@@ -171,6 +171,14 @@ object AnnIndex {
     } finally fresh.unpersist()
   }
 
+  /** Auto-compaction for the maintenance tick — ClusterIndex
+    * .compactIfDue's twin: fold when the committed gen count reaches
+    * `maxGens`, so repeated appends hold O(maxGens) gen dirs. Crash
+    * mid-compact is harmless (two-rename publish). */
+  def compactIfDue(spark: SparkSession, indexDir: String, maxGens: Int = 8): Unit =
+    if (readManifest(spark, indexDir)("gens").toInt >= maxGens)
+      compact(spark, indexDir)
+
   /** Fold every committed generation back into a single gen0 — the
     * rollup-compaction story for this artifact (ClusterIndex.compact's
     * twin): each append adds a gen dir, and searches pay a per-gen
@@ -181,14 +189,6 @@ object AnnIndex {
     * Staged as a full `.build.tmp` and published by the same two-rename
     * discipline as build — a crash anywhere leaves the multi-gen index
     * intact and serving. */
-  /** Auto-compaction for the maintenance tick — ClusterIndex
-    * .compactIfDue's twin: fold when the committed gen count reaches
-    * `maxGens`, so repeated appends hold O(maxGens) gen dirs. Crash
-    * mid-compact is harmless (two-rename publish). */
-  def compactIfDue(spark: SparkSession, indexDir: String, maxGens: Int = 8): Unit =
-    if (readManifest(spark, indexDir)("gens").toInt >= maxGens)
-      compact(spark, indexDir)
-
   def compact(spark: SparkSession, indexDir: String): Unit = {
     val man = readManifest(spark, indexDir)
     val n = man("gens").toInt

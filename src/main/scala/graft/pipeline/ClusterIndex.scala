@@ -208,13 +208,6 @@ object ClusterIndex {
       .agg(max_by(col("cluster"), col("__gen")).as("cluster"))
   }
 
-  /** Fold every committed generation back into a single gen0 — the
-    * rollup-compaction story for this artifact: reads after many appends
-    * pay a per-gen listing + a latest-wins shuffle; compaction restores
-    * the build-fresh shape. Staged as a full `.build.tmp` (resolved
-    * membership + unioned ledgers) and published by the same two-rename
-    * discipline as build, so a crash anywhere leaves the multi-gen
-    * artifact intact and serving. */
   /** Auto-compaction policy for the maintenance tick (the
     * `GraftDB.rollupIfDue`/compactRollups pattern): fold when the gen
     * count reaches `maxGens`. Called by the streaming lane's foreachBatch
@@ -226,6 +219,13 @@ object ClusterIndex {
     if (readManifest(spark, indexDir)("gens").toInt >= maxGens)
       compact(spark, indexDir)
 
+  /** Fold every committed generation back into a single gen0 — the
+    * rollup-compaction story for this artifact: reads after many appends
+    * pay a per-gen listing + a latest-wins shuffle; compaction restores
+    * the build-fresh shape. Staged as a full `.build.tmp` (resolved
+    * membership + unioned ledgers) and published by the same two-rename
+    * discipline as build, so a crash anywhere leaves the multi-gen
+    * artifact intact and serving. */
   def compact(spark: SparkSession, indexDir: String): Unit = {
     val n = readManifest(spark, indexDir)("gens").toInt
     if (n <= 1) return
