@@ -5,9 +5,17 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.Binary
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.{JsonMethods, Serialization}
@@ -41,7 +49,8 @@ import scala.jdk.CollectionConverters._
   * A mutation row = (block, order, action, id, doc, mask) — the exact
   * MutationHeader ordering key of the reference. Live state is the
   * latest-wins fold with DocumentMask merge and delete tombstones,
-  * computed distributed (one shuffle on doc id).
+  * computed on the driver when a read's input is small, else
+  * distributed (one shuffle on doc id).
   *
   * Scale posture: the log is append-only parquet partitioned by block
   * range; materialization shuffles once on id; rollup compaction is the
@@ -458,9 +467,9 @@ class GraftDB(spark: SparkSession, root: String,
     }
   }
 
-  /** Live document state: distributed fold of the log.
-    * groupByKey(id) → chronological replay per doc (each group is the
-    * handful of mutations for one doc — bounded state, shuffles once). */
+  /** Live document state: `foldLog` of the whole committed log, folded
+    * on the driver when its input fits the broadcast bound, else by Spark
+    * (groupByKey(id), one shuffle). */
   def collection(db: String, coll: String): DocCollection =
     collectionAt(db, coll, Long.MaxValue)
 
@@ -476,7 +485,11 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** Materialize the folded state as of `block` (defaults to the last
     * stamped block; a later block is clamped to it) under snapshots/ and
-    * record it in the manifest. Returns (block, docCount). */
+    * record it in the manifest. Returns (block, docCount). The state is
+    * written sorted by `_id`, so its files hold disjoint id ranges that a
+    * point read prunes by footer stats. The count comes from the fold:
+    * its rows on the driver, the written files' footers after a Spark
+    * fold — never a read-and-count job. */
   def snapshot(db: String, coll: String, block: Long = Long.MinValue): (Long, Long) =
     withLock(collLock(db, coll)) {
       // the fold stops at the committed block, so the snapshot holds the
@@ -485,9 +498,16 @@ class GraftDB(spark: SparkSession, root: String,
       val last = currentState(db, coll).lastBlock
       val at = if (block == Long.MinValue) last else math.min(block, last)
       val dir = snapPath(db, coll, at)
-      foldLog(db, coll, at).write.mode(SaveMode.Overwrite).parquet(dir)
+      val n = driverFold(db, coll, at, None) match {
+        case Some(f) => // already sorted: one write job over its slices
+          foldedFrame(f.rows).write.mode(SaveMode.Overwrite).parquet(dir)
+          f.rows.length.toLong
+        case None =>
+          sparkFold(db, coll, at, None).orderBy("_id")
+            .write.mode(SaveMode.Overwrite).parquet(dir)
+          readableFiles(dir).map(parquet.rowCount).sum
+      }
       failpoint("snapshot:afterData")
-      val n = spark.read.schema(snapshotSchema).parquet(dir).count()
       appendManifest(db, coll, "snapshot", Seq(Row(at, n, dir)),
         snapshotManifestSchema)
       (at, n)
@@ -514,30 +534,136 @@ class GraftDB(spark: SparkSession, root: String,
   def collectionAt(db: String, coll: String, block: Long): DocCollection =
     DocCollection(coll, foldLog(db, coll, block))
 
-  /** Point-lookup fold: replay ONLY the given doc ids. The id filter is
-    * applied to the raw mutation-log scan — ids are In-pushed into the
-    * parquet reader. ADD mutations are id-disjoint per block file (ids
-    * encode (block, order)), so row-group min/max stats skip every block
-    * whose adds cannot contain the ids; UPDATE/DELETE mutations carry the
-    * ORIGINAL doc id into later blocks, widening those blocks' id ranges
-    * and reducing (never breaking — the In filter still matches all of a
-    * doc's mutations) the skip rate on update-heavy logs. A selective
-    * lookup on an append-mostly log thus reads O(matching blocks) and
-    * shuffles only the matching mutations instead of folding the whole
-    * log — the B-tree fetch analog of the reference's `doc_store.rs
+  /** Point-lookup fold: replay ONLY the given doc ids. Both executors
+    * prune by the ids: the driver fold keeps the snapshot and log row
+    * groups whose `_id`/`id` footer range holds one of them, and the
+    * Spark fold (past the bound) In-pushes them into the parquet reader.
+    * ADD mutations are id-disjoint per block file (ids encode (block,
+    * order)) and snapshots are sorted by `_id`, so the stats skip every
+    * block whose adds cannot contain the ids; UPDATE/DELETE mutations
+    * carry the ORIGINAL doc id into later blocks, widening those blocks'
+    * id ranges and reducing (never breaking — the id filter still matches
+    * all of a doc's mutations) the skip rate on update-heavy logs. A
+    * selective lookup on an append-mostly log thus reads O(matching
+    * blocks) — the B-tree fetch analog of the reference's `doc_store.rs
     * get_doc`. */
   def collectionForIds(db: String, coll: String, ids: Seq[Long]): DocCollection =
     DocCollection(coll, foldLog(db, coll, Long.MaxValue, Some(ids)))
 
   /** GetDoc RPC analog (db3_indexer.proto:64; doc_store.rs:240 get_doc):
     * one doc's live JSON by id, or None if absent/tombstoned. Reads
-    * through the pruned point-lookup fold above — O(matching blocks). */
+    * through the pruned point-lookup fold above — O(matching blocks), on
+    * the driver with no Spark job while those blocks fit the bound. */
   def getDoc(db: String, coll: String, id: Long): Option[String] =
     collectionForIds(db, coll, Seq(id)).df
       .select("doc").head(1).headOption.map(_.getString(0))
 
+  /** The live state as of `block` (ids `onlyIds` only, when given), as
+    * (_id, doc). Two executors run the same `replay` per id: the driver
+    * fold when the row groups the read must decode (pruned by their
+    * footer stats on block and id) hold at most the session's
+    * `spark.sql.autoBroadcastJoinThreshold` uncompressed bytes — a
+    * `LocalRelation`, no Spark job — else the Spark fold. */
   private def foldLog(db: String, coll: String, block: Long,
-      onlyIds: Option[Seq[Long]] = None): DataFrame = {
+      onlyIds: Option[Seq[Long]] = None): DataFrame =
+    driverFold(db, coll, block, onlyIds)
+      .fold(sparkFold(db, coll, block, onlyIds))(f => foldedFrame(f.rows))
+
+  private def foldedFrame(rows: Seq[(Long, String)]): DataFrame =
+    spark.createDataFrame(rows.map { case (id, doc) => Row(id, doc) }.asJava, foldSchema)
+
+  /** Log and snapshot rows the driver fold has decoded, over the life of
+    * this instance (the pruning specs read it). */
+  private[api] val driverRowsDecoded = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The driver executor of `foldLog`: the folded state sorted by `_id`
+    * and the files it decoded, or None when the read's input exceeds the
+    * broadcast bound (a negative bound turns the driver fold off). It
+    * plans in `mutationLog`'s order — the state cell, the snapshot
+    * record, the tail listing, then the rollup manifests — and admits
+    * the same files Spark's reader does. A file a rollup's GC or a
+    * compaction deleted after the listing re-plans the read; the new
+    * plan finds its rows through the manifests. */
+  private[api] def driverFold(db: String, coll: String, block: Long,
+      onlyIds: Option[Seq[Long]]): Option[DriverFold] = {
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+    def attempt(left: Int): Option[DriverFold] =
+      try driverFoldOnce(db, coll, block, onlyIds, bound)
+      catch { case _: java.io.FileNotFoundException if left > 0 => attempt(left - 1) }
+    if (bound < 0) None else attempt(3)
+  }
+
+  private def driverFoldOnce(db: String, coll: String, block: Long,
+      onlyIds: Option[Seq[Long]], bound: Long): Option[DriverFold] = {
+    val committed = readCell[CollState](statePath(db, coll))
+      .fold(block)(c => math.min(block, c.lastBlock))
+    val snap = latestSnapshotAt(db, coll, committed)
+    val tail = readableFiles(mutPath(db, coll))
+    val store = batches(db, coll)
+    // replayed blocks lie above the snapshot; the tail's above the
+    // rollup store's too (see `mutationLog`)
+    val snapAt = snap.map(_._1)
+    val tailAfter =
+      if (store.committedHi >= 0) Some(snapAt.fold(store.committedHi)(math.max(_, store.committedHi)))
+      else snapAt
+    // (file, snapshot seed?, blocks replayed only above this)
+    val inputs: Seq[(java.io.File, Boolean, Option[Long])] =
+      snap.toSeq.flatMap(s => readableFiles(s._2)).map((_, true, None)) ++
+        store.live.flatMap(b => readableFiles(b.path)).map((_, false, snapAt)) ++
+        tail.map((_, false, tailAfter))
+    val sortedIds = onlyIds.map(_.distinct.sorted.toArray)
+    val idSet = onlyIds.map(_.toSet)
+    def admits(rg: BlockMetaData, seed: Boolean, after: Option[Long]): Boolean =
+      sortedIds.forall(statsAdmitAny(rg, if (seed) "_id" else "id", _)) &&
+        (seed || statsAdmit[java.lang.Long](rg, "block",
+          after.map(a => java.lang.Long.valueOf(a + 1)), Some(java.lang.Long.valueOf(committed))))
+    readSmall(inputs.map { case (f, seed, after) => f -> (admits(_, seed, after)) }, bound) { picked =>
+      val muts = picked.zip(inputs).flatMap { case ((_, r, groups), (_, seed, after)) =>
+        val rows = parquet.decode(r, groups, if (seed) snapshotSchema else mutationSchema).toVector
+        driverRowsDecoded.addAndGet(rows.length.toLong)
+        if (seed)
+          rows.map(row => MutationRow(snapAt.get, Int.MinValue, ActionAdd,
+            row.getLong(0), row.getString(1), null))
+        else
+          rows.map(row => MutationRow(row.getLong(0), row.getInt(1), row.getInt(2),
+              row.getLong(3), row.getString(4), row.getString(5)))
+            .filter(m => after.forall(m.block > _) && m.block <= committed)
+      }
+      DriverFold(
+        muts.filter(m => idSet.forall(_(m.id))).groupBy(_.id).toSeq
+          .flatMap { case (id, ms) => replay(ms).map(id -> _) }
+          .sortBy(_._1),
+        picked.collect { case (f, _, groups) if groups.nonEmpty => f.getPath })
+    }
+  }
+
+  /** A driver read: opens each input file, keeps the row groups its
+    * filter admits, and runs `body` over them — or returns None, having
+    * decoded nothing, once their uncompressed bytes pass `bound`. The
+    * footers come first: the bytes to decode are known before any row
+    * is. */
+  private def readSmall[T](inputs: Seq[(java.io.File, BlockMetaData => Boolean)], bound: Long)(
+      body: Seq[(java.io.File, ParquetFileReader, Seq[Int])] => T): Option[T] = {
+    val open = scala.collection.mutable.ArrayBuffer[(java.io.File, ParquetFileReader, Seq[Int])]()
+    try {
+      var bytes = 0L
+      val it = inputs.iterator
+      while (bytes <= bound && it.hasNext) {
+        val (f, keep) = it.next()
+        val r = parquet.open(f)
+        val rgs = r.getRowGroups.asScala
+        val groups = rgs.indices.filter(i => keep(rgs(i)))
+        open += ((f, r, groups))
+        bytes += groups.map(rgs(_).getTotalByteSize).sum
+      }
+      if (bytes > bound) None else Some(body(open.toSeq))
+    } finally open.foreach(_._2.close())
+  }
+
+  /** The Spark executor of `foldLog`: a groupByKey/mapGroups replay over
+    * the snapshot seed plus the log after it. */
+  private[api] def sparkFold(db: String, coll: String, block: Long,
+      onlyIds: Option[Seq[Long]]): DataFrame = {
     import spark.implicits._
     // COMMIT POINT = the state cell (Delta-style: data files land first,
     // invisible; the atomic cell flip publishes them). Rows whose block
@@ -567,28 +693,7 @@ class GraftDB(spark: SparkSession, root: String,
     filtered
       .as[MutationRow]
       .groupByKey(_.id)
-      .mapGroups { (id, muts) =>
-        // a crashed-then-retried append lands the same (block, order)
-        // stamp twice (at-least-once data, exactly-once commit); replay
-        // each stamp once — duplicates are adjacent after the sort
-        val ordered = muts.toSeq.sortBy(m => (m.block, m.order))
-          .foldLeft(List.empty[MutationRow]) {
-            case (acc @ (p :: _), m)
-                if p.block == m.block && p.order == m.order => acc
-            case (acc, m) => m :: acc
-          }.reverse
-        var doc: String = null
-        ordered.foreach { m =>
-          m.action match {
-            case ActionAdd => doc = m.doc
-            case ActionDelete => doc = null
-            case ActionUpdate =>
-              if (doc != null) doc = mergeMasked(doc, m.doc, Option(m.mask))
-            case _ =>
-          }
-        }
-        (id, doc)
-      }
+      .mapGroups((id, muts) => (id, replay(muts.toSeq).orNull))
       .filter(_._2 != null)
       .toDF("_id", "doc")
   }
@@ -769,15 +874,14 @@ class GraftDB(spark: SparkSession, root: String,
       .write.mode(SaveMode.Append).parquet(s"${manifestPath(db, coll)}/$kind")
 
   /** One manifest's records, decoded on the driver — no Spark job. Reads
-    * exactly the part files Spark's reader reads: names starting with `_`
-    * or `.` (`_SUCCESS`, `.crc` siblings, a crashed append's
-    * `_temporary/`) are skipped. Empty before the first append. */
+    * exactly the part files Spark's reader reads (`readableFiles`).
+    * Empty before the first append. */
   private def readManifest(db: String, coll: String, kind: String,
       schema: StructType): Seq[Row] =
-    listDir(s"${manifestPath(db, coll)}/$kind")
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-      .flatMap(f => readParquetRows(f, schema, spark.sparkContext.hadoopConfiguration))
+    readableFiles(s"${manifestPath(db, coll)}/$kind").flatMap(parquet.rows(_, schema))
+
+  /** The driver's parquet reader, on the session's Hadoop conf. */
+  private lazy val parquet = new DriverParquet(spark.sparkContext.hadoopConfiguration)
 
   /** A manifest as a local DataFrame over `readManifest`'s rows, with
     * the nullable schema `spark.read.schema(schema)` returns. */
@@ -1156,10 +1260,10 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** Read a materialized index (idx_key, _id). */
   def index(db: String, coll: String, path: String): DataFrame =
-    spark.read.schema(StructType(Seq(
-        StructField("idx_key", keyType(db, coll, path)),
-        StructField("_id", LongType))))
-      .parquet(indexDir(db, coll, path))
+    spark.read.schema(indexSchema(db, coll, path)).parquet(indexDir(db, coll, path))
+
+  private def indexSchema(db: String, coll: String, path: String): StructType =
+    StructType(Seq(StructField("idx_key", keyType(db, coll, path)), StructField("_id", LongType)))
 
   /** Whether a fresh index on `path` exists: built by `addIndex` with no
     * document write since. */
@@ -1168,17 +1272,25 @@ class GraftDB(spark: SparkSession, root: String,
       Files.exists(Paths.get(indexDir(db, coll, path), f)))
 
   /** Index-aware execution: when the query's leading field filter has a
-    * materialized index, evaluate the predicate against the index scan
-    * (sorted parquet — min/max row-group pruning on idx_key, tiny
-    * ReadSchema), then fetch the surviving `_id`s: a selective lookup
-    * In-pushes the id set into the log scan (block skip via row-group
-    * stats, O(matching blocks) read — `collectionForIds`), an
-    * unselective one left-semi joins distributed; remaining
+    * materialized index, evaluate the predicate against the index
+    * (sorted parquet — min/max row-group pruning on idx_key; read on the
+    * driver, no Spark job, while the admitted row groups fit the
+    * `spark.sql.autoBroadcastJoinThreshold` bound, else a Spark scan),
+    * then fetch the surviving `_id`s: a selective lookup (at most
+    * `MaxPushedIds`) folds only those ids (`collectionForIds`: driver or
+    * Spark fold, block skip via row-group stats, O(matching blocks)
+    * read), an unselective one left-semi joins distributed; remaining
     * filters/projection run as usual. Falls back to the plain fused
     * compiler when no index applies — the reference's planner does
     * exactly this over its EJDB index set
     * (doc_store.rs add_index / execute_query). */
-  def queryWithIndex(db: String, coll: String, q: StructuredQuery): DataFrame = {
+  def queryWithIndex(db: String, coll: String, q: StructuredQuery): DataFrame =
+    queryWithIndex(db, coll, q, driver = true)
+
+  /** `queryWithIndex`; with `driver = false` the probe and the id fold
+    * run on Spark whatever their size (the specs' entry to that path). */
+  private[api] def queryWithIndex(db: String, coll: String, q: StructuredQuery,
+      driver: Boolean): DataFrame = {
     import graft.docstore._
     // only scalar comparisons use the sorted index; membership/array ops
     // (and OR trees) fall back to the fused compiler
@@ -1251,48 +1363,78 @@ class GraftDB(spark: SparkSession, root: String,
       return DocStore.queryFused(collection(db, coll), q)
     val key = col("idx_key")
     // pick the scan: the where-filter's index wins; the cursor bound
-    // ANDs in when it binds the same field, else it serves alone
-    val (f, pred) = indexed match {
+    // ANDs in when it binds the same field, else it serves alone. Beside
+    // the predicate, an inclusive [lo, hi] key range it implies: the
+    // driver probe's row-group pruning bound
+    val (f, pred, lo, hi) = indexed match {
       case Some(FieldFilter(f0, op, v)) =>
         val lit0 = scalarLit(v)
-        val base = op match {
-          case Op.Eq => key === lit0
-          case Op.Neq => key =!= lit0
-          case Op.Lt => key < lit0
-          case Op.Le => key <= lit0
-          case Op.Gt => key > lit0
-          case Op.Ge => key >= lit0
+        val (base, l, h) = op match {
+          case Op.Eq => (key === lit0, Some(v), Some(v))
+          case Op.Neq => (key =!= lit0, None, None)
+          case Op.Lt => (key < lit0, None, Some(v))
+          case Op.Le => (key <= lit0, None, Some(v))
+          case Op.Gt => (key > lit0, Some(v), None)
+          case Op.Ge => (key >= lit0, Some(v), None)
           // membership/array/regex ops are filtered out by indexable() above
-          case _ => lit(true)
+          case _ => (lit(true), None, None)
         }
         cursorBound match {
-          case Some((cf, cv)) if cf == f0 => (f0, base && key >= scalarLit(cv))
-          case _ => (f0, base)
+          case Some((cf, cv)) if cf == f0 =>
+            (f0, base && key >= scalarLit(cv), l.orElse(Some(cv)), h)
+          case _ => (f0, base, l, h)
         }
       case None =>
         val (cf, cv) = cursorBound.get
-        (cf, key >= scalarLit(cv))
+        (cf, key >= scalarLit(cv), Some(cv), None)
     }
     val ids = index(db, coll, f).filter(pred).select(col("_id"))
     // Selective lookups (the indexed-Eq hot path) collect the small
-    // surviving id set and PUSH it into the log scan via
-    // collectionForIds — the parquet reader then skips every block
-    // whose id range excludes the set, so the lookup reads
-    // O(matching blocks), not the whole log. Unselective predicates
-    // keep the distributed left-semi join (never a big driver
-    // collect).
-    val probe = ids.limit(MaxPushedIds + 1).collect()
+    // surviving id set and PUSH it into the fold via collectionForIds —
+    // which then skips every block whose id range excludes the set, so
+    // the lookup reads O(matching blocks), not the whole log. The probe
+    // itself reads the index's row groups on the driver while those
+    // the key range admits fit the bound. Unselective predicates keep
+    // the distributed left-semi join (never a big driver collect).
+    val probed = (if (driver) driverIndex(db, coll, f, lo, hi) else None)
+      .fold(ids)(_.filter(pred).select(col("_id")))
+    val probe = probed.limit(MaxPushedIds + 1).collect().map(_.getLong(0)).toSeq
     val narrowed =
-      if (probe.length <= MaxPushedIds)
-        collectionForIds(db, coll, probe.map(_.getLong(0)).toSeq).df
-      else collection(db, coll).df
-        .join(ids, Seq("_id"), "left_semi")
+      if (probe.length > MaxPushedIds)
+        (if (driver) collection(db, coll).df else sparkFold(db, coll, Long.MaxValue, None))
+          .join(ids, Seq("_id"), "left_semi")
+      else if (driver) collectionForIds(db, coll, probe).df
+      else sparkFold(db, coll, Long.MaxValue, Some(probe))
     DocStore.queryFused(DocCollection(coll, narrowed), q.copy(where = rest))
   }
 
-  /** Max index-lookup ids pushed as an In filter into the log scan;
-    * beyond this the distributed semi-join path takes over. */
+  /** Max index-lookup ids pushed as an id filter into the fold; beyond
+    * this the distributed semi-join path takes over. */
   private val MaxPushedIds = 1024
+
+  /** A materialized index's rows as a `LocalRelation`, read on the
+    * driver from the row groups whose `idx_key` footer range meets
+    * [lo, hi] (an operand of another type than the key bounds nothing),
+    * or None when those exceed the broadcast bound. */
+  private def driverIndex(db: String, coll: String, path: String,
+      lo: Option[graft.docstore.FieldValue], hi: Option[graft.docstore.FieldValue]): Option[DataFrame] = {
+    import graft.docstore.FieldValue
+    val schema = indexSchema(db, coll, path)
+    val keep: BlockMetaData => Boolean = schema.head.dataType match {
+      case LongType =>
+        def v(b: Option[FieldValue]) = b.collect { case FieldValue.I64(x) => java.lang.Long.valueOf(x) }
+        statsAdmit[java.lang.Long](_, "idx_key", v(lo), v(hi))
+      case StringType =>
+        def v(b: Option[FieldValue]) = b.collect { case FieldValue.Str(x) => Binary.fromString(x) }
+        statsAdmit[Binary](_, "idx_key", v(lo), v(hi))
+      case _ => _ => true
+    }
+    readSmall(readableFiles(indexDir(db, coll, path)).map(_ -> keep),
+        spark.sessionState.conf.autoBroadcastJoinThreshold) { picked =>
+      spark.createDataFrame(
+        picked.flatMap { case (_, r, gs) => parquet.decode(r, gs, schema) }.toVector.asJava, schema)
+    }
+  }
 
   /** Metadata listings (db_store_v2.rs get_database_of_owner /
     * get_collection_of_database). The node-level `state/` dir (nonce +
@@ -1479,25 +1621,113 @@ object GraftDB {
   private def dirSize(dir: String): Long =
     listDir(dir).map(f => if (f.isFile) f.length() else dirSize(f.getPath)).sum
 
-  /** A parquet file's records as rows of `schema`, decoded on the driver
-    * with parquet-hadoop's example Group reader. A schema column the file
-    * lacks reads as null. Covers the column types the manifest schemas
-    * use: bigint, string and array<string>. */
-  private def readParquetRows(file: java.io.File, schema: StructType,
-      conf: org.apache.hadoop.conf.Configuration): Seq[Row] = {
-    val reader = ParquetReader.builder(new GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(file.toURI)).withConf(conf).build()
-    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-      new GenericRowWithSchema(
-        schema.fields.map(f => groupValue(g, f.name, f.dataType)), schema): Row
-    }.toVector
-    finally reader.close()
+  /** The per-id replay of the mutation fold, shared by both executors:
+    * drop repeated (block, order) stamps, order by stamp, and apply Add,
+    * Delete and Update (through `mergeMasked`; an update of an absent or
+    * tombstoned id is a no-op). Other actions are lifecycle rows and
+    * leave the doc alone. Returns the live doc, None when absent or
+    * deleted. A crashed-then-retried append lands the same stamp twice
+    * (at-least-once data, exactly-once commit); each stamp replays once,
+    * the first after the stable sort. */
+  private[api] def replay(muts: Seq[MutationRow]): Option[String] = {
+    var doc: String = null
+    var last: MutationRow = null
+    muts.sortBy(m => (m.block, m.order)).foreach { m =>
+      if (last == null || last.block != m.block || last.order != m.order) {
+        m.action match {
+          case ActionAdd => doc = m.doc
+          case ActionDelete => doc = null
+          case ActionUpdate =>
+            if (doc != null) doc = mergeMasked(doc, m.doc, Option(m.mask))
+          case _ =>
+        }
+      }
+      last = m
+    }
+    Option(doc)
   }
+
+  /** A driver fold's state, (_id, doc) sorted by `_id`, and the files
+    * whose row groups it decoded. */
+  private[api] final case class DriverFold(rows: Seq[(Long, String)], inputFiles: Seq[String])
+
+  /** The fold's output schema, on both executors. */
+  private val foldSchema: StructType = StructType(Seq(
+    StructField("_id", LongType, nullable = false),
+    StructField("doc", StringType, nullable = true)))
+
+  /** Parquet read on the driver, with one set of read options built from
+    * the session's Hadoop conf. (`ParquetReader.builder` made a fresh
+    * `Configuration` per file, whose first lookup re-parses the XML
+    * defaults: most of a small file's read cost.) */
+  private final class DriverParquet(conf: Configuration) {
+    private val options = HadoopReadOptions.builder(conf).build()
+
+    def open(file: java.io.File): ParquetFileReader =
+      ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file.toURI), conf), options)
+
+    /** All of a file's records as rows of `schema`. */
+    def rows(file: java.io.File, schema: StructType): Seq[Row] = {
+      val r = open(file)
+      try decode(r, r.getRowGroups.asScala.indices, schema).toVector finally r.close()
+    }
+
+    /** A file's record count, from its footer. */
+    def rowCount(file: java.io.File): Long = {
+      val r = open(file)
+      try r.getRecordCount finally r.close()
+    }
+
+    /** Row groups `groups` of an open file as rows of `schema`. A schema
+      * column the file lacks reads as null. */
+    def decode(r: ParquetFileReader, groups: Seq[Int], schema: StructType): Iterator[Row] = {
+      val fileSchema = r.getFooter.getFileMetaData.getSchema
+      val io = new ColumnIOFactory().getColumnIO(fileSchema)
+      groups.iterator.flatMap { i =>
+        val pages = r.readRowGroup(i)
+        val records = io.getRecordReader(pages, new GroupRecordConverter(fileSchema))
+        Iterator.fill(pages.getRowCount.toInt)(records.read()).map { g =>
+          new GenericRowWithSchema(
+            schema.fields.map(f => groupValue(g, f.name, f.dataType)), schema): Row
+        }
+      }
+    }
+  }
+
+  /** The files Spark's reader reads under `dir`, nested dirs included:
+    * names starting with `_` or `.` (`_SUCCESS`, `.crc` siblings, a
+    * crashed write's `_temporary/`) are skipped, files and dirs alike. */
+  private def readableFiles(dir: String): Seq[java.io.File] =
+    listDir(dir).filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .sortBy(_.getName)
+      .flatMap(f => if (f.isDirectory) readableFiles(f.getPath) else Seq(f))
+
+  /** Whether a row group's footer stats on `column` admit a value in
+    * [lo, hi] (None = unbounded). A column without min/max admits all. */
+  private def statsAdmit[T <: Comparable[T]](rg: BlockMetaData, column: String,
+      lo: Option[T], hi: Option[T]): Boolean =
+    rg.getColumns.asScala.find(_.getPath.toDotString == column)
+      .map(_.getStatistics.asInstanceOf[Statistics[T]])
+      .filter(s => s != null && s.hasNonNullValue)
+      .forall(s => lo.forall(s.compareMaxToValue(_) >= 0) && hi.forall(s.compareMinToValue(_) <= 0))
+
+  /** Whether a row group's `column` range holds any of `sorted` (ascending). */
+  private def statsAdmitAny(rg: BlockMetaData, column: String, sorted: Array[Long]): Boolean =
+    rg.getColumns.asScala.find(_.getPath.toDotString == column)
+      .map(_.getStatistics.asInstanceOf[Statistics[java.lang.Long]])
+      .filter(s => s != null && s.hasNonNullValue)
+      .forall { s =>
+        val i = java.util.Arrays.binarySearch(sorted, s.genericGetMin.longValue)
+        val at = if (i >= 0) i else -i - 1
+        at < sorted.length && sorted(at) <= s.genericGetMax.longValue
+      }
 
   private def groupValue(g: Group, name: String, t: DataType): Any =
     if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) null
     else t match {
       case LongType => g.getLong(name, 0)
+      case IntegerType => g.getInteger(name, 0)
+      case DoubleType => g.getDouble(name, 0)
       case StringType => g.getString(name, 0)
       case ArrayType(StringType, _) =>
         // a LIST group: one repeated field, each repetition either the

@@ -9,9 +9,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** Spark jobs per GraftDB operation. Job counts are plan-deterministic,
   * so they pin the fixed per-operation cost that wall time on a shared
-  * box cannot: building a read launches no job (manifests are read on
-  * the driver, snapshots with their known schema), and a rollup tick
-  * runs a bounded number. */
+  * box cannot: a read whose input fits the broadcast bound folds on the
+  * driver (no job to build it, none to fold it), a snapshot runs only
+  * its writes, and a rollup tick runs a bounded number. */
 class GraftDBJobsSpec extends SparkSpec {
 
   private val Group = "graftdb-jobs-spec"
@@ -70,14 +70,40 @@ class GraftDBJobsSpec extends SparkSpec {
     val (coll, nColl) = jobsOf(db.collection("d", "c").df)
     val (point, nPoint) = jobsOf(db.collectionForIds("d", "c", Seq(2L)).df)
     val (query, nQuery) = jobsOf(db.query("d", "c", q))
-    assert((nColl, nPoint, nQuery) === ((0, 0, 0)))
+    val (queryStr, nQueryStr) = jobsOf(db.queryStr("d", "c", "/[t = 5]"))
+    assert((nColl, nPoint, nQuery, nQueryStr) === ((0, 0, 0, 0)))
+    // the fold ran on the driver: its rows come back without a job
+    val (rows, nRows) = jobsOf(coll.collect())
+    val (pointRows, nPointRows) = jobsOf(point.collect())
+    assert((nRows, nPointRows) === ((0, 0)))
     // the DataFrames built without a job are the right ones
-    assert(coll.count() === 25 - 1)
-    assert(point.count() === 1)
+    assert(rows.length === 25 - 1)
+    assert(pointRows.length === 1)
     assert(query.count() === 4)
+    assert(queryStr.count() === 4)
   }
 
-  test("building a selective indexed query runs one job: the id probe") {
+  test("getDoc, build plus action, launches no job") {
+    val db = populated()
+    val (live, n) = jobsOf(db.getDoc("d", "c", 2L))
+    val (updated, nUpdated) = jobsOf(db.getDoc("d", "c", 20L))
+    val (deleted, nDeleted) = jobsOf(db.getDoc("d", "c", 21L))
+    assert((n, nUpdated, nDeleted) === ((0, 0, 0)))
+    assert(live.exists(_.contains("\"t\":1")))
+    assert(updated.exists(_.contains("\"i\":99")))
+    assert(deleted.isEmpty)
+  }
+
+  test("a snapshot runs only its two writes: the state and the manifest record") {
+    val db = populated()
+    val ((_, docs), n) = jobsOf(db.snapshot("d", "c"))
+    assert(docs === 24L)
+    // 5 before (a 100-doc collection): the fold and its write, a
+    // read-and-count job, the record
+    assert(n === 2)
+  }
+
+  test("building a selective indexed query runs no job") {
     val db = populated()
     db.addIndex("d", "c", "t", "Int64Key")
     val q = StructuredQuery(where = Some(FieldFilter("t", Op.Eq, FieldValue.I64(5))))
@@ -86,8 +112,9 @@ class GraftDBJobsSpec extends SparkSpec {
       startAt = Some(graft.docstore.Cursor(Seq(Some(FieldValue.I64(5))))))
     val (df, n) = jobsOf(db.queryWithIndex("d", "c", q))
     val (pagedDf, nPaged) = jobsOf(db.queryWithIndex("d", "c", paged))
-    // 2 before the index read took its key type from the index dir
-    assert((n, nPaged) === ((1, 1)))
+    // 2 before the index read took its key type from the index dir, 1
+    // while the probe was a Spark collect
+    assert((n, nPaged) === ((0, 0)))
     assert(df.count() === 4)
     assert(pagedDf.count() === 4)
   }

@@ -124,12 +124,20 @@ class GraftDBSpec extends SparkSpec {
       FieldFilter("rate", Op.Ge, I64(7)),
       FieldFilter("tag", Op.Eq, Str("t1"))))))
     val plain = db.query("d1", "c", q)
+    // the driver fold: the id lookup skips addIndex's lifecycle block,
+    // whose id range (-1) holds none of the ids
+    val decoded0 = db.driverRowsDecoded.get
     val viaIdx = db.queryWithIndex("d1", "c", q)
-    assert(viaIdx.exceptAll(plain).count() === 0)
-    assert(plain.exceptAll(viaIdx).count() === 0)
-    assert(viaIdx.count() > 0)
+    assert(db.driverRowsDecoded.get - decoded0 === 100)
+    // the Spark fold, past the bound
+    val viaIdxSpark = db.queryWithIndex("d1", "c", q, driver = false)
+    for (v <- Seq(viaIdx, viaIdxSpark)) {
+      assert(v.exceptAll(plain).count() === 0)
+      assert(plain.exceptAll(v).count() === 0)
+      assert(v.count() > 0)
+    }
     // the index resolved the id set, which is In-pushed into the log scan
-    val plan = viaIdx.queryExecution.executedPlan.toString
+    val plan = viaIdxSpark.queryExecution.executedPlan.toString
     assert(plan.contains("In(id"))
     // unindexed field falls back to the fused compiler
     val q2 = StructuredQuery(where = Some(FieldFilter("tag", Op.Eq, Str("t2"))))
@@ -176,7 +184,14 @@ class GraftDBSpec extends SparkSpec {
     }
     db.addIndex("d1", "c", "rate", "Int64Key")
     val q = StructuredQuery(where = Some(FieldFilter("rate", Op.Eq, I64(777))))
-    val viaIdx = db.queryWithIndex("d1", "c", q)
+    // the driver fold decodes only the row groups whose id range can
+    // hold the id: one 200-row block of the 1000-mutation log
+    val decoded0 = db.driverRowsDecoded.get
+    assert(db.queryWithIndex("d1", "c", q).collect().length === 1)
+    val decoded = db.driverRowsDecoded.get - decoded0
+    assert(decoded > 0 && decoded <= 200, s"driver fold decoded $decoded rows")
+    // the Spark fold, past the bound
+    val viaIdx = db.queryWithIndex("d1", "c", q, driver = false)
     assert(viaIdx.collect().length === 1)
     assert(db.query("d1", "c", q).count() === 1)
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
@@ -216,8 +231,15 @@ class GraftDBSpec extends SparkSpec {
       orderBy = Seq(Order("rate", keyType = I64(0))),
       startAt = Some(Cursor(Seq(Some(I64(899))), inclusive = false)),
       limit = Some(50))
-    val viaIdx = db.queryWithIndex("d1", "c", q)
-    assert(DocFuzz.canon(viaIdx) === DocFuzz.canon(db.query("d1", "c", q)))
+    val plain = DocFuzz.canon(db.query("d1", "c", q))
+    // the driver fold decodes one 200-row block of the 1000-row log
+    val decoded0 = db.driverRowsDecoded.get
+    assert(DocFuzz.canon(db.queryWithIndex("d1", "c", q)) === plain)
+    val decoded = db.driverRowsDecoded.get - decoded0
+    assert(decoded > 0 && decoded <= 200, s"cursor-pruned driver fold decoded $decoded of 1000 log rows")
+    // the Spark fold, past the bound
+    val viaIdx = db.queryWithIndex("d1", "c", q, driver = false)
+    assert(DocFuzz.canon(viaIdx) === plain)
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       case qs: QueryStageExec => scans(qs.plan)
@@ -238,15 +260,17 @@ class GraftDBSpec extends SparkSpec {
       orderBy = Seq(Order("rate", keyType = I64(0))),
       endAt = Some(Cursor(Seq(Some(I64(99))))),
       limit = Some(25))
-    assert(DocFuzz.canon(db.queryWithIndex("d1", "c", qEnd)) ===
-      DocFuzz.canon(db.query("d1", "c", qEnd)))
+    for (driver <- Seq(true, false))
+      assert(DocFuzz.canon(db.queryWithIndex("d1", "c", qEnd, driver)) ===
+        DocFuzz.canon(db.query("d1", "c", qEnd)))
     // desc head key: endAt is the null-rejecting side and DOES derive
     val qDesc = StructuredQuery(
       orderBy = Seq(Order("rate", desc = true, keyType = I64(0))),
       endAt = Some(Cursor(Seq(Some(I64(950))))),
       limit = Some(25))
-    assert(DocFuzz.canon(db.queryWithIndex("d1", "c", qDesc)) ===
-      DocFuzz.canon(db.query("d1", "c", qDesc)))
+    for (driver <- Seq(true, false))
+      assert(DocFuzz.canon(db.queryWithIndex("d1", "c", qDesc, driver)) ===
+        DocFuzz.canon(db.query("d1", "c", qDesc)))
   }
 
   test("nested dotted paths work end-to-end: queryStr, addIndex, queryWithIndex") {
@@ -697,9 +721,12 @@ class GraftDBSpec extends SparkSpec {
     db.deleteDocuments("d1", "c", Seq(ids(21)))                    // block 4
 
     val after = db.collection("d1", "c")
-    // the fold's scan reads the snapshot files, proving the seeded path
-    assert(after.df.inputFiles.exists(_.contains("snapshots/block_2")),
-      "fold did not engage the snapshot")
+    // both executors read the snapshot files, proving the seeded path
+    assert(db.driverFold("d1", "c", Long.MaxValue, None).get
+      .inputFiles.exists(_.contains("snapshots/block_2")), "driver fold did not engage the snapshot")
+    assert(db.sparkFold("d1", "c", Long.MaxValue, None)
+      .inputFiles.exists(_.contains("snapshots/block_2")), "fold did not engage the snapshot")
+    assert(db.sparkFold("d1", "c", Long.MaxValue, None).collect().toSet === after.df.collect().toSet)
     val got = after.df.orderBy("_id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     // masked update over a snapshot-seeded doc (mergeMasked re-appends
@@ -712,12 +739,16 @@ class GraftDBSpec extends SparkSpec {
       .foreach(e => assert(got(e._1) === e._2))
     // time-travel BELOW the snapshot never uses it
     val early = db.collectionAt("d1", "c", 0L)
-    assert(!early.df.inputFiles.exists(_.contains("snapshots")))
+    assert(!db.driverFold("d1", "c", 0L, None).get.inputFiles.exists(_.contains("snapshots")))
+    assert(!db.sparkFold("d1", "c", 0L, None).inputFiles.exists(_.contains("snapshots")))
     assert(early.df.count() === 50)
+    assert(db.sparkFold("d1", "c", 0L, None).count() === 50)
     // snapshot chaining: a second snapshot seeds from the first
     val (b2, n2) = db.snapshot("d1", "c")
     assert(b2 === 4L && n2 === 44L)
-    assert(db.collection("d1", "c").df
+    assert(db.driverFold("d1", "c", Long.MaxValue, None).get
+      .inputFiles.exists(_.contains("snapshots/block_4")))
+    assert(db.sparkFold("d1", "c", Long.MaxValue, None)
       .inputFiles.exists(_.contains("snapshots/block_4")))
   }
 
@@ -742,7 +773,11 @@ class GraftDBSpec extends SparkSpec {
     db.rollup("d1", "c") // drains + GCs the whole tail into rollups/
     val state = db.collection("d1", "c").df
     assert(state.count() === 40)
-    assert(state.inputFiles.exists(_.contains("snapshots/block_0")))
+    assert(db.driverFold("d1", "c", Long.MaxValue, None).get
+      .inputFiles.exists(_.contains("snapshots/block_0")))
+    val sparkState = db.sparkFold("d1", "c", Long.MaxValue, None)
+    assert(sparkState.count() === 40)
+    assert(sparkState.inputFiles.exists(_.contains("snapshots/block_0")))
   }
 
   test("nonce state: fresh sender starts at 1, write path rejects stale/out-of-order") {
