@@ -48,9 +48,10 @@ import scala.jdk.CollectionConverters._
   *
   * A mutation row = (block, order, action, id, doc, mask) — the exact
   * MutationHeader ordering key of the reference. Live state is the
-  * latest-wins fold with DocumentMask merge and delete tombstones,
-  * computed on the driver when a read's input is small, else
-  * distributed (one shuffle on doc id).
+  * latest-wins fold with DocumentMask merge and delete tombstones of the
+  * committed log (`readPlan` decides what a read sees), computed on the
+  * driver when a read's input is small, else distributed (one shuffle
+  * on doc id).
   *
   * Scale posture: the log is append-only parquet partitioned by block
   * range; materialization shuffles once on id; rollup compaction is the
@@ -264,61 +265,85 @@ class GraftDB(spark: SparkSession, root: String,
     (sender, addDocuments(db, coll, docs, sender, nonce))
   }
 
-  /** The full mutation log: rolled-up batches + live tail, one schema.
-    * Rolled-up batches are located through the persisted manifests (the
-    * reference recovers from its rollup records the same way, recover.rs
-    * over scan_rollup_records) — on an object store that is one small
-    * manifest read instead of a huge eventually-consistent prefix
-    * listing. Only committed data is read: a batch dir no record lists
-    * is a crashed rollup's, and a tail block above the state cell is a
-    * crashed or in-flight append's.
+  /** The full mutation log: rolled-up batches + live tail, one schema,
+    * the committed blocks `readPlan` admits. A frame built before a
+    * rollup's GC deleted tail files it listed fails its job
+    * (FileNotFoundException) and must be built again; it never silently
+    * drops rows. */
+  def mutationLog(db: String, coll: String): DataFrame =
+    logFrame(readPlan(db, coll, Long.MaxValue, seeded = false)(sparkOpen))
+
+  /** What a read as of `block` sees — the one rule, shared by
+    * `mutationLog`, the Spark fold and the driver fold; each passes only
+    * its `open` (paths → that executor's handle on their readable files,
+    * None when there are none).
     *
-    * Reader-vs-GC contract: a reader that listed tail files BEFORE a
-    * rollup's GC deleted them fails its job (FileNotFoundException) and
-    * must re-plan — fail-CLOSED, never silently dropped rows (the same
-    * failure mode a Delta reader has past checkpoint retention). A
-    * re-created DataFrame re-lists and sees the rolled batches via the
-    * manifest. */
-  def mutationLog(db: String, coll: String): DataFrame = {
-    // Order matters: pin the tail FILE LISTING first (InMemoryFileIndex
-    // lists eagerly at DataFrame creation), THEN read the manifest. A
-    // rollup whose manifest append and GC both complete between the two
-    // steps then still surfaces via the manifest (the committedHi filter
-    // below dedups its now-redundant tail rows), and tail files its GC
-    // deleted fail the job CLOSED (FileNotFoundException, re-plan). The
-    // reverse order silently loses the freshly-rolled blocks: absent
-    // from the stale manifest snapshot AND from the post-GC listing.
-    // The state cell is read before both: tail blocks above it are an
-    // in-flight or crashed append, invisible until their commit (every
-    // block it admits had all its files in place before the cell moved).
-    // No cell (a legacy collection): everything on disk counts.
-    val lastBlock = readCell[CollState](statePath(db, coll)).map(_.lastBlock)
-    val tail =
-      if (hasParquet(mutPath(db, coll))) Some(readLog(mutPath(db, coll)))
-      else None
+    * Only committed data is visible. COMMIT POINT = the state cell
+    * (Delta-style: data files land first, invisible; the atomic cell flip
+    * publishes them): a tail block above it is a crashed or in-flight
+    * append's, so the plan's bound is min(`block`, lastBlock) (every
+    * block the cell admits had all its files in place before the cell
+    * moved; no cell — a legacy collection — and everything on disk
+    * counts). Rolled-up batches are located through the manifests (the
+    * reference recovers from its rollup records the same way, recover.rs
+    * over scan_rollup_records): a batch dir no record lists is a crashed
+    * rollup's, and on an object store that is one small manifest read
+    * instead of a huge eventually-consistent prefix listing. Blocks at or
+    * below the rollup store's high-water mark are the batches': a rollup
+    * that crashed between its manifest append and the tail GC leaves the
+    * same blocks in BOTH places, and the tail copy stays invisible until
+    * the GC finishes. With `seeded`, the newest snapshot at or below the
+    * bound seeds the fold and every source replays only blocks after it.
+    *
+    * Order matters: the cell, then the snapshot record, then the tail is
+    * LISTED (pinned: the driver lists it now, Spark's InMemoryFileIndex
+    * lists eagerly at DataFrame creation), THEN the rollup and compact
+    * manifests are read. A rollup whose manifest append and GC both
+    * complete between the two steps then still surfaces via the
+    * manifest, and tail files its GC deleted fail the read CLOSED
+    * (FileNotFoundException: the driver fold re-plans; a Spark job fails
+    * and its caller must re-plan — never silently dropped rows, the same
+    * failure mode a Delta reader has past checkpoint retention). The
+    * reverse order silently loses the freshly-rolled blocks: absent from
+    * the stale manifest snapshot AND from the post-GC listing. */
+  private def readPlan[S](db: String, coll: String, block: Long, seeded: Boolean)(
+      open: (Seq[String], StructType) => Option[S]): ReadPlan[S] = {
+    val committed = readCell[CollState](statePath(db, coll))
+      .fold(block)(c => math.min(block, c.lastBlock))
+    val seed =
+      if (!seeded) None
+      else readManifest(db, coll, "snapshot", snapshotManifestSchema)
+        .map(r => (r.getAs[Long]("block"), r.getAs[String]("path")))
+        .filter(_._1 <= committed).maxByOption(_._1)
+        .flatMap { case (at, path) => open(Seq(path), snapshotSchema).map(at -> _) }
+    val tail = open(Seq(mutPath(db, coll)), mutationSchema)
     val store = batches(db, coll)
-    val live = store.live
-    // blocks at or below this bound are owned by the rollup batches; a
-    // rollup that crashed between its manifest append and the tail GC
-    // leaves the same blocks in BOTH places — the bound keeps the
-    // redundant tail copy invisible until the GC finishes
-    val committedHi = store.committedHi
-    val tailReads = tail.map { t =>
-      val unrolled = if (committedHi >= 0) t.filter(col("block") > committedHi) else t
-      lastBlock.fold(unrolled)(b => unrolled.filter(col("block") <= b))
-    }
-    val reads = (if (live.isEmpty) None else Some(readLog(live.map(_.path): _*))) ++
-      tailReads
-    if (reads.isEmpty) emptyFrame(mutationSchema)
-    else reads.reduce(_ unionByName _)
+    val seedAt = seed.map(_._1)
+    val tailAfter = (seedAt ++ Some(store.committedHi).filter(_ >= 0)).maxOption
+    ReadPlan(committed, seed,
+      open(store.live.map(_.path), mutationSchema).map(_ -> seedAt).toSeq ++
+        tail.map(_ -> tailAfter),
+      store.committedHi)
   }
 
-  /** Mutation parquet under `paths`, nested dirs included
-    * (recursiveFileLookup also disables partition-column inference on
-    * the batch=N dir names — the file schema is the whole schema). */
-  private def readLog(paths: String*): DataFrame =
-    spark.read.schema(mutationSchema)
-      .option("recursiveFileLookup", "true").parquet(paths: _*)
+  /** `readPlan`'s Spark `open`: one scan over the paths that hold
+    * readable files. */
+  private def sparkOpen(paths: Seq[String], schema: StructType): Option[DataFrame] =
+    Some(paths.filter(readableFiles(_).nonEmpty)).filter(_.nonEmpty).map(readLog(_, schema))
+
+  /** A Spark plan's log sources (after `seed`, when given) as one frame,
+    * each kept to the blocks the plan replays from it. */
+  private def logFrame(plan: ReadPlan[DataFrame], seed: Option[DataFrame] = None): DataFrame =
+    (seed.toSeq ++ plan.logs.map { case (df, after) =>
+      val above = after.fold(df)(a => df.filter(col("block") > a))
+      if (plan.committed == Long.MaxValue) above else above.filter(col("block") <= plan.committed)
+    }).reduceOption(_ unionByName _).getOrElse(emptyFrame(mutationSchema))
+
+  /** Parquet under `paths`, nested dirs included (recursiveFileLookup
+    * also disables partition-column inference on the batch=N dir names —
+    * the file schema is the whole schema). */
+  private def readLog(paths: Seq[String], schema: StructType = mutationSchema): DataFrame =
+    spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(paths: _*)
 
   /** The rollup store as its manifests publish it (base records minus
     * the ones compaction retired, plus the live compacted dirs). Two
@@ -486,8 +511,10 @@ class GraftDB(spark: SparkSession, root: String,
   /** Materialize the folded state as of `block` (defaults to the last
     * stamped block; a later block is clamped to it) under snapshots/ and
     * record it in the manifest. Returns (block, docCount). The state is
-    * written sorted by `_id`, so its files hold disjoint id ranges that a
-    * point read prunes by footer stats. The count comes from the fold:
+    * written sorted by `_id` — one file after a driver fold — in row
+    * groups of at most `SnapshotRowGroupBytes`, so its groups hold
+    * disjoint id ranges that a point read prunes by footer stats. The
+    * count comes from the fold:
     * its rows on the driver, the written files' footers after a Spark
     * fold — never a read-and-count job. */
   def snapshot(db: String, coll: String, block: Long = Long.MinValue): (Long, Long) =
@@ -498,13 +525,14 @@ class GraftDB(spark: SparkSession, root: String,
       val last = currentState(db, coll).lastBlock
       val at = if (block == Long.MinValue) last else math.min(block, last)
       val dir = snapPath(db, coll, at)
+      def write(state: DataFrame): Unit = state.write
+        .option("parquet.block.size", SnapshotRowGroupBytes).mode(SaveMode.Overwrite).parquet(dir)
       val n = driverFold(db, coll, at, None) match {
-        case Some(f) => // already sorted: one write job over its slices
-          foldedFrame(f.rows).write.mode(SaveMode.Overwrite).parquet(dir)
+        case Some(f) => // already sorted: one file
+          write(foldedFrame(f.rows).coalesce(1))
           f.rows.length.toLong
         case None =>
-          sparkFold(db, coll, at, None).orderBy("_id")
-            .write.mode(SaveMode.Overwrite).parquet(dir)
+          write(sparkFold(db, coll, at, None).orderBy("_id"))
           readableFiles(dir).map(parquet.rowCount).sum
       }
       failpoint("snapshot:afterData")
@@ -516,14 +544,6 @@ class GraftDB(spark: SparkSession, root: String,
   /** Persisted snapshot history (block, n_docs, path). */
   def scanSnapshots(db: String, coll: String): DataFrame =
     manifestFrame(db, coll, "snapshot", snapshotManifestSchema)
-
-  /** Newest usable snapshot at or below `block`, if any. */
-  private def latestSnapshotAt(db: String, coll: String, block: Long): Option[(Long, String)] =
-    readManifest(db, coll, "snapshot", snapshotManifestSchema)
-      .map(r => (r.getAs[Long]("block"), r.getAs[String]("path")))
-      .filter(_._1 <= block)
-      .maxByOption(_._1)
-      .filter { case (_, p) => hasParquet(p) }
 
   /** Time-travel read: live state as of `block` (inclusive) — the
     * blockchain-versioned view the reference's (block,order)-stamped log
@@ -578,12 +598,10 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** The driver executor of `foldLog`: the folded state sorted by `_id`
     * and the files it decoded, or None when the read's input exceeds the
-    * broadcast bound (a negative bound turns the driver fold off). It
-    * plans in `mutationLog`'s order — the state cell, the snapshot
-    * record, the tail listing, then the rollup manifests — and admits
-    * the same files Spark's reader does. A file a rollup's GC or a
-    * compaction deleted after the listing re-plans the read; the new
-    * plan finds its rows through the manifests. */
+    * broadcast bound (a negative bound turns the driver fold off). A file
+    * a rollup's GC or a compaction deleted after `readPlan` listed it
+    * re-plans the read; the new plan finds its rows through the
+    * manifests. */
   private[api] def driverFold(db: String, coll: String, block: Long,
       onlyIds: Option[Seq[Long]]): Option[DriverFold] = {
     val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
@@ -595,22 +613,13 @@ class GraftDB(spark: SparkSession, root: String,
 
   private def driverFoldOnce(db: String, coll: String, block: Long,
       onlyIds: Option[Seq[Long]], bound: Long): Option[DriverFold] = {
-    val committed = readCell[CollState](statePath(db, coll))
-      .fold(block)(c => math.min(block, c.lastBlock))
-    val snap = latestSnapshotAt(db, coll, committed)
-    val tail = readableFiles(mutPath(db, coll))
-    val store = batches(db, coll)
-    // replayed blocks lie above the snapshot; the tail's above the
-    // rollup store's too (see `mutationLog`)
-    val snapAt = snap.map(_._1)
-    val tailAfter =
-      if (store.committedHi >= 0) Some(snapAt.fold(store.committedHi)(math.max(_, store.committedHi)))
-      else snapAt
+    val plan = readPlan(db, coll, block, seeded = true)((paths, _) =>
+      Some(paths.flatMap(readableFiles).toVector).filter(_.nonEmpty))
+    val committed = plan.committed
     // (file, snapshot seed?, blocks replayed only above this)
     val inputs: Seq[(java.io.File, Boolean, Option[Long])] =
-      snap.toSeq.flatMap(s => readableFiles(s._2)).map((_, true, None)) ++
-        store.live.flatMap(b => readableFiles(b.path)).map((_, false, snapAt)) ++
-        tail.map((_, false, tailAfter))
+      plan.seed.toSeq.flatMap(_._2).map((_, true, None)) ++
+        plan.logs.flatMap { case (files, after) => files.map((_, false, after)) }
     val sortedIds = onlyIds.map(_.distinct.sorted.toArray)
     val idSet = onlyIds.map(_.toSet)
     def admits(rg: BlockMetaData, seed: Boolean, after: Option[Long]): Boolean =
@@ -622,7 +631,7 @@ class GraftDB(spark: SparkSession, root: String,
         val rows = parquet.decode(r, groups, if (seed) snapshotSchema else mutationSchema).toVector
         driverRowsDecoded.addAndGet(rows.length.toLong)
         if (seed)
-          rows.map(row => MutationRow(snapAt.get, Int.MinValue, ActionAdd,
+          rows.map(row => MutationRow(plan.seed.get._1, Int.MinValue, ActionAdd,
             row.getLong(0), row.getString(1), null))
         else
           rows.map(row => MutationRow(row.getLong(0), row.getInt(1), row.getInt(2),
@@ -665,32 +674,14 @@ class GraftDB(spark: SparkSession, root: String,
   private[api] def sparkFold(db: String, coll: String, block: Long,
       onlyIds: Option[Seq[Long]]): DataFrame = {
     import spark.implicits._
-    // COMMIT POINT = the state cell (Delta-style: data files land first,
-    // invisible; the atomic cell flip publishes them). Rows whose block
-    // is beyond the committed lastBlock are a crashed writer's in-flight
-    // append and must not surface until their writer commits.
-    val committed = math.min(block, currentState(db, coll).lastBlock)
-    val source = latestSnapshotAt(db, coll, committed) match {
-      case Some((snapBlock, path)) =>
-        val seed = spark.read.schema(snapshotSchema).parquet(path)
-          .select(col("_id").as("id"), col("doc"))
-          .withColumn("block", lit(snapBlock))
-          .withColumn("order", lit(Int.MinValue))
-          .withColumn("action", lit(ActionAdd))
-          .withColumn("mask", lit(null).cast("string"))
-          .select("block", "order", "action", "id", "doc", "mask")
-        // block > snapBlock prunes rolled-up batches and block_N tail
-        // dirs by parquet row-group stats — the replay reads O(tail)
-        seed.unionByName(mutationLog(db, coll)
-          .filter(col("block") > snapBlock && col("block") <= committed))
-      case None =>
-        mutationLog(db, coll).filter(col("block") <= committed)
-    }
-    val filtered = onlyIds match {
-      case Some(ids) => source.filter(col("id").isin(ids: _*))
-      case None => source
-    }
-    filtered
+    val plan = readPlan(db, coll, block, seeded = true)(sparkOpen)
+    // the replayed sources' block bounds prune rolled-up batches and tail
+    // dirs by parquet row-group stats — the replay reads O(tail)
+    val source = logFrame(plan, plan.seed.map { case (at, state) =>
+      state.select(lit(at).as("block"), lit(Int.MinValue).as("order"), lit(ActionAdd).as("action"),
+        col("_id").as("id"), col("doc"), lit(null).cast("string").as("mask"))
+    })
+    onlyIds.fold(source)(ids => source.filter(col("id").isin(ids: _*)))
       .as[MutationRow]
       .groupByKey(_.id)
       .mapGroups((id, muts) => (id, replay(muts.toSeq).orNull))
@@ -740,8 +731,8 @@ class GraftDB(spark: SparkSession, root: String,
   private def rollupLocked(db: String, coll: String,
       maxBatchBytes: Long): Seq[RollupRecord] = {
     val tailDir = mutPath(db, coll)
-    if (!hasParquet(tailDir)) return Seq.empty
-    val rawTail = readLog(tailDir)
+    if (readableFiles(tailDir).isEmpty) return Seq.empty
+    val rawTail = readLog(Seq(tailDir))
     // Only blocks <= the state cell's lastBlock are fully committed: the
     // state bump happens under this lock strictly AFTER the data commit,
     // while appendDocumentsAt's data write (and Spark's non-atomic
@@ -772,8 +763,7 @@ class GraftDB(spark: SparkSession, root: String,
     // idempotent re-entry: blocks already manifest-committed by a prior
     // (possibly crashed) run never roll twice — the manifest is the
     // commit point, the tail copy is redundant data awaiting GC
-    val committedHi = readManifest(db, coll, "rollup", rollupManifestSchema)
-      .map(_.getAs[Long]("end_block")).maxOption.getOrElse(-1L)
+    val committedHi = batches(db, coll).committedHi
     val blocks = stats.map(_._2)
       .filter(s => s.block > committedHi && s.block <= lastCommitted)
       .groupBy(_.block).toSeq.sortBy(_._1)
@@ -878,7 +868,7 @@ class GraftDB(spark: SparkSession, root: String,
     * Empty before the first append. */
   private def readManifest(db: String, coll: String, kind: String,
       schema: StructType): Seq[Row] =
-    readableFiles(s"${manifestPath(db, coll)}/$kind").flatMap(parquet.rows(_, schema))
+    readableFiles(s"${manifestPath(db, coll)}/$kind").toVector.flatMap(parquet.rows(_, schema))
 
   /** The driver's parquet reader, on the session's Hadoop conf. */
   private lazy val parquet = new DriverParquet(spark.sparkContext.hadoopConfiguration)
@@ -962,7 +952,7 @@ class GraftDB(spark: SparkSession, root: String,
     bins.foreach { bin =>
       val (lo, hi) = (bin.map(_.start).min, bin.map(_.end).max)
       val outDir = s"$rollBase/compact_${lo}_${hi}_${UUID.randomUUID().toString.take(8)}"
-      readLog(bin.map(_.path): _*)
+      readLog(bin.map(_.path))
         .repartition(1)
         .sortWithinPartitions("block", "order")
         .write.option("compression", "gzip").parquet(outDir)
@@ -1073,13 +1063,12 @@ class GraftDB(spark: SparkSession, root: String,
     * status (the proto's MutationRollupStatus: rolled-up vs live tail). */
   def getMutationHeader(db: String, coll: String, block: Long, order: Int)
       : Option[MutationHeaderView] = {
-    val rolledTo = readManifest(db, coll, "rollup", rollupManifestSchema)
-      .map(_.getAs[Long]("end_block")).maxOption.getOrElse(Long.MinValue)
-    mutationLog(db, coll)
+    val plan = readPlan(db, coll, Long.MaxValue, seeded = false)(sparkOpen)
+    logFrame(plan)
       .filter(col("block") === block && col("order") === order)
       .select("block", "order", "action", "id").head(1).headOption
       .map(r => MutationHeaderView(r.getLong(0), r.getInt(1), r.getInt(2),
-        r.getLong(3), rolledUp = block <= rolledTo))
+        r.getLong(3), rolledUp = block <= plan.rolledHi))
   }
 
   /** GetMutationBody analog: one mutation's payload (doc + mask). */
@@ -1284,13 +1273,7 @@ class GraftDB(spark: SparkSession, root: String,
     * compiler when no index applies — the reference's planner does
     * exactly this over its EJDB index set
     * (doc_store.rs add_index / execute_query). */
-  def queryWithIndex(db: String, coll: String, q: StructuredQuery): DataFrame =
-    queryWithIndex(db, coll, q, driver = true)
-
-  /** `queryWithIndex`; with `driver = false` the probe and the id fold
-    * run on Spark whatever their size (the specs' entry to that path). */
-  private[api] def queryWithIndex(db: String, coll: String, q: StructuredQuery,
-      driver: Boolean): DataFrame = {
+  def queryWithIndex(db: String, coll: String, q: StructuredQuery): DataFrame = {
     import graft.docstore._
     // only scalar comparisons use the sorted index; membership/array ops
     // (and OR trees) fall back to the fused compiler
@@ -1396,15 +1379,11 @@ class GraftDB(spark: SparkSession, root: String,
     // itself reads the index's row groups on the driver while those
     // the key range admits fit the bound. Unselective predicates keep
     // the distributed left-semi join (never a big driver collect).
-    val probed = (if (driver) driverIndex(db, coll, f, lo, hi) else None)
-      .fold(ids)(_.filter(pred).select(col("_id")))
+    val probed = driverIndex(db, coll, f, lo, hi).fold(ids)(_.filter(pred).select(col("_id")))
     val probe = probed.limit(MaxPushedIds + 1).collect().map(_.getLong(0)).toSeq
     val narrowed =
-      if (probe.length > MaxPushedIds)
-        (if (driver) collection(db, coll).df else sparkFold(db, coll, Long.MaxValue, None))
-          .join(ids, Seq("_id"), "left_semi")
-      else if (driver) collectionForIds(db, coll, probe).df
-      else sparkFold(db, coll, Long.MaxValue, Some(probe))
+      if (probe.length > MaxPushedIds) collection(db, coll).df.join(ids, Seq("_id"), "left_semi")
+      else collectionForIds(db, coll, probe).df
     DocStore.queryFused(DocCollection(coll, narrowed), q.copy(where = rest))
   }
 
@@ -1576,6 +1555,18 @@ object GraftDB {
   private val snapshotSchema: StructType = StructType(Seq(
     StructField("_id", LongType), StructField("doc", StringType)))
 
+  /** Row-group size bound of a snapshot's files: a point read decodes
+    * the one group whose `_id` range holds the id, not the whole state. */
+  private val SnapshotRowGroupBytes = 1L << 20
+
+  /** One read's inputs, each opened by the read's executor (`S`): blocks
+    * above `committed` are invisible (Long.MaxValue: no bound); the
+    * snapshot seed and the block whose state it holds; each log source
+    * and the block it is replayed above (None: from its start); and the
+    * highest block the rollup store owns. */
+  private final case class ReadPlan[S](committed: Long, seed: Option[(Long, S)],
+      logs: Seq[(S, Option[Long])], rolledHi: Long)
+
   val mutationSchema: StructType = StructType(Seq(
     StructField("block", LongType, nullable = false),
     StructField("order", IntegerType, nullable = false),
@@ -1613,9 +1604,6 @@ object GraftDB {
     * readers size the tail). */
   private def listDir(dir: String): Seq[java.io.File] =
     Option(new java.io.File(dir).listFiles()).fold(Seq.empty[java.io.File])(_.toSeq)
-
-  private def hasParquet(dir: String): Boolean =
-    listDir(dir).exists(f => f.getName.endsWith(".parquet") || hasParquet(f.getPath))
 
   // recursive: mutation tails nest per-block subdirs
   private def dirSize(dir: String): Long =
@@ -1696,11 +1684,13 @@ object GraftDB {
 
   /** The files Spark's reader reads under `dir`, nested dirs included:
     * names starting with `_` or `.` (`_SUCCESS`, `.crc` siblings, a
-    * crashed write's `_temporary/`) are skipped, files and dirs alike. */
-  private def readableFiles(dir: String): Seq[java.io.File] =
+    * crashed write's `_temporary/`) are skipped, files and dirs alike.
+    * The one rule for whether a dir has data. Listed as far as the caller
+    * reads: `nonEmpty` stops at the first file. */
+  private def readableFiles(dir: String): LazyList[java.io.File] =
     listDir(dir).filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-      .sortBy(_.getName)
-      .flatMap(f => if (f.isDirectory) readableFiles(f.getPath) else Seq(f))
+      .sortBy(_.getName).to(LazyList)
+      .flatMap(f => if (f.isDirectory) readableFiles(f.getPath) else LazyList(f))
 
   /** Whether a row group's footer stats on `column` admit a value in
     * [lo, hi] (None = unbounded). A column without min/max admits all. */
@@ -1787,15 +1777,13 @@ object GraftDB {
     * the delete must not read rows twice), and the compacted dir serves
     * in its place. */
   private case class Batches(all: Seq[Batch], retired: Set[String]) {
-    /** Readable batch dirs in block order. */
-    lazy val live: Seq[Batch] =
-      all.filter(b => !retired(b.path) && hasParquet(b.path)).sortBy(_.start)
+    /** The batch dirs reads use, in block order. */
+    def live: Seq[Batch] = all.filterNot(b => retired(b.path)).sortBy(_.start)
 
-    /** Highest block the rollup store owns. Retired records keep
-      * counting: their blocks are owned by the compact dir that replaced
-      * them. */
-    def committedHi: Long =
-      (live ++ all.filter(b => retired(b.path))).map(_.end).maxOption.getOrElse(-1L)
+    /** Highest block the rollup store owns, -1 before the first rollup.
+      * Retired records keep counting: their blocks are owned by the
+      * compact dir that replaced them. */
+    def committedHi: Long = all.map(_.end).maxOption.getOrElse(-1L)
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {

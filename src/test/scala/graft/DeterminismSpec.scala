@@ -23,16 +23,13 @@ class DeterminismSpec extends SparkSpec {
     "text_unigram_lm", "text_search_bm25", "pipeline_dsir",
     "pipeline_quality_percentile", "dedup_ngram_jaccard")
 
-  private def runAt(parts: Int, name: String): Array[String] = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
+  private def runAt(parts: Int, name: String): Array[String] =
+    SparkSpec.withConf("spark.sql.shuffle.partitions" -> parts.toString) {
       val df = SparkEntry.queries(name)(spark, sf)
       val cols = df.columns.sorted
       df.select(cols.map(col): _*).collect()
         .map(_.mkString("")).sorted
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+    }
 
   test("results are invariant under shuffle-partition count (3 vs 11)") {
     for (name <- names) {

@@ -8,6 +8,19 @@ trait SparkSpec extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `body` with broadcast joins off, and with them GraftDB's driver
+    * executors: its reads fold and probe indexes on Spark. */
+  protected def onSpark[T](body: => T): T =
+    SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  /** `read` as the session runs it, then again `onSpark`; the two
+    * results must be equal. */
+  protected def onBothExecutors[T](read: => T): T = {
+    val default = read
+    assert(onSpark(read) === default, "the Spark executors read another result")
+    default
+  }
 }
 
 object SparkSpec {
@@ -23,5 +36,17 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** `body` with the session confs set to `confs`; afterwards each key
+    * is back at its previous value, or unset if it had none. */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> session.conf.getOption(k) }
+    confs.foreach { case (k, v) => session.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
+    }
   }
 }

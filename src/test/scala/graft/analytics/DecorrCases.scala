@@ -24,9 +24,10 @@ object DecorrCases {
   /** Row-for-row equality of the DataFrame implementation vs the literal
     * SQL (runs against whatever temp views are registered). */
   def assertSame(spark: SparkSession, c: Case, dir: String): Unit = {
-    val conf = "spark.sql.constraintPropagation.enabled"
-    if (c.disableConstraintPropagation) spark.conf.set(conf, "false")
-    try {
+    val confs =
+      if (c.disableConstraintPropagation) Seq("spark.sql.constraintPropagation.enabled" -> "false")
+      else Nil
+    graft.SparkSpec.withConf(confs: _*) {
       val df = c.build(spark, dir)
       val lit = spark.sql(c.sql)
       assert(df.columns.sorted.sameElements(lit.columns.sorted),
@@ -37,7 +38,7 @@ object DecorrCases {
       val onlySql = b.exceptAll(a).count()
       assert(onlyImpl == 0 && onlySql == 0,
         s"${c.name}: rows differ: impl-only=$onlyImpl, sql-only=$onlySql")
-    } finally if (c.disableConstraintPropagation) spark.conf.set(conf, "true")
+    }
   }
 
   val all: Seq[Case] = Seq(

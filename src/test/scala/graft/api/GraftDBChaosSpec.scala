@@ -128,8 +128,8 @@ class GraftDBChaosSpec extends SparkSpec {
             }
         }
         if (step % 5 == 0 || step == steps) {
-          val got = db.collection("d1", "c").df.collect()
-            .map(row => row.getLong(0) -> row.getString(1)).toMap
+          val got = onBothExecutors(db.collection("d1", "c").df.collect()
+            .map(row => row.getLong(0) -> row.getString(1)).toMap)
           assert(got.keySet === ref.keySet,
             s"seed=$seed step=$step crashes=$crashes: " +
               s"got=${got.keySet.toSeq.sorted} want=${ref.keySet.toSeq.sorted}")
@@ -158,8 +158,8 @@ class GraftDBChaosSpec extends SparkSpec {
       // and one more rollup + a fresh-instance read both still agree
       db.rollup("d1", "c", maxBatchBytes = 512)
       val db2 = new GraftDB(spark, root)
-      val after = db2.collection("d1", "c").df.collect()
-        .map(row => row.getLong(0) -> row.getString(1)).toMap
+      val after = onBothExecutors(db2.collection("d1", "c").df.collect()
+        .map(row => row.getLong(0) -> row.getString(1)).toMap)
       assert(after.keySet === ref.keySet, s"seed=$seed post-rollup reread")
       after.foreach { case (id, doc) =>
         assert(canon(doc) === canon(ref(id)), s"seed=$seed post-rollup id=$id")

@@ -34,9 +34,10 @@ class GraftDBCrashSpec extends SparkSpec {
 
   private def disarm(db: GraftDB): Unit = db.failpoint = _ => ()
 
-  private def liveDocs(db: GraftDB): Seq[(Long, String)] =
+  private def liveDocs(db: GraftDB): Seq[(Long, String)] = onBothExecutors {
     db.collection("d", "c").df.orderBy("_id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
+  }
 
   private def logRows(db: GraftDB): Seq[Row] =
     db.mutationLog("d", "c").orderBy("block", "order").collect().toSeq

@@ -51,8 +51,8 @@ class GraftDBJobsSpec extends SparkSpec {
 
   /** A collection with rollup, gc, compact and snapshot records and a
     * live tail of updates, deletes and adds. */
-  private def populated(): GraftDB = {
-    val db = new GraftDB(spark, Files.createTempDirectory("graftjobs").toString)
+  private def populated(root: String = Files.createTempDirectory("graftjobs").toString): GraftDB = {
+    val db = new GraftDB(spark, root)
     db.createCollection("d", "c")
     (1 to 4).foreach(addBlock(db, _))
     db.rollup("d", "c", maxBatchBytes = 400)
@@ -81,6 +81,28 @@ class GraftDBJobsSpec extends SparkSpec {
     assert(pointRows.length === 1)
     assert(query.count() === 4)
     assert(queryStr.count() === 4)
+  }
+
+  test("building Spark-fold reads launches no job, with or without a state cell") {
+    val root = Files.createTempDirectory("graftjobs").toString
+    val db = populated(root)
+    val q = StructuredQuery(where = Some(FieldFilter("t", Op.Eq, FieldValue.I64(5))))
+    def built(): Seq[(org.apache.spark.sql.DataFrame, Int)] =
+      onSpark(Seq(
+        jobsOf(db.collection("d", "c").df),
+        jobsOf(db.collectionForIds("d", "c", Seq(2L)).df),
+        jobsOf(db.query("d", "c", q))))
+    val withCell = built()
+    // the layout GraftDBSpec's legacy test makes: no state cell
+    val stateDir = new java.io.File(s"$root/d/c/state")
+    stateDir.listFiles().foreach(_.delete())
+    assert(stateDir.delete())
+    val noCell = built()
+    for ((layout, reads) <- Seq("state cell" -> withCell, "no state cell" -> noCell)) {
+      assert(reads.map(_._2) === Seq(0, 0, 0), layout)
+      // the Spark folds, past the bound: the same reads
+      assert(reads.map(_._1.count()) === Seq(25 - 1, 1, 4), layout)
+    }
   }
 
   test("getDoc, build plus action, launches no job") {

@@ -86,7 +86,7 @@ class GraftDBMultiWriterChaosSpec extends SparkSpec {
       f.isDirectory && f.getName.startsWith("blk_2_"))
     assert(blk2Dirs.nonEmpty, "crashed append left no blk_2 dir")
     assert(db.nextBlockId("d", "c") === 2L, "state must not have advanced")
-    assert(db.collection("d", "c").df.count() === 3L, "orphan rows visible")
+    assert(onBothExecutors(db.collection("d", "c").df.count()) === 3L, "orphan rows visible")
 
     // the parent reuses block 2: the orphan is swept, never adopted
     val ids = db.addDocuments("d", "c", Seq("""{"w":"parent"}"""))
@@ -234,8 +234,8 @@ class GraftDBMultiWriterChaosSpec extends SparkSpec {
         s"seed=$seed never crashed — chaos rate too low to test anything")
 
       val want = (models(0) ++ models(1)).toMap
-      val got = setupDb.collection("d1", "c").df.collect()
-        .map(row => row.getLong(0) -> row.getString(1)).toMap
+      val got = onBothExecutors(setupDb.collection("d1", "c").df.collect()
+        .map(row => row.getLong(0) -> row.getString(1)).toMap)
       assert(got.keySet === want.keySet,
         s"seed=$seed crashes=${crashes.get()}: got=${got.keySet.toSeq.sorted} " +
           s"want=${want.keySet.toSeq.sorted}")
@@ -280,8 +280,8 @@ class GraftDBMultiWriterChaosSpec extends SparkSpec {
         }
       setupDb.rollup("d1", "c", maxBatchBytes = 512)
       val db2 = new GraftDB(spark, root)
-      val after = db2.collection("d1", "c").df.collect()
-        .map(row => row.getLong(0) -> row.getString(1)).toMap
+      val after = onBothExecutors(db2.collection("d1", "c").df.collect()
+        .map(row => row.getLong(0) -> row.getString(1)).toMap)
       assert(after.keySet === want.keySet, s"seed=$seed post-rollup reread")
       after.foreach { case (id, doc) =>
         assert(canon(doc) === canon(want(id)), s"seed=$seed post-rollup id=$id")

@@ -130,7 +130,7 @@ class GraftDBSpec extends SparkSpec {
     val viaIdx = db.queryWithIndex("d1", "c", q)
     assert(db.driverRowsDecoded.get - decoded0 === 100)
     // the Spark fold, past the bound
-    val viaIdxSpark = db.queryWithIndex("d1", "c", q, driver = false)
+    val viaIdxSpark = onSpark(db.queryWithIndex("d1", "c", q))
     for (v <- Seq(viaIdx, viaIdxSpark)) {
       assert(v.exceptAll(plain).count() === 0)
       assert(plain.exceptAll(v).count() === 0)
@@ -191,7 +191,7 @@ class GraftDBSpec extends SparkSpec {
     val decoded = db.driverRowsDecoded.get - decoded0
     assert(decoded > 0 && decoded <= 200, s"driver fold decoded $decoded rows")
     // the Spark fold, past the bound
-    val viaIdx = db.queryWithIndex("d1", "c", q, driver = false)
+    val viaIdx = onSpark(db.queryWithIndex("d1", "c", q))
     assert(viaIdx.collect().length === 1)
     assert(db.query("d1", "c", q).count() === 1)
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
@@ -238,7 +238,7 @@ class GraftDBSpec extends SparkSpec {
     val decoded = db.driverRowsDecoded.get - decoded0
     assert(decoded > 0 && decoded <= 200, s"cursor-pruned driver fold decoded $decoded of 1000 log rows")
     // the Spark fold, past the bound
-    val viaIdx = db.queryWithIndex("d1", "c", q, driver = false)
+    val viaIdx = onSpark(db.queryWithIndex("d1", "c", q))
     assert(DocFuzz.canon(viaIdx) === plain)
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
@@ -260,17 +260,15 @@ class GraftDBSpec extends SparkSpec {
       orderBy = Seq(Order("rate", keyType = I64(0))),
       endAt = Some(Cursor(Seq(Some(I64(99))))),
       limit = Some(25))
-    for (driver <- Seq(true, false))
-      assert(DocFuzz.canon(db.queryWithIndex("d1", "c", qEnd, driver)) ===
-        DocFuzz.canon(db.query("d1", "c", qEnd)))
+    assert(onBothExecutors(DocFuzz.canon(db.queryWithIndex("d1", "c", qEnd))) ===
+      DocFuzz.canon(db.query("d1", "c", qEnd)))
     // desc head key: endAt is the null-rejecting side and DOES derive
     val qDesc = StructuredQuery(
       orderBy = Seq(Order("rate", desc = true, keyType = I64(0))),
       endAt = Some(Cursor(Seq(Some(I64(950))))),
       limit = Some(25))
-    for (driver <- Seq(true, false))
-      assert(DocFuzz.canon(db.queryWithIndex("d1", "c", qDesc, driver)) ===
-        DocFuzz.canon(db.query("d1", "c", qDesc)))
+    assert(onBothExecutors(DocFuzz.canon(db.queryWithIndex("d1", "c", qDesc))) ===
+      DocFuzz.canon(db.query("d1", "c", qDesc)))
   }
 
   test("nested dotted paths work end-to-end: queryStr, addIndex, queryWithIndex") {
@@ -778,6 +776,29 @@ class GraftDBSpec extends SparkSpec {
     val sparkState = db.sparkFold("d1", "c", Long.MaxValue, None)
     assert(sparkState.count() === 40)
     assert(sparkState.inputFiles.exists(_.contains("snapshots/block_0")))
+  }
+
+  test("a driver snapshot is one file whose row groups a point read prunes") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val db = freshDb()
+    db.createCollection("d1", "c")
+    // ~1 KB of incompressible padding per doc: a ~4 MB state, several
+    // row groups, still under the driver fold's bound
+    val ids = db.addDocuments("d1", "c", (0 until 4000).map(i =>
+      s"""{"v":$i,"pad":"${new scala.util.Random(i).alphanumeric.take(1000).mkString}"}"""))
+    assert(db.snapshot("d1", "c") === ((0L, 4000L)))
+    val dir = new java.io.File(db.scanSnapshots("d1", "c").head().getAs[String]("path"))
+    val files = dir.listFiles().filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+    assert(files.length === 1, files.map(_.getName).mkString(", "))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(files.head.toURI), spark.sparkContext.hadoopConfiguration))
+    val groups = try reader.getRowGroups.size finally reader.close()
+    assert(groups > 1, s"the 4000-doc state wrote $groups row group")
+    val decoded0 = db.driverRowsDecoded.get
+    assert(db.getDoc("d1", "c", ids(2500)).exists(_.startsWith("""{"v":2500,""")))
+    val decoded = db.driverRowsDecoded.get - decoded0
+    assert(decoded > 0 && decoded < 4000, s"point read decoded $decoded of 4000 snapshot rows")
   }
 
   test("nonce state: fresh sender starts at 1, write path rejects stale/out-of-order") {

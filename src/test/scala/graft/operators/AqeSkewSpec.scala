@@ -29,13 +29,10 @@ class AqeSkewSpec extends SparkSpec {
       .select(when($"id" < 54000, 0L).otherwise($"id" % 97 + 1).as("k"),
         $"id".as("payload"))
     val right = spark.range(0, 98).select($"id".as("k"), ($"id" * 7).as("dim"))
-    // baseline under default confs, BEFORE the skew knobs go on — leaves
-    // a single conf-restore site in the finally
+    // baseline under default confs, BEFORE the skew knobs go on
     val plain = left.join(right, "k")
       .select(sum($"payload" + $"dim")).head().getLong(0)
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    SparkSpec.withConf(confs: _*) {
       val joined = left.join(right, "k").select(sum($"payload" + $"dim").as("s"))
       // collect() (not head(), which builds a separate limit QueryExecution)
       // so the inspected queryExecution is the one AQE actually re-planned
@@ -55,9 +52,6 @@ class AqeSkewSpec extends SparkSpec {
         s"AQE did not mark the join skew-handled:\n${plan.toString.take(2000)}")
       // the skew-handled run computes the same answer as the plain run
       assert(want === plain)
-    } finally {
-      confs.foreach { case (k, _) => spark.conf.unset(k) }
-      saved.foreach { case (k, v) => v.foreach(spark.conf.set(k, _)) }
     }
   }
 }

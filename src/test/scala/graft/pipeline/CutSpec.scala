@@ -23,9 +23,7 @@ class CutSpec extends SparkSpec {
   test("reliable-checkpoint cut mode is result-identical to local mode") {
     val local = cutters.map(n => n -> rows(n)).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-cut").toString
-    spark.conf.set("graft.cut.mode", "reliable")
-    spark.conf.set("graft.cut.dir", dir)
-    try {
+    SparkSpec.withConf("graft.cut.mode" -> "reliable", "graft.cut.dir" -> dir) {
       cutters.foreach { n =>
         val rel = rows(n)
         assert(rel === local(n), s"$n differs between cut modes")
@@ -35,9 +33,6 @@ class CutSpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable mode wrote no checkpoint files")
-    } finally {
-      spark.conf.unset("graft.cut.mode")
-      spark.conf.unset("graft.cut.dir")
     }
   }
 }

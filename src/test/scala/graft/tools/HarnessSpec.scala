@@ -46,13 +46,11 @@ class HarnessSpec extends SparkSpec {
       b.queryExecution.executedPlan.toString)
     assert(Harness.planHash(a) == Harness.planHash(b))
 
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    def at(partitions: Int): (String, String) = try {
-      spark.conf.set(key, partitions.toString)
-      val df = q1(spark, sf)
-      (df.queryExecution.executedPlan.toString, Harness.planHash(df))
-    } finally spark.conf.set(key, saved)
+    def at(partitions: Int): (String, String) =
+      SparkSpec.withConf("spark.sql.shuffle.partitions" -> partitions.toString) {
+        val df = q1(spark, sf)
+        (df.queryExecution.executedPlan.toString, Harness.planHash(df))
+      }
     val (plan4, hash4) = at(4)
     val (plan8, hash8) = at(8)
     assert(plan4.contains(", 4)") && plan8.contains(", 8)"))
