@@ -1,5 +1,5 @@
 #!/bin/bash
-# Core-count scaling lane (see graft.tools.ScaleLane): top-20 heaviest
+# Core-count scaling lane (graft.tools.ScaleSmoke's cores mode): top-20 heaviest
 # queries on the copies× scaled corpus at 32 and 8 cores, paired into
 # bench_scale_lane.json (8c time / 32c time per query — ratios ≫ 1 on
 # the heavy queries are the scaling evidence sf0.1 cannot provide).
@@ -12,7 +12,7 @@ COPIES="${1:-10}"
 for C in 32 8; do
   echo "[scale_lane] running at $C cores..."
   SPARK_GRAFT_CPUS=$C sbt -batch \
-    "runMain graft.tools.ScaleLane /root/testdata/sf0.1 $COPIES" \
+    "runMain graft.tools.ScaleSmoke /root/testdata/sf0.1 $COPIES cores" \
     2>&1 | tee "/tmp/scale_lane_${C}.log" | grep -E "scale-lane|lane" || true
 done
 

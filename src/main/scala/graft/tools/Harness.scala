@@ -13,11 +13,12 @@ import org.json4s._
 /** The measurement decisions every timing main shares, each made once:
   * the session (core count from the env contract), the warm-up, the
   * fixed calibration workload, the stage listener, the summary
-  * statistics, the normalized plan hash, and JSON in and out.
+  * statistics, the normalized plan hash, JSON in and out, and the
+  * ending of a lane main.
   *
   * What a main resets between runs (`graft.sources.Memo.clear()`)
   * stays with the main: Bench clears once per pass, the cold-per-query
-  * lanes clear before every query. */
+  * lanes time each query through `cold`. */
 object Harness {
 
   /** Cores for `local[n]` and the shuffle partition count:
@@ -26,16 +27,14 @@ object Harness {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The one session builder of the measurement mains: `local[cpus]`,
-    * as many shuffle partitions, UTC session time, no UI, ERROR logs.
-    * `extraConf` adds lane-specific settings on top. */
-  def session(extraConf: (String, String)*): SparkSession = {
-    val b = SparkSession.builder()
+    * as many shuffle partitions, UTC session time, no UI, ERROR logs. */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
@@ -74,6 +73,42 @@ object Harness {
     val t0 = System.nanoTime()
     body
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Wall seconds of one cold run of query `name` on `dir`: the memo is
+    * cleared first, so the run reuses no artifact an earlier run built. */
+  def cold(spark: SparkSession, name: String, dir: String): Double = {
+    graft.sources.Memo.clear()
+    seconds(graft.SparkEntry.queries(name)(spark, dir).count())
+  }
+
+  /** `body` with the session confs set to `confs`; afterwards each key
+    * is back at its previous value, or unset if it had none. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The one ending of a lane main: writes `artifact` (path, JSON) if
+    * there is one and prints it, then, when anything failed, names the
+    * failures on stderr and exits 1; otherwise prints `okMessage`. */
+  def finishLane(tag: String, artifact: Option[(Path, String)],
+      failures: Seq[String], okMessage: String): Unit = {
+    artifact.foreach { case (path, json) =>
+      Files.write(path, (json + "\n").getBytes("UTF-8"))
+      println(json)
+      println(s"[$tag] wrote ${path.toAbsolutePath}")
+    }
+    if (failures.nonEmpty) {
+      System.err.println(s"[$tag] ${failures.size} failure(s): ${failures.mkString(", ")}")
+      sys.exit(1)
+    }
+    println(s"[$tag] $okMessage")
   }
 
   /** Wall seconds of one timed query run, or -1.0 when it throws; the

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import scala.util.control.NonFatal
 
@@ -125,12 +125,7 @@ object RecallLane {
     val json = s"""{"lane":"recall","sf":${Harness.str(sfDir)},""" +
       s""""flags":${Harness.strs(flags)},"errors":${Harness.strs(errors)},""" +
       s""""metrics":$metricsJson}"""
-    Files.write(out, (json + "\n").getBytes("UTF-8"))
-    println(json)
-    println(s"[recall-lane] wrote ${out.toAbsolutePath}")
-    if (flags.nonEmpty) {
-      System.err.println(s"[recall-lane] flags: ${flags.mkString(",")}")
-      sys.exit(1)
-    }
+    Harness.finishLane("recall-lane", Some(out -> json), flags,
+      "every metric within its floor")
   }
 }

@@ -2,8 +2,6 @@ package graft.tools
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.GraftDB
 import graft.docstore.FieldValue
 
@@ -18,8 +16,12 @@ import graft.docstore.FieldValue
   * drives through its node. Driver-side tool by design (a console
   * prints rows); the library operators it calls stay distributed.
   *
-  * Run: sbt "runMain graft.tools.Shell [rootDir]"  — reads commands
-  * from stdin, so it works interactively and piped.
+  * Reads commands from stdin, so it works interactively and piped.
+  * `sbt runMain` gives a forked main no stdin, so run it on the
+  * exported classpath:
+  *   java --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
+  *     -cp "$(sbt -batch -error 'export Runtime/fullClasspath' | tail -1)" \
+  *     graft.tools.Shell [rootDir]
   */
 object Shell {
 
@@ -185,14 +187,7 @@ object Shell {
 
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_shell_db")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val db = new GraftDB(spark, root)
     println(s"graft console over $root — 'help' for commands")
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))

@@ -18,11 +18,9 @@ object StageProfile {
     Harness.warm(spark)
     names.foreach { n =>
       // warm pass: JIT + parquet footers out of the measurement
-      graft.sources.Memo.clear()
-      graft.SparkEntry.queries(n)(spark, sfDir).count()
-      graft.sources.Memo.clear()
+      Harness.cold(spark, n, sfDir)
       stages.takeRows()
-      val dt = Harness.seconds(graft.SparkEntry.queries(n)(spark, sfDir).count())
+      val dt = Harness.cold(spark, n, sfDir)
       val rows = stages.takeRows()
       println(f"== $n  cpus=${Harness.cpus}  total=$dt%.3fs  stages=${rows.size} ==")
       rows.foreach(println)

@@ -255,12 +255,7 @@ object StreamingBench {
       s""""scale_ratelimit_events_per_sec":${r1(scaleStats.rateEps)}${prevStr("scale_ratelimit_events_per_sec")},""" +
       s""""scale_ratelimit_state_rows":${scaleStats.rateRows},"scale_ratelimit_state_bytes":${scaleStats.rateBytes},""" +
       s""""scale_ratelimit_violations":${scaleStats.violations}}"""
-    Files.write(out, (json + "\n").getBytes("UTF-8"))
-    println(json)
-    println(s"[streaming-bench] wrote ${out.toAbsolutePath}")
-    if (flags.nonEmpty) {
-      System.err.println(s"[streaming-bench] flags: ${flags.mkString(",")}")
-      sys.exit(1)
-    }
+    Harness.finishLane("streaming-bench", Some(out -> json), flags,
+      "no throughput, state or linearity flags")
   }
 }

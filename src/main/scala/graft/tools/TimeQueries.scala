@@ -18,8 +18,7 @@ object TimeQueries {
     Harness.warm(spark)
     val times = collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     for (p <- 1 to passes; n <- names) {
-      graft.sources.Memo.clear()
-      val dt = Harness.seconds(graft.SparkEntry.queries(n)(spark, sfDir).count())
+      val dt = Harness.cold(spark, n, sfDir)
       times(n) = times(n) :+ dt
       println(f"pass $p $n%-28s ${Harness.num(dt)}%8s s")
     }

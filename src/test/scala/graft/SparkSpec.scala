@@ -40,13 +40,6 @@ object SparkSpec {
 
   /** `body` with the session confs set to `confs`; afterwards each key
     * is back at its previous value, or unset if it had none. */
-  def withConf[T](confs: (String, String)*)(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> session.conf.getOption(k) }
-    confs.foreach { case (k, v) => session.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => session.conf.set(k, v)
-      case (k, None) => session.conf.unset(k)
-    }
-  }
+  def withConf[T](confs: (String, String)*)(body: => T): T =
+    graft.tools.Harness.withConf(session, confs: _*)(body)
 }

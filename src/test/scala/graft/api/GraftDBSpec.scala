@@ -2,10 +2,11 @@ package graft.api
 
 import graft.SparkSpec
 import graft.docstore.{FieldFilter, FieldValue, Op, StructuredQuery}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-class GraftDBSpec extends SparkSpec {
+class GraftDBSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def freshDb(): GraftDB = {
     val dir = Files.createTempDirectory("graftdb").toString
@@ -173,8 +174,7 @@ class GraftDBSpec extends SparkSpec {
   test("indexed Eq lookup prunes the log scan via a pushed id filter") {
     import graft.docstore._
     import graft.docstore.FieldValue._
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val db = freshDb()
     db.createCollection("d1", "c")
     // five appends → five mutation-log files with disjoint id ranges
@@ -194,14 +194,8 @@ class GraftDBSpec extends SparkSpec {
     val viaIdx = onSpark(db.queryWithIndex("d1", "c", q))
     assert(viaIdx.collect().length === 1)
     assert(db.query("d1", "c", q).count() === 1)
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case qs: QueryStageExec => scans(qs.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(scans)
-    }
     // a single surviving id gets rewritten In → EqualTo by OptimizeIn
-    val logScans = scans(viaIdx.queryExecution.executedPlan)
+    val logScans = collect(viaIdx.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
       .filter(_.metadata.get("PushedFilters").exists(m =>
         m.contains("In(id") || m.contains("EqualTo(id")))
     // the id set reached the parquet reader as a pushed filter...
@@ -216,8 +210,7 @@ class GraftDBSpec extends SparkSpec {
   test("keyset cursor on the leading order key prunes the log scan via the index") {
     import graft.docstore._
     import graft.docstore.FieldValue._
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val db = freshDb()
     db.createCollection("d1", "c")
     (0 until 5).foreach { b =>
@@ -240,13 +233,7 @@ class GraftDBSpec extends SparkSpec {
     // the Spark fold, past the bound
     val viaIdx = onSpark(db.queryWithIndex("d1", "c", q))
     assert(DocFuzz.canon(viaIdx) === plain)
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case qs: QueryStageExec => scans(qs.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(scans)
-    }
-    val logScans = scans(viaIdx.queryExecution.executedPlan)
+    val logScans = collect(viaIdx.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
       .filter(_.metadata.get("PushedFilters").exists(m =>
         m.contains("In(id") || m.contains("EqualTo(id")))
     assert(logScans.nonEmpty, "cursor bound never reached the log scan as an id push")

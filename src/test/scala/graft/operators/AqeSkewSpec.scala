@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * so the effect manifests on a test-sized corpus; on a cluster the
   * defaults (256 MB advisory / 5× factor) do the same to a hot join key.
   */
-class AqeSkewSpec extends SparkSpec {
+class AqeSkewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("AQE splits the skewed join partition at runtime") {
@@ -38,15 +37,10 @@ class AqeSkewSpec extends SparkSpec {
       // so the inspected queryExecution is the one AQE actually re-planned
       val want = joined.collect()(0).getLong(0)
       // the answer is right AND the executed plan marked the join skew-handled
-      // query stages are leaf nodes, so plain collect() stops at stage
-      // boundaries — descend into each stage's wrapped plan explicitly
-      def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-        case q: QueryStageExec        => allNodes(q.plan)
-        case _                        => p.children.flatMap(allNodes)
-      })
+      // query stages are leaf nodes, so a plan's own collect stops at
+      // stage boundaries — the AQE helper's descends into each stage
       val plan = joined.queryExecution.executedPlan
-      val smj = allNodes(plan).collect { case j: SortMergeJoinExec => j }
+      val smj = collect(plan) { case j: SortMergeJoinExec => j }
       assert(smj.nonEmpty, s"expected a sort-merge join in:\n$plan")
       assert(smj.exists(_.isSkewJoin),
         s"AQE did not mark the join skew-handled:\n${plan.toString.take(2000)}")
