@@ -17,7 +17,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.json4s.{DefaultFormats, Formats}
+import org.json4s.{DefaultFormats, Formats, JArray, JInt, JNothing, JNull, JString, JValue}
 import org.json4s.jackson.{JsonMethods, Serialization}
 import graft.docstore.{DocCollection, DocStore, StructuredQuery}
 import graft.functions.crypto.{Eip712, Keccak256}
@@ -25,6 +25,7 @@ import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** Parquet-backed document database with the reference's mutation
@@ -38,12 +39,15 @@ import scala.jdk.CollectionConverters._
   *   <db>/<collection>/mutations/      live mutation tail, one blk_<block>_<token>/
   *                                     (or block_<block>/) parquet dir per block
   *   <db>/<collection>/rollups/        gzip batches: run_<lo>_<hi>/batch=N, compact_*
-  *   <db>/<collection>/state/          block/id cell state.json + state.lock
-  *   <db>/<collection>/manifest/       append-only parquet records: rollup/, gc/,
-  *                                     compact/, snapshot/; read on the driver
-  *                                     (no Spark job), one part file per append
+  *   <db>/<collection>/state/          cell state.json (lastBlock, nextId,
+  *                                     docWrites) + state.lock
+  *   <db>/<collection>/manifest/       append-only records: rollup/, gc/,
+  *                                     compact/, snapshot/; one JSON file of
+  *                                     records per append, written and read
+  *                                     like a cell (no Spark job)
   *   <db>/<collection>/snapshots/      folded state per block_<block>
-  *   <db>/<collection>/indexes/        sorted key tables, _FRESH while current
+  *   <db>/<collection>/indexes/        sorted key tables, each with its cell
+  *                                     _INDEX.json (key type, docWrites at build)
   * }}}
   *
   * A mutation row = (block, order, action, id, doc, mask) — the exact
@@ -105,9 +109,10 @@ class GraftDB(spark: SparkSession, root: String,
   // it per mutation batch (mutation_store.rs:444
   // increase_block_return_last_state) — O(1) per append. The analog: a
   // one-line JSON cell per collection. The node keeps two more cells the
-  // same way, per-sender nonces and the Setup config. Only a holder of
-  // the cell's lock writes it, atomically (temp + move), so a reader sees
-  // the old or the new value whole.
+  // same way, per-sender nonces and the Setup config; manifest records and
+  // index cells are cells too. Only a holder of the cell's lock writes it,
+  // atomically (a `.`-prefixed temp, which listings skip, then a move), so
+  // a reader sees the old or the new value whole.
 
   private def readCell[T: Manifest](path: String): Option[T] = {
     val p = Paths.get(path)
@@ -122,7 +127,7 @@ class GraftDB(spark: SparkSession, root: String,
     implicit val fmts: Formats = DefaultFormats
     val p = Paths.get(path)
     Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
+    val tmp = p.resolveSibling(s".${p.getFileName}.tmp")
     Files.writeString(tmp, Serialization.write(value))
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
@@ -360,10 +365,11 @@ class GraftDB(spark: SparkSession, root: String,
   /** The one locked block commit, for a holder of the collection lock
     * (`addIndex` records its declaration and builds the index in one
     * hold, and the lock does not nest): read the cell, sweep orphan
-    * batch dirs, stamp block = lastBlock + 1, mark indexes stale (document
-    * writes only), write `rows(block, nextId)` into a UNIQUE
-    * `blk_<block>_<token>` dir, then commit the cell with nextId advanced
-    * by `newIds`. Returns the state the commit started from.
+    * batch dirs, stamp block = lastBlock + 1, write `rows(block, nextId)`
+    * into a UNIQUE `blk_<block>_<token>` dir, then commit the cell with
+    * nextId advanced by `newIds` and, for a document write, docWrites by
+    * one (the count index cells compare against). Returns the state the
+    * commit started from.
     *
     * The token makes a crashed attempt's data distinguishable garbage: a
     * writer that dies between the data write and the cell commit releases
@@ -385,12 +391,11 @@ class GraftDB(spark: SparkSession, root: String,
     }
     sweepOrphanBatchDirs(db, coll, st.lastBlock)
     val block = st.lastBlock + 1
-    if (docWrite) markIndexesStale(db, coll)
     spark.createDataFrame(rows(block, st.nextId), mutationSchema)
       .write.mode(SaveMode.Overwrite)
       .parquet(s"${mutPath(db, coll)}/blk_${block}_${UUID.randomUUID.toString.take(8)}")
     failpoint(s"$op:afterAppend")
-    writeCell(cell, CollState(block, st.nextId + newIds))
+    writeCell(cell, CollState(block, st.nextId + newIds, st.docWrites + (if (docWrite) 1 else 0)))
     st
   }
 
@@ -486,9 +491,8 @@ class GraftDB(spark: SparkSession, root: String,
       // uncommitted rows would become visible under the new bound
       sweepOrphanBatchDirs(db, coll, st.lastBlock)
       // the block's rows stay invisible until this bump commits them
-      markIndexesStale(db, coll)
       writeCell(statePath(db, coll), CollState(math.max(st.lastBlock, block),
-        math.max(st.nextId, (block + 1) * IdStride)))
+        math.max(st.nextId, (block + 1) * IdStride), st.docWrites + 1))
     }
   }
 
@@ -536,8 +540,7 @@ class GraftDB(spark: SparkSession, root: String,
           readableFiles(dir).map(parquet.rowCount).sum
       }
       failpoint("snapshot:afterData")
-      appendManifest(db, coll, "snapshot", Seq(Row(at, n, dir)),
-        snapshotManifestSchema)
+      appendManifest(db, coll, "snapshot", Seq(Row(at, n, dir)), snapshotManifestSchema)
       (at, n)
     }
 
@@ -796,9 +799,7 @@ class GraftDB(spark: SparkSession, root: String,
       RollupRecord(bs.map(_.block).min, bs.map(_.block).max, bs.map(_.rows).sum,
         dirSize(path), bs.map(_.bytes).sum, path)
     }
-    appendManifest(db, coll, "rollup", records.map(rec =>
-      Row(rec.startBlock, rec.endBlock, rec.mutationCount,
-        rec.compressedBytes, rec.rawBytes, rec.path)), rollupManifestSchema)
+    appendManifest(db, coll, "rollup", records.map(Row.fromTuple), rollupManifestSchema)
     failpoint("rollup:afterManifest")
     // GC the rolled-up tail. The GcRecord covers the WHOLE deleted tail
     // (rawLo..rawHi — includes any redundant rows a crashed prior run
@@ -857,18 +858,34 @@ class GraftDB(spark: SparkSession, root: String,
   }
 
   /** Append records to one manifest (`kind` = rollup, gc, compact or
-    * snapshot) — the commit point of the operation that wrote them. */
-  private def appendManifest(db: String, coll: String, kind: String,
-      rows: Seq[Row], schema: StructType): Unit =
-    spark.createDataFrame(local(rows), schema)
-      .write.mode(SaveMode.Append).parquet(s"${manifestPath(db, coll)}/$kind")
+    * snapshot), for a holder of the collection lock: one JSON cell of
+    * `rows`, keyed by `schema`'s field names, named by its append's
+    * sequence number. Its move is the commit point of the operation that
+    * wrote the records; no Spark job. */
+  private[api] def appendManifest(db: String, coll: String, kind: String,
+      rows: Seq[Row], schema: StructType): Unit = {
+    val dir = s"${manifestPath(db, coll)}/$kind"
+    writeCell(f"$dir/${readableFiles(dir).size}%020d.json",
+      rows.map(r => ListMap(schema.fieldNames.zip(r.toSeq): _*)))
+  }
 
-  /** One manifest's records, decoded on the driver — no Spark job. Reads
-    * exactly the part files Spark's reader reads (`readableFiles`).
-    * Empty before the first append. */
+  /** One manifest's records in append order, decoded by `schema` on the
+    * driver; a key a record lacks reads as null. Reads the files
+    * `readableFiles` lists, so a crashed append's temp file is skipped.
+    * Empty before the first append. A dir that holds anything but JSON
+    * records (the parquet part files manifests were before) fails the
+    * read: reading past them would drop the rolled-up batches they
+    * list. */
   private def readManifest(db: String, coll: String, kind: String,
-      schema: StructType): Seq[Row] =
-    readableFiles(s"${manifestPath(db, coll)}/$kind").toVector.flatMap(parquet.rows(_, schema))
+      schema: StructType): Seq[Row] = {
+    val dir = s"${manifestPath(db, coll)}/$kind"
+    readableFiles(dir).toVector.flatMap { f =>
+      require(f.getName.endsWith(".json"),
+        s"manifest dir $dir holds ${f.getName}, not a JSON record (an older layout)")
+      JsonMethods.parse(Files.readString(f.toPath)).children.map(rec => new GenericRowWithSchema(
+        schema.fields.map(c => recordValue(rec \ c.name, c.dataType)), schema): Row)
+    }
+  }
 
   /** The driver's parquet reader, on the session's Hadoop conf. */
   private lazy val parquet = new DriverParquet(spark.sparkContext.hadoopConfiguration)
@@ -1196,7 +1213,8 @@ class GraftDB(spark: SparkSession, root: String,
     * the bucketed/sorted projection that replaces the reference's EJDB2
     * B-tree (row-group pruning on the sorted key). The build runs under
     * the collection lock, so no document write lands between the state
-    * it folds and its freshness marker, written last. */
+    * it folds and its index cell, written last with the state cell's
+    * docWrites. */
   def addIndex(db: String, coll: String, path: String, indexType: String): Unit =
     withLock(collLock(db, coll)) {
       appendLifecycle(db, coll, ActionAddIndex,
@@ -1215,33 +1233,23 @@ class GraftDB(spark: SparkSession, root: String,
         .filter(col("idx_key").isNotNull)
         .sort("idx_key")
         .write.mode(SaveMode.Overwrite).parquet(idxDir)
-      Files.write(Paths.get(idxDir, KeyTypeFile), indexType.getBytes("UTF-8"))
-      Files.createFile(Paths.get(idxDir, FreshMarker))
+      writeCell(indexCellPath(db, coll, path),
+        IndexCell(indexType, currentState(db, coll).docWrites))
     }
 
   private def indexDir(db: String, coll: String, path: String) =
     s"${collPath(db, coll)}/indexes/$path"
 
-  /** An index answers queries only while its dir holds this marker:
-    * `addIndex` writes it after the build, and every document write
-    * deletes it under the collection lock before committing its batch,
-    * so a crash can only leave an index marked stale. The index is not
-    * maintained incrementally; a stale one serves again after the next
-    * `addIndex`. Spark's reader skips `_`-prefixed files. */
-  private val FreshMarker = "_FRESH"
-
-  private def markIndexesStale(db: String, coll: String): Unit =
-    listDir(s"${collPath(db, coll)}/indexes").foreach(d =>
-      Files.deleteIfExists(d.toPath.resolve(FreshMarker)))
-
-  /** The index type `addIndex` was given, recorded in the index dir so a
-    * read knows the key's type without inferring the parquet schema (a
-    * Spark job). Document writes leave it in place. */
-  private val KeyTypeFile = "_KEY_TYPE"
+  /** The index cell: the type `addIndex` was given (a read knows the
+    * key's type without inferring the parquet schema, a Spark job) and
+    * the state cell's docWrites the index was built at. Spark's reader
+    * skips `_`-prefixed files. */
+  private def indexCellPath(db: String, coll: String, path: String) =
+    s"${indexDir(db, coll, path)}/_INDEX.json"
 
   private def keyType(db: String, coll: String, path: String): DataType =
-    new String(Files.readAllBytes(Paths.get(indexDir(db, coll, path), KeyTypeFile)),
-        "UTF-8") match {
+    readCell[IndexCell](indexCellPath(db, coll, path)).getOrElse(
+        throw new IllegalStateException(s"no index cell for $coll.$path")).`type` match {
       case "Int64Key" => LongType
       case "DoubleKey" => DoubleType
       case _ => StringType
@@ -1254,11 +1262,15 @@ class GraftDB(spark: SparkSession, root: String,
   private def indexSchema(db: String, coll: String, path: String): StructType =
     StructType(Seq(StructField("idx_key", keyType(db, coll, path)), StructField("_id", LongType)))
 
-  /** Whether a fresh index on `path` exists: built by `addIndex` with no
-    * document write since. */
+  /** Whether a fresh index on `path` exists: its cell's docWrites equals
+    * the state cell's, so no document write committed since `addIndex`
+    * built it. The index is not maintained incrementally; a stale one
+    * serves again after the next `addIndex`. A document write that
+    * crashes before its commit leaves the count, and the index, as they
+    * were. */
   def hasIndex(db: String, coll: String, path: String): Boolean =
-    Seq(FreshMarker, KeyTypeFile).forall(f =>
-      Files.exists(Paths.get(indexDir(db, coll, path), f)))
+    readCell[IndexCell](indexCellPath(db, coll, path)).exists(i =>
+      readCell[CollState](statePath(db, coll)).exists(_.docWrites == i.docWrites))
 
   /** Index-aware execution: when the query's leading field filter has a
     * materialized index, evaluate the predicate against the index
@@ -1465,14 +1477,19 @@ object GraftDB {
 
   /** RollupRecord analog (rollup_executor.rs RollupRecord{start_block,
     * end_block, mutation_count, raw_data_size, compress_data_size,
-    * arweave_tx → path}). */
+    * arweave_tx → path}). Its fields are `rollupManifestSchema`'s
+    * columns in order: the rollup manifest stores each record's tuple. */
   case class RollupRecord(startBlock: Long, endBlock: Long,
       mutationCount: Long, compressedBytes: Long,
       rawBytes: Long = 0L, path: String = "")
 
   /** The per-collection block-state cell (mutation_store.rs:444):
-    * last stamped block + next dense doc id. */
-  case class CollState(lastBlock: Long, nextId: Long)
+    * last stamped block + next dense doc id, and the count of committed
+    * document writes (a cell written before the count existed reads 0). */
+  case class CollState(lastBlock: Long, nextId: Long, docWrites: Long = 0L)
+
+  /** An index's cell: its key type and the docWrites it was built at. */
+  private[api] case class IndexCell(`type`: String, docWrites: Long)
 
   /** GetMutationHeader view: header fields + rollup status. */
   case class MutationHeaderView(block: Long, order: Int, action: Int,
@@ -1654,12 +1671,6 @@ object GraftDB {
     def open(file: java.io.File): ParquetFileReader =
       ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file.toURI), conf), options)
 
-    /** All of a file's records as rows of `schema`. */
-    def rows(file: java.io.File, schema: StructType): Seq[Row] = {
-      val r = open(file)
-      try decode(r, r.getRowGroups.asScala.indices, schema).toVector finally r.close()
-    }
-
     /** A file's record count, from its footer. */
     def rowCount(file: java.io.File): Long = {
       val r = open(file)
@@ -1684,8 +1695,9 @@ object GraftDB {
 
   /** The files Spark's reader reads under `dir`, nested dirs included:
     * names starting with `_` or `.` (`_SUCCESS`, `.crc` siblings, a
-    * crashed write's `_temporary/`) are skipped, files and dirs alike.
-    * The one rule for whether a dir has data. Listed as far as the caller
+    * crashed write's `_temporary/`, a cell's temp file) are skipped,
+    * files and dirs alike. The one rule for whether a dir has data, and
+    * the listing of a manifest's records. Listed as far as the caller
     * reads: `nonEmpty` stops at the first file. */
   private def readableFiles(dir: String): LazyList[java.io.File] =
     listDir(dir).filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
@@ -1719,20 +1731,19 @@ object GraftDB {
       case IntegerType => g.getInteger(name, 0)
       case DoubleType => g.getDouble(name, 0)
       case StringType => g.getString(name, 0)
-      case ArrayType(StringType, _) =>
-        // a LIST group: one repeated field, each repetition either the
-        // element itself (2-level) or a group holding it (3-level)
-        val list = g.getGroup(name, 0)
-        (0 until list.getFieldRepetitionCount(0)).map { i =>
-          if (list.getType.getType(0).isPrimitive) list.getString(0, i)
-          else {
-            val e = list.getGroup(0, i)
-            if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)
-          }
-        }
       case other =>
         throw new IllegalArgumentException(s"no driver decoder for $name: $other")
     }
+
+  /** A manifest record's value for a column of type `t`; absent or null
+    * reads as null. */
+  private def recordValue(v: JValue, t: DataType): Any = (v, t) match {
+    case (JNothing | JNull, _) => null
+    case (JInt(x), LongType) => x.toLong
+    case (JString(x), StringType) => x
+    case (JArray(xs), ArrayType(e, _)) => xs.map(recordValue(_, e))
+    case _ => throw new IllegalArgumentException(s"manifest value $v is not a $t")
+  }
 
   /** One block's share of the mutation tail: rows and payload bytes. */
   private case class BlockStat(block: Long, rows: Long, bytes: Long)

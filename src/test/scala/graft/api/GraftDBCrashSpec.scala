@@ -111,6 +111,32 @@ class GraftDBCrashSpec extends SparkSpec {
     assert(doc.contains("\"a\":9") && doc.contains("\"b\":2")) // post-commit
   }
 
+  // freshness is the state cell's docWrites count: a document write that
+  // crashes before its commit leaves the count, and so the index, as is
+  for ((op, write) <- Seq[(String, GraftDB => Any)](
+      "addDocuments" -> (_.addDocuments("d", "c", Seq("""{"k":1,"v":9}"""))),
+      "updateDocuments" -> (_.updateDocuments("d", "c", Seq(0L), Seq("""{"k":1}"""), Seq(Seq("k"))))))
+    test(s"$op: a crash before the commit leaves a built index fresh, the retry stales it") {
+      import graft.docstore.{FieldFilter, FieldValue, Op, StructuredQuery}
+      val db = freshDb(); db.createCollection("d", "c")
+      db.addDocuments("d", "c", Seq("""{"k":2,"v":0}""", """{"k":1,"v":1}"""))
+      db.addIndex("d", "c", "k", "Int64Key")
+      val q = StructuredQuery(where = Some(FieldFilter("k", Op.Eq, FieldValue.I64(1))))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      val before = rows(db.query("d", "c", q))
+      arm(db, s"$op:afterAppend")
+      intercept[Boom](write(db))
+      disarm(db)
+      // the uncommitted rows are invisible, so the index still answers
+      assert(db.hasIndex("d", "c", "k"))
+      assert(rows(db.queryWithIndex("d", "c", q)) === before)
+      assert(rows(db.query("d", "c", q)) === before)
+      write(db)
+      assert(!db.hasIndex("d", "c", "k"))
+      assert(rows(db.queryWithIndex("d", "c", q)) === rows(db.query("d", "c", q)))
+      assert(rows(db.query("d", "c", q)).length === 2)
+    }
+
   test("appendDocumentsAt: crash after block write — invisible until commit, Overwrite retry idempotent") {
     import spark.implicits._
     val db = freshDb(); db.createCollection("d", "c")
