@@ -3,10 +3,13 @@ package graft.api
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.example.data.Group
@@ -21,12 +24,14 @@ import org.json4s.{DefaultFormats, Formats, JArray, JInt, JNothing, JNull, JStri
 import org.json4s.jackson.{JsonMethods, Serialization}
 import graft.docstore.{DocCollection, DocStore, StructuredQuery}
 import graft.functions.crypto.{Eip712, Keccak256}
+import java.io.FileNotFoundException
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Parquet-backed document database with the reference's mutation
   * semantics (reference: src/storage/src/db_store_v2.rs apply_mutation;
@@ -174,11 +179,8 @@ class GraftDB(spark: SparkSession, root: String,
 
   private def scanState(db: String, coll: String): CollState = {
     val log = mutationLog(db, coll)
-    if (log.isEmpty) CollState(-1L, 0L)
-    else {
-      val r = log.agg(max(col("block")), max(col("id"))).head()
-      CollState(r.getLong(0), r.getLong(1) + 1L)
-    }
+    val r = if (log.isEmpty) Row(-1L, -1L) else log.agg(max(col("block")), max(col("id"))).head()
+    CollState(r.getLong(0), r.getLong(1) + 1L)
   }
 
   /** The next block a writer would stamp — state-cell read, no log scan.
@@ -271,17 +273,18 @@ class GraftDB(spark: SparkSession, root: String,
   }
 
   /** The full mutation log: rolled-up batches + live tail, one schema,
-    * the committed blocks `readPlan` admits. A frame built before a
-    * rollup's GC deleted tail files it listed fails its job
-    * (FileNotFoundException) and must be built again; it never silently
-    * drops rows. */
+    * the committed blocks `readPlan` admits, over exactly the files it
+    * listed. A frame built before a rollup's GC deleted tail files it
+    * listed fails its job (FileNotFoundException) and must be built
+    * again; it never silently drops rows. */
   def mutationLog(db: String, coll: String): DataFrame =
-    logFrame(readPlan(db, coll, Long.MaxValue, seeded = false)(sparkOpen))
+    planned(db, coll, Long.MaxValue, seeded = false)(logFrame(_))
 
   /** What a read as of `block` sees — the one rule, shared by
-    * `mutationLog`, the Spark fold and the driver fold; each passes only
-    * its `open` (paths → that executor's handle on their readable files,
-    * None when there are none).
+    * `mutationLog`, the log RPCs and both folds: each source's files,
+    * listed once by `readableFiles` and stat'ed once. Both executors read
+    * exactly these files; Spark's file index is handed their statuses and
+    * lists nothing.
     *
     * Only committed data is visible. COMMIT POINT = the state cell
     * (Delta-style: data files land first, invisible; the atomic cell flip
@@ -301,18 +304,20 @@ class GraftDB(spark: SparkSession, root: String,
     * bound seeds the fold and every source replays only blocks after it.
     *
     * Order matters: the cell, then the snapshot record, then the tail is
-    * LISTED (pinned: the driver lists it now, Spark's InMemoryFileIndex
-    * lists eagerly at DataFrame creation), THEN the rollup and compact
-    * manifests are read. A rollup whose manifest append and GC both
-    * complete between the two steps then still surfaces via the
-    * manifest, and tail files its GC deleted fail the read CLOSED
-    * (FileNotFoundException: the driver fold re-plans; a Spark job fails
-    * and its caller must re-plan — never silently dropped rows, the same
-    * failure mode a Delta reader has past checkpoint retention). The
-    * reverse order silently loses the freshly-rolled blocks: absent from
-    * the stale manifest snapshot AND from the post-GC listing. */
-  private def readPlan[S](db: String, coll: String, block: Long, seeded: Boolean)(
-      open: (Seq[String], StructType) => Option[S]): ReadPlan[S] = {
+    * LISTED (all of it, now), THEN the rollup and compact manifests are
+    * read, then the live batch dirs are listed. A rollup whose manifest
+    * append and GC both complete between the tail listing and the
+    * manifest read then still surfaces via the manifest, and tail files
+    * its GC deleted fail the read CLOSED (FileNotFoundException: gone at
+    * planning or in the driver decode, the read re-plans; gone when a
+    * Spark job opens them, the job fails and its caller must re-plan —
+    * never silently dropped rows, the same failure mode a Delta reader
+    * has past checkpoint retention). The reverse order silently loses the
+    * freshly-rolled blocks: absent from the stale manifest snapshot AND
+    * from the post-GC listing. A live batch dir that holds no files fails
+    * the plan the same way: a compaction retired it after the manifest
+    * read and the next one deleted it. */
+  private def readPlan(db: String, coll: String, block: Long, seeded: Boolean): ReadPlan = {
     val committed = readCell[CollState](statePath(db, coll))
       .fold(block)(c => math.min(block, c.lastBlock))
     val seed =
@@ -320,35 +325,60 @@ class GraftDB(spark: SparkSession, root: String,
       else readManifest(db, coll, "snapshot", snapshotManifestSchema)
         .map(r => (r.getAs[Long]("block"), r.getAs[String]("path")))
         .filter(_._1 <= committed).maxByOption(_._1)
-        .flatMap { case (at, path) => open(Seq(path), snapshotSchema).map(at -> _) }
-    val tail = open(Seq(mutPath(db, coll)), mutationSchema)
+        .map { case (at, path) => at -> statuses(path) }.filter(_._2.nonEmpty)
+    val tail = statuses(mutPath(db, coll))
     val store = batches(db, coll)
     val seedAt = seed.map(_._1)
     val tailAfter = (seedAt ++ Some(store.committedHi).filter(_ >= 0)).maxOption
     ReadPlan(committed, seed,
-      open(store.live.map(_.path), mutationSchema).map(_ -> seedAt).toSeq ++
-        tail.map(_ -> tailAfter),
+      Seq(store.live.flatMap(batchFiles) -> seedAt, tail -> tailAfter).filter(_._1.nonEmpty),
       store.committedHi)
   }
 
-  /** `readPlan`'s Spark `open`: one scan over the paths that hold
-    * readable files. */
-  private def sparkOpen(paths: Seq[String], schema: StructType): Option[DataFrame] =
-    Some(paths.filter(readableFiles(_).nonEmpty)).filter(_.nonEmpty).map(readLog(_, schema))
+  /** `read` over a fresh `readPlan`, planned again (three times at most)
+    * while a file the plan listed is gone when `read` opens it — at
+    * planning, in the driver decode or in a job `read` runs: a rollup's
+    * GC or a compaction deleted it, and the new plan finds its rows
+    * through the manifests. */
+  private def planned[T](db: String, coll: String, block: Long, seeded: Boolean, left: Int = 3)(
+      read: ReadPlan => T): T =
+    try read(readPlan(db, coll, block, seeded)) catch {
+      case e: Exception if left > 0 && ExceptionUtils.indexOfType(e, classOf[FileNotFoundException]) >= 0 =>
+        planned(db, coll, block, seeded, left - 1)(read)
+    }
 
-  /** A Spark plan's log sources (after `seed`, when given) as one frame,
+  /** A plan's log sources (after `seed`, when given) as one Spark frame,
     * each kept to the blocks the plan replays from it. */
-  private def logFrame(plan: ReadPlan[DataFrame], seed: Option[DataFrame] = None): DataFrame =
-    (seed.toSeq ++ plan.logs.map { case (df, after) =>
+  private def logFrame(plan: ReadPlan, seed: Option[DataFrame] = None): DataFrame =
+    (seed.toSeq ++ plan.logs.map { case (files, after) =>
+      val df = readLog(files)
       val above = after.fold(df)(a => df.filter(col("block") > a))
       if (plan.committed == Long.MaxValue) above else above.filter(col("block") <= plan.committed)
-    }).reduceOption(_ unionByName _).getOrElse(emptyFrame(mutationSchema))
+    }).reduceOption(_ unionByName _).getOrElse(readLog(Nil))
 
-  /** Parquet under `paths`, nested dirs included (recursiveFileLookup
-    * also disables partition-column inference on the batch=N dir names —
-    * the file schema is the whole schema). */
-  private def readLog(paths: Seq[String], schema: StructType = mutationSchema): DataFrame =
-    spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(paths: _*)
+  /** Parquet `files` as a Spark relation over exactly those files: its
+    * file index finds every status in its cache, so building the frame
+    * lists nothing and runs no job, and no partition column is inferred
+    * (the file schema is the whole schema). A file deleted since its stat
+    * fails the job that opens it. */
+  private def readLog(files: Seq[FileStatus], schema: StructType = mutationSchema): DataFrame = {
+    val listed = files.map(f => f.getPath -> Array(f)).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty, Some(schema),
+      cache, Some(PartitionSpec.emptySpec))
+    spark.baseRelationToDataFrame(
+      HadoopFsRelation(index, new StructType(), schema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** A live rollup batch's files; a dir that holds none fails the read
+    * (FileNotFoundException) rather than dropping the batch's blocks. */
+  private def batchFiles(b: Batch): Seq[FileStatus] =
+    Some(statuses(b.path)).filter(_.nonEmpty)
+      .getOrElse(throw new FileNotFoundException(s"rollup batch ${b.path} holds no files"))
 
   /** The rollup store as its manifests publish it (base records minus
     * the ones compaction retired, plus the live compacted dirs). Two
@@ -531,13 +561,15 @@ class GraftDB(spark: SparkSession, root: String,
       val dir = snapPath(db, coll, at)
       def write(state: DataFrame): Unit = state.write
         .option("parquet.block.size", SnapshotRowGroupBytes).mode(SaveMode.Overwrite).parquet(dir)
-      val n = driverFold(db, coll, at, None) match {
-        case Some(f) => // already sorted: one file
-          write(foldedFrame(f.rows).coalesce(1))
-          f.rows.length.toLong
-        case None =>
-          write(sparkFold(db, coll, at, None).orderBy("_id"))
-          readableFiles(dir).map(parquet.rowCount).sum
+      val n = planned(db, coll, at, seeded = true) { plan =>
+        foldOnDriver(plan, None) match {
+          case Some(f) => // already sorted: one file
+            write(foldedFrame(f.rows).coalesce(1))
+            f.rows.length.toLong
+          case None =>
+            write(foldOnSpark(plan, None).orderBy("_id"))
+            statuses(dir).map(f => Using.resource(parquet.open(f))(_.getRecordCount)).sum
+        }
       }
       failpoint("snapshot:afterData")
       appendManifest(db, coll, "snapshot", Seq(Row(at, n, dir)), snapshotManifestSchema)
@@ -582,15 +614,17 @@ class GraftDB(spark: SparkSession, root: String,
       .select("doc").head(1).headOption.map(_.getString(0))
 
   /** The live state as of `block` (ids `onlyIds` only, when given), as
-    * (_id, doc). Two executors run the same `replay` per id: the driver
-    * fold when the row groups the read must decode (pruned by their
-    * footer stats on block and id) hold at most the session's
+    * (_id, doc), over one plan. Two executors run the same `replay` per
+    * id: the driver fold when the row groups the read must decode (pruned
+    * by their footer stats on block and id) hold at most the session's
     * `spark.sql.autoBroadcastJoinThreshold` uncompressed bytes — a
-    * `LocalRelation`, no Spark job — else the Spark fold. */
+    * `LocalRelation`, no Spark job — else the Spark fold over the same
+    * files. */
   private def foldLog(db: String, coll: String, block: Long,
       onlyIds: Option[Seq[Long]] = None): DataFrame =
-    driverFold(db, coll, block, onlyIds)
-      .fold(sparkFold(db, coll, block, onlyIds))(f => foldedFrame(f.rows))
+    planned(db, coll, block, seeded = true) { plan =>
+      foldOnDriver(plan, onlyIds).fold(foldOnSpark(plan, onlyIds))(f => foldedFrame(f.rows))
+    }
 
   private def foldedFrame(rows: Seq[(Long, String)]): DataFrame =
     spark.createDataFrame(rows.map { case (id, doc) => Row(id, doc) }.asJava, foldSchema)
@@ -599,28 +633,17 @@ class GraftDB(spark: SparkSession, root: String,
     * this instance (the pruning specs read it). */
   private[api] val driverRowsDecoded = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The driver executor of `foldLog`: the folded state sorted by `_id`
-    * and the files it decoded, or None when the read's input exceeds the
-    * broadcast bound (a negative bound turns the driver fold off). A file
-    * a rollup's GC or a compaction deleted after `readPlan` listed it
-    * re-plans the read; the new plan finds its rows through the
-    * manifests. */
+  /** `foldLog`'s driver executor alone, over a plan of its own. */
   private[api] def driverFold(db: String, coll: String, block: Long,
-      onlyIds: Option[Seq[Long]]): Option[DriverFold] = {
-    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
-    def attempt(left: Int): Option[DriverFold] =
-      try driverFoldOnce(db, coll, block, onlyIds, bound)
-      catch { case _: java.io.FileNotFoundException if left > 0 => attempt(left - 1) }
-    if (bound < 0) None else attempt(3)
-  }
+      onlyIds: Option[Seq[Long]]): Option[DriverFold] =
+    planned(db, coll, block, seeded = true)(foldOnDriver(_, onlyIds))
 
-  private def driverFoldOnce(db: String, coll: String, block: Long,
-      onlyIds: Option[Seq[Long]], bound: Long): Option[DriverFold] = {
-    val plan = readPlan(db, coll, block, seeded = true)((paths, _) =>
-      Some(paths.flatMap(readableFiles).toVector).filter(_.nonEmpty))
-    val committed = plan.committed
+  /** The driver executor: the folded state sorted by `_id` and the files
+    * it decoded, or None when the plan's input exceeds the broadcast
+    * bound (a negative bound turns the driver fold off). */
+  private def foldOnDriver(plan: ReadPlan, onlyIds: Option[Seq[Long]]): Option[DriverFold] = {
     // (file, snapshot seed?, blocks replayed only above this)
-    val inputs: Seq[(java.io.File, Boolean, Option[Long])] =
+    val inputs: Seq[(FileStatus, Boolean, Option[Long])] =
       plan.seed.toSeq.flatMap(_._2).map((_, true, None)) ++
         plan.logs.flatMap { case (files, after) => files.map((_, false, after)) }
     val sortedIds = onlyIds.map(_.distinct.sorted.toArray)
@@ -628,8 +651,9 @@ class GraftDB(spark: SparkSession, root: String,
     def admits(rg: BlockMetaData, seed: Boolean, after: Option[Long]): Boolean =
       sortedIds.forall(statsAdmitAny(rg, if (seed) "_id" else "id", _)) &&
         (seed || statsAdmit[java.lang.Long](rg, "block",
-          after.map(a => java.lang.Long.valueOf(a + 1)), Some(java.lang.Long.valueOf(committed))))
-    readSmall(inputs.map { case (f, seed, after) => f -> (admits(_, seed, after)) }, bound) { picked =>
+          after.map(a => java.lang.Long.valueOf(a + 1)), Some(java.lang.Long.valueOf(plan.committed))))
+    readSmall(inputs.map { case (f, seed, after) => f -> (admits(_, seed, after)) },
+        spark.sessionState.conf.autoBroadcastJoinThreshold) { picked =>
       val muts = picked.zip(inputs).flatMap { case ((_, r, groups), (_, seed, after)) =>
         val rows = parquet.decode(r, groups, if (seed) snapshotSchema else mutationSchema).toVector
         driverRowsDecoded.addAndGet(rows.length.toLong)
@@ -639,13 +663,13 @@ class GraftDB(spark: SparkSession, root: String,
         else
           rows.map(row => MutationRow(row.getLong(0), row.getInt(1), row.getInt(2),
               row.getLong(3), row.getString(4), row.getString(5)))
-            .filter(m => after.forall(m.block > _) && m.block <= committed)
+            .filter(m => after.forall(m.block > _) && m.block <= plan.committed)
       }
       DriverFold(
         muts.filter(m => idSet.forall(_(m.id))).groupBy(_.id).toSeq
           .flatMap { case (id, ms) => replay(ms).map(id -> _) }
           .sortBy(_._1),
-        picked.collect { case (f, _, groups) if groups.nonEmpty => f.getPath })
+        picked.collect { case (f, _, groups) if groups.nonEmpty => f.getPath.toString })
     }
   }
 
@@ -654,9 +678,9 @@ class GraftDB(spark: SparkSession, root: String,
     * decoded nothing, once their uncompressed bytes pass `bound`. The
     * footers come first: the bytes to decode are known before any row
     * is. */
-  private def readSmall[T](inputs: Seq[(java.io.File, BlockMetaData => Boolean)], bound: Long)(
-      body: Seq[(java.io.File, ParquetFileReader, Seq[Int])] => T): Option[T] = {
-    val open = scala.collection.mutable.ArrayBuffer[(java.io.File, ParquetFileReader, Seq[Int])]()
+  private def readSmall[T](inputs: Seq[(FileStatus, BlockMetaData => Boolean)], bound: Long)(
+      body: Seq[(FileStatus, ParquetFileReader, Seq[Int])] => T): Option[T] = {
+    val open = scala.collection.mutable.ArrayBuffer[(FileStatus, ParquetFileReader, Seq[Int])]()
     try {
       var bytes = 0L
       val it = inputs.iterator
@@ -672,17 +696,20 @@ class GraftDB(spark: SparkSession, root: String,
     } finally open.foreach(_._2.close())
   }
 
-  /** The Spark executor of `foldLog`: a groupByKey/mapGroups replay over
-    * the snapshot seed plus the log after it. */
+  /** `foldLog`'s Spark executor alone, over a plan of its own. */
   private[api] def sparkFold(db: String, coll: String, block: Long,
-      onlyIds: Option[Seq[Long]]): DataFrame = {
+      onlyIds: Option[Seq[Long]]): DataFrame =
+    planned(db, coll, block, seeded = true)(foldOnSpark(_, onlyIds))
+
+  /** The Spark executor: a groupByKey/mapGroups replay over the snapshot
+    * seed plus the log after it. */
+  private def foldOnSpark(plan: ReadPlan, onlyIds: Option[Seq[Long]]): DataFrame = {
     import spark.implicits._
-    val plan = readPlan(db, coll, block, seeded = true)(sparkOpen)
     // the replayed sources' block bounds prune rolled-up batches and tail
     // dirs by parquet row-group stats — the replay reads O(tail)
-    val source = logFrame(plan, plan.seed.map { case (at, state) =>
-      state.select(lit(at).as("block"), lit(Int.MinValue).as("order"), lit(ActionAdd).as("action"),
-        col("_id").as("id"), col("doc"), lit(null).cast("string").as("mask"))
+    val source = logFrame(plan, plan.seed.map { case (at, files) =>
+      readLog(files, snapshotSchema).select(lit(at).as("block"), lit(Int.MinValue).as("order"),
+        lit(ActionAdd).as("action"), col("_id").as("id"), col("doc"), lit(null).cast("string").as("mask"))
     })
     onlyIds.fold(source)(ids => source.filter(col("id").isin(ids: _*)))
       .as[MutationRow]
@@ -733,9 +760,9 @@ class GraftDB(spark: SparkSession, root: String,
 
   private def rollupLocked(db: String, coll: String,
       maxBatchBytes: Long): Seq[RollupRecord] = {
-    val tailDir = mutPath(db, coll)
-    if (readableFiles(tailDir).isEmpty) return Seq.empty
-    val rawTail = readLog(Seq(tailDir))
+    val tail = statuses(mutPath(db, coll))
+    if (tail.isEmpty) return Seq.empty
+    val rawTail = readLog(tail)
     // Only blocks <= the state cell's lastBlock are fully committed: the
     // state bump happens under this lock strictly AFTER the data commit,
     // while appendDocumentsAt's data write (and Spark's non-atomic
@@ -827,18 +854,12 @@ class GraftDB(spark: SparkSession, root: String,
     failpoint("rollup:afterGc")
     val parents = scala.collection.mutable.LinkedHashSet[java.nio.file.Path]()
     tailFiles.foreach { f =>
-      // input_file_name() strings are percent-encoded file: URIs (a
-      // root with a space arrives as file:///a%20b/...), so they must
-      // go through java.net.URI to decode; the Hadoop-Path roundtrip
-      // would leave a literal "%20" and silently never delete the tail.
-      // Fall back to the raw Path rendering only if URI parsing rejects
-      // the string, so a malformed name can't abort the sweep after the
-      // GcRecord was appended.
-      val fp =
-        try Paths.get(new java.net.URI(f))
-        catch { case _: Exception =>
-          Paths.get(new org.apache.hadoop.fs.Path(f).toUri.getPath)
-        }
+      // input_file_name() strings are the percent-encoded file: URIs of
+      // the listed statuses (a root with a space arrives as
+      // file:/a%20b/...), so they go through java.net.URI to decode; the
+      // Hadoop-Path roundtrip would leave a literal "%20" and silently
+      // never delete the tail
+      val fp = Paths.get(new java.net.URI(f))
       Files.deleteIfExists(fp)
       Files.deleteIfExists(fp.resolveSibling("." + fp.getFileName + ".crc"))
       parents += fp.getParent
@@ -847,12 +868,8 @@ class GraftDB(spark: SparkSession, root: String,
       // drop write-commit litter, then the dir itself if truly empty
       Seq("_SUCCESS", "._SUCCESS.crc").foreach(m =>
         Files.deleteIfExists(d.resolve(m)))
-      val empty = {
-        val st = Files.list(d)
-        try !st.findFirst().isPresent finally st.close()
-      }
       val n = d.getFileName.toString
-      if (empty && (n.startsWith("block_") || n.startsWith("blk_")))
+      if (listDir(d.toString).isEmpty && (n.startsWith("block_") || n.startsWith("blk_")))
         Files.delete(d)
     }
   }
@@ -896,9 +913,6 @@ class GraftDB(spark: SparkSession, root: String,
       schema: StructType): DataFrame =
     spark.createDataFrame(readManifest(db, coll, kind, schema).asJava,
       StructType(schema.map(_.copy(nullable = true))))
-
-  private def emptyFrame(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Persisted rollup history (mutation_store.rs:430 scan_rollup_records). */
   def scanRollupRecords(db: String, coll: String): DataFrame =
@@ -969,7 +983,7 @@ class GraftDB(spark: SparkSession, root: String,
     bins.foreach { bin =>
       val (lo, hi) = (bin.map(_.start).min, bin.map(_.end).max)
       val outDir = s"$rollBase/compact_${lo}_${hi}_${UUID.randomUUID().toString.take(8)}"
-      readLog(bin.map(_.path))
+      readLog(bin.flatMap(batchFiles))
         .repartition(1)
         .sortWithinPartitions("block", "order")
         .write.option("compression", "gzip").parquet(outDir)
@@ -1079,14 +1093,14 @@ class GraftDB(spark: SparkSession, root: String,
   /** GetMutationHeader analog: one mutation's header plus its rollup
     * status (the proto's MutationRollupStatus: rolled-up vs live tail). */
   def getMutationHeader(db: String, coll: String, block: Long, order: Int)
-      : Option[MutationHeaderView] = {
-    val plan = readPlan(db, coll, Long.MaxValue, seeded = false)(sparkOpen)
-    logFrame(plan)
-      .filter(col("block") === block && col("order") === order)
-      .select("block", "order", "action", "id").head(1).headOption
-      .map(r => MutationHeaderView(r.getLong(0), r.getInt(1), r.getInt(2),
-        r.getLong(3), rolledUp = block <= plan.rolledHi))
-  }
+      : Option[MutationHeaderView] =
+    planned(db, coll, Long.MaxValue, seeded = false) { plan =>
+      logFrame(plan)
+        .filter(col("block") === block && col("order") === order)
+        .select("block", "order", "action", "id").head(1).headOption
+        .map(r => MutationHeaderView(r.getLong(0), r.getInt(1), r.getInt(2),
+          r.getLong(3), rolledUp = block <= plan.rolledHi))
+    }
 
   /** GetMutationBody analog: one mutation's payload (doc + mask). */
   def getMutationBody(db: String, coll: String, block: Long, order: Int)
@@ -1242,7 +1256,7 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** The index cell: the type `addIndex` was given (a read knows the
     * key's type without inferring the parquet schema, a Spark job) and
-    * the state cell's docWrites the index was built at. Spark's reader
+    * the state cell's docWrites the index was built at. `readableFiles`
     * skips `_`-prefixed files. */
   private def indexCellPath(db: String, coll: String, path: String) =
     s"${indexDir(db, coll, path)}/_INDEX.json"
@@ -1257,7 +1271,7 @@ class GraftDB(spark: SparkSession, root: String,
 
   /** Read a materialized index (idx_key, _id). */
   def index(db: String, coll: String, path: String): DataFrame =
-    spark.read.schema(indexSchema(db, coll, path)).parquet(indexDir(db, coll, path))
+    readLog(statuses(indexDir(db, coll, path)), indexSchema(db, coll, path))
 
   private def indexSchema(db: String, coll: String, path: String): StructType =
     StructType(Seq(StructField("idx_key", keyType(db, coll, path)), StructField("_id", LongType)))
@@ -1335,19 +1349,18 @@ class GraftDB(spark: SparkSession, root: String,
     // numerically while a string-witnessed ordering compares
     // lexicographically ("10" < "9"), so a type-crossed bound would
     // drop rows the query admits.
-    def sparkTypeOf(v: FieldValue): org.apache.spark.sql.types.DataType = v match {
-      case FieldValue.I64(_) => org.apache.spark.sql.types.LongType
-      case FieldValue.Dbl(_) => org.apache.spark.sql.types.DoubleType
-      case FieldValue.Bool(_) => org.apache.spark.sql.types.BooleanType
-      case FieldValue.Str(_) => org.apache.spark.sql.types.StringType
-      case FieldValue.Arr(_) => org.apache.spark.sql.types.NullType
+    // (no index key is boolean or an array: those compare as NullType)
+    def sparkTypeOf(v: FieldValue): DataType = v match {
+      case FieldValue.I64(_) => LongType
+      case FieldValue.Dbl(_) => DoubleType
+      case FieldValue.Str(_) => StringType
+      case _ => NullType
     }
     val cursorBound: Option[(String, FieldValue)] =
       q.orderBy.headOption.flatMap { o =>
         val side = if (o.desc) q.endAt else q.startAt
         side.flatMap(_.values.headOption.flatten) match {
-          case Some(v) if !v.isInstanceOf[FieldValue.Arr] &&
-              v.getClass == o.keyType.getClass &&
+          case Some(v) if v.getClass == o.keyType.getClass &&
               hasIndex(db, coll, o.field) &&
               keyType(db, coll, o.field) == sparkTypeOf(v) =>
             Some((o.field, v))
@@ -1420,7 +1433,7 @@ class GraftDB(spark: SparkSession, root: String,
         statsAdmit[Binary](_, "idx_key", v(lo), v(hi))
       case _ => _ => true
     }
-    readSmall(readableFiles(indexDir(db, coll, path)).map(_ -> keep),
+    readSmall(statuses(indexDir(db, coll, path)).map(_ -> keep),
         spark.sessionState.conf.autoBroadcastJoinThreshold) { picked =>
       spark.createDataFrame(
         picked.flatMap { case (_, r, gs) => parquet.decode(r, gs, schema) }.toVector.asJava, schema)
@@ -1576,13 +1589,13 @@ object GraftDB {
     * the one group whose `_id` range holds the id, not the whole state. */
   private val SnapshotRowGroupBytes = 1L << 20
 
-  /** One read's inputs, each opened by the read's executor (`S`): blocks
-    * above `committed` are invisible (Long.MaxValue: no bound); the
-    * snapshot seed and the block whose state it holds; each log source
-    * and the block it is replayed above (None: from its start); and the
-    * highest block the rollup store owns. */
-  private final case class ReadPlan[S](committed: Long, seed: Option[(Long, S)],
-      logs: Seq[(S, Option[Long])], rolledHi: Long)
+  /** One read's inputs, the files `readPlan` listed: blocks above
+    * `committed` are invisible (Long.MaxValue: no bound); the block whose
+    * state the snapshot seed holds, and its files; each log source's
+    * files and the block it is replayed above (None: from its start);
+    * and the highest block the rollup store owns. */
+  private final case class ReadPlan(committed: Long, seed: Option[(Long, Seq[FileStatus])],
+      logs: Seq[(Seq[FileStatus], Option[Long])], rolledHi: Long)
 
   val mutationSchema: StructType = StructType(Seq(
     StructField("block", LongType, nullable = false),
@@ -1668,14 +1681,8 @@ object GraftDB {
   private final class DriverParquet(conf: Configuration) {
     private val options = HadoopReadOptions.builder(conf).build()
 
-    def open(file: java.io.File): ParquetFileReader =
-      ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file.toURI), conf), options)
-
-    /** A file's record count, from its footer. */
-    def rowCount(file: java.io.File): Long = {
-      val r = open(file)
-      try r.getRecordCount finally r.close()
-    }
+    def open(file: FileStatus): ParquetFileReader =
+      ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), options)
 
     /** Row groups `groups` of an open file as rows of `schema`. A schema
       * column the file lacks reads as null. */
@@ -1693,36 +1700,43 @@ object GraftDB {
     }
   }
 
-  /** The files Spark's reader reads under `dir`, nested dirs included:
-    * names starting with `_` or `.` (`_SUCCESS`, `.crc` siblings, a
-    * crashed write's `_temporary/`, a cell's temp file) are skipped,
-    * files and dirs alike. The one rule for whether a dir has data, and
-    * the listing of a manifest's records. Listed as far as the caller
-    * reads: `nonEmpty` stops at the first file. */
-  private def readableFiles(dir: String): LazyList[java.io.File] =
+  /** The data files under `dir`, nested dirs included: names starting
+    * with `_` or `.` (`_SUCCESS`, `.crc` siblings, a crashed write's
+    * `_temporary/`, a cell's temp file) are skipped, files and dirs
+    * alike. The one rule for which files a dir holds: every read reads
+    * exactly these, and a manifest's records are these. */
+  private def readableFiles(dir: String): Seq[java.io.File] =
     listDir(dir).filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-      .sortBy(_.getName).to(LazyList)
-      .flatMap(f => if (f.isDirectory) readableFiles(f.getPath) else LazyList(f))
+      .sortBy(_.getName).flatMap(f => if (f.isDirectory) readableFiles(f.getPath) else Seq(f))
+
+  /** `readableFiles(dir)`, each with its status from one stat: a file
+    * gone since the listing raises FileNotFoundException, never a
+    * zero-length status (Spark's reader would skip it as empty). */
+  private def statuses(dir: String): Seq[FileStatus] =
+    readableFiles(dir).map { f =>
+      val p = f.toPath
+      try new FileStatus(Files.size(p), false, 1, 0L, Files.getLastModifiedTime(p).toMillis, new Path(f.toURI))
+      catch { case e: NoSuchFileException => throw new FileNotFoundException(e.getMessage) }
+    }
 
   /** Whether a row group's footer stats on `column` admit a value in
     * [lo, hi] (None = unbounded). A column without min/max admits all. */
   private def statsAdmit[T <: Comparable[T]](rg: BlockMetaData, column: String,
       lo: Option[T], hi: Option[T]): Boolean =
-    rg.getColumns.asScala.find(_.getPath.toDotString == column)
-      .map(_.getStatistics.asInstanceOf[Statistics[T]])
-      .filter(s => s != null && s.hasNonNullValue)
-      .forall(s => lo.forall(s.compareMaxToValue(_) >= 0) && hi.forall(s.compareMinToValue(_) <= 0))
+    stats[T](rg, column).forall(s => lo.forall(s.compareMaxToValue(_) >= 0) && hi.forall(s.compareMinToValue(_) <= 0))
 
   /** Whether a row group's `column` range holds any of `sorted` (ascending). */
   private def statsAdmitAny(rg: BlockMetaData, column: String, sorted: Array[Long]): Boolean =
+    stats[java.lang.Long](rg, column).forall { s =>
+      val i = java.util.Arrays.binarySearch(sorted, s.genericGetMin.longValue)
+      val at = if (i >= 0) i else -i - 1
+      at < sorted.length && sorted(at) <= s.genericGetMax.longValue
+    }
+
+  /** A row group's footer stats on `column`, when it has a min/max. */
+  private def stats[T <: Comparable[T]](rg: BlockMetaData, column: String): Option[Statistics[T]] =
     rg.getColumns.asScala.find(_.getPath.toDotString == column)
-      .map(_.getStatistics.asInstanceOf[Statistics[java.lang.Long]])
-      .filter(s => s != null && s.hasNonNullValue)
-      .forall { s =>
-        val i = java.util.Arrays.binarySearch(sorted, s.genericGetMin.longValue)
-        val at = if (i >= 0) i else -i - 1
-        at < sorted.length && sorted(at) <= s.genericGetMax.longValue
-      }
+      .map(_.getStatistics.asInstanceOf[Statistics[T]]).filter(s => s != null && s.hasNonNullValue)
 
   private def groupValue(g: Group, name: String, t: DataType): Any =
     if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) null

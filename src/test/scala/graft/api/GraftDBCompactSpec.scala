@@ -42,6 +42,22 @@ class GraftDBCompactSpec extends SparkSpec {
       db.rollup("d", "c", maxBatchBytes = 400L)
     }
 
+  test("a live batch dir deleted under a read fails it closed, never with fewer rows") {
+    val (db, _) = freshDb(); db.createCollection("d", "c")
+    fragment(db, 2)
+    assert(fold(db).size === 80)
+    // what a reader whose manifest read came before two compactions
+    // meets: a dir the manifests it read list live, retired by the first
+    // compaction and deleted by the second
+    val victim = db.scanRollupRecords("d", "c").collect().head.getAs[String]("path")
+    val walk = Files.walk(java.nio.file.Paths.get(victim))
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally walk.close()
+    intercept[java.io.FileNotFoundException](db.collection("d", "c").df)
+    intercept[java.io.FileNotFoundException](onSpark(db.collection("d", "c").df))
+    intercept[java.io.FileNotFoundException](db.mutationLog("d", "c"))
+  }
+
   test("compactRollups preserves the fold and bin-packs the batch dirs") {
     val (db, root) = freshDb(); db.createCollection("d", "c")
     fragment(db, 4)

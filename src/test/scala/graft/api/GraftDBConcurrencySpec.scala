@@ -264,6 +264,8 @@ class GraftDBConcurrencySpec extends SparkSpec {
         while (!done) {
           reader.tailBytes("d", "c")
           reader.mutationLog("d", "c")
+          onSpark(reader.collection("d", "c").df)
+          reader.getMutationHeader("d", "c", 0L, 0)
           polls.incrementAndGet()
         }
       } catch { case t: Throwable => readerFail.set(t) }
@@ -284,6 +286,23 @@ class GraftDBConcurrencySpec extends SparkSpec {
     assert(polls.get() > 0)
     assert(reader.tailBytes("d", "c") === 0L)
     assert(reader.mutationLog("d", "c").count() === 30L)
+  }
+
+  test("a frame built before a rollup's GC fails its job, never returns fewer rows") {
+    val db = new GraftDB(spark, freshRoot())
+    db.createCollection("d", "c")
+    (0 until 3).foreach(i => db.addDocuments("d", "c", Seq(s"""{"i":$i}""", s"""{"i":${i + 10}}""")))
+    val folded = onSpark(db.collection("d", "c").df)
+    val log = db.mutationLog("d", "c")
+    db.rollup("d", "c") // its GC deletes every tail file both frames read
+    for (df <- Seq(folded, log)) {
+      val e = intercept[Exception](df.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.FileNotFoundException]), e)
+    }
+    // built again, both read every row from the rolled-up batch
+    assert(onSpark(db.collection("d", "c").df.count()) === 6L)
+    assert(db.mutationLog("d", "c").count() === 6L)
   }
 
   test("mid-race readers: counts only grow, ids never duplicate") {

@@ -106,6 +106,22 @@ class GraftDBJobsSpec extends SparkSpec {
     }
   }
 
+  test("building Spark-fold reads over a 40-block tail launches no listing job") {
+    val db = new GraftDB(spark, Files.createTempDirectory("graftjobs").toString)
+    db.createCollection("d", "c")
+    (1 to 40).foreach(addBlock(db, _))
+    val q = StructuredQuery(where = Some(FieldFilter("t", Op.Eq, FieldValue.I64(5))))
+    // Spark lists more than 32 paths (the session's parallel partition
+    // discovery threshold) in a job of its own; the reads hand it the
+    // plan's statuses instead
+    val reads = onSpark(Seq(
+      jobsOf(db.collection("d", "c").df),
+      jobsOf(db.query("d", "c", q)),
+      jobsOf(db.mutationLog("d", "c"))))
+    assert(reads.map(_._2) === Seq(0, 0, 0))
+    assert(reads.map(_._1.count()) === Seq(200, 5, 200))
+  }
+
   test("getDoc, build plus action, launches no job") {
     val db = populated()
     val (live, n) = jobsOf(db.getDoc("d", "c", 2L))
