@@ -165,13 +165,12 @@ object Bench {
       prevJson.flatMap(j => Harness.asDouble(j \ "cpus")).map(_.toInt).getOrElse(-1)
     // only comparable against a record from the SAME corpus dir AND the
     // same cpu count (8-cpu medians vs a 32-cpu run are not a regression
-    // signal; legacy records without "cpus" stay comparable so the first
-    // config-stamped round isn't blind)
+    // signal)
     val comparable: Boolean = prevJson.exists { j =>
       (j \ "sf" match {
         case JString(s) => s == sfDir
         case _ => false
-      }) && (prevCpus == -1 || prevCpus == cpus)
+      }) && prevCpus == cpus
     }
     val prevMed: Map[String, Double] =
       if (!comparable) Map.empty
@@ -185,19 +184,14 @@ object Bench {
     val calMed = median(calPerPass.toIndexedSeq)
     val prevCal: Double =
       prevJson.flatMap(j => Harness.asDouble(j \ "calibration")).getOrElse(-1.0)
-    // A prev record without queries_raw is LEGACY: its "queries" are
-    // plain raw medians (which absorb contention spikes) while its cal
-    // median does not, so its calibration disagrees with its own query
-    // numbers (r11: cal 3.96 contended vs ~clean medians — drift 0.61
-    // false-flagged 18 queries). Against a legacy record: drift 1 AND
-    // compare THIS run's raw medians (not adjusted) so both sides of the
-    // ratio are the same statistic.
-    val prevAdjusted: Boolean =
-      prevJson.exists(j => (j \ "queries_raw") != JNothing)
-    val drift =
-      if (prevAdjusted && prevCal > 0.0 && calMed > 0.0) calMed / prevCal else 1.0
-    val nowFor: Map[String, Double] =
-      if (prevAdjusted) results.toMap else resultsRaw.toMap
+    val drift = if (prevCal > 0.0 && calMed > 0.0) calMed / prevCal else 1.0
+    // same plan hash = residual jitter; changed = a plan change to audit
+    def planVerdict(name: String): String =
+      (prevHash.get(name), planHashes.get(name)) match {
+        case (Some(a), Some(b)) if a == b => "same"
+        case (Some(_), Some(_)) => "changed"
+        case _ => "unknown"
+      }
     // flag >2× NORMALIZED moves either way (median/drift vs prev —
     // uniform box drift divides out, so it neither masks a real uniform
     // library regression nor cries wolf on a slow box day). Flags in
@@ -206,10 +200,8 @@ object Bench {
     // slows EVERY pass, while box contention leaves at least one clean
     // pass, r11's false flag had min 1.85 s vs prev 2.09 s; speedup:
     // min must itself be <⅔ of prev, so one lucky pass can't flag).
-    // Explanations: same plan hash = residual jitter; changed = a plan
-    // change to audit; legacy = prev hashes use the old normalization.
-    // Emitted as "changes" with an explicit "dir" — the r12 field name
-    // "regressions" read as failures to anyone grepping artifacts even
+    // Each flag carries its `planVerdict`. Emitted as "changes" with an
+    // explicit "dir" — the r12 field name "regressions" read as failures to anyone grepping artifacts even
     // when every entry was a >2× SPEEDUP.
     // ---- ONE directional headline (r15) -------------------------------
     // The round-over-round question ("is this round faster?") was
@@ -232,10 +224,10 @@ object Bench {
       if (commonQ.nonEmpty && prevCommonTotal > 0.0) nowCommonAdj / prevCommonTotal
       else -1.0
     val changes = results.collect {
-      case (name, _) if nowFor.get(name).exists(_ > 0.0) &&
+      case (name, v) if v > 0.0 &&
           prevMed.get(name).exists { p =>
             p > 0.0 && {
-              val n = nowFor(name) / drift
+              val n = v / drift
               val mn = minAdj.getOrElse(name, -1.0)
               val slow = n / p > 2.0 &&
                 mn > 0.0 && (mn / drift) / p > 1.5
@@ -245,16 +237,7 @@ object Bench {
             }
           } =>
         val prev = prevMed(name)
-        val now = nowFor(name)
-        val plan =
-          if (!prevAdjusted) "legacy" // prev hashes use the old normalization
-          else (prevHash.get(name), planHashes.get(name)) match {
-            case (Some(a), Some(b)) if a == b => "same"
-            case (Some(_), Some(_)) => "changed"
-            case _ => "unknown"
-          }
-        val dir = if (now / drift > prev) "slower" else "faster"
-        (name, prev, now, plan, dir)
+        (name, prev, v, planVerdict(name), if (v / drift > prev) "slower" else "faster")
     }
 
     // shuffle-bytes gate: bytes don't jitter with box load, so the
@@ -270,12 +253,7 @@ object Bench {
     val dataFlags = names.flatMap { case (name, _) =>
       (prevShuffle.get(name), shuffleMb.get(name)) match {
         case (Some(p), Some(n)) if n > p * 1.3 && n - p > 16.0 =>
-          val plan = (prevHash.get(name), planHashes.get(name)) match {
-            case (Some(a), Some(b)) if a == b => "same"
-            case (Some(_), Some(_)) => "changed"
-            case _ => "unknown"
-          }
-          Some((name, p, n, plan))
+          Some((name, p, n, planVerdict(name)))
         case _ => None
       }
     }

@@ -3,6 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.Analytics
 
+/** One declared query: its name, its Spark body, and (where SQL can
+  * express it) the ANSI SQL DuckDB runs on the same parquet tables. */
+final case class Declared(
+    name: String, run: (SparkSession, String) => DataFrame, oracle: Option[String] = None)
+
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
@@ -10,83 +15,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q1Pricing(spark, "/root/testdata/sf0.001")
 
+  /** Every module's declarations; a name declared twice fails here. */
+  val declared: Seq[Declared] = {
+    val all = Analytics.declared ++ graft.docstore.DocQueries.declared ++
+      graft.events.EventQueries.declared ++ graft.pipeline.TextOps.declared ++
+      graft.pipeline.Dedup.declared ++ graft.pipeline.Ann.declared ++
+      graft.pipeline.Multimodal.declared ++ graft.operators.OperatorQueries.declared ++
+      graft.pipeline.CorpusStats.declared ++ graft.pipeline.Curation.declared ++
+      graft.pipeline.Pca.declared ++ graft.pipeline.Bpe.declared
+    val twice = all.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(twice.isEmpty, s"query declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+    all
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2C analytics parity
-    "q1_pricing" -> (Analytics.q1Pricing _),
-    "q3_topk_join" -> (Analytics.q3TopkJoin _),
-    "q5_multijoin" -> (Analytics.q5MultiJoin _),
-    "q6_filter_agg" -> (Analytics.q6FilterAgg _),
-    "q_semi_anti" -> (Analytics.qSemiAnti _),
-    "q_distinct_union" -> (Analytics.qDistinctUnion _),
-    "q_case_having" -> (Analytics.qCaseHaving _),
-    "q_window_rank" -> (Analytics.qWindowRank _),
-    "q_rollup_agg" -> (Analytics.qRollupAgg _),
-    "q_pivot" -> (Analytics.qPivot _),
-    "q17_small_qty" -> (Analytics.q17SmallQty _),
-    "q18_top_buyers" -> (Analytics.q18TopBuyers _),
-    "q22_idle_balance" -> (Analytics.q22IdleBalance _),
-    "q2_min_cost" -> (Analytics.q2MinCost _),
-    "q7_nation_volume" -> (Analytics.q7NationVolume _),
-    "q8_market_share" -> (Analytics.q8MarketShare _),
-    "q13_order_counts" -> (Analytics.q13OrderCounts _),
-    "q14_promo_share" -> (Analytics.q14PromoShare _),
-    "q19_disc_revenue" -> (Analytics.q19DiscRevenue _),
-    "q_window_funcs" -> (Analytics.qWindowFuncs _),
-    "q_cube_agg" -> (Analytics.qCubeAgg _),
-    "q_intersect_except" -> (Analytics.qIntersectExcept _),
-    "q4_order_priority" -> (Analytics.q4OrderPriority _),
-    "q9_product_profit" -> (Analytics.q9ProductProfit _),
-    "q10_returned_revenue" -> (Analytics.q10ReturnedRevenue _),
-    "q11_part_value_share" -> (Analytics.q11PartValueShare _),
-    "q12_priority_shipping" -> (Analytics.q12PriorityShipping _),
-    "q15_top_supplier" -> (Analytics.q15TopSupplier _),
-    "q16_supplier_cnt" -> (Analytics.q16SupplierCnt _),
-    "q20_excess_suppliers" -> (Analytics.q20ExcessSuppliers _),
-    "q21_waiting_supplier" -> (Analytics.q21WaitingSupplier _),
-  ) ++ graft.docstore.DocQueries.all ++ graft.events.EventQueries.all ++
-    graft.pipeline.TextOps.all ++ graft.pipeline.Dedup.all ++
-    graft.pipeline.Ann.all ++ graft.pipeline.Multimodal.all ++
-    graft.operators.OperatorQueries.all ++ graft.pipeline.CorpusStats.all ++
-    graft.pipeline.Curation.all ++ graft.pipeline.Pca.all ++ graft.pipeline.Bpe.all
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(d => d.name -> d.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing" -> Analytics.q1PricingSql,
-    "q3_topk_join" -> Analytics.q3TopkJoinSql,
-    "q5_multijoin" -> Analytics.q5MultiJoinSql,
-    "q6_filter_agg" -> Analytics.q6FilterAggSql,
-    "q_semi_anti" -> Analytics.qSemiAntiSql,
-    "q_distinct_union" -> Analytics.qDistinctUnionSql,
-    "q_case_having" -> Analytics.qCaseHavingSql,
-    "q_window_rank" -> Analytics.qWindowRankSql,
-    "q_rollup_agg" -> Analytics.qRollupAggSql,
-    "q_pivot" -> Analytics.qPivotSql,
-    "q17_small_qty" -> Analytics.q17SmallQtySql,
-    "q18_top_buyers" -> Analytics.q18TopBuyersSql,
-    "q22_idle_balance" -> Analytics.q22IdleBalanceSql,
-    "q2_min_cost" -> Analytics.q2MinCostSql,
-    "q7_nation_volume" -> Analytics.q7NationVolumeSql,
-    "q8_market_share" -> Analytics.q8MarketShareSql,
-    "q13_order_counts" -> Analytics.q13OrderCountsSql,
-    "q14_promo_share" -> Analytics.q14PromoShareSql,
-    "q19_disc_revenue" -> Analytics.q19DiscRevenueSql,
-    "q_window_funcs" -> Analytics.qWindowFuncsSql,
-    "q_cube_agg" -> Analytics.qCubeAggSql,
-    "q_intersect_except" -> Analytics.qIntersectExceptSql,
-    "q4_order_priority" -> Analytics.q4OrderPrioritySql,
-    "q9_product_profit" -> Analytics.q9ProductProfitSql,
-    "q10_returned_revenue" -> Analytics.q10ReturnedRevenueSql,
-    "q11_part_value_share" -> Analytics.q11PartValueShareSql,
-    "q12_priority_shipping" -> Analytics.q12PriorityShippingSql,
-    "q15_top_supplier" -> Analytics.q15TopSupplierSql,
-    "q16_supplier_cnt" -> Analytics.q16SupplierCntSql,
-    "q20_excess_suppliers" -> Analytics.q20ExcessSuppliersSql,
-    "q21_waiting_supplier" -> Analytics.q21WaitingSupplierSql,
-  ) ++ graft.docstore.DocQueries.oracles ++ graft.events.EventQueries.oracles ++
-    graft.pipeline.TextOps.oracles ++ graft.pipeline.Dedup.oracles ++
-    graft.pipeline.Ann.oracles ++ graft.pipeline.Multimodal.oracles ++
-    graft.operators.OperatorQueries.oracles ++ graft.pipeline.CorpusStats.oracles ++
-    graft.pipeline.Curation.oracles ++ graft.pipeline.Pca.oracles ++ graft.pipeline.Bpe.oracles
+  def oracleSql: Map[String, String] =
+    declared.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.Declared
 import graft.sources.Tables
 
 /** Analytics-parity block (SURVEY.md §2C): general relational pipelines on
@@ -998,4 +999,38 @@ object Analytics {
       |WHERE n_supp > 1 AND n_late = 1
       |GROUP BY s_name
       |ORDER BY numwait DESC, s_name ASC LIMIT 10""".stripMargin
+
+  val declared: Seq[Declared] = Seq(
+    Declared("q1_pricing", q1Pricing, Some(q1PricingSql)),
+    Declared("q3_topk_join", q3TopkJoin, Some(q3TopkJoinSql)),
+    Declared("q5_multijoin", q5MultiJoin, Some(q5MultiJoinSql)),
+    Declared("q6_filter_agg", q6FilterAgg, Some(q6FilterAggSql)),
+    Declared("q_semi_anti", qSemiAnti, Some(qSemiAntiSql)),
+    Declared("q_distinct_union", qDistinctUnion, Some(qDistinctUnionSql)),
+    Declared("q_case_having", qCaseHaving, Some(qCaseHavingSql)),
+    Declared("q_window_rank", qWindowRank, Some(qWindowRankSql)),
+    Declared("q_rollup_agg", qRollupAgg, Some(qRollupAggSql)),
+    Declared("q_pivot", qPivot, Some(qPivotSql)),
+    Declared("q17_small_qty", q17SmallQty, Some(q17SmallQtySql)),
+    Declared("q18_top_buyers", q18TopBuyers, Some(q18TopBuyersSql)),
+    Declared("q22_idle_balance", q22IdleBalance, Some(q22IdleBalanceSql)),
+    Declared("q2_min_cost", q2MinCost, Some(q2MinCostSql)),
+    Declared("q7_nation_volume", q7NationVolume, Some(q7NationVolumeSql)),
+    Declared("q8_market_share", q8MarketShare, Some(q8MarketShareSql)),
+    Declared("q13_order_counts", q13OrderCounts, Some(q13OrderCountsSql)),
+    Declared("q14_promo_share", q14PromoShare, Some(q14PromoShareSql)),
+    Declared("q19_disc_revenue", q19DiscRevenue, Some(q19DiscRevenueSql)),
+    Declared("q_window_funcs", qWindowFuncs, Some(qWindowFuncsSql)),
+    Declared("q_cube_agg", qCubeAgg, Some(qCubeAggSql)),
+    Declared("q_intersect_except", qIntersectExcept, Some(qIntersectExceptSql)),
+    Declared("q4_order_priority", q4OrderPriority, Some(q4OrderPrioritySql)),
+    Declared("q9_product_profit", q9ProductProfit, Some(q9ProductProfitSql)),
+    Declared("q10_returned_revenue", q10ReturnedRevenue, Some(q10ReturnedRevenueSql)),
+    Declared("q11_part_value_share", q11PartValueShare, Some(q11PartValueShareSql)),
+    Declared("q12_priority_shipping", q12PriorityShipping, Some(q12PriorityShippingSql)),
+    Declared("q15_top_supplier", q15TopSupplier, Some(q15TopSupplierSql)),
+    Declared("q16_supplier_cnt", q16SupplierCnt, Some(q16SupplierCntSql)),
+    Declared("q20_excess_suppliers", q20ExcessSuppliers, Some(q20ExcessSuppliersSql)),
+    Declared("q21_waiting_supplier", q21WaitingSupplier, Some(q21WaitingSupplierSql)),
+  )
 }

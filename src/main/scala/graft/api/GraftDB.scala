@@ -622,9 +622,11 @@ class GraftDB(spark: SparkSession, root: String,
     * files. */
   private def foldLog(db: String, coll: String, block: Long,
       onlyIds: Option[Seq[Long]] = None): DataFrame =
-    planned(db, coll, block, seeded = true) { plan =>
-      foldOnDriver(plan, onlyIds).fold(foldOnSpark(plan, onlyIds))(f => foldedFrame(f.rows))
-    }
+    planned(db, coll, block, seeded = true)(folded(_, onlyIds))
+
+  /** One plan's live state, on whichever executor `foldLog` picks. */
+  private def folded(plan: ReadPlan, onlyIds: Option[Seq[Long]]): DataFrame =
+    foldOnDriver(plan, onlyIds).fold(foldOnSpark(plan, onlyIds))(f => foldedFrame(f.rows))
 
   private def foldedFrame(rows: Seq[(Long, String)]): DataFrame =
     spark.createDataFrame(rows.map { case (id, doc) => Row(id, doc) }.asJava, foldSchema)
@@ -1094,46 +1096,60 @@ class GraftDB(spark: SparkSession, root: String,
     * status (the proto's MutationRollupStatus: rolled-up vs live tail). */
   def getMutationHeader(db: String, coll: String, block: Long, order: Int)
       : Option[MutationHeaderView] =
-    planned(db, coll, Long.MaxValue, seeded = false) { plan =>
-      logFrame(plan)
-        .filter(col("block") === block && col("order") === order)
+    logRead(db, coll) { (log, rolledHi) =>
+      log.filter(col("block") === block && col("order") === order)
         .select("block", "order", "action", "id").head(1).headOption
         .map(r => MutationHeaderView(r.getLong(0), r.getInt(1), r.getInt(2),
-          r.getLong(3), rolledUp = block <= plan.rolledHi))
+          r.getLong(3), rolledUp = block <= rolledHi))
     }
+
+  /** `read` over the whole committed log (and the last rolled-up block),
+    * run inside one `planned` read: the job it runs re-plans when a
+    * rollup's GC deleted a file the plan listed. */
+  private def logRead[T](db: String, coll: String)(read: (DataFrame, Long) => T): T =
+    planned(db, coll, Long.MaxValue, seeded = false)(plan => read(logFrame(plan), plan.rolledHi))
 
   /** GetMutationBody analog: one mutation's payload (doc + mask). */
   def getMutationBody(db: String, coll: String, block: Long, order: Int)
       : Option[(String, Option[String])] =
-    mutationLog(db, coll)
-      .filter(col("block") === block && col("order") === order)
-      .select("doc", "mask").head(1).headOption
-      .map(r => (r.getString(0), Option(r.getString(1))))
+    logRead(db, coll) { (log, _) =>
+      log.filter(col("block") === block && col("order") === order)
+        .select("doc", "mask").head(1).headOption
+        .map(r => (r.getString(0), Option(r.getString(1))))
+    }
 
   /** ScanMutationHeader analog: a (start, limit) page of headers in
     * (block, order) log order — sort+limit fuses to TakeOrderedAndProject
     * when start is 0. */
-  def scanMutationHeaders(db: String, coll: String, start: Int, limit: Int): DataFrame = {
-    val page = mutationLog(db, coll)
-      .select("block", "order", "action", "id")
-      .orderBy(col("block").asc, col("order").asc)
-    (if (start > 0) page.offset(start) else page).limit(limit)
-  }
+  def scanMutationHeaders(db: String, coll: String, start: Int, limit: Int)
+      : Seq[MutationHeaderView] =
+    logRead(db, coll) { (log, rolledHi) =>
+      val page = log.select("block", "order", "action", "id")
+        .orderBy(col("block").asc, col("order").asc)
+      (if (start > 0) page.offset(start) else page).head(limit).toSeq
+        .map(r => MutationHeaderView(r.getLong(0), r.getInt(1), r.getInt(2),
+          r.getLong(3), rolledUp = r.getLong(0) <= rolledHi))
+    }
 
   /** GetBlock analog: every mutation stamped in one block, in order. */
-  def getBlock(db: String, coll: String, block: Long): DataFrame =
-    mutationLog(db, coll).filter(col("block") === block)
-      .orderBy(col("order").asc)
+  def getBlock(db: String, coll: String, block: Long): Seq[MutationRow] =
+    logRead(db, coll) { (log, _) =>
+      import spark.implicits._
+      log.filter(col("block") === block).orderBy(col("order").asc)
+        .as[MutationRow].collect().toSeq
+    }
 
   /** GetMutationState analog: the MutationStateView counters
     * (db3_storage.proto:169-182) from one log aggregate + the rollup/gc
     * manifests. */
   def mutationState(db: String, coll: String): MutationStateView = {
-    val logAgg = mutationLog(db, coll).agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(coalesce(length(col("doc")).cast("long"), lit(0L)) +
-        coalesce(length(col("mask")).cast("long"), lit(0L))), lit(0L)).as("bytes"),
-      coalesce(max(col("block")), lit(-1L)).as("last_block")).head()
+    val logAgg = logRead(db, coll) { (log, _) =>
+      log.agg(
+        count(lit(1)).as("n"),
+        coalesce(sum(coalesce(length(col("doc")).cast("long"), lit(0L)) +
+          coalesce(length(col("mask")).cast("long"), lit(0L))), lit(0L)).as("bytes"),
+        coalesce(max(col("block")), lit(-1L)).as("last_block")).head()
+    }
     val roll = readManifest(db, coll, "rollup", rollupManifestSchema)
     val gc = readManifest(db, coll, "gc", gcManifestSchema)
     def total(rows: Seq[Row], field: String) = rows.map(_.getAs[Long](field)).sum
@@ -1455,11 +1471,11 @@ class GraftDB(spark: SparkSession, root: String,
   def syncStatus(): Seq[SyncStatusView] =
     for (db <- listDatabases(); coll <- listCollections(db)) yield
       SyncStatusView(db, coll, currentState(db, coll).lastBlock,
-        mutationLog(db, coll).count())
+        logRead(db, coll)((log, _) => log.count()))
 
   /** CollectionState.total_doc_count analog. */
   def collectionState(db: String, coll: String): Long =
-    collection(db, coll).df.count()
+    planned(db, coll, Long.MaxValue, seeded = true)(folded(_, None).count())
 
   private def listDirs(p: String): Seq[String] =
     listDir(p).filter(_.isDirectory).map(_.getName).sorted

@@ -3,6 +3,7 @@ package graft.docstore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.sources.Tables
 
 /** SURVEY.md §2A — the document-store operator block. Each query drives the
@@ -543,67 +544,35 @@ object DocQueries {
       |  AND CAST(json_extract_string(props, '$.k') AS BIGINT) NOT IN (0, 1, 2, 3)
       |ORDER BY event_id LIMIT 35""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_filter_unary" -> (docFilterUnary _),
-    "doc_qstr_in" -> (docQstrIn _),
-    "doc_cursor_page" -> (docCursorPage _),
-    "doc_array_contains_any" -> (docArrayContainsAny _),
-    "doc_qstr_regex" -> (docQstrRegex _),
-    "doc_history" -> (docHistory _),
-    "doc_filter_nested" -> (docFilterNested _),
-    "doc_group_agg" -> (docGroupAgg _),
-    "doc_array_contains" -> (docArrayContains _),
-    "doc_qstr" -> (docQstr _),
-    "doc_qstr_count" -> (docQstrCount _),
-    "doc_filter_eq" -> (docFilterEq _),
-    "doc_filter_range" -> (docFilterRange _),
-    "doc_filter_and" -> (docFilterAnd _),
-    "doc_filter_or" -> (docFilterOr _),
-    "doc_filter_in" -> (docFilterIn _),
-    "doc_filter_not_in" -> (docFilterNotIn _),
-    "doc_filter_neq" -> (docFilterNeq _),
-    "doc_projection" -> (docProjection _),
-    "doc_limit" -> (docLimit _),
-    "doc_orderby" -> (docOrderby _),
-    "doc_offset" -> (docOffset _),
-    "doc_get_by_id" -> (docGetById _),
-    "doc_count_state" -> (docCountState _),
-    "doc_state_latest" -> (docStateLatest _),
-    "doc_state_tombstone" -> (docStateTombstone _),
-    "doc_patch_mask" -> (docPatchMask _),
-    "doc_owner_join" -> (docOwnerJoin _),
-    "doc_index_extract" -> (docIndexExtract _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "doc_filter_unary" -> docFilterUnarySql,
-    "doc_qstr_in" -> docQstrInSql,
-    "doc_cursor_page" -> docCursorPageSql,
-    "doc_array_contains_any" -> docArrayContainsAnySql,
-    "doc_qstr_regex" -> docQstrRegexSql,
-    "doc_history" -> docHistorySql,
-    "doc_filter_nested" -> docFilterNestedSql,
-    "doc_group_agg" -> docGroupAggSql,
-    "doc_array_contains" -> docArrayContainsSql,
-    "doc_qstr" -> docQstrSql,
-    "doc_qstr_count" -> docQstrCountSql,
-    "doc_filter_eq" -> docFilterEqSql,
-    "doc_filter_range" -> docFilterRangeSql,
-    "doc_filter_and" -> docFilterAndSql,
-    "doc_filter_or" -> docFilterOrSql,
-    "doc_filter_in" -> docFilterInSql,
-    "doc_filter_not_in" -> docFilterNotInSql,
-    "doc_filter_neq" -> docFilterNeqSql,
-    "doc_projection" -> docProjectionSql,
-    "doc_limit" -> docLimitSql,
-    "doc_orderby" -> docOrderbySql,
-    "doc_offset" -> docOffsetSql,
-    "doc_get_by_id" -> docGetByIdSql,
-    "doc_count_state" -> docCountStateSql,
-    "doc_state_latest" -> docStateLatestSql,
-    "doc_state_tombstone" -> docStateTombstoneSql,
-    "doc_patch_mask" -> docPatchMaskSql,
-    "doc_owner_join" -> docOwnerJoinSql,
-    "doc_index_extract" -> docIndexExtractSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("doc_filter_unary", docFilterUnary, Some(docFilterUnarySql)),
+    Declared("doc_qstr_in", docQstrIn, Some(docQstrInSql)),
+    Declared("doc_cursor_page", docCursorPage, Some(docCursorPageSql)),
+    Declared("doc_array_contains_any", docArrayContainsAny, Some(docArrayContainsAnySql)),
+    Declared("doc_qstr_regex", docQstrRegex, Some(docQstrRegexSql)),
+    Declared("doc_history", docHistory, Some(docHistorySql)),
+    Declared("doc_filter_nested", docFilterNested, Some(docFilterNestedSql)),
+    Declared("doc_group_agg", docGroupAgg, Some(docGroupAggSql)),
+    Declared("doc_array_contains", docArrayContains, Some(docArrayContainsSql)),
+    Declared("doc_qstr", docQstr, Some(docQstrSql)),
+    Declared("doc_qstr_count", docQstrCount, Some(docQstrCountSql)),
+    Declared("doc_filter_eq", docFilterEq, Some(docFilterEqSql)),
+    Declared("doc_filter_range", docFilterRange, Some(docFilterRangeSql)),
+    Declared("doc_filter_and", docFilterAnd, Some(docFilterAndSql)),
+    Declared("doc_filter_or", docFilterOr, Some(docFilterOrSql)),
+    Declared("doc_filter_in", docFilterIn, Some(docFilterInSql)),
+    Declared("doc_filter_not_in", docFilterNotIn, Some(docFilterNotInSql)),
+    Declared("doc_filter_neq", docFilterNeq, Some(docFilterNeqSql)),
+    Declared("doc_projection", docProjection, Some(docProjectionSql)),
+    Declared("doc_limit", docLimit, Some(docLimitSql)),
+    Declared("doc_orderby", docOrderby, Some(docOrderbySql)),
+    Declared("doc_offset", docOffset, Some(docOffsetSql)),
+    Declared("doc_get_by_id", docGetById, Some(docGetByIdSql)),
+    Declared("doc_count_state", docCountState, Some(docCountStateSql)),
+    Declared("doc_state_latest", docStateLatest, Some(docStateLatestSql)),
+    Declared("doc_state_tombstone", docStateTombstone, Some(docStateTombstoneSql)),
+    Declared("doc_patch_mask", docPatchMask, Some(docPatchMaskSql)),
+    Declared("doc_owner_join", docOwnerJoin, Some(docOwnerJoinSql)),
+    Declared("doc_index_extract", docIndexExtract, Some(docIndexExtractSql)),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, StructType, StructField, LongType, StringType}
+import graft.Declared
 import graft.sources.Tables
 
 /** SURVEY.md §2B — the event-DB / time-series block, re-expressing the
@@ -1142,80 +1143,46 @@ object EventQueries {
       |  GROUP BY d2.day)
       |SELECT day, dau, dau7 FROM dau1 JOIN roll USING (day)""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_rolling_dau" -> (evtRollingDau _),
-    "evt_decode_typed_table" -> (evtDecodeTypedTable _),
-    "mutation_nonce_replay" -> (mutationNonceReplay _),
-    "mutation_verify_sig" -> (mutationVerifySig _),
-    "evt_sliding_window" -> (evtSlidingWindow _),
-    "evt_ohlc" -> (evtOhlc _),
-    "evt_anomaly" -> (evtAnomaly _),
-    "evt_top_paths" -> (evtTopPaths _),
-    "evt_histogram" -> (evtHistogram _),
-    "evt_retention_cohort" -> (evtRetentionCohort _),
-    "evt_bitmap_distinct" -> (evtBitmapDistinct _),
-    "mutation_integrity" -> (mutationIntegrity _),
-    "mutation_ownership" -> (mutationOwnership _),
-    "evt_sketch_rollup" -> (evtSketchRollup _),
-    "evt_gapfill" -> (evtGapfill _),
-    "evt_funnel" -> (evtFunnel _),
-    "evt_time_weighted_avg" -> (evtTimeWeightedAvg _),
-    "evt_time_range" -> (evtTimeRange _),
-    "evt_decode_abi" -> (evtDecodeAbi _),
-    "evt_decode_abi_multi" -> (evtDecodeAbiMulti _),
-    "evt_window_agg" -> (evtWindowAgg _),
-    "evt_topk" -> (evtTopk _),
-    "evt_approx_topk" -> (evtApproxTopk _),
-    "evt_latest_per_key" -> (evtLatestPerKey _),
-    "evt_sessionize" -> (evtSessionize _),
-    "evt_rate_limit" -> (evtRateLimit _),
-    "evt_rate_limit_buckets" -> (evtRateLimitBuckets _),
-    "evt_rate_limit_auto" -> (evtRateLimitAuto _),
-    "evt_sma_cross" -> (evtSmaCross _),
-    "evt_sessionize_buckets" -> (evtSessionizeBuckets _),
-    "evt_sessionize_auto" -> (evtSessionizeAuto _),
-    "evt_join_dims" -> (evtJoinDims _),
-    "evt_ttl_retention" -> (evtTtlRetention _),
-    "rollup_batches" -> (rollupBatches _),
-    "rollup_stats" -> (rollupStats _),
-    "mutation_log_stats" -> (mutationLogStats _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "evt_rolling_dau" -> evtRollingDauSql,
-    "evt_rate_limit" -> evtRateLimitSql,
-    "evt_rate_limit_buckets" -> evtRateLimitSql, // identical output contract
-    "evt_rate_limit_auto" -> evtRateLimitSql, // dispatches between the twins
-    "evt_sma_cross" -> evtSmaCrossSql,
-    "evt_decode_typed_table" -> evtDecodeTypedTableSql,
-    "mutation_nonce_replay" -> mutationNonceReplaySql,
-    "mutation_verify_sig" -> mutationVerifySigSql,
-    "evt_sliding_window" -> evtSlidingWindowSql,
-    "evt_ohlc" -> evtOhlcSql,
-    "evt_anomaly" -> evtAnomalySql,
-    "evt_top_paths" -> evtTopPathsSql,
-    "evt_histogram" -> evtHistogramSql,
-    "evt_retention_cohort" -> evtRetentionCohortSql,
-    "evt_bitmap_distinct" -> evtBitmapDistinctSql,
-    "mutation_integrity" -> mutationIntegritySql,
-    "mutation_ownership" -> mutationOwnershipSql,
-    "evt_gapfill" -> evtGapfillSql,
-    "evt_funnel" -> evtFunnelSql,
-    "evt_time_weighted_avg" -> evtTimeWeightedAvgSql,
-    "evt_time_range" -> evtTimeRangeSql,
-    "evt_decode_abi" -> evtDecodeAbiSql,
-    "evt_decode_abi_multi" -> evtDecodeAbiMultiSql,
-    "evt_window_agg" -> evtWindowAggSql,
-    "evt_topk" -> evtTopkSql,
-    "evt_approx_topk" -> evtApproxTopkSql,
-    "evt_latest_per_key" -> evtLatestPerKeySql,
-    "evt_sessionize" -> evtSessionizeSql,
-    "evt_sessionize_buckets" -> evtSessionizeSql, // identical output contract
-    "evt_sessionize_auto" -> evtSessionizeSql, // dispatches between the twins
-    "evt_join_dims" -> evtJoinDimsSql,
-    "evt_ttl_retention" -> evtTtlRetentionSql,
-    "rollup_batches" -> rollupBatchesSql,
-    "rollup_stats" -> rollupStatsSql,
-    "mutation_log_stats" -> mutationLogStatsSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("evt_rolling_dau", evtRollingDau, Some(evtRollingDauSql)),
+    Declared("evt_decode_typed_table", evtDecodeTypedTable, Some(evtDecodeTypedTableSql)),
+    Declared("mutation_nonce_replay", mutationNonceReplay, Some(mutationNonceReplaySql)),
+    Declared("mutation_verify_sig", mutationVerifySig, Some(mutationVerifySigSql)),
+    Declared("evt_sliding_window", evtSlidingWindow, Some(evtSlidingWindowSql)),
+    Declared("evt_ohlc", evtOhlc, Some(evtOhlcSql)),
+    Declared("evt_anomaly", evtAnomaly, Some(evtAnomalySql)),
+    Declared("evt_top_paths", evtTopPaths, Some(evtTopPathsSql)),
+    Declared("evt_histogram", evtHistogram, Some(evtHistogramSql)),
+    Declared("evt_retention_cohort", evtRetentionCohort, Some(evtRetentionCohortSql)),
+    Declared("evt_bitmap_distinct", evtBitmapDistinct, Some(evtBitmapDistinctSql)),
+    Declared("mutation_integrity", mutationIntegrity, Some(mutationIntegritySql)),
+    Declared("mutation_ownership", mutationOwnership, Some(mutationOwnershipSql)),
+    Declared("evt_sketch_rollup", evtSketchRollup),
+    Declared("evt_gapfill", evtGapfill, Some(evtGapfillSql)),
+    Declared("evt_funnel", evtFunnel, Some(evtFunnelSql)),
+    Declared("evt_time_weighted_avg", evtTimeWeightedAvg, Some(evtTimeWeightedAvgSql)),
+    Declared("evt_time_range", evtTimeRange, Some(evtTimeRangeSql)),
+    Declared("evt_decode_abi", evtDecodeAbi, Some(evtDecodeAbiSql)),
+    Declared("evt_decode_abi_multi", evtDecodeAbiMulti, Some(evtDecodeAbiMultiSql)),
+    Declared("evt_window_agg", evtWindowAgg, Some(evtWindowAggSql)),
+    Declared("evt_topk", evtTopk, Some(evtTopkSql)),
+    Declared("evt_approx_topk", evtApproxTopk, Some(evtApproxTopkSql)),
+    Declared("evt_latest_per_key", evtLatestPerKey, Some(evtLatestPerKeySql)),
+    Declared("evt_sessionize", evtSessionize, Some(evtSessionizeSql)),
+    Declared("evt_rate_limit", evtRateLimit, Some(evtRateLimitSql)),
+    // identical output contract
+    Declared("evt_rate_limit_buckets", evtRateLimitBuckets, Some(evtRateLimitSql)),
+    // dispatches between the twins
+    Declared("evt_rate_limit_auto", evtRateLimitAuto, Some(evtRateLimitSql)),
+    Declared("evt_sma_cross", evtSmaCross, Some(evtSmaCrossSql)),
+    // identical output contract
+    Declared("evt_sessionize_buckets", evtSessionizeBuckets, Some(evtSessionizeSql)),
+    // dispatches between the twins
+    Declared("evt_sessionize_auto", evtSessionizeAuto, Some(evtSessionizeSql)),
+    Declared("evt_join_dims", evtJoinDims, Some(evtJoinDimsSql)),
+    Declared("evt_ttl_retention", evtTtlRetention, Some(evtTtlRetentionSql)),
+    Declared("rollup_batches", rollupBatches, Some(rollupBatchesSql)),
+    Declared("rollup_stats", rollupStats, Some(rollupStatsSql)),
+    Declared("mutation_log_stats", mutationLogStats, Some(mutationLogStatsSql)),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.sources.Tables
 
 /** SURVEY.md §2 additions — operator-level queries: as-of join (oracle:
@@ -120,18 +121,13 @@ object OperatorQueries {
       |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total
       |FROM orders""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "asof_join" -> (asofJoin _),
-    "asof_join_bucketed" -> (asofJoinBucketed _),
-    "asof_join_auto" -> (asofJoinAuto _),
-    "approx_stats" -> (approxStats _),
-    "q_window_running" -> (qWindowRunning _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "asof_join" -> asofJoinSql,
-    "asof_join_bucketed" -> asofJoinSql, // identical output contract
-    "asof_join_auto" -> asofJoinSql, // dispatches between the twins
-    "q_window_running" -> qWindowRunningSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("asof_join", asofJoin, Some(asofJoinSql)),
+    // identical output contract
+    Declared("asof_join_bucketed", asofJoinBucketed, Some(asofJoinSql)),
+    // dispatches between the twins
+    Declared("asof_join_auto", asofJoinAuto, Some(asofJoinSql)),
+    Declared("approx_stats", approxStats),
+    Declared("q_window_running", qWindowRunning, Some(qWindowRunningSql)),
   )
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.sources.Tables
 import graft.functions.GraftFunctions._
 
@@ -603,22 +604,15 @@ object Ann {
        |FROM fused""".stripMargin
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_filtered_topk" -> (annFilteredTopk _),
-    "ann_hybrid_rrf" -> (annHybridRrf _),
-    "ann_cosine_topk" -> (annCosineTopk _),
-    "ann_lsh" -> (annLsh _),
-    "ann_ivf" -> (annIvf _),
-    "ann_pq" -> (annPq _),
-    "ann_range_search" -> (annRangeSearch _),
-    "emb_kmeans" -> (embKmeans _),
-    "pipeline_cluster_sample" -> (pipelineClusterSample _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ann_filtered_topk" -> annFilteredTopkSql,
-    "ann_hybrid_rrf" -> annHybridRrfSql,
-    "ann_cosine_topk" -> annCosineTopkSql,
-    "ann_range_search" -> annRangeSearchSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("ann_filtered_topk", annFilteredTopk, Some(annFilteredTopkSql)),
+    Declared("ann_hybrid_rrf", annHybridRrf, Some(annHybridRrfSql)),
+    Declared("ann_cosine_topk", annCosineTopk, Some(annCosineTopkSql)),
+    Declared("ann_lsh", annLsh),
+    Declared("ann_ivf", annIvf),
+    Declared("ann_pq", annPq),
+    Declared("ann_range_search", annRangeSearch, Some(annRangeSearchSql)),
+    Declared("emb_kmeans", embKmeans),
+    Declared("pipeline_cluster_sample", pipelineClusterSample),
   )
 }

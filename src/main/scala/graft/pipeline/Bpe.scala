@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.sources.Tables
 import graft.functions.GraftFunctions._
 
@@ -99,9 +100,7 @@ object Bpe {
         size(bpe_tokens(col("text"), mergesLit)).cast("long").as("n_bpe_tokens"))
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_bpe" -> (textBpe _),
+  val declared: Seq[Declared] = Seq(
+    Declared("text_bpe", textBpe),
   )
-
-  val oracles: Map[String, String] = Map.empty
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.sources.Tables
 
 /** Corpus-level rollups for the training-data pipeline (SURVEY §2D/F):
@@ -194,19 +195,11 @@ object CorpusStats {
       |  CAST(sum(sqerr) AS DOUBLE) / count(*) AS mse
       |FROM r GROUP BY vec_id""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_dim_stats" -> (embDimStats _),
-    "emb_quantize_int8" -> (embQuantizeInt8 _),
-    "corpus_stats" -> (corpusStats _),
-    "q_range_join" -> (qRangeJoin _),
-    "evt_percentiles" -> (evtPercentiles _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "emb_dim_stats" -> embDimStatsSql,
-    "emb_quantize_int8" -> embQuantizeInt8Sql,
-    "corpus_stats" -> corpusStatsSql,
-    "q_range_join" -> qRangeJoinSql,
-    "evt_percentiles" -> evtPercentilesSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("emb_dim_stats", embDimStats, Some(embDimStatsSql)),
+    Declared("emb_quantize_int8", embQuantizeInt8, Some(embQuantizeInt8Sql)),
+    Declared("corpus_stats", corpusStats, Some(corpusStatsSql)),
+    Declared("q_range_join", qRangeJoin, Some(qRangeJoinSql)),
+    Declared("evt_percentiles", evtPercentiles, Some(evtPercentilesSql)),
   )
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.sources.Tables
 import graft.functions.GraftFunctions._
 
@@ -749,41 +750,22 @@ object Curation {
       |  CAST(unnest(generate_series(1, copies)) AS BIGINT) AS epoch
       |FROM c""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_oversample" -> (pipelineOversample _),
-    "pipeline_dsir" -> (pipelineDsir _),
-    "pipeline_pack_spans" -> (pipelinePackSpans _),
-    "pipeline_reservoir" -> (pipelineReservoir _),
-    "pipeline_e2e" -> (pipelineE2e _),
-    "pipeline_curriculum" -> (pipelineCurriculum _),
-    "pipeline_quality_gate" -> (pipelineQualityGate _),
-    "pipeline_mix" -> (pipelineMix _),
-    "pipeline_sample_weighted" -> (pipelineSampleWeighted _),
-    "text_normalize" -> (textNormalize _),
-    "pipeline_keep_list" -> (pipelineKeepList _),
-    "pipeline_train_split" -> (pipelineTrainSplit _),
-    "pipeline_pack" -> (pipelinePack _),
-    "pipeline_contamination" -> (pipelineContamination _),
-    "pipeline_sample" -> (pipelineSample _),
-    "text_vocab" -> (textVocab _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "pipeline_oversample" -> pipelineOversampleSql,
-    "pipeline_dsir" -> pipelineDsirSql,
-    "pipeline_pack_spans" -> pipelinePackSpansSql,
-    "pipeline_reservoir" -> pipelineReservoirSql,
-    "pipeline_e2e" -> pipelineE2eSql,
-    "pipeline_curriculum" -> pipelineCurriculumSql,
-    "pipeline_quality_gate" -> pipelineQualityGateSql,
-    "pipeline_mix" -> pipelineMixSql,
-    "pipeline_sample_weighted" -> pipelineSampleWeightedSql,
-    "text_normalize" -> textNormalizeSql,
-    "pipeline_keep_list" -> pipelineKeepListSql,
-    "pipeline_train_split" -> pipelineTrainSplitSql,
-    "pipeline_pack" -> pipelinePackSql,
-    "pipeline_contamination" -> pipelineContaminationSql,
-    "pipeline_sample" -> pipelineSampleSql,
-    "text_vocab" -> textVocabSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("pipeline_oversample", pipelineOversample, Some(pipelineOversampleSql)),
+    Declared("pipeline_dsir", pipelineDsir, Some(pipelineDsirSql)),
+    Declared("pipeline_pack_spans", pipelinePackSpans, Some(pipelinePackSpansSql)),
+    Declared("pipeline_reservoir", pipelineReservoir, Some(pipelineReservoirSql)),
+    Declared("pipeline_e2e", pipelineE2e, Some(pipelineE2eSql)),
+    Declared("pipeline_curriculum", pipelineCurriculum, Some(pipelineCurriculumSql)),
+    Declared("pipeline_quality_gate", pipelineQualityGate, Some(pipelineQualityGateSql)),
+    Declared("pipeline_mix", pipelineMix, Some(pipelineMixSql)),
+    Declared("pipeline_sample_weighted", pipelineSampleWeighted, Some(pipelineSampleWeightedSql)),
+    Declared("text_normalize", textNormalize, Some(textNormalizeSql)),
+    Declared("pipeline_keep_list", pipelineKeepList, Some(pipelineKeepListSql)),
+    Declared("pipeline_train_split", pipelineTrainSplit, Some(pipelineTrainSplitSql)),
+    Declared("pipeline_pack", pipelinePack, Some(pipelinePackSql)),
+    Declared("pipeline_contamination", pipelineContamination, Some(pipelineContaminationSql)),
+    Declared("pipeline_sample", pipelineSample, Some(pipelineSampleSql)),
+    Declared("text_vocab", textVocab, Some(textVocabSql)),
   )
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** Lineage cut points for multi-consumer intermediates.
@@ -26,9 +27,9 @@ import org.apache.spark.sql.DataFrame
   *   `graft.cut.mode` = "local" (default) — `localCheckpoint(lazy)`,
   *       the local-mode shape the bench measures;
   *   `graft.cut.mode` = "reliable" — `checkpoint(lazy)` to the context's
-  *       checkpoint dir (set it via `SparkContext.setCheckpointDir` or
-  *       the `graft.cut.dir` conf), which survives executor loss — the
-  *       cluster deployment setting.
+  *       checkpoint dir (the `graft.cut.dir` conf when set, else the dir
+  *       set via `SparkContext.setCheckpointDir`), which survives
+  *       executor loss — the cluster deployment setting.
   *
   * Both forms are LAZY: the first action on the cut frame materializes
   * the blocks inside its own job (the `connectedComponents` sig-job
@@ -47,9 +48,14 @@ object Cut {
     df.sparkSession.conf.get("graft.cut.mode", "local") match {
       case "reliable" =>
         val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          df.sparkSession.conf.getOption("graft.cut.dir")
-            .foreach(sc.setCheckpointDir)
+        // the conf wins over a dir an earlier caller left on the shared
+        // context; setCheckpointDir puts a fresh subdir under its argument
+        df.sparkSession.conf.getOption("graft.cut.dir").foreach { d =>
+          val dir = new Path(d)
+          val qualified = dir.getFileSystem(sc.hadoopConfiguration).makeQualified(dir)
+          if (!sc.getCheckpointDir.exists(c => new Path(c).getParent == qualified))
+            sc.setCheckpointDir(d)
+        }
         df.checkpoint(eager = false)
       case _ =>
         df.localCheckpoint(eager = false)

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.sources.Tables
 import graft.functions.GraftFunctions._
 
@@ -457,16 +458,13 @@ object Dedup {
     * the star set node→component-min); `maxRounds` stays as a runaway
     * guard that throws rather than mislabeling.
     *
-    * Each round's frame is checkpointed to truncate the lineage (else
-    * round N replans rounds 1..N-1): into `checkpointDir` when given
-    * (reliable storage — survives executor loss on a cluster), else an
-    * executor-local checkpoint (fine for local mode; lineage is cut
-    * either way). Output: (doc_id, cluster = component-min id) for every
-    * node of the pair graph. */
-  def connectedComponents(pairs: DataFrame,
-      checkpointDir: Option[String] = None,
-      maxRounds: Int = 50): DataFrame =
-    connectedComponentsWithRounds(pairs, checkpointDir, maxRounds)._1
+    * Each round's frame is cut by `Cut` to truncate the lineage (else
+    * round N replans rounds 1..N-1): an executor-local checkpoint, or a
+    * reliable one under `graft.cut.mode=reliable` (survives executor
+    * loss on a cluster). Output: (doc_id, cluster = component-min id)
+    * for every node of the pair graph. */
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame =
+    connectedComponentsWithRounds(pairs, maxRounds)._1
 
   /** Edge floor for the driver union-find fast path: ≤ 2^20 edges is
     * ~16 MB of ids — a bounded collect in the same class as the ANN
@@ -482,19 +480,15 @@ object Dedup {
     * the driver fast path reports 0). `driverFloor` exists for specs
     * that pin the distributed machinery (0 forces the fixpoint loop). */
   def connectedComponentsWithRounds(pairs: DataFrame,
-      checkpointDir: Option[String] = None,
       maxRounds: Int = 50,
       driverFloor: Int = DriverCcFloor): (DataFrame, Int) = {
     val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     // LAZY checkpoints: the round's `sig` aggregate below is the first
     // action on each cut frame, so ONE job both materializes the
     // checkpoint blocks and computes the convergence signature — the
     // eager form paid a separate materialization job per round (r12
     // plan-audit finding; ~20% of the fixpoint loop's wall time)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = false)
-      else Cut(df, "cc.round")
+    def cut(df: DataFrame): DataFrame = Cut(df, "cc.round")
     // materialize the pair source ONCE: nodes and edges both derive from
     // it, and cutting each separately would execute the (often expensive —
     // a minhash-band or jaccard join) upstream plan twice
@@ -1126,37 +1120,22 @@ object Dedup {
       |            THEN 1 ELSE 0 END AS BIGINT) AS kept
       |FROM batch""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_clusters_exact" -> (dedupClustersExact _),
-    "dedup_keep_best" -> (dedupKeepBest _),
-    "dedup_clusters_incremental" -> (dedupClustersIncremental _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_lines" -> (dedupLines _),
-    "dedup_substring" -> (dedupSubstring _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_exact" -> (dedupExact _),
+  val declared: Seq[Declared] = Seq(
+    Declared("dedup_clusters_exact", dedupClustersExact, Some(dedupClustersExactSql)),
+    Declared("dedup_keep_best", dedupKeepBest, Some(dedupKeepBestSql)),
+    Declared("dedup_clusters_incremental", dedupClustersIncremental, Some(dedupClustersIncrementalSql)),
+    Declared("dedup_incremental", dedupIncremental, Some(dedupIncrementalSql)),
+    Declared("dedup_lines", dedupLines, Some(dedupLinesSql)),
+    Declared("dedup_substring", dedupSubstring, Some(dedupSubstringSql)),
+    Declared("dedup_clusters", dedupClusters),
+    Declared("dedup_exact", dedupExact, Some(dedupExactSql)),
     // the uncached plan: Verify gets the same rows, Bench times the join
-    "dedup_ngram_jaccard" -> (dedupNgramJaccardPlan _),
-    "dedup_minhash" -> (dedupMinhash _),
-    "dedup_minhash_band_exact" -> (dedupMinhashBandExact _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_simhash_band_exact" -> (dedupSimhashBandExact _),
-    "dedup_embedding_exact" -> (dedupEmbeddingExact _),
-    "dedup_embedding" -> (dedupEmbedding _),
-  )
-
-  /** dedup_minhash / dedup_simhash / dedup_embedding are rows-only. */
-  val oracles: Map[String, String] = Map(
-    "dedup_clusters_exact" -> dedupClustersExactSql,
-    "dedup_keep_best" -> dedupKeepBestSql,
-    "dedup_clusters_incremental" -> dedupClustersIncrementalSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_lines" -> dedupLinesSql,
-    "dedup_substring" -> dedupSubstringSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardSql,
-    "dedup_minhash_band_exact" -> dedupMinhashBandExactSql,
-    "dedup_simhash_band_exact" -> dedupSimhashBandExactSql,
-    "dedup_embedding_exact" -> dedupEmbeddingExactSql,
+    Declared("dedup_ngram_jaccard", dedupNgramJaccardPlan, Some(dedupNgramJaccardSql)),
+    Declared("dedup_minhash", dedupMinhash),
+    Declared("dedup_minhash_band_exact", dedupMinhashBandExact, Some(dedupMinhashBandExactSql)),
+    Declared("dedup_simhash", dedupSimhash),
+    Declared("dedup_simhash_band_exact", dedupSimhashBandExact, Some(dedupSimhashBandExactSql)),
+    Declared("dedup_embedding_exact", dedupEmbeddingExact, Some(dedupEmbeddingExactSql)),
+    Declared("dedup_embedding", dedupEmbedding),
   )
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.sources.Tables
 
 /** SURVEY.md §2D — multimodal-column plumbing.
@@ -266,18 +267,12 @@ object Multimodal {
       |  CAST(list_max(en) AS BIGINT) AS max_energy
       |FROM e""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_binary_meta" -> (mmBinaryMeta _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_feature_stub" -> (mmFeatureStub _),
-    "mm_resize_plan" -> (mmResizePlan _),
-    "mm_phash_dedup" -> (mmPhashDedup _),
-    "mm_audio_segments" -> (mmAudioSegments _))
-
-  val oracles: Map[String, String] = Map(
-    "mm_binary_meta" -> mmBinaryMetaSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_feature_stub" -> mmFeatureStubSql,
-    "mm_resize_plan" -> mmResizePlanSql,
-    "mm_audio_segments" -> mmAudioSegmentsSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("mm_binary_meta", mmBinaryMeta, Some(mmBinaryMetaSql)),
+    Declared("mm_frame_sample", mmFrameSample, Some(mmFrameSampleSql)),
+    Declared("mm_feature_stub", mmFeatureStub, Some(mmFeatureStubSql)),
+    Declared("mm_resize_plan", mmResizePlan, Some(mmResizePlanSql)),
+    Declared("mm_phash_dedup", mmPhashDedup),
+    Declared("mm_audio_segments", mmAudioSegments, Some(mmAudioSegmentsSql)),
+  )
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.sources.Tables
 import graft.functions.GraftFunctions._
 
@@ -164,9 +165,7 @@ object Pca {
       affine_project(col("embedding"), float_array_lit(m.affine), k).as("proj"))
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_pca" -> (embPca _),
+  val declared: Seq[Declared] = Seq(
+    Declared("emb_pca", embPca),
   )
-
-  val oracles: Map[String, String] = Map.empty
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.sources.Tables
 
 /** SURVEY.md §2D — text-analysis operators over the `documents` table.
@@ -591,35 +592,19 @@ object TextOps {
        |FROM w GROUP BY source""".stripMargin
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_search_rank" -> (textSearchRank _),
-    "text_search_bm25" -> (textSearchBm25 _),
-    "pipeline_quality_percentile" -> (pipelineQualityPercentile _),
-    "text_url_stats" -> (textUrlStats _),
-    "text_char_stats" -> (textCharStats _),
-    "text_unigram_lm" -> (textUnigramLm _),
-    "text_bigram_lm" -> (textBigramLm _),
-    "text_repetition" -> (textRepetition _),
-    "text_pii_scrub" -> (textPiiScrub _),
-    "text_langid" -> (textLangid _),
-    "text_quality" -> (textQuality _),
-    "text_tokens" -> (textTokens _),
-    "text_fingerprint" -> (textFingerprint _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "text_search_rank" -> textSearchRankSql,
-    "text_search_bm25" -> textSearchBm25Sql,
-    "pipeline_quality_percentile" -> pipelineQualityPercentileSql,
-    "text_url_stats" -> textUrlStatsSql,
-    "text_char_stats" -> textCharStatsSql,
-    "text_unigram_lm" -> textUnigramLmSql,
-    "text_bigram_lm" -> textBigramLmSql,
-    "text_repetition" -> textRepetitionSql,
-    "text_pii_scrub" -> textPiiScrubSql,
-    "text_langid" -> textLangidSql,
-    "text_quality" -> textQualitySql,
-    "text_tokens" -> textTokensSql,
-    "text_fingerprint" -> textFingerprintSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("text_search_rank", textSearchRank, Some(textSearchRankSql)),
+    Declared("text_search_bm25", textSearchBm25, Some(textSearchBm25Sql)),
+    Declared("pipeline_quality_percentile", pipelineQualityPercentile, Some(pipelineQualityPercentileSql)),
+    Declared("text_url_stats", textUrlStats, Some(textUrlStatsSql)),
+    Declared("text_char_stats", textCharStats, Some(textCharStatsSql)),
+    Declared("text_unigram_lm", textUnigramLm, Some(textUnigramLmSql)),
+    Declared("text_bigram_lm", textBigramLm, Some(textBigramLmSql)),
+    Declared("text_repetition", textRepetition, Some(textRepetitionSql)),
+    Declared("text_pii_scrub", textPiiScrub, Some(textPiiScrubSql)),
+    Declared("text_langid", textLangid, Some(textLangidSql)),
+    Declared("text_quality", textQuality, Some(textQualitySql)),
+    Declared("text_tokens", textTokens, Some(textTokensSql)),
+    Declared("text_fingerprint", textFingerprint, Some(textFingerprintSql)),
   )
 }

@@ -95,11 +95,12 @@ class PlanAuditSpec extends SparkSpec {
           "count <= DriverCcFloor (2^20 distinct edges, ~16 MB) and a " +
           ".limit(2*floor+2) on the collect itself; above the floor the " +
           "distributed star-contraction loop runs instead"),
-      "api/GraftDB.scala" -> (2,
+      "api/GraftDB.scala" -> (3,
         "the rollup's one stats pass, (tail file, block) → (rows, bytes) " +
-          "(rows = tail files being drained), and the index probe capped " +
-          "at MaxPushedIds+1; manifests are decoded on the driver without " +
-          "a DataFrame collect")
+          "(rows = tail files being drained), the index probe capped " +
+          "at MaxPushedIds+1, and getBlock's one block (one commit's " +
+          "mutations, which its writer held as a driver Seq); manifests " +
+          "are decoded on the driver without a DataFrame collect")
     )
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")

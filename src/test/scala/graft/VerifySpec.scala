@@ -31,6 +31,20 @@ class VerifySpec extends SparkSpec {
     assert(oracle \ "q6_filter_agg" == JString(SparkEntry.oracleSql("q6_filter_agg")))
   }
 
+  test("the query registry: unique names, non-empty oracles, 14 approximate queries") {
+    val names = SparkEntry.declared.map(_.name)
+    assert(names.distinct.size === names.size)
+    assert(names.size === 167)
+    // a module list placed above the *Sql vals it reads captures null
+    SparkEntry.declared.foreach(d =>
+      d.oracle.foreach(sql => assert(sql != null && sql.trim.nonEmpty, d.name)))
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet === Set(
+      "ann_ivf", "ann_lsh", "ann_pq", "approx_stats", "dedup_clusters",
+      "dedup_embedding", "dedup_minhash", "dedup_simhash", "emb_kmeans", "emb_pca",
+      "evt_sketch_rollup", "mm_phash_dedup", "pipeline_cluster_sample", "text_bpe"))
+  }
+
   test("the JSON string escape round-trips tab, CR, quote and backslash") {
     val s = "a\tb\rc\"d\\e\u0001f"
     assert(parse("[" + Harness.str(s) + "]") == JArray(List(JString(s))))

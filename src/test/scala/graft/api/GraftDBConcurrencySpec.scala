@@ -266,6 +266,12 @@ class GraftDBConcurrencySpec extends SparkSpec {
           reader.mutationLog("d", "c")
           onSpark(reader.collection("d", "c").df)
           reader.getMutationHeader("d", "c", 0L, 0)
+          reader.getMutationBody("d", "c", 0L, 0)
+          reader.scanMutationHeaders("d", "c", 0, 10)
+          reader.getBlock("d", "c", 0L)
+          reader.mutationState("d", "c")
+          reader.syncStatus()
+          onSpark(reader.collectionState("d", "c"))
           polls.incrementAndGet()
         }
       } catch { case t: Throwable => readerFail.set(t) }

@@ -185,7 +185,7 @@ class GraftDBCrashSpec extends SparkSpec {
     // the unlisted batch dir stays out of the log RPCs too
     assert(db.mutationLog("d", "c").count() === committedLog)
     assert(db.mutationState("d", "c") === committedState)
-    assert(db.getBlock("d", "c", 0L).count() === 1L)
+    assert(db.getBlock("d", "c", 0L).length === 1)
     val recs = db.rollup("d", "c")                 // retry
     assert(recs.nonEmpty)
     assert(db.scanRollupRecords("d", "c").count() === recs.length.toLong)

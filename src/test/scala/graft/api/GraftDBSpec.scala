@@ -350,10 +350,12 @@ class GraftDBSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(db.getMutationBody("d1", "c", 1L, 0) === Some(("""{"a":3}""", None)))
     assert(db.getMutationHeader("d1", "c", 9L, 0).isEmpty)
     // paging in (block, order) order
-    val page = db.scanMutationHeaders("d1", "c", start = 1, limit = 2).collect()
-    assert(page.map(r => (r.getLong(0), r.getInt(1))).toSeq === Seq((0L, 1), (1L, 0)))
+    val page = db.scanMutationHeaders("d1", "c", start = 1, limit = 2)
+    assert(page.map(h => (h.block, h.order)) === Seq((0L, 1), (1L, 0)))
+    assert(page.forall(!_.rolledUp))
     // one block's mutations
-    assert(db.getBlock("d1", "c", 0L).count() === 2)
+    assert(db.getBlock("d1", "c", 0L).map(m => (m.order, m.doc)) ===
+      Seq((0, """{"a":1}"""), (1, """{"a":2}""")))
     // state view before and after a rollup
     val st0 = db.mutationState("d1", "c")
     assert(st0.mutationCount === 3 && st0.lastBlock === 1 &&
@@ -367,6 +369,7 @@ class GraftDBSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       st1.totalRollupBytes > 0 && st1.totalRollupRawBytes > 0)
     // headers now report rolled-up status
     assert(db.getMutationHeader("d1", "c", 0L, 1).exists(_.rolledUp))
+    assert(db.scanMutationHeaders("d1", "c", 0, 10).map(_.rolledUp) === Seq(true, true, true))
   }
 
   private def setupReq(cfgJson: String, key: Long, nonce: Long): (String, String) = {
@@ -455,8 +458,7 @@ class GraftDBSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(db.getMutationBody("d1", "ev", bCreate, 0)
       === Some(("""{"ttl":3600}""", None)))
     // the full header page shows every action; stats count all 7 rows
-    val actions = db.scanMutationHeaders("d1", "ev", 0, 100)
-      .select("action").collect().map(_.getInt(0)).toSeq
+    val actions = db.scanMutationHeaders("d1", "ev", 0, 100).map(_.action)
     assert(actions.count(_ == ActionAdd) === 3)
     assert(Seq(ActionCreateEventDB, ActionMintDocumentDB, ActionMintCollection,
       ActionDeleteEventDB).forall(actions.contains))

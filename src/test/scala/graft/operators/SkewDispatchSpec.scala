@@ -162,8 +162,8 @@ class SkewDispatchSpec extends SparkSpec {
   }
 
   test("evt_sessionize_auto equals the direct sessionize on the real corpus") {
-    val auto = graft.events.EventQueries.all("evt_sessionize_auto")(spark, sf)
-    val direct = graft.events.EventQueries.all("evt_sessionize")(spark, sf)
+    val auto = graft.SparkEntry.queries("evt_sessionize_auto")(spark, sf)
+    val direct = graft.SparkEntry.queries("evt_sessionize")(spark, sf)
     assert(!auto.queryExecution.optimizedPlan.toString.contains("lsid"),
       "uniform corpus should dispatch to the direct sessionize")
     assert(auto.collect().map(_.toString).sorted

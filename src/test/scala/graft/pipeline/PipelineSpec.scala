@@ -258,11 +258,16 @@ class PipelineSpec extends SparkSpec {
     val (ccFast, roundsFast) = Dedup.connectedComponentsWithRounds(pairs)
     assert(roundsFast === 0, "small graph should take the driver path")
     assert(ccFast.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === cc)
-    // reliable-checkpoint variant agrees
+    // the distributed loop over reliable checkpoints (Cut's reliable
+    // mode) agrees, and its rounds write checkpoint files
     val dir = java.nio.file.Files.createTempDirectory("graft-cc").toString
-    val cc2 = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc2 = SparkSpec.withConf("graft.cut.mode" -> "reliable", "graft.cut.dir" -> dir) {
+      Dedup.connectedComponentsWithRounds(pairs, driverFloor = 0)._1
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(cc2 === cc)
+    assert(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .anyMatch(p => java.nio.file.Files.isRegularFile(p)), s"no checkpoint file under $dir")
     // runaway guard trips rather than returning a wrong answer
     intercept[IllegalStateException](
       Dedup.connectedComponentsWithRounds(pairs, maxRounds = 2,
